@@ -5,7 +5,7 @@
 #   scripts/bench_ab.sh <gitref> <sfDir> <query...>
 #
 # Builds the working tree (A) and <gitref> in a scratch clone (B), then
-# INTERLEAVES Time -cold passes A,B,A,B,... so both sides sample the
+# INTERLEAVES Time passes A,B,A,B,... so both sides sample the
 # same host conditions — the manual r8 procedure (scratch clone, old
 # classfiles, same-session measurement) made repeatable. Each side keeps
 # its own DerivedStore root so tier layouts can differ across refs
@@ -38,9 +38,12 @@ mkdir -p "$SCRATCH/store-a" "$SCRATCH/store-b"
 for p in $(seq "$PASSES"); do
   echo "== pass $p/$PASSES: A (working tree) =="
   GRAFT_GRAPHSTORE_DIR="$SCRATCH/store-a" \
-    scripts/run_class.sh graft.tools.Time "$SF" -cold "$@" \
+    scripts/run_class.sh graft.tools.Time "$SF" "$@" \
     2>/dev/null | tee -a "$SCRATCH/a.txt"
   echo "== pass $p/$PASSES: B ($REF) =="
+  # -cold: a ref whose Time defaults to warm runs needs it to release
+  # between runs as A does; a Time that always releases reads it as a
+  # name matching no query.
   GRAFT_CLASSES="$SCRATCH/repo/target/scala-2.13/classes" \
     GRAFT_GRAPHSTORE_DIR="$SCRATCH/store-b" \
     scripts/run_class.sh graft.tools.Time "$SF" -cold "$@" \

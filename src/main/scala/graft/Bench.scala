@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Sessions
+
 /** Benchmark main — driver contract: print ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
@@ -30,49 +32,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // the generated-class cache defaults to 100 entries; 138 queries
-      // x ~20 codegen stages evict everything every pass, so the
-      // warmup's compilation work is thrown away and each measured
-      // sample re-Janino-compiles its whole plan. Steady-state
-      // throughput (what this harness measures) assumes warm codegen.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt)
 
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-
-    // noop sink forces full materialization of every output column —
-    // count() would let Catalyst prune the projections of map-only
-    // queries and under-measure them.
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-            dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-
-    // BLOCKING release (r15 measurement fix, declared in
-    // OPTIMIZATION_r15.md): the default non-blocking unpersist lets a
-    // cache-heavy query's block drops run CONCURRENTLY with the next
-    // query's timed samples — measured ~1s bleed into g9 when it
-    // follows g8's four per-round caches (3.50s vs 2.53s isolated;
-    // blocking: 2.66-2.72s). "Each measurement owns its memory" (the
-    // comment above) was the documented intent; this makes it true.
-    // Timed region, min-of-passes basis and the noop sink are
-    // untouched — the wait runs BETWEEN queries, off every clock.
-    def release(): Unit = {
-      graft.core.Caching.releaseAll(blocking = true)
-      spark.catalog.clearCache()
-    }
 
     // Warmup at the smallest SF: pays codegen + JIT once, off the clock.
     // A query that can't even analyze must be NAMED here, on the first
@@ -81,12 +43,12 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     val warmFailed = collection.mutable.ListBuffer.empty[String]
     queries.foreach { case (name, fn) =>
-      try run(fn, warmDir) catch { case e: Throwable =>
+      try Sessions.run(fn(spark, warmDir)) catch { case e: Throwable =>
         warmFailed += name
         System.err.println(
           s"[bench] warmup FAILED $name: ${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
       }
-      release()
+      Sessions.release(spark)
     }
     if (warmFailed.nonEmpty)
       System.err.println(
@@ -94,7 +56,7 @@ object Bench {
 
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try run(fn, sfDir) catch { case _: Throwable => return -1.0 }
+      try Sessions.run(fn(spark, sfDir)) catch { case _: Throwable => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -113,7 +75,12 @@ object Bench {
       var passTotal = 0.0
       queries.foreach { case (name, fn) =>
         val t = timeOne(fn)
-        release() // after the clock stops: measurement, not bookkeeping
+        // BLOCKING release after the clock stops (r15 measurement fix,
+        // declared in OPTIMIZATION_r15.md; see Sessions.release):
+        // "each measurement owns its memory" was the documented intent,
+        // blocking makes it true. Timed region, min-of-passes basis and
+        // the noop sink are untouched.
+        Sessions.release(spark)
         if (t >= 0) {
           passTotal += t
           samples(name) = t :: samples.getOrElse(name, Nil)

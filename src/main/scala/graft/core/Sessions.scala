@@ -1,8 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine, and the one way the harnesses
+  * (Bench, Verify, Time, ScaleProbe, ScanCount, the specs) run a query,
+  * release its caches and wait for its listener events.
   *
   * Defaults are chosen for a 1000-executor cluster mindset tested on
   * `local[32]`: AQE on (runtime coalesce + skew-join handling),
@@ -14,8 +16,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
-    val builder = SparkSession
-      .builder()
+    val builder = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -28,22 +29,47 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    val spark = applyExtraConf(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Operational conf overrides without a rebuild:
-    * `GRAFT_EXTRA_CONF="spark.sql.cbo.joinReorder.enabled=true"`
-    * (semicolon-separated k=v pairs) — the gated optimizer-A/B lever,
-    * shared by every session builder that honors it. */
-  def applyExtraConf(builder: SparkSession.Builder): SparkSession.Builder = {
+      // the generated-class cache defaults to 100 entries; 209 queries
+      // x ~20 codegen stages evict everything every pass, so a warmup's
+      // compilation work is thrown away and each later run re-Janino-
+      // compiles its whole plan. Steady-state throughput assumes warm
+      // codegen.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+    // Operational conf overrides without a rebuild:
+    // `GRAFT_EXTRA_CONF="spark.sql.cbo.joinReorder.enabled=true"`
+    // (semicolon-separated k=v pairs) — the gated optimizer-A/B lever.
     sys.env.get("GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
         builder.config(k, v): Unit
       }
-    builder
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
+
+  /** Materialize every output column of `df` through the noop sink —
+    * `count()` would let Catalyst prune the projections of map-only
+    * queries and under-measure them. */
+  def run(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Drop every registered cache and the session cache manager's
+    * entries, BLOCKING until the executors have dropped the blocks:
+    * the default non-blocking unpersist lets a cache-heavy query's
+    * block drops run concurrently with whatever runs next (measured
+    * ~1 s bleed into g9 when it follows g8's per-round caches). */
+  def release(spark: SparkSession): Unit = {
+    Caching.releaseAll(blocking = true)
+    spark.catalog.clearCache()
+  }
+
+  /** Block until every event already posted to the context's listener
+    * bus has been delivered: job/stage/task events and the SQL
+    * execution ends that feed `QueryExecutionListener`s, including
+    * those of child sessions (the bus is per context). An action posts
+    * its execution end before it returns, so after `run(df); drain(s)`
+    * every listener has seen `df`'s execution — no polling, no sleep. */
+  def drain(spark: SparkSession): Unit = GraftPlanBridge.drainListeners(spark)
 }

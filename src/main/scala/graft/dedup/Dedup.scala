@@ -1610,13 +1610,15 @@ object Dedup {
     *
     * Scale shape: one signature materialization shared by all three
     * settings (the 16 minhashes are computed ONCE — re-banding is
-    * free md5s over existing columns); each setting's bucket
-    * self-join is d3's bounded-bucket shape; the exact-Jaccard
-    * verify (d11's machinery) runs once over the DISTINCT union of
-    * candidates, so the strict settings' pairs — subsets in practice
-    * — are never re-verified per setting. Final grain: three rows. A
-    * setting with zero candidates still reports (spine left join,
-    * precision NULL via nullif).
+    * free md5s over existing columns); all three settings' bands are
+    * exploded into one (n_bands, band_idx, band_hash) frame and
+    * matched by ONE bucket self-join on that key — d3's
+    * bounded-bucket shape, with settings unable to match each other;
+    * the exact-Jaccard verify (d11's machinery) runs once over the
+    * DISTINCT candidate pairs, so the strict settings' pairs —
+    * subsets in practice — are never re-verified per setting. Final
+    * grain: three rows. A setting with zero candidates still reports
+    * (spine left join, precision NULL via nullif).
     */
   val d27LshTuning: Q = (s, dir) => {
     val sig = signatures(s, dir).registerCache()

@@ -203,9 +203,9 @@ object Graph {
     // is ~10% faster than the r13 SMJ at sf0.1 (no edge sorts). Build
     // side = the frontier: bounded by the node population, the side a
     // distributed BFS step hashes per partition. (A cust-keyed cached
-    // layout was measured and REJECTED: -cold rebuilds the cache every
-    // run, and paying the repartition inside the clock cost 1.8× at
-    // sf0.1 for one saved 13 MB exchange.)
+    // layout was measured and REJECTED: the per-run release rebuilds
+    // the cache every run, and paying the repartition inside the clock
+    // cost 1.8× at sf0.1 for one saved 13 MB exchange.)
     val edges = GraphStore.purchaseEdges(s, dir).registerCache()
     val seeds = Tables.load(s, dir, "customer")
       .filter(col("c_nationkey") === 0)
@@ -351,6 +351,10 @@ object Graph {
     val edges = GraphStore.purchaseEdges(s, dir)
       .select(col("cust").as("src"), col("supp").as("dst"))
       .registerCache()
+    // Scale each raw score by the frame's one-row max. Precondition:
+    // `raw` is a registered cache — it is read twice (the max agg and
+    // the projection), so an uncached argument recomputes its whole
+    // upstream chain per read, doubling per half-round.
     def normalize(raw: DataFrame, key: String, rawCol: String,
                   outCol: String): DataFrame = {
       val maxCol = rawCol + "_max"
@@ -363,7 +367,7 @@ object Graph {
     // distinct src, and each edge's src is in that set by
     // construction, so a1_raw = Σ_{src→dst} h0(src) = 10⁶·indeg(dst).
     // The unrolled form paid a distinct + an edges⋈h0 join (r15
-    // JobTrace: 5 AQE stage-jobs) to compute a degree count; the
+    // per-job trace: 5 AQE stage-jobs) to compute a degree count; the
     // oracle SQL below KEEPS the join form, so the algebra is
     // re-proven cross-engine on every correctness run.
     var araw = edges.groupBy("dst")
@@ -581,11 +585,12 @@ object Graph {
     * g1/g3's discipline: rounds are FIXED and unrolled into one lazy
     * plan (full k-core converges in ≤ max-degree rounds; 3 bounded
     * rounds give the standard truncated peel whose fixpoint the
-    * oracle mirrors as chained CTEs). Each round is two map-combined
-    * degree aggregates + two semi-joins, all keyed on the edge's own
-    * endpoints — the edge list is built ONCE, cached, and only
-    * SHRINKS; no exchange ever carries more than the current edge
-    * set. Output is each surviving node's side and final degree —
+    * oracle mirrors as chained CTEs). Round 1 filters on the tier's
+    * denormalized degrees; each later round is two keyed window counts
+    * (over cust, over supp) + one conjunctive filter, keyed on the
+    * edge's own endpoints — the edge list is built ONCE, cached, and
+    * only SHRINKS; no exchange ever carries more than the current
+    * edge set. Output is each surviving node's side and final degree —
     * integer-exact.
     */
   private val CoreK = 5

@@ -37,39 +37,15 @@ final class QueryMetrics(maxRecords: Int = 10000) extends QueryExecutionListener
 
   private val records = new ConcurrentLinkedQueue[Record]()
 
-  // AQE hides the real plan: AdaptiveSparkPlanExec carries the final
-  // plan in `executedPlan` (not `children`) and each materialized
-  // stage sits behind a QueryStageExec wrapper — a plain `foreach`
-  // sees only the adaptive root and reads every metric as 0. Cached
-  // frames hide theirs the same way: the shuffles that built a
-  // persisted stage live under InMemoryTableScan's cachedPlan, not in
-  // `children` — without descending there, any query that persists an
-  // intermediate reports ~0 shuffle volume. Each distinct cached plan
-  // is visited once even when scanned twice.
-  private def allNodes(p: SparkPlan): Iterator[SparkPlan] = {
-    val seenCached = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    def go(p: SparkPlan): Iterator[SparkPlan] =
-      Iterator(p) ++ (p match {
-        case a: AdaptiveSparkPlanExec => go(a.executedPlan)
-        case q: QueryStageExec        => go(q.plan)
-        case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          if (seenCached.add(m.relation.cachedPlan)) go(m.relation.cachedPlan)
-          else Iterator.empty
-        case other => other.children.iterator.flatMap(go)
-      })
-    go(p)
-  }
-
   private def metricSum(qe: QueryExecution, names: Set[String]): Long =
-    allNodes(qe.executedPlan).flatMap(_.metrics).collect {
+    QueryMetrics.allNodes(qe.executedPlan).flatMap(_.metrics).collect {
       case (key, m: SQLMetric) if names.contains(key) => math.max(m.value, 0L)
     }.sum
 
   private def record(funcName: String, qe: QueryExecution,
                      durationNs: Long, failed: Boolean): Unit = {
     if (records.size < maxRecords) {
-      val out = allNodes(qe.executedPlan)
+      val out = QueryMetrics.allNodes(qe.executedPlan)
         .flatMap(_.metrics.get("numOutputRows").map(m => math.max(m.value, 0L)))
         .maxOption.getOrElse(0L)
       records.add(Record(
@@ -108,6 +84,32 @@ final class QueryMetrics(maxRecords: Int = 10000) extends QueryExecutionListener
 }
 
 object QueryMetrics {
+  /** Every node of an executed plan — the one plan walker (this
+    * listener's metrics, `ScanCount`'s scan audit). AQE hides the real
+    * plan: AdaptiveSparkPlanExec carries the final plan in
+    * `executedPlan` (not `children`) and each materialized stage sits
+    * behind a QueryStageExec wrapper — a plain `foreach` sees only the
+    * adaptive root and reads every metric as 0. Cached frames hide
+    * theirs the same way: the shuffles that built a persisted stage
+    * live under InMemoryTableScan's cachedPlan, not in `children` —
+    * without descending there, any query that persists an intermediate
+    * reports ~0 shuffle volume. Each distinct cached plan is visited
+    * once even when scanned twice. */
+  def allNodes(p: SparkPlan): Iterator[SparkPlan] = {
+    val seenCached = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def go(p: SparkPlan): Iterator[SparkPlan] =
+      Iterator(p) ++ (p match {
+        case a: AdaptiveSparkPlanExec => go(a.executedPlan)
+        case q: QueryStageExec        => go(q.plan)
+        case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+          if (seenCached.add(m.relation.cachedPlan)) go(m.relation.cachedPlan)
+          else Iterator.empty
+        case other => other.children.iterator.flatMap(go)
+      })
+    go(p)
+  }
+
   /** Attach a fresh listener to the session and return it. */
   def attach(spark: SparkSession, maxRecords: Int = 10000): QueryMetrics = {
     val l = new QueryMetrics(maxRecords)

@@ -717,7 +717,7 @@ object Keywords {
     // nodes) — the per-round `nodes ⟕ contrib` join only re-attached
     // a row set contrib already carries, and its coalesce(in_micro,0)
     // arm was unreachable. Dropping it removes 3 joins and their
-    // per-round broadcast builds (JobTrace: 22 → 16 jobs at sf0.1).
+    // per-round broadcast builds (per-job trace: 22 → 16 jobs at sf0.1).
     // The DuckDB oracle KEEPS the nodes-left-join recursion, so the
     // symmetry argument is re-proven cross-engine on every run.
     for (_ <- 1 to 3) {

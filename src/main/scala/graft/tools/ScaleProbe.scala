@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Sessions
 import graft.pipeline.QueryMetrics
 
 /** The 100×-question answered by measurement: run the quadratic-risk
@@ -99,7 +100,7 @@ object ScaleProbe {
     // doc-keyed repartition, word-stats joins are doc-grain
     "k8_rake_phrases",
     // g8: the edge set only SHRINKS across peel rounds; each round is
-    // two degree aggs + two semi-joins on the edges' own keys
+    // two keyed window counts (over cust, over supp) + one filter
     "g8_kcore",
     // c16: one shard exchange; in-task packing state is O(OpenCap)
     "c16_bestfit_pack",
@@ -150,19 +151,7 @@ object ScaleProbe {
     val small = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val big   = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val names = if (args.length > 2) args.drop(2).toSeq else DefaultSuspects
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val report = names.map { name =>
       val fn = graft.SparkEntry.queries(name)
@@ -173,8 +162,7 @@ object ScaleProbe {
         val b = shuffleBytesOf(fn(spark, dir))
         // drop per-query registered caches so consecutive probes
         // measure from cold and don't accumulate blocks
-        graft.core.Caching.releaseAll()
-        spark.catalog.clearCache()
+        Sessions.release(spark)
         b -> spark.read.parquet(s"$dir/${inputTable(name)}.parquet").count()
       }
       val (bSmall, rowsSmall) = run(small)
@@ -228,15 +216,6 @@ object ScaleProbe {
     println(line)
   }
 
-  /** Run `action` under a fresh listener; return the query's shuffle
-    * bytes. A query with internal persists emits SEVERAL records on
-    * the async execution-listener bus (one per materializing action),
-    * so: wait for the first arrival, then for the bus to go quiet —
-    * and take the MAX record, not the sum. Cached-plan SQLMetrics are
-    * CUMULATIVE and are re-read by every record whose plan scans the
-    * cache, so the final action's record already contains the cache
-    * build's shuffles; summing would count them once per record.
-    */
   /** Probe a query by the session its DataFrame actually belongs to.
     * `QueryMetrics` registers on the session-scoped
     * `ExecutionListenerManager`, and a registry query is free to build
@@ -244,26 +223,25 @@ object ScaleProbe {
     * `s.newSession()`) — a listener on the parent session never sees
     * that execution and the probe reads a phantom 0. */
   def shuffleBytesOf(df: org.apache.spark.sql.DataFrame): Long =
-    shuffleBytes(df.sparkSession) {
-      df.write.format("noop").mode("overwrite").save()
-    }
+    shuffleBytes(df.sparkSession)(Sessions.run(df))
 
+  /** Run `action` under a fresh listener; return the query's shuffle
+    * bytes. The bus is drained before the listener attaches (no
+    * earlier execution can land in it) and after the action (every
+    * record it produced has arrived). A query with internal persists
+    * emits SEVERAL records (one per materializing action), so take the
+    * MAX record, not the sum: cached-plan SQLMetrics are CUMULATIVE and
+    * are re-read by every record whose plan scans the cache, so the
+    * final action's record already contains the cache build's
+    * shuffles; summing would count them once per record.
+    */
   def shuffleBytes(spark: SparkSession)(action: => Unit): Long = {
+    Sessions.drain(spark)
     val l = QueryMetrics.attach(spark)
     try {
-      val before = l.snapshot.size
       action
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (l.snapshot.size == before && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      var last = -1
-      while ({
-        val n = l.snapshot.size
-        val settling = n != last
-        last = n
-        settling && System.nanoTime() < deadline
-      }) Thread.sleep(300)
-      l.snapshot.drop(before).map(_.shuffleBytes).maxOption.getOrElse(0L)
+      Sessions.drain(spark)
+      l.snapshot.map(_.shuffleBytes).maxOption.getOrElse(0L)
     } finally QueryMetrics.detach(spark, l)
   }
 }

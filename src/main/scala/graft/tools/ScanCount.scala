@@ -3,9 +3,11 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.core.Sessions
+import graft.pipeline.QueryMetrics
 
 /** Scan-repetition audit (round-7 verdict #7): how many times does one
   * query's EXECUTED plan scan each input, and does any iterative query
@@ -26,23 +28,6 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object ScanCount {
 
-  /** Walk the executed plan, descending AQE wrappers and each distinct
-    * cached plan once (QueryMetrics' traversal discipline). */
-  private def allNodes(p: SparkPlan): Iterator[SparkPlan] = {
-    val seenCached = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    def go(p: SparkPlan): Iterator[SparkPlan] =
-      Iterator(p) ++ (p match {
-        case a: AdaptiveSparkPlanExec => go(a.executedPlan)
-        case q: QueryStageExec        => go(q.plan)
-        case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          if (seenCached.add(m.relation.cachedPlan)) go(m.relation.cachedPlan)
-          else Iterator.empty
-        case other => other.children.iterator.flatMap(go)
-      })
-    go(p)
-  }
-
   /** Run one registry query to the noop sink and return its executed
     * plan's file-scan counts, keyed by the scanned directory/file name
     * (e.g. "lineitem.parquet", "purchase"). */
@@ -55,13 +40,8 @@ object ScanCount {
     fn(spark, dir): Unit
     val captured = new AtomicReference[QueryExecution]()
     val listener = new QueryExecutionListener {
-      // keep the LAST delivered event: the bus is FIFO and our noop
-      // write is the last action started, so once delivery quiesces
-      // the final event IS the audited query — a build-internal
-      // execution still queued from the warm construction can no
-      // longer masquerade as the query's plan (it did: the round-9
-      // audit of a stale-tier query captured the build's sampling
-      // pass and under-counted the real scans)
+      // keep the LAST delivered event: an execution nested in the noop
+      // write ends before it, so the final event IS the audited query
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         captured.set(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
@@ -73,24 +53,19 @@ object ScanCount {
     // discipline
     val frame = fn(spark, dir)
     val sess = frame.sparkSession
+    // deliver every execution the constructions fired BEFORE listening
+    // (a build-internal execution still queued from the warm
+    // construction once masqueraded as the query's plan: the round-9
+    // audit of a stale-tier query captured the build's sampling pass
+    // and under-counted the real scans)
+    Sessions.drain(spark)
     sess.listenerManager.register(listener)
     try {
-      frame.write.format("noop").mode("overwrite").save()
-      // listener fires asynchronously on the listener bus: wait for
-      // at least one event, then for delivery to go quiet
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (captured.get() == null && System.nanoTime() < deadline) Thread.sleep(20)
-      var last = captured.get()
-      require(last != null, "listener never fired")
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() - stableSince < 300L * 1000 * 1000 &&
-             System.nanoTime() < deadline) {
-        Thread.sleep(20)
-        val now = captured.get()
-        if (!(now eq last)) { last = now; stableSince = System.nanoTime() }
-      }
-      val qe = last
-      allNodes(qe.executedPlan)
+      Sessions.run(frame)
+      Sessions.drain(spark)
+      val qe = captured.get()
+      require(qe != null, "listener never fired")
+      QueryMetrics.allNodes(qe.executedPlan)
         .collect { case f: FileSourceScanExec =>
           f.relation.location.rootPaths.map { p =>
             // DerivedStore/AtomicPublish tiers read versioned subdirs
@@ -102,8 +77,7 @@ object ScanCount {
         .flatten.toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
     } finally {
       sess.listenerManager.unregister(listener)
-      graft.core.Caching.releaseAll()
-      spark.catalog.clearCache()
+      Sessions.release(spark)
     }
   }
 
@@ -114,7 +88,7 @@ object ScanCount {
     val names =
       if (rest.nonEmpty) rest
       else graft.SparkEntry.queries.keys.filter(_.startsWith("g")).toSeq.sorted
-    val spark = graft.core.Sessions.local()
+    val spark = Sessions.local()
     for (n <- names.sorted) {
       val c = counts(spark, sfDir, graft.SparkEntry.queries(n))
       println(f"$n%-22s ${c.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(" ")}")

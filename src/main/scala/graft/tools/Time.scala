@@ -1,52 +1,47 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentLinkedQueue
 
-/** Local perf iteration: time a subset of the registry the same way
-  * Bench does (warmup at sf0.001, best-of-3 at the target SF, noop
-  * sink). Usage: `run_class.sh graft.tools.Time <sfDir> [-cold] <name>...`
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.core.Sessions
+
+/** Local perf iteration: time a subset of the registry the way Bench
+  * does (warmup at sf0.001, best-of-3 at the target SF through the
+  * noop sink, blocking release between runs), then profile each query
+  * in one more, UNTIMED run — listeners stay off every timed run.
   *
-  * `-cold` releases registered caches between runs exactly like Bench
-  * does — without it, a query that persists an intermediate gets
-  * plan-matching cache reuse in runs 2-3 and `best` reports the warm
-  * cost, which is NOT the number Bench will print.
+  * Usage: `run_class.sh graft.tools.Time <sfDir> [-analyze] [name...]`
+  * (no names: the whole registry). Per query:
+  * {{{
+  * <name>  best=<s>  runs=<s>,<s>,<s>  jobs=<n> stages=<n> tasks=<n> shufMB=<MB>
+  *     job <id>  ran <executed>/<submitted> stages  <stageId>:<stage name>(<tasks>t) | …
+  * }}}
+  * `jobs`/`stages`/`tasks` count the jobs submitted and the stages and
+  * tasks that ran, construction included; `shufMB` is the run's
+  * shuffle volume (ScaleProbe's rule). One indented line per job names
+  * the stages it actually ran — a job's submitted list includes
+  * ancestors Spark skips as already computed — so a many-job query
+  * shows WHICH materialization (cache fill, broadcast build, AQE
+  * stage, final stage) each round-trip is.
   */
 object Time {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, rest @ _*) = args
-    val cold = rest.contains("-cold")
     val analyze = rest.contains("-analyze")
-    val names = rest.filterNot(f => f == "-cold" || f == "-analyze")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // match Bench: without this the 100-entry generated-class cache
-      // makes timings include Janino recompiles Bench won't pay
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-    val spark = graft.core.Sessions.applyExtraConf(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = rest.filterNot(_ == "-analyze")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-time")
     // `-analyze` reproduces the nightly-pipeline world (TierRefresh's
     // analyze_raw step): raw tables carry exact rowCount/NDV, which is
     // the precondition for CBO join-reorder to consider them at all
     if (analyze) graft.io.TableStats.analyzeAll(spark, sfDir): Unit
-    val sel = graft.SparkEntry.queries.filter(kv => names.contains(kv._1)).toSeq.sortBy(_._1)
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-    def release(): Unit = if (cold) {
-      // blocking, matching Bench: async block drops from a cache-heavy
-      // query otherwise bleed into the NEXT query's samples (the
-      // g9-after-g8 suite-order inflation diagnosed in r15)
-      graft.core.Caching.releaseAll(blocking = true)
-      spark.catalog.clearCache()
-    }
+    val sel = graft.SparkEntry.queries
+      .filter(kv => names.isEmpty || names.contains(kv._1)).toSeq.sortBy(_._1)
+    def run(fn: (SparkSession, String) => DataFrame, dir: String): Unit =
+      Sessions.run(fn(spark, dir))
     // Fail fast and LOUD: a query that can't analyze is named here with
     // its error, instead of dying anonymously mid-timing-loop.
     val warm = sel.filter { case (name, fn) =>
@@ -56,7 +51,7 @@ object Time {
           System.err.println(s"[time] warmup FAILED $name: ${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
           false
         }
-      release()
+      Sessions.release(spark)
       ok
     }
     warm.foreach { case (name, fn) =>
@@ -64,11 +59,42 @@ object Time {
         val t0 = System.nanoTime()
         run(fn, sfDir)
         val t = (System.nanoTime() - t0) / 1e9
-        release()
+        Sessions.release(spark)
         t
       }
-      println(f"$name%-28s best=${ts.min}%7.3f  runs=${ts.map(t => f"$t%.3f").mkString(",")}")
+      val (jobs, bytes) = profile(spark, fn(spark, sfDir))
+      Sessions.release(spark)
+      val ran = jobs.ran.asScala.map(s => s.stageId -> s).toMap
+      println(f"$name%-28s best=${ts.min}%7.3f  runs=${ts.map(t => f"$t%.3f").mkString(",")}" +
+        f"  jobs=${jobs.started.size} stages=${jobs.ran.size} tasks=${jobs.ran.asScala.map(_.numTasks).sum}" +
+        f" shufMB=${bytes / 1e6}%.2f")
+      jobs.started.forEach { j =>
+        val executed = j.stageIds.flatMap(ran.get)
+        val stageLabels = executed.map(s =>
+          s"${s.stageId}:${s.name.takeWhile(_ != '\n').take(70)}(${s.numTasks}t)")
+        println(f"    job ${j.jobId}%3d  ran ${executed.size}%2d/${j.stageIds.size}%2d stages  " +
+          stageLabels.mkString(" | ").take(180))
+      }
     }
     spark.stop()
+  }
+
+  /** Jobs submitted and stages completed while attached. */
+  private final class JobLog extends SparkListener {
+    val started = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val ran = new ConcurrentLinkedQueue[StageInfo]()
+    override def onJobStart(j: SparkListenerJobStart): Unit = started.add(j): Unit
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      ran.add(s.stageInfo): Unit
+  }
+
+  /** Build and run one query with the job log attached; return the log
+    * and the run's shuffle bytes, every event delivered. */
+  private def profile(spark: SparkSession, build: => DataFrame): (JobLog, Long) = {
+    Sessions.drain(spark)
+    val jobs = new JobLog
+    spark.sparkContext.addSparkListener(jobs)
+    try (jobs, ScaleProbe.shuffleBytesOf(build))
+    finally spark.sparkContext.removeSparkListener(jobs)
   }
 }

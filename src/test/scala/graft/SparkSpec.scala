@@ -5,21 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, `Test / fork := true`). */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Sessions.local(cores = 8, appName = "graft-test")
   val sfDir = "/root/testdata/sf0.001"
 }
 

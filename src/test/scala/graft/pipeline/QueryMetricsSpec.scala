@@ -6,10 +6,9 @@ import graft.SparkSpec
 
 class QueryMetricsSpec extends SparkSpec {
 
-  // listener callbacks are async (execution listener bus) — poll
-  private def awaitRecords(l: QueryMetrics, n: Int): Seq[l.Record] = {
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (l.snapshot.size < n && System.nanoTime() < deadline) Thread.sleep(50)
+  // listener callbacks are async (execution listener bus) — drain it
+  private def drained(l: QueryMetrics): Seq[l.Record] = {
+    graft.core.Sessions.drain(spark)
     l.snapshot
   }
 
@@ -20,7 +19,7 @@ class QueryMetricsSpec extends SparkSpec {
       graft.core.Tables.load(s, sfDir, "orders")
         .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
         .write.format("noop").mode("overwrite").save()
-      val recs = awaitRecords(l, 1)
+      val recs = drained(l)
       assert(recs.nonEmpty, "no metrics recorded")
       val r = recs.last
       assert(!r.failed)
@@ -36,7 +35,7 @@ class QueryMetricsSpec extends SparkSpec {
     val l = QueryMetrics.attach(s)
     try {
       graft.core.Tables.load(s, sfDir, "nation").count()
-      awaitRecords(l, 1)
+      drained(l)
       val df = l.toDF(s)
       assert(df.columns.toSeq == Seq("func_name", "duration_ns", "output_rows",
         "shuffle_bytes", "shuffle_records", "spill_bytes", "failed"))

@@ -149,8 +149,9 @@ class ScaleLinearitySpec extends SparkSpec {
     // histogram is 9 rows behind a scalar cross; t15 vocab-grain min
     // + 10-row decile histograms; c18 runs on the |sources| grain;
     // g11 rides g4's cached wedge build + two node-keyed label joins;
-    // d27 is three bounded-bucket self-joins over ONE signature pass
-    // + d11's verify on the distinct union; s17's shuffle is the two
+    // d27 is ONE bounded-bucket self-join on (n_bands, band_idx,
+    // band_hash) over one signature pass + d11's verify on the
+    // distinct candidate pairs; s17's shuffle is the two
     // ≤10-per-query rank lists (its exact side is s1's declared
     // baseline, compute-heavy but shuffle-light)
     "q93_cohort_retention", "q94_ab_conversion", "q95_benford",
@@ -196,8 +197,7 @@ class ScaleLinearitySpec extends SparkSpec {
         // probe on the DataFrame's OWN session — q85 builds on
         // s.newSession() and a parent-session listener reads 0
         val b = ScaleProbe.shuffleBytesOf(fn(spark, dir))
-        graft.core.Caching.releaseAll()
-        spark.catalog.clearCache()
+        graft.core.Sessions.release(spark)
         b
       }
       val bSmall = bytes(Small)
