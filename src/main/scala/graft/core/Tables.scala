@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -17,7 +18,27 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    normalized(spark, name, spark.read.parquet(s"$dir/$name.parquet"))
+
+  /** Some of a table's data files — an append-only refresh's delta —
+    * read with the table root as `basePath` (so partition columns of a
+    * partitioned layout survive) and normalized exactly like [[load]].
+    * A single-file table is read as is: Spark rejects a file as
+    * `basePath`. */
+  def loadFiles(spark: SparkSession, dir: String, name: String,
+                files: Seq[String]): DataFrame = {
+    val root = new Path(s"$dir/$name.parquet")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val reader =
+      if (fs.exists(root) && fs.getFileStatus(root).isDirectory)
+        spark.read.option("basePath", root.toString)
+      else spark.read
+    normalized(spark, name, reader.parquet(files: _*))
+  }
+
+  private def normalized(spark: SparkSession, name: String,
+                         df: DataFrame): DataFrame =
     // events.ts has drifted across TESTDATA generations:
     //  - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; Sessions
     //    sets spark.sql.legacy.parquet.nanosAsLong so it arrives as a long
@@ -27,7 +48,6 @@ object Tables {
     //    which unix_micros/unix_millis/window functions reject. Cast to
     //    TIMESTAMP (LTZ) — an exact wall-clock reinterpretation only
     //    because the session zone is pinned to UTC, so require it.
-    val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events") df.schema("ts").dataType match {
       case LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -39,7 +59,6 @@ object Tables {
       case _ => df
     }
     else df
-  }
 
   /** Register every table as a temp view so `spark.sql` text (the
     * reference's pushdown-query scan surface, S2) runs against them.

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Caching.RegisterSyntax
 import graft.core.Tables
 import graft.io.{DerivedStore, SortedLayout}
+import graft.io.DerivedStore.Refresh
 
 /** Persisted standing LSH band index — the dedup-side lifecycle twin
   * of `sim/AnnIndex` (round-7 verdict #3's pattern, applied to d15's
@@ -56,9 +57,21 @@ object BandIndexStore {
     * and ClusterStore already carry — the explicit-dir [[build]]/
     * [[append]] lifecycle has no source table to fingerprint, because
     * ingested batches ARE its source of truth; this entry point is for
-    * the snapshot-derived tier). */
+    * the snapshot-derived tier).
+    *
+    * Append-only refresh: band keys are a pure per-doc map, so the next
+    * version is exactly prev ∪ bands(delta) — the [[append]] lifecycle
+    * expressed as [[DerivedStore.Refresh.Lsm]] (byte-copied base +
+    * delta runs, O(Δ) band computation AND O(Δ) IO). Contract (the
+    * append-only table contract generally): delta files carry NEW
+    * doc_ids. File-grain drift classification can't see key overlap,
+    * so [[DerivedStore.perKeyDelta]] ENFORCES it: a re-ingested
+    * existing doc_id (which would silently duplicate its band rows and
+    * diverge from a rebuild) is rejected and the full rebuild takes
+    * over (AnnIndex.append's guard, with the graceful fallback a frame
+    * tier affords). */
   def corpusIndex(s: SparkSession, dir: String): DataFrame =
-    DerivedStore.servedIncrementalLsm(s, dir, "band_index", Seq("documents"),
+    DerivedStore.served(s, dir, "band_index", Seq("documents"),
       // the tiers compose: the band build reads the shingle tier's
       // stored per-shingle longs (hm) — its md5 pass is never re-paid
       // here; a stale shingle tier refreshes first (re-entrant serve,
@@ -67,31 +80,9 @@ object BandIndexStore {
       // composes through the shingle tier
       (s2, d) => Dedup.bandsOf(Dedup.signaturesOf(
         ShingleStore.served(s2, d).select("doc_id", "hm"))),
-      corpusIndexDelta, numFiles = 8, sortKey = "band_hash",
-      summaryKey = Some("doc_id"))
-
-  /** Append-only delta of the snapshot tier: band keys are a pure
-    * per-doc map, so the next version is exactly prev ∪ bands(delta) —
-    * the [[append]] lifecycle expressed as [[DerivedStore]]'s LSM
-    * delta (r12: byte-copied base + delta runs, O(Δ) band computation
-    * AND O(Δ) IO — the plain merge still rewrote the tier nightly).
-    * Contract (the append-only table contract generally): delta files
-    * carry NEW doc_ids. File-grain drift classification can't see key
-    * overlap, so the precondition is ENFORCED here: a re-ingested
-    * existing doc_id (which would silently duplicate its band rows and
-    * diverge from a rebuild) is detected by a delta-sized key probe
-    * and rejected — the full rebuild takes over (AnnIndex.append's
-    * guard, with the graceful fallback a frame tier affords). */
-  private def corpusIndexDelta(s: SparkSession, dir: String, prev: DataFrame,
-                               deltas: Map[String, Seq[String]]): Option[DataFrame] =
-    deltas.getOrElse("documents", Seq.empty) match {
-      case Seq() => Some(prev.limit(0))
-      case paths =>
-        val delta = s.read.option("basePath", s"$dir/documents.parquet")
-          .parquet(paths: _*)
-        if (DerivedStore.deltaKeysOverlap(prev, delta, "doc_id")) None
-        else Some(bandKeys(delta))
-    }
+      Refresh.Lsm(DerivedStore.perKeyDelta("documents", "doc_id")(
+        (_, _, _, docs) => bandKeys(docs))),
+      numFiles = 8, sortKey = "band_hash", summaryKey = Some("doc_id"))
 
   /** [[dedupBatch]] against the snapshot-served [[corpusIndex]]. */
   def dedupBatchAgainstCorpus(s: SparkSession, dir: String,

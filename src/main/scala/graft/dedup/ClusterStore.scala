@@ -3,7 +3,9 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
 import graft.io.DerivedStore
+import graft.io.DerivedStore.Refresh
 
 /** Materialized dup-cluster tier — the GraphStore/TokenStore
   * build-once pattern applied to the dedup family's most expensive
@@ -56,16 +58,20 @@ object ClusterStore {
     * collect decides the copy set. */
   private val LabelBuckets = 32
 
-  /** Store-served lexical dup-cluster labels. Registered with the
-    * BUCKETED incremental merge: append-only corpus growth refreshes
-    * the labels from only the delta-touching pairs
+  /** Store-served lexical dup-cluster labels. Refreshed as
+    * [[DerivedStore.Refresh.Bucketed]]: append-only corpus growth
+    * refreshes the labels from only the delta-touching pairs
     * ([[lshComponentsUpserts]]), and the publish rewrites only the
-    * doc_id-buckets those relabels live in. */
+    * doc_id-buckets those relabels live in. A re-ingested existing
+    * doc_id breaks the old×old-pairs-cannot-change argument the
+    * contraction rests on, so [[DerivedStore.perKeyDelta]]'s guard
+    * rebuilds instead of mislabeling. */
   def lshComponents(s: SparkSession, dir: String): DataFrame =
-    DerivedStore.servedIncrementalBucketed(s, dir, "lsh_components",
-      Seq("documents"), lshComponentsInline, lshComponentsUpserts,
-      numBuckets = LabelBuckets, numFiles = 4, sortKey = "doc_id",
-      summaryKey = Some("doc_id"))
+    DerivedStore.served(s, dir, "lsh_components", Seq("documents"),
+      lshComponentsInline,
+      Refresh.Bucketed(DerivedStore.perKeyDelta("documents", "doc_id")(
+        lshComponentsUpserts), LabelBuckets),
+      numFiles = 4, sortKey = "doc_id", summaryKey = Some("doc_id"))
 
   /** Store-served semantic cluster labels, incrementally refreshed
     * under append-only embedding growth ([[embComponentsUpserts]]) —
@@ -73,10 +79,10 @@ object ClusterStore {
     * old-pairs-cannot-change property the lexical merge rests on
     * holds here. */
   def embComponents(s: SparkSession, dir: String): DataFrame =
-    DerivedStore.servedIncrementalBucketed(s, dir, "emb_components",
-      Seq("embeddings"), embComponentsInline, embComponentsUpserts,
-      numBuckets = LabelBuckets, numFiles = 4, sortKey = "doc_id",
-      summaryKey = Some("doc_id"))
+    DerivedStore.served(s, dir, "emb_components", Seq("embeddings"),
+      embComponentsInline,
+      Refresh.Bucketed(embComponentsUpserts, LabelBuckets),
+      numFiles = 4, sortKey = "doc_id", summaryKey = Some("doc_id"))
 
   /** Incremental connected components under append-only corpus growth.
     *
@@ -96,16 +102,7 @@ object ClusterStore {
     * band self-join and a convergence loop shuffling EVERY historical
     * pair per round. */
   private def lshComponentsUpserts(s: SparkSession, dir: String, prev: DataFrame,
-                                   deltas: Map[String, Seq[String]]): Option[DataFrame] = {
-    val paths = deltas.getOrElse("documents", Seq.empty)
-    if (paths.isEmpty) return Some(prev.limit(0)) // no delta: nothing changes
-    val deltaDocs = s.read.option("basePath", s"$dir/documents.parquet")
-      .parquet(paths: _*)
-    // merge precondition (BandIndexStore's guard): a re-ingested
-    // existing doc_id breaks the old×old-pairs-cannot-change argument
-    // the contraction rests on — rebuild instead of mislabeling
-    if (DerivedStore.deltaKeysOverlap(prev, deltaDocs, "doc_id"))
-      return None
+                                   deltaDocs: DataFrame): DataFrame = {
     val deltaBands = Dedup.bandKeysOf(deltaDocs)
     val allBands = BandIndexStore.corpusIndex(s, dir)
     // d3's pair contract (canonical doc_a < doc_b, distinct), restricted
@@ -120,18 +117,17 @@ object ClusterStore {
       .select(least(col("n.doc_id"), col("c.doc_id")).as("doc_a"),
         greatest(col("n.doc_id"), col("c.doc_id")).as("doc_b"))
       .distinct()
-    Some(contractedUpserts(prev, newPairs))
+    contractedUpserts(prev, newPairs)
   }
 
-  /** Semantic twin of [[lshComponentsMerge]]: delta embeddings quantize
+  /** Semantic twin of [[lshComponentsUpserts]]: delta embeddings quantize
     * alone, s4's pair contract restricted to delta-touching pairs, then
     * the same label contraction. */
   private def embComponentsUpserts(s: SparkSession, dir: String, prev: DataFrame,
                                    deltas: Map[String, Seq[String]]): Option[DataFrame] = {
     val paths = deltas.getOrElse("embeddings", Seq.empty)
     if (paths.isEmpty) return Some(prev.limit(0))
-    val deltaRaw = s.read.option("basePath", s"$dir/embeddings.parquet")
-      .parquet(paths: _*)
+    val deltaRaw = Tables.loadFiles(s, dir, "embeddings", paths)
     // same precondition as the lexical merge: a re-ingested vec_id
     // invalidates the contraction — rebuild. The delta side carries the
     // rename so the probe key matches the tier's summarized column

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.io.DerivedStore
+import graft.io.DerivedStore.Refresh
 
 /** Materialized shingle tier — the TokenStore argument applied to the
   * d-family, the engine's most re-computed prefix after tokens: every
@@ -29,7 +30,7 @@ import graft.io.DerivedStore
   * map cost of the whole family) is paid once per corpus snapshot at
   * build time; queries read longs.
   *
-  * Freshness/publication/GC ride [[DerivedStore.servedIncremental]]
+  * Freshness/publication/GC ride [[DerivedStore.served]]
   * like every other tier; shingling is a pure per-doc map, so
   * append-only corpus growth refreshes at O(Δ) with the re-ingestion
   * key guard routing overlap to the full rebuild. At 100 TB the tier
@@ -64,22 +65,10 @@ object ShingleStore {
     * sorted runs beside the byte-copied base — the md5 work was
     * already O(Δ); now the IO is too. */
   def served(s: SparkSession, dir: String): DataFrame =
-    DerivedStore.servedIncrementalLsm(s, dir, "shingles", Seq("documents"),
-      artifacts, deltaArtifacts, numFiles = 8, sortKey = "doc_id",
-      summaryKey = Some("doc_id"))
-
-  /** O(Δ) append-only delta with the re-ingestion guard —
-    * TokenStore's contract, verbatim. */
-  private def deltaArtifacts(s: SparkSession, dir: String, prev: DataFrame,
-                             deltas: Map[String, Seq[String]]): Option[DataFrame] =
-    deltas.getOrElse("documents", Seq.empty) match {
-      case Seq() => Some(prev.limit(0))
-      case paths =>
-        val delta = s.read.option("basePath", s"$dir/documents.parquet")
-          .parquet(paths: _*)
-        if (DerivedStore.deltaKeysOverlap(prev, delta, "doc_id")) None
-        else Some(artifactsOf(delta))
-    }
+    DerivedStore.served(s, dir, "shingles", Seq("documents"), artifacts,
+      Refresh.Lsm(DerivedStore.perKeyDelta("documents", "doc_id")(
+        (_, _, _, docs) => artifactsOf(docs))),
+      numFiles = 8, sortKey = "doc_id", summaryKey = Some("doc_id"))
 
   /** The exploded (doc_id, lang, sh) rows `Dedup.shingleRows` used to
     * compute inline, read from the tier instead. `keep` mirrors

@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.core.Tables
+
 /** The build-once / serve-many tier machinery shared by every
   * materialized derived table ([[GraphStore]]'s edge tiers,
   * `dedup.ClusterStore`'s component labels, `dedup.BandIndexStore`'s
@@ -14,6 +16,10 @@ import org.apache.spark.sql.functions.col
   * the tier deploys wherever the data lives (HDFS, object stores via
   * their Hadoop connectors, local FS in tests — the same portability
   * contract as [[AtomicPublish]]/[[Vacuum]]/[[Backup]]).
+  *
+  * Two entry points: [[served]] for frame tiers (returns the served
+  * version as a DataFrame) and [[servedDir]] for directory-shaped
+  * tiers (returns the version's path). Both run one serve loop:
   *
   *  - FRESHNESS: a store records the per-file (path, size, mtime)
   *    state of every source table it derives from and rebuilds when
@@ -25,21 +31,20 @@ import org.apache.spark.sql.functions.col
   *    fingerprint that describes it are one atomic unit — there is no
   *    pointer file that can advertise a fingerprint for data that
   *    failed to land.
-  *  - INCREMENTAL REFRESH: because the fingerprint is file-grain, the
-  *    store can CLASSIFY drift instead of only detecting it. When
-  *    every file the current version was built from is still present
-  *    and byte-identical and the only change is NEW files (the
-  *    warehouse's daily reality: immutable part files appended to a
-  *    table, a new day landing in a partitioned layout), a tier that
-  *    registered a merge callback ([[servedIncremental]]) builds its
-  *    next version from the SERVED tier + just the delta files —
-  *    the history-sized scan/join/distinct of a full rebuild never
-  *    re-runs. Any other drift (shrink, in-place rewrite, unknown or
-  *    legacy fingerprint) falls back to the full build. Publication
-  *    of a merged version is byte-for-byte the same protocol as a
-  *    full one — same staging, same fingerprint-inside-version, same
-  *    OCC commit — so readers cannot tell (and need not care) how a
-  *    version was produced.
+  *  - REFRESH: because the fingerprint is file-grain, the store can
+  *    CLASSIFY drift instead of only detecting it. When every file the
+  *    current version was built from is still present and
+  *    byte-identical and the only change is NEW files (the warehouse's
+  *    daily reality: immutable part files appended to a table, a new
+  *    day landing in a partitioned layout), the drift is
+  *    [[SourceDrift.AppendOnly]] and the tier's [[Refresh]] (or
+  *    [[DirMerge]]) may build the next version from the SERVED tier +
+  *    just the delta files — the history-sized scan/join/distinct of a
+  *    full rebuild never re-runs. Any other drift (shrink, in-place
+  *    rewrite, unknown or legacy fingerprint) takes the full build.
+  *    A merged version publishes through byte-for-byte the same
+  *    protocol as a full one, so readers cannot tell (and need not
+  *    care) how a version was produced.
   *  - PUBLICATION: [[AtomicPublish]]'s versioned OCC protocol, not a
   *    private re-implementation. Each build stages under a dot-prefixed
   *    tx dir ([[AtomicPublish.stageVersionWith]]) — invisible to
@@ -76,29 +81,70 @@ object DerivedStore {
     case object Rewritten extends SourceDrift
   }
 
-  /** A tier's append-only refresh: `(session, sfDir, servedTier,
-    * deltaFilesPerTable) => next version's rows`. */
+  /** A frame tier's append-only callback: `(session, sfDir, servedTier,
+    * deltaFilesPerTable) => next version's rows` ([[Refresh.Merge]]). */
   type Merge = (SparkSession, String, DataFrame, Map[String, Seq[String]]) => DataFrame
 
-  /** A PURE-APPEND tier's delta producer for the LSM publish path
-    * ([[servedIncrementalLsm]]): return ONLY the rows the next version
-    * adds beside the served tier's (`next == prev ∪ delta`, no prev
-    * row changes — per-key map tiers qualify; label/cluster tiers do
-    * not). Returning None rejects the batch (re-ingested keys, any
-    * precondition trip) and routes to the full build. */
+  /** [[Merge]] that may reject the batch: None (re-ingested keys, any
+    * precondition trip) routes the refresh to the full build. What the
+    * returned rows mean is the [[Refresh]] case's contract
+    * ([[Refresh.Lsm]]: rows to add; [[Refresh.Bucketed]]: upserts). */
   type DeltaMerge =
     (SparkSession, String, DataFrame, Map[String, Seq[String]]) => Option[DataFrame]
 
-  /** A bucketed tier's upsert producer ([[servedIncrementalBucketed]]):
-    * return the COMPLETE replacement rows for every key whose row the
-    * refresh changes or adds (`next == (prev minus upsert keys) ∪
-    * upserts`; deletions are not expressible). Keys are row-identities
-    * under the tier's sortKey, so an upsert's disturbance is confined
-    * to the hash-buckets its keys live in — the publish rewrites ONLY
-    * those buckets and byte-copies the rest. Returning None rejects
-    * the batch (precondition trip) and routes to the full build. */
-  type UpsertMerge =
-    (SparkSession, String, DataFrame, Map[String, Seq[String]]) => Option[DataFrame]
+  /** How a frame tier refreshes on [[SourceDrift.AppendOnly]] drift.
+    * Every case takes the full `build` on any other drift, and a
+    * [[DeltaMerge]] returning None falls back to it too. */
+  sealed trait Refresh
+  object Refresh {
+
+    /** Full build on every drift. */
+    case object Rebuild extends Refresh
+
+    /** The next version is `merge(s, dir, servedTier, deltaFiles)`
+      * instead of a full `build` — O(delta + |tier|) instead of
+      * O(history), published through the full range-sorted layout. The
+      * merge MUST produce exactly what `build` over the grown sources
+      * would (the spec-pinned contract). */
+    final case class Merge(merge: DerivedStore.Merge) extends Refresh
+
+    /** LSM publication for PURE-APPEND tiers: `delta` returns ONLY the
+      * rows the next version adds beside the served tier's
+      * (`next == prev ∪ delta`, no prev row changes — per-key map tiers
+      * qualify; label/cluster tiers do not; [[perKeyDelta]] is the
+      * shared producer). The next version is a BYTE-COPY of the served
+      * one plus the delta written as sorted runs — history never moves
+      * through a shuffle and never rewrites, so an append night costs
+      * O(Δ) IO instead of the O(|tier|) full-layout rewrite [[Merge]]
+      * pays. Appended runs overlap the base's key ranges, so per-file
+      * pruning degrades gradually until the file budget (4× the
+      * byte-ideal count) routes one fold through a MAJOR rewrite that
+      * restores the tight layout — the stream-index fold's minor/major
+      * split, applied to frame tiers. Sidecars stay truthful at delta
+      * cost: `_filemap` = prev entries + the new runs' stats;
+      * `_keysummary` merges min/max/count; `_keybloom` merges the
+      * delta's keys into the served bloom while the recorded capacity
+      * holds, rebuilding at 2× headroom when exhausted (amortized to
+      * doublings). A delta whose schema differs from the tier's takes
+      * the full build. `LsmTierSpec` pins merge == rebuild, the guard
+      * path, and the budget trigger. */
+    final case class Lsm(delta: DeltaMerge) extends Refresh
+
+    /** For tiers whose merge REWRITES rows (label/cluster tiers — the
+      * one family the LSM append-only runs cannot represent): `upserts`
+      * returns the COMPLETE replacement rows for every key whose row
+      * the refresh changes or adds (`next == (prev − upsert keys) ∪
+      * upserts`; deletions are not expressible). Every version is
+      * hash-bucketed on the sortKey into `numBuckets`
+      * (`b<k>-part-*.parquet`), and an append night rewrites ONLY the
+      * buckets the upserts touch, byte-copying the rest — IO
+      * O(Δ · bucket-fanout) instead of the full-tier range shuffle +
+      * rewrite [[Merge]] pays. A bucket-layout sidecar (`_buckets`)
+      * guards the precondition — a changed bucket count or function, or
+      * a data file that does not declare its bucket, routes to the full
+      * rebuild, never mis-routes a key. */
+    final case class Bucketed(upserts: DeltaMerge, numBuckets: Int) extends Refresh
+  }
 
   /** Last build THIS THREAD ran: (store name, "full" | "merge") —
     * introspection for specs and the run-log note channel. Thread-local
@@ -227,6 +273,22 @@ object DerivedStore {
       .isEmpty
   }
 
+  /** The per-key append delta every per-doc map tier shares: read
+    * `table`'s delta files ([[Tables.loadFiles]]); no delta files →
+    * no rows; a delta `key` already in the served tier (a re-ingested
+    * doc, which would duplicate its rows against what a rebuild of a
+    * clean append produces) → None, so the full build takes over;
+    * otherwise `rows(s, dir, servedTier, deltaRows)`. */
+  private[graft] def perKeyDelta(table: String, key: String)(
+      rows: (SparkSession, String, DataFrame, DataFrame) => DataFrame): DeltaMerge =
+    (s, dir, prev, deltas) => deltas.getOrElse(table, Seq.empty) match {
+      case Seq() => Some(prev.limit(0))
+      case paths =>
+        val delta = Tables.loadFiles(s, dir, table, paths)
+        if (deltaKeysOverlap(prev, delta, key)) None
+        else Some(rows(s, dir, prev, delta))
+    }
+
   private val KeySummaryDir = "_keysummary"
   private val KeyBloomFile = "_keybloom"
 
@@ -327,36 +389,51 @@ object DerivedStore {
     }
   }
 
-  /** One fingerprint line per source DATA file (recursive, so a new
-    * day dir in a partitioned layout is just new lines): sorted
-    * `table/relpath:size:mtime` entries. Hidden files (`_`/`.`
-    * prefixed segments — commit records, staging) are excluded: they
-    * carry no rows, and rewriting a `_SUCCESS` must not look like
-    * data drift. An absent table records a sentinel line so its later
-    * materialization reads as a rewrite, never an append. */
+  /** A source data file: its path relative to the table root (the
+    * file's own name for a single-file table) and its qualified path. */
+  private[io] final case class SourceFile(rel: String, path: String, len: Long,
+                                          mtime: Long)
+
+  /** The one listing of a source table's DATA files: recursive, so a
+    * new day dir in a partitioned layout is just more files. Hidden
+    * files (`_`/`.` prefixed segments — commit records, staging) are
+    * excluded: they carry no rows, and rewriting a `_SUCCESS` must not
+    * look like data drift. None when the table is absent. */
+  private[io] def sourceFiles(s: SparkSession, dir: String,
+                              table: String): Option[Seq[SourceFile]] = {
+    val p = new Path(dir, s"$table.parquet")
+    val fs = hadoopFs(s, p)
+    if (!fs.exists(p)) None
+    else {
+      val root = fs.makeQualified(p)
+      val st = fs.getFileStatus(root)
+      if (!st.isDirectory)
+        Some(Seq(SourceFile(root.getName, root.toString, st.getLen,
+          st.getModificationTime)))
+      else {
+        val prefix = root.toUri.getPath
+        val it = fs.listFiles(root, true)
+        val buf = Seq.newBuilder[SourceFile]
+        while (it.hasNext) {
+          val f = it.next()
+          val rel = f.getPath.toUri.getPath.stripPrefix(prefix).stripPrefix("/")
+          if (!rel.split('/').exists(seg => seg.startsWith("_") || seg.startsWith(".")))
+            buf += SourceFile(rel, f.getPath.toString, f.getLen, f.getModificationTime)
+        }
+        Some(buf.result())
+      }
+    }
+  }
+
+  /** The file-grain fingerprint: sorted `table/relpath:size:mtime`
+    * lines over [[sourceFiles]]. An absent table records a sentinel
+    * line so its later materialization reads as a rewrite, never an
+    * append. */
   private def fileEntries(s: SparkSession, dir: String,
                           sources: Seq[String]): Seq[String] =
     sources.flatMap { t =>
-      val p = new Path(dir, s"$t.parquet")
-      val fs = hadoopFs(s, p)
-      if (!fs.exists(p)) Seq(s"$t absent:0:0")
-      else {
-        val st = fs.getFileStatus(p)
-        if (!st.isDirectory)
-          Seq(s"$t/${p.getName}:${st.getLen}:${st.getModificationTime}")
-        else {
-          val prefix = p.toUri.getPath
-          val it = fs.listFiles(p, true)
-          val buf = Seq.newBuilder[String]
-          while (it.hasNext) {
-            val f = it.next()
-            val rel = f.getPath.toUri.getPath.stripPrefix(prefix).stripPrefix("/")
-            if (!rel.split('/').exists(seg => seg.startsWith("_") || seg.startsWith(".")))
-              buf += s"$t/$rel:${f.getLen}:${f.getModificationTime}"
-          }
-          buf.result()
-        }
-      }
+      sourceFiles(s, dir, t).fold(Seq(s"$t absent:0:0"))(_.map(f =>
+        s"$t/${f.rel}:${f.len}:${f.mtime}"))
     }.sorted
 
   /** Classify how the sources moved since `prev` (a committed
@@ -421,7 +498,7 @@ object DerivedStore {
     * reads it as Rewritten (never merge-eligible), and
     * [[sourcesOfVersion]] — and therefore `tools/Lineage` — still
     * resolves the version to its source tables. For version stores
-    * maintained OUTSIDE [[servedWith]]'s fingerprint lifecycle (the
+    * maintained OUTSIDE the serve loop's fingerprint lifecycle (the
     * stream-ingest gate's compacted folds, whose sources are stream
     * batches no file listing describes). */
   def writeProvenanceOnly(s: SparkSession, versionDir: String,
@@ -438,100 +515,23 @@ object DerivedStore {
     Sidecar.read(hadoopFs(s, p), p)
   }
 
-  /** Serve `name` for `dir`: resolve the highest committed `v=n` whose
-    * recorded fingerprint matches the sources' current state,
-    * publishing a new version first if the store is absent or stale.
-    * Builds are in-JVM-serialized; cross-process racers serialize on
-    * the OCC commit. */
-  def served(s: SparkSession, dir: String, name: String,
-             sources: Seq[String],
-             build: (SparkSession, String) => DataFrame,
-             numFiles: Int, sortKey: String): DataFrame =
-    servedWith(s, dir, name, sources, build, None, None, None, None, numFiles,
-      sortKey, None)
+  /** The served version's dir and the delta files since it — what an
+    * append-only refresh builds the next version from. */
+  private final case class Append(prev: Path, delta: Map[String, Seq[String]])
 
-  /** [[served]] plus an append-only fast path: when drift classifies
-    * as [[SourceDrift.AppendOnly]], the next version is
-    * `merge(s, dir, servedTier, deltaFiles)` instead of a full
-    * `build` — O(delta + |tier|) instead of O(history). The merge
-    * MUST produce exactly what `build` over the grown sources would
-    * (the spec-pinned contract); any non-append drift still takes the
-    * full build.
-    *
-    * `summaryKey`: the tier's row key — when set, every published
-    * version carries a `_keysummary` sidecar (the key's min/max) that
-    * [[deltaKeysOverlap]] consults to answer disjoint-range appends at
-    * O(Δ) instead of a history-sized key-column scan. */
-  def servedIncremental(s: SparkSession, dir: String, name: String,
-                        sources: Seq[String],
-                        build: (SparkSession, String) => DataFrame,
-                        merge: Merge,
-                        numFiles: Int, sortKey: String,
-                        summaryKey: Option[String] = None): DataFrame =
-    servedWith(s, dir, name, sources, build, Some(merge), None, None, None,
-      numFiles, sortKey, summaryKey)
-
-  /** [[servedIncremental]] with LSM publication for pure-append tiers:
-    * on AppendOnly drift the next version is a BYTE-COPY of the served
-    * one plus the delta written as sorted runs — history never moves
-    * through a shuffle and never rewrites, so an append night costs
-    * O(Δ) IO instead of the O(|tier|) full-layout rewrite the plain
-    * merge pays (compute was already O(Δ) there; this closes the IO
-    * side — at a corpus-sized token tier, the difference between
-    * re-writing the warehouse nightly and appending the day). Appended
-    * runs overlap the base's key ranges, so per-file pruning degrades
-    * gradually until the file budget (4× the byte-ideal count) routes
-    * one fold through a MAJOR rewrite that restores the tight layout —
-    * the stream-index fold's minor/major split, applied to frame
-    * tiers. Sidecars stay truthful at delta cost: `_filemap` = prev
-    * entries + the new runs' stats; `_keysummary` merges min/max/count;
-    * `_keybloom` merges the delta's keys into the served bloom while
-    * the recorded capacity holds, rebuilding at 2× headroom when
-    * exhausted (amortized to doublings). Readers and the oracle see
-    * identical rows either way — `LsmTierSpec` pins merge == rebuild,
-    * the guard path, and the budget trigger. */
-  def servedIncrementalLsm(s: SparkSession, dir: String, name: String,
-                           sources: Seq[String],
-                           build: (SparkSession, String) => DataFrame,
-                           deltaMerge: DeltaMerge,
-                           numFiles: Int, sortKey: String,
-                           summaryKey: Option[String] = None): DataFrame =
-    servedWith(s, dir, name, sources, build, None, Some(deltaMerge), None, None,
-      numFiles, sortKey, summaryKey)
-
-  /** [[servedIncremental]] for tiers whose merge REWRITES rows (label/
-    * cluster tiers — the one family the LSM append-only runs cannot
-    * represent): the layout is hash-bucketed on the sortKey
-    * (`b<k>-part-*.parquet`), and an append night rewrites ONLY the
-    * buckets the merge's upserts touch, byte-copying the rest — IO
-    * O(Δ · bucket-fanout) instead of the full-tier range shuffle +
-    * rewrite the plain merge pays (r12 verdict #1). A contracted-label
-    * night touches the few buckets holding relabeled docs; the common
-    * night moves history as bytes. Correctness is the same
-    * merge==rebuild contract: `next == (prev − upsert keys) ∪ upserts`,
-    * spec-pinned row-equal to the full build. A bucket-layout sidecar
-    * (`_buckets`) guards the merge precondition — a changed bucket
-    * count or function routes to the full rebuild, never mis-routes a
-    * key. */
-  def servedIncrementalBucketed(s: SparkSession, dir: String, name: String,
-                                sources: Seq[String],
-                                build: (SparkSession, String) => DataFrame,
-                                upsertMerge: UpsertMerge,
-                                numBuckets: Int,
-                                numFiles: Int, sortKey: String,
-                                summaryKey: Option[String] = None): DataFrame =
-    servedWith(s, dir, name, sources, build, None, None, Some(upsertMerge),
-      Some(numBuckets), numFiles, sortKey, summaryKey)
-
-  private def servedWith(s: SparkSession, dir: String, name: String,
-                         sources: Seq[String],
-                         build: (SparkSession, String) => DataFrame,
-                         merge: Option[Merge],
-                         deltaMerge: Option[DeltaMerge],
-                         upsertMerge: Option[UpsertMerge],
-                         numBuckets: Option[Int],
-                         numFiles: Int, sortKey: String,
-                         summaryKey: Option[String]): DataFrame = {
+  /** The one serve loop behind [[served]] and [[servedDir]]: resolve
+    * the highest committed `v=n` whose recorded fingerprint matches the
+    * sources' current state, publishing a new version first if the
+    * store is absent or stale. `stage(fp, append)` stages the next
+    * version from sources fingerprinted as `fp` — `append` is the
+    * served version and its delta when the drift is
+    * [[SourceDrift.AppendOnly]] — and returns the staging dir and its
+    * mode ("merge" | "full"). Builds are in-JVM-serialized;
+    * cross-process racers serialize on the OCC commit. Returns the
+    * served version's dir. */
+  private def serve(s: SparkSession, dir: String, name: String,
+                    sources: Seq[String])
+                   (stage: (String, Option[Append]) => (Path, String)): String = {
     val store = storePath(dir, name)
     def fresh(fp: String): Option[Long] = AtomicPublish.currentVersion(s, store)
       .filter(v => versionFingerprint(s, store, v).contains(fp))
@@ -542,105 +542,95 @@ object DerivedStore {
         fresh(fp0).getOrElse { // recheck under the lock
           dropPinnedPlans(s, dir, sources, store)
           publishRechecked(s, dir, sources, store, fp0) { fp =>
-            // the one drift classification both refresh styles share:
-            // (served version, AppendOnly delta files) — merge and
-            // deltaMerge are mutually exclusive by construction, so
-            // this evaluates at most once per attempt
-            def appendDrift: Option[(Long, Map[String, Seq[String]])] = for {
+            val append = for {
               v <- AtomicPublish.currentVersion(s, store)
               recorded <- versionFingerprint(s, store, v)
               delta <- classify(recorded, fp.split("\n").toSeq, dir) match {
                 case SourceDrift.AppendOnly(nf) => Some(nf)
                 case _ => None
               }
-            } yield (v, delta)
-            lastLsmMode = None
-            // the LSM path first: a pure-append tier with AppendOnly
-            // drift whose deltaMerge accepts the batch stages the next
-            // version as byte-copied base + delta-sized sorted runs
-            val lsm = for {
-              dm <- deltaMerge
-              (v, delta) <- appendDrift
-              prev = s.read.parquet(s"$store/v=$v")
-              deltaRows <- dm(s, dir, prev, delta)
-              // schema evolution cannot ride the byte-copy: mixed-schema
-              // files would make the served read nondeterministically
-              // hide or null the new column (the plain merge's
-              // unionByName failed LOUDLY here) — route to the full
-              // build, which lays the whole tier out under one schema
-              if sameTierSchema(prev.schema, deltaRows.schema)
-            } yield {
-              lastBuild = Some(name -> "merge")
-              served = "merge"
-              stageLsm(s, store, v, deltaRows, delta, fp, numFiles, sortKey,
-                summaryKey)
-            }
-            // the bucketed path: an upsert-producing merge confines its
-            // disturbance to the hash-buckets its keys live in, so the
-            // publish rewrites only those buckets (byte-copying the
-            // rest) — the label-tier analogue of the LSM append
-            val bucketed = for {
-              um <- upsertMerge
-              b <- numBuckets
-              (v, delta) <- appendDrift
-              prevDir = new Path(s"$store/v=$v")
-              // layout precondition: prev must be bucketed the same way,
-              // or a copied file's name would lie about its keys
-              if bucketLayoutOf(s, prevDir).contains(b)
-              // …and every data file must DECLARE its bucket (r13
-              // advice #1): an in-place mutator's rewrite (TargetedDelete
-              // lands `deleted-rewrite-*` names) holds rows the
-              // name-keyed anti-join can't see — a patch would byte-copy
-              // the old rows AND write replacements, duplicating keys
-              // with conflicting labels. A foreign name routes to the
-              // full rebuild; one listing, reused by the patch itself.
-              if dataFilesOf(s, prevDir).forall(st =>
-                bucketOfFileName(st.getPath.getName).isDefined)
-              prev = s.read.parquet(prevDir.toString)
-              upserts <- um(s, dir, prev, delta)
-              // schema evolution cannot ride the byte-copy (the LSM
-              // guard's reasoning): mixed-schema buckets would serve
-              // nondeterministically — route to the full build
-              if sameTierSchema(prev.schema, upserts.schema)
-            } yield {
-              lastBuild = Some(name -> "merge")
-              served = "merge"
-              stageBucketedPatch(s, store, prevDir, upserts, b, sortKey,
-                summaryKey)
-            }
-            lsm.orElse(bucketed).getOrElse {
-              // a merge may serve ANOTHER tier inside its body (the lsh
-              // components merge probes the band-index tier) — the inner
-              // serve re-enters the (reentrant) lock and may publish
-              // first; lastBuild is set AFTER the callback so it reports
-              // THIS store's mode, not the inner one's
-              val (rows, mode) = (for {
-                m <- merge
-                (v, delta) <- appendDrift
-              } yield (m(s, dir, s.read.parquet(s"$store/v=$v"), delta), "merge"))
-                .getOrElse((build(s, dir), "full"))
-              lastBuild = Some(name -> mode)
-              served = mode
-              val staging = numBuckets match {
-                case Some(b) =>
-                  stageBucketedFull(s, store, rows, b, fp, numFiles, sortKey,
-                    summaryKey)
-                case None =>
-                  stageFullLayout(s, store, rows, fp, numFiles, sortKey,
-                    summaryKey)
-              }
-              // an inner re-entrant serve (the build may refresh an
-              // upstream LSM tier) must not leak ITS layout mode as
-              // this full-layout publish's
-              lastLsmMode = None
-              staging
-            }
+            } yield Append(new Path(s"$store/v=$v"), delta)
+            val (staging, mode) = stage(fp, append)
+            // a stage may serve ANOTHER tier inside its body (the lsh
+            // components merge probes the band-index tier) — the inner
+            // serve re-enters the (reentrant) lock and may publish
+            // first; the mode is recorded AFTER the stage so it reports
+            // THIS store's, and only once its staging completed
+            lastBuild = Some(name -> mode)
+            served = mode
+            staging
           }
         }
       }
     }
     lastServe = Some(name -> served) // after any inner re-entrant serve
-    val versionDir = s"$store/v=$version"
+    s"$store/v=$version"
+  }
+
+  /** Serve frame tier `name` for `dir`, derived from the `sources`
+    * tables: `build` computes the tier from scratch, `refresh` says how
+    * an append-only drift is folded in instead. `summaryKey`: the
+    * tier's row key — when set, every published version carries a
+    * `_keysummary` sidecar (the key's min/max, plus a bloom under the
+    * key budget) that [[deltaKeysOverlap]] consults to answer
+    * disjoint-range appends at O(Δ) instead of a history-sized
+    * key-column scan. */
+  def served(s: SparkSession, dir: String, name: String,
+             sources: Seq[String],
+             build: (SparkSession, String) => DataFrame,
+             refresh: Refresh,
+             numFiles: Int, sortKey: String,
+             summaryKey: Option[String] = None): DataFrame = {
+    val store = storePath(dir, name)
+    val versionDir = serve(s, dir, name, sources) { (fp, append) =>
+      lastLsmMode = None
+      // the byte-copying paths: history moves as bytes, only the delta
+      // (LSM) or the touched buckets (bucketed) are written. Schema
+      // evolution cannot ride the byte-copy: mixed-schema files would
+      // make the served read nondeterministically hide or null the new
+      // column — it routes to the full build, which lays the whole
+      // tier out under one schema
+      val patched = (refresh, append) match {
+        case (Refresh.Lsm(dm), Some(a)) =>
+          val prev = s.read.parquet(a.prev.toString)
+          dm(s, dir, prev, a.delta).filter(d => sameTierSchema(prev.schema, d.schema))
+            .map(stageLsm(s, store, a.prev, _, a.delta, fp, numFiles, sortKey,
+              summaryKey))
+        // layout precondition: prev must be bucketed the same way, or a
+        // copied file's name would lie about its keys — and every data
+        // file must DECLARE its bucket: an in-place mutator's rewrite
+        // (TargetedDelete lands `deleted-rewrite-*` names) holds rows
+        // the name-keyed anti-join can't see, so a patch would
+        // byte-copy the old rows AND write replacements, duplicating
+        // keys with conflicting labels
+        case (Refresh.Bucketed(um, b), Some(a))
+            if bucketLayoutOf(s, a.prev).contains(b) &&
+              dataFilesOf(s, a.prev).forall(st =>
+                bucketOfFileName(st.getPath.getName).isDefined) =>
+          val prev = s.read.parquet(a.prev.toString)
+          um(s, dir, prev, a.delta).filter(u => sameTierSchema(prev.schema, u.schema))
+            .map(stageBucketedPatch(s, store, a.prev, _, b, sortKey, summaryKey))
+        case _ => None
+      }
+      patched.map(_ -> "merge").getOrElse {
+        val (rows, mode) = (refresh, append) match {
+          case (Refresh.Merge(m), Some(a)) =>
+            (m(s, dir, s.read.parquet(a.prev.toString), a.delta), "merge")
+          case _ => (build(s, dir), "full")
+        }
+        val staging = refresh match {
+          case Refresh.Bucketed(_, b) =>
+            stageBucketedFull(s, store, rows, b, fp, numFiles, sortKey, summaryKey)
+          case _ =>
+            stageFullLayout(s, store, rows, fp, numFiles, sortKey, summaryKey)
+        }
+        // an inner re-entrant serve (the build may refresh an upstream
+        // LSM tier) must not leak ITS layout mode as this full-layout
+        // publish's
+        lastLsmMode = None
+        staging -> mode
+      }
+    }
     // publish-time stats → optimizer (r12 verdict #4): register the
     // served version's exact rows/bytes and measured var-width column
     // widths so TierStatsRule prices scans of it from what the publish
@@ -703,7 +693,7 @@ object DerivedStore {
     * estimation keys on distinctCount (r13 verdict #2). One
     * column-pruned agg pass over data the publish just wrote, the same
     * discipline as `_keysummary`/`_filemap`. [[statsOfVersion]] reads
-    * it back; `servedWith` registers it in
+    * it back; [[served]] registers it in
     * [[graft.plans.TierStatsCatalog]].
     *
     * Sidecar format: line 1 `rows,bytes`; one line per profiled column
@@ -799,7 +789,7 @@ object DerivedStore {
     rowStatsOfVersion(s, versionDir).map(st => (st.rows, st.bytes))
 
   // -------------------------------------------------------------------
-  // Bucketed layout ([[servedIncrementalBucketed]])
+  // Bucketed layout ([[Refresh.Bucketed]])
   // -------------------------------------------------------------------
 
   /** Layout sidecar: bucket count + function id. The merge precondition
@@ -992,12 +982,6 @@ object DerivedStore {
     }
   }
 
-  /** LSM staging: minor (byte-copy base + delta-sized sorted runs +
-    * delta-cost sidecar maintenance) until the base's file count
-    * breaches [[lsmFileBudget]], then one major rewrite (base ∪ delta
-    * through the full layout). `deltaFiles` (the AppendOnly source
-    * paths) size the delta writer — tier bytes track source bytes
-    * within a constant factor, the [[scaledNumFiles]] argument. */
   /** Same tier row shape (names + types, order- and nullability-
     * insensitive — parquet round-trips widen containsNull/nullable, so
     * nullability must be normalized RECURSIVELY or every array-column
@@ -1017,12 +1001,17 @@ object DerivedStore {
       b.fields.map(f => f.name -> denull(f.dataType)).toSet
   }
 
-  private def stageLsm(s: SparkSession, store: String, v: Long,
+  /** LSM staging: minor (byte-copy base + delta-sized sorted runs +
+    * delta-cost sidecar maintenance) until the base's file count
+    * breaches [[lsmFileBudget]], then one major rewrite (base ∪ delta
+    * through the full layout). `deltaFiles` (the AppendOnly source
+    * paths) size the delta writer — tier bytes track source bytes
+    * within a constant factor, the [[scaledNumFiles]] argument. */
+  private def stageLsm(s: SparkSession, store: String, prevDir: Path,
                        deltaRows: DataFrame,
                        deltaFiles: Map[String, Seq[String]], fp: String,
                        numFiles: Int, sortKey: String,
                        summaryKey: Option[String]): Path = {
-    val prevDir = new Path(s"$store/v=$v")
     val prevData = dataFilesOf(s, prevDir)
     val prevBytes = prevData.map(_.getLen).sum
     // the mode is recorded only after its staging completes — an
@@ -1296,23 +1285,9 @@ object DerivedStore {
   private def releaseStaleSourceCaches(s: SparkSession, dir: String,
                                        sources: Seq[String]): Unit = {
     val roots = sources.flatMap { t =>
-      val p = new Path(dir, s"$t.parquet")
-      val fs = hadoopFs(s, p)
-      if (!fs.exists(p)) None
-      else {
-        val q = fs.makeQualified(p)
-        val files = Set.newBuilder[String]
-        if (!fs.getFileStatus(q).isDirectory) files += q.toString
-        else {
-          val it = fs.listFiles(q, true)
-          while (it.hasNext) {
-            val f = it.next().getPath
-            val rel = f.toUri.getPath.stripPrefix(q.toUri.getPath).stripPrefix("/")
-            if (!rel.split('/').exists(seg => seg.startsWith("_") || seg.startsWith(".")))
-              files += f.toString
-          }
-        }
-        Some(q.toString -> files.result())
+      sourceFiles(s, dir, t).map { files =>
+        val p = new Path(dir, s"$t.parquet")
+        hadoopFs(s, p).makeQualified(p).toString -> files.map(_.path).toSet
       }
     }.toMap
     graft.core.Caching.releaseIf { ds =>
@@ -1365,19 +1340,6 @@ object DerivedStore {
     committed
   }
 
-  /** Serve a DIRECTORY-shaped tier — multi-dataset artifacts whose
-    * builder owns the inner layout (an ANN index's centroids +
-    * cell-partitioned postings + metric marker) — through the same
-    * fingerprint/OCC protocol as the frame tiers. Returns the fresh
-    * committed version's PATH; the caller reads the structure inside.
-    * Directory tiers are full-rebuild-only: incremental maintenance of
-    * a multi-dataset artifact is the builder's own lifecycle (e.g.
-    * `AnnIndex.append`), not a frame merge. */
-  def servedDir(s: SparkSession, dir: String, name: String,
-                sources: Seq[String])
-               (write: (SparkSession, String, String) => Unit): String =
-    servedDirWith(s, dir, name, sources, write, None)
-
   /** A directory tier's append-only refresh callback:
     * `(session, sfDir, stagingPath, deltaFilesPerTable) => merged?`.
     * When invoked, `stagingPath` already holds a byte-copy of the
@@ -1388,63 +1350,38 @@ object DerivedStore {
     * and route the refresh to the full build. */
   type DirMerge = (SparkSession, String, String, Map[String, Seq[String]]) => Boolean
 
-  /** [[servedDir]] plus the append-only fast path ([[servedIncremental]]'s
-    * contract for directory artifacts): on AppendOnly drift the next
-    * version starts as an IO-only byte-copy of the served one — no
-    * recompute of the artifact's build (for an ANN index: no centroid
-    * election, no corpus re-assignment, no re-encode of history) —
-    * and `merge` folds just the delta in. Any other drift, or a merge
-    * returning false, takes the full `write`. The copy is the price of
-    * immutable versions: bytes move, computation doesn't. */
-  def servedDirIncremental(s: SparkSession, dir: String, name: String,
-                           sources: Seq[String])
-                          (write: (SparkSession, String, String) => Unit)
-                          (merge: DirMerge): String =
-    servedDirWith(s, dir, name, sources, write, Some(merge))
-
-  private def servedDirWith(s: SparkSession, dir: String, name: String,
-                            sources: Seq[String],
-                            write: (SparkSession, String, String) => Unit,
-                            merge: Option[DirMerge]): String = {
+  /** Serve a DIRECTORY-shaped tier — multi-dataset artifacts whose
+    * builder owns the inner layout (an ANN index's centroids +
+    * cell-partitioned postings + metric marker) — through the same
+    * fingerprint/OCC protocol as the frame tiers. `write` stages a full
+    * build; returns the fresh committed version's PATH, and the caller
+    * reads the structure inside. With a `merge`, AppendOnly drift
+    * starts the next version as an IO-only byte-copy of the served one
+    * — no recompute of the artifact's build (for an ANN index: no
+    * centroid election, no corpus re-assignment, no re-encode of
+    * history) — and `merge` folds just the delta in. Any other drift,
+    * or a merge returning false, takes the full `write`. The copy is
+    * the price of immutable versions: bytes move, computation
+    * doesn't. */
+  def servedDir(s: SparkSession, dir: String, name: String,
+                sources: Seq[String], merge: Option[DirMerge] = None)
+               (write: (SparkSession, String, String) => Unit): String = {
     val store = storePath(dir, name)
-    def fresh(fp: String): Option[Long] = AtomicPublish.currentVersion(s, store)
-      .filter(v => versionFingerprint(s, store, v).contains(fp))
-    val fp0 = fileEntries(s, dir, sources).mkString("\n")
-    var served = "noop"
-    val version = fresh(fp0).getOrElse {
-      lock.synchronized {
-        fresh(fp0).getOrElse {
-          dropPinnedPlans(s, dir, sources, store)
-          publishRechecked(s, dir, sources, store, fp0) { fp =>
-            val staged = for {
-              m <- merge
-              v <- AtomicPublish.currentVersion(s, store)
-              recorded <- versionFingerprint(s, store, v)
-              delta <- classify(recorded, fp.split("\n").toSeq, dir) match {
-                case SourceDrift.AppendOnly(nf) => Some(nf)
-                case _ => None
-              }
-              p <- {
-                val staging = AtomicPublish.stageVersionWith(store)(pp =>
-                  copyVersion(s, s"$store/v=$v", pp))
-                if (m(s, dir, staging.toString, delta)) Some(staging)
-                else { // guard trip: discard the copy, take the full build
-                  hadoopFs(s, staging).delete(staging, true): Unit
-                  None
-                }
-              }
-            } yield p
-            val mode = if (staged.isDefined) "merge" else "full"
-            lastBuild = Some(name -> mode)
-            served = mode
-            staged.getOrElse(
-              AtomicPublish.stageVersionWith(store)(p => write(s, dir, p)))
-          }
-        }
-      }
+    serve(s, dir, name, sources) { (_, append) =>
+      val merged = for {
+        m <- merge
+        a <- append
+        staging = AtomicPublish.stageVersionWith(store)(p =>
+          copyVersion(s, a.prev.toString, p))
+        p <- if (m(s, dir, staging.toString, a.delta)) Some(staging)
+             else { // guard trip: discard the copy, take the full build
+               hadoopFs(s, staging).delete(staging, true): Unit
+               None
+             }
+      } yield p
+      merged.map(_ -> "merge").getOrElse(
+        AtomicPublish.stageVersionWith(store)(p => write(s, dir, p)) -> "full")
     }
-    lastServe = Some(name -> served)
-    s"$store/v=$version"
   }
 
   /** Byte-copy a committed version's artifacts into a staging dir —
@@ -1454,10 +1391,6 @@ object DerivedStore {
     copyTree(s, new Path(from), new Path(to),
       keep = n => n != FingerprintFile && n != "_SUCCESS")
 
-  /** Driver-side recursive copy of a version dir's entries whose names
-    * pass `keep` — the one byte-copy loop behind every "new version
-    * starts as a copy of the served one" path (frame/dir tiers here,
-    * the stream-index fold's minor compaction). */
   /** Test hook / tuning knob: the file count above which [[copyTree]]
     * fans the per-file byte moves out to executors. The driver loop is
     * right for test-grain trees (no job overhead); a warehouse-scale
@@ -1465,6 +1398,10 @@ object DerivedStore {
     * every history byte through one driver thread. */
   @volatile private[graft] var distributedCopyMinFiles = 33
 
+  /** Driver-side recursive copy of a version dir's entries whose names
+    * pass `keep` — the one byte-copy loop behind every "new version
+    * starts as a copy of the served one" path (frame/dir tiers here,
+    * the stream-index fold's minor compaction). */
   private[graft] def copyTree(s: SparkSession, from: Path, to: Path,
                               keep: String => Boolean): Unit = {
     val fs = hadoopFs(s, from)

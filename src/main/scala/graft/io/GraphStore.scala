@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Caching.RegisterSyntax
 import graft.core.Tables
+import graft.io.DerivedStore.Refresh
 
 /** Materialized graph-edge tier — `text/TokenStore`'s build-once
   * pattern applied to the g-family (round-7 verdict #2).
@@ -108,8 +109,9 @@ object GraphStore {
     * history-sized lineitem⋈orders distinct ([[purchaseEdgesMerge]]);
     * any non-append drift still takes the full inline build. */
   def purchaseEdges(s: SparkSession, dir: String): DataFrame =
-    DerivedStore.servedIncremental(s, dir, "purchase", Seq("lineitem", "orders"),
-      purchaseEdgesInline, purchaseEdgesMerge, numFiles = 8, sortKey = "cust")
+    DerivedStore.served(s, dir, "purchase", Seq("lineitem", "orders"),
+      purchaseEdgesInline, Refresh.Merge(purchaseEdgesMerge), numFiles = 8,
+      sortKey = "cust")
 
   /** Append-only refresh of the purchase tier. New edges can only
     * come from NEW lineitem rows: a lineitem's order is present in
@@ -143,8 +145,8 @@ object GraphStore {
     else if (liPaths.isEmpty) prev // no new lineitems -> identical edge set
     else {
       val bare = prev.select("cust", "supp")
-      val dLi = s.read.option("basePath", s"$dir/lineitem.parquet")
-        .parquet(liPaths: _*).select("l_orderkey", "l_suppkey")
+      val dLi = Tables.loadFiles(s, dir, "lineitem", liPaths)
+        .select("l_orderkey", "l_suppkey")
       val o = Tables.load(s, dir, "orders").select("o_orderkey", "o_custkey")
       val freshPairs = dLi.join(o, col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").cast("long").as("cust"),
@@ -179,36 +181,25 @@ object GraphStore {
   private def deltaOrdersMatchOldLineitems(s: SparkSession, dir: String,
                                            oPaths: Seq[String],
                                            liPaths: Seq[String]): Boolean = {
-    val dOk = s.read.option("basePath", s"$dir/orders.parquet")
-      .parquet(oPaths: _*).select(col("o_orderkey").as("k")).distinct()
+    val dOk = Tables.loadFiles(s, dir, "orders", oPaths)
+      .select(col("o_orderkey").as("k")).distinct()
       .registerCache() // feeds the bounds agg AND the history semi
     // delta-sized: one pass over the delta orders' key column; null
     // bounds mean the delta files carry no rows -> nothing to violate
     val bounds = dOk.agg(min("k").as("lo"), max("k").as("hi")).head()
     !bounds.isNullAt(0) && {
-      val base = s"$dir/lineitem.parquet"
-      val root = new org.apache.hadoop.fs.Path(base)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       // compare QUALIFIED paths: classify hands delta paths back as
       // "$dir/…" strings, which under a relative dir never equal the
       // listing's absolute URIs — a mismatch here would silently
       // reclassify the batch's own files as history
-      def qual(p: String): String =
-        fs.makeQualified(new org.apache.hadoop.fs.Path(p)).toString
-      val qroot = fs.makeQualified(root)
-      val deltaSet = liPaths.map(qual).toSet
-      val hist = Seq.newBuilder[String]
-      val it = fs.listFiles(qroot, true)
-      while (it.hasNext) {
-        val f = fs.makeQualified(it.next().getPath)
-        val segs = f.toUri.getPath.stripPrefix(qroot.toUri.getPath).split('/')
-        if (!segs.exists(seg => seg.startsWith("_") || seg.startsWith(".")) &&
-            !deltaSet.contains(f.toString))
-          hist += f.toString
-      }
-      val histPaths = hist.result()
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val deltaSet = liPaths
+        .map(p => fs.makeQualified(new org.apache.hadoop.fs.Path(p)).toString).toSet
+      val histPaths = DerivedStore.sourceFiles(s, dir, "lineitem")
+        .getOrElse(Seq.empty).map(_.path).filterNot(deltaSet)
       histPaths.nonEmpty &&
-        !s.read.option("basePath", base).parquet(histPaths: _*)
+        !Tables.loadFiles(s, dir, "lineitem", histPaths)
           .select(col("l_orderkey").as("k"))
           .filter(col("k") >= bounds.get(0) && col("k") <= bounds.get(1))
           .join(broadcast(dOk), Seq("k"), "left_semi")
@@ -224,14 +215,6 @@ object GraphStore {
     * needs incremental co-supply, the bounded wedge join stays the
     * per-snapshot cost. */
   def cosupplyUnd(s: SparkSession, dir: String): DataFrame =
-    served(s, dir, "cosupply", Seq("lineitem"),
-      cosupplyUndInline, numFiles = 4, sortKey = "eu")
-
-  // ---------------------------------------------------------------------
-
-  private def served(s: SparkSession, dir: String, name: String,
-                     sources: Seq[String],
-                     build: (SparkSession, String) => DataFrame,
-                     numFiles: Int, sortKey: String): DataFrame =
-    DerivedStore.served(s, dir, name, sources, build, numFiles, sortKey)
+    DerivedStore.served(s, dir, "cosupply", Seq("lineitem"),
+      cosupplyUndInline, Refresh.Rebuild, numFiles = 4, sortKey = "eu")
 }

@@ -677,11 +677,14 @@ object Multimodal {
     * ClusterStore, BandIndexStore.corpusIndex). A regenerated corpus
     * rebuilds the index instead of silently serving stale postings. */
   def m7Index(s: SparkSession, dir: String): String =
-    graft.io.DerivedStore.servedDirIncremental(s, dir, "media_ann",
-      Seq("documents")) { (s2, d, p) =>
+    graft.io.DerivedStore.servedDir(s, dir, "media_ann", Seq("documents"),
+      Some(m7IndexMerge)) { (s2, d, p) =>
       graft.sim.AnnIndex.buildFrom(m7MediaQuantized(s2, d), p,
         graft.sim.AnnMetric.L2)
-    } { (s2, d, staging, deltas) =>
+    }
+
+  private val m7IndexMerge: graft.io.DerivedStore.DirMerge =
+    (s2, d, staging, deltas) =>
       // the append-only fast path: media vectors are a pure per-doc
       // map, centroid election is the id rule, so a delta with no
       // centroid-eligible (or re-ingested) ids appends into the copied
@@ -695,7 +698,7 @@ object Multimodal {
           // persisted: the guard's two probes and the append would
           // otherwise each re-run the md5/nibble map over the delta
           val deltaVecs = graft.core.Caching.register(m7MediaQuantizedOf(
-            s2.read.option("basePath", s"$d/documents.parquet").parquet(paths: _*)))
+            Tables.loadFiles(s2, d, "documents", paths)))
           graft.sim.AnnIndex.canAppend(s2, staging, deltaVecs) && {
             graft.sim.AnnIndex.append(s2, staging, deltaVecs)
             graft.io.Compaction.compactPartitions(
@@ -703,7 +706,6 @@ object Multimodal {
             true
           }
       }
-    }
 
   /** Registry m7: SERVED from the snapshot-keyed index — the
     * store-as-production side of the split ([[m7CrossmodalIvf]] stays

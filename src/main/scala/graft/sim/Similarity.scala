@@ -1118,7 +1118,7 @@ object Similarity {
     * regenerated embeddings table rebuilds codebooks + codes instead
     * of silently serving stale ones.
     *
-    * Deliberately FULL-rebuild-only (no `servedDirIncremental` merge,
+    * Deliberately FULL-rebuild-only (no `DirMerge`,
     * unlike `media_ann`): the codebooks are k-means-trained over the
     * ENTIRE corpus's subvectors ([[pqIndexBuild]]'s update round), so
     * a rebuild over appended embeddings retrains them — an

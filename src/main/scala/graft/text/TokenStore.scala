@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.io.{DerivedStore, SortedLayout}
+import graft.io.DerivedStore.Refresh
 
 /** Materialized token tier — the T1-derived-table pattern
   * (`Airflow_week.py:270`, `AWS_GLUE_ETL.py:79-132`: raw loads feed
@@ -14,13 +15,14 @@ import graft.io.{DerivedStore, SortedLayout}
   * postings) from the stored stream instead of re-running the
   * tokenize+explode prefix per query.
   *
-  * Served through [[DerivedStore.servedIncremental]] — the same
+  * Served through [[DerivedStore.served]] — the same
   * freshness/publication/GC contract as every other tier
   * (fingerprint-keyed against `documents`, versioned OCC commit,
   * keep-2 vacuum), with the append-only fast path: tokenization is a
   * pure per-doc map, so a daily part-file arrival refreshes the tier
   * at O(Δ) (tokenize only the delta, union beside history) and the
-  * re-ingestion guard routes key overlap to the full rebuild.
+  * re-ingestion guard ([[DerivedStore.perKeyDelta]]) routes key
+  * overlap to the full rebuild.
   *
   * Layout: range-sorted on `term` ([[SortedLayout.writeRangeSorted]])
   * so per-file min/max stats prune term-filtered reads (the BM25 tf
@@ -53,28 +55,13 @@ object TokenStore {
     * append-only corpus night byte-copies the served version and
     * writes only `tokensOf(delta)` as sorted runs — O(Δ) compute AND
     * O(Δ) IO, where the plain merge still paid a full-tier range
-    * shuffle + rewrite every night. */
+    * shuffle + rewrite every night. Tokens are a pure per-doc map, so
+    * the next version is exactly prev ∪ tokensOf(delta). */
   def served(s: SparkSession, dir: String): DataFrame =
-    DerivedStore.servedIncrementalLsm(s, dir, "tokens", Seq("documents"),
-      tokens, tokensDelta, numFiles = 8, sortKey = "term",
-      summaryKey = Some("doc_id"))
-
-  /** Append-only delta: tokens are a pure per-doc map, so the next
-    * version is exactly prev ∪ tokensOf(delta) — O(Δ) tokenize, no
-    * corpus re-read. A re-ingested existing doc_id (which would
-    * duplicate its token rows against what a rebuild of a clean
-    * append produces) is detected by the delta-sized key probe and
-    * rejected — the full rebuild takes over (BandIndexStore's guard). */
-  private def tokensDelta(s: SparkSession, dir: String, prev: DataFrame,
-                          deltas: Map[String, Seq[String]]): Option[DataFrame] =
-    deltas.getOrElse("documents", Seq.empty) match {
-      case Seq() => Some(prev.limit(0))
-      case paths =>
-        val delta = s.read.option("basePath", s"$dir/documents.parquet")
-          .parquet(paths: _*)
-        if (DerivedStore.deltaKeysOverlap(prev, delta, "doc_id")) None
-        else Some(tokensOf(delta))
-    }
+    DerivedStore.served(s, dir, "tokens", Seq("documents"), tokens,
+      Refresh.Lsm(DerivedStore.perKeyDelta("documents", "doc_id")(
+        (_, _, _, docs) => tokensOf(docs))),
+      numFiles = 8, sortKey = "term", summaryKey = Some("doc_id"))
 
   /** Term-keyed lookup over the served tier, file-pruned by the
     * publish-time zone map: the tier is range-sorted on `term`

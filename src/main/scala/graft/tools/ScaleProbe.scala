@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.Sessions
+import graft.core.{Sessions, Tables}
 import graft.pipeline.QueryMetrics
 
 /** The 100×-question answered by measurement: run the quadratic-risk
@@ -163,7 +163,7 @@ object ScaleProbe {
         // drop per-query registered caches so consecutive probes
         // measure from cold and don't accumulate blocks
         Sessions.release(spark)
-        b -> spark.read.parquet(s"$dir/${inputTable(name)}.parquet").count()
+        b -> Tables.load(spark, dir, inputTable(name)).count()
       }
       val (bSmall, rowsSmall) = run(small)
       val (bBig, rowsBig)     = run(big)

@@ -8,25 +8,22 @@ import graft.SparkSpec
   * long-lived session. Every persist in a query builder goes through
   * [[Caching.register]]; after the caller materializes and calls
   * [[Caching.releaseAll]], the session cache manager must be EMPTY —
-  * for all 132 registry queries, not just the ~15 that persisted at
+  * for every registry query, not just the ~15 that persisted at
   * the time of the audit. One sweep also proves the internal-release
   * paths (Dedup's component-loop persists, CleanPipeline) clean up
   * after themselves, since any stray entry fails the same assert.
+  *
+  * The sweep itself is [[graft.queries.RegistrySweep]], the suite's one
+  * registry execution pass, which `RegistrySpec` shares.
   */
 class CacheLifecycleSpec extends SparkSpec {
 
   test("every registry query leaves the cache manager empty after release") {
-    spark.catalog.clearCache() // start clean regardless of suite order
-    Caching.releaseAll()
-    val leaks = scala.collection.mutable.ListBuffer.empty[String]
-    for ((name, fn) <- graft.queries.Registry.queries.toSeq.sortBy(_._1)) {
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      Caching.releaseAll()
-      if (!spark.sharedState.cacheManager.isEmpty) {
-        leaks += name
-        spark.catalog.clearCache() // isolate: report every leaky query
-      }
-    }
+    val sweep = graft.queries.RegistrySweep
+    val failed = sweep.failures
+    val leaks = sweep.outcomes.filter(_.leaked).map(_.name)
+    assert(sweep.outcomes.size == graft.queries.Registry.queries.size)
+    assert(failed.isEmpty, s"queries that failed: ${failed.mkString("; ")}")
     assert(leaks.isEmpty, s"queries leaving cached blocks: ${leaks.mkString(", ")}")
   }
 

@@ -1,5 +1,11 @@
 package graft.core
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+
 import graft.SparkSpec
 
 /** Pins the TESTDATA contract: the post-normalization loaded schema of
@@ -31,12 +37,38 @@ class TablesSchemaSpec extends SparkSpec {
     "documents" -> "doc_id:bigint, text:string, lang:string, source:string, n_chars:bigint",
     "embeddings" -> "vec_id:bigint, embedding:array<float>, label:int")
 
+  /** The table's data files, as an append-only refresh hands them to
+    * [[Tables.loadFiles]]. */
+  private def dataFiles(t: String): Seq[String] = {
+    val root = new Path(s"$sfDir/$t.parquet")
+    val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(root, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .map(_.toString).toSeq
+  }
+
   for (t <- Tables.all) test(s"loaded schema of `$t` matches the pinned TESTDATA contract") {
-    val got = Tables.load(spark, sfDir, t)
-      .schema.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")
-    assert(got == expected(t),
-      s"\nTESTDATA drift for `$t` —\n  expected: ${expected(t)}\n  loaded:   $got\n" +
-        "If the driver regenerated the parquet, normalize in Tables.load and re-pin here.")
+    for ((via, df) <- Seq("Tables.load" -> Tables.load(spark, sfDir, t),
+                          "Tables.loadFiles" -> Tables.loadFiles(spark, sfDir, t, dataFiles(t)))) {
+      val got = df
+        .schema.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")
+      assert(got == expected(t),
+        s"\nTESTDATA drift for `$t` via $via —\n  expected: ${expected(t)}\n  loaded:   $got\n" +
+          "If the driver regenerated the parquet, normalize in Tables.load and re-pin here.")
+    }
+  }
+
+  test("no main-code file other than Tables.scala reads a table's parquet path through spark.read") {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    // a `.read` whose statement names an interpolated `…/<table>.parquet`
+    val direct = """\.read\b(?:(?!\n\s*(?:val|def|var)\b)[\s\S]){0,200}?s"\$[^"]*/[^"/]*\.parquet"""".r
+    val files = Files.walk(root).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+    val readers = files.filter(p => direct.findFirstIn(Files.readString(p)).isDefined)
+    assert(readers.map(_.getFileName.toString) == Seq("Tables.scala"),
+      readers.map(p => root.relativize(p)).mkString(", "))
   }
 
   test("events.ts normalization requires the UTC session time zone") {

@@ -9,7 +9,7 @@ import graft.SparkSpec
 import graft.core.Tables
 
 /** Bucketed partial rewrite for label tiers
-  * ([[DerivedStore.servedIncrementalBucketed]], r12 verdict #1): label
+  * ([[DerivedStore.Refresh.Bucketed]], r12 verdict #1): label
   * merges REWRITE rows, so the LSM append can't represent them — the
   * bucketed layout confines a merge night's writes to the hash-buckets
   * its upserts touch, byte-copying everything else. Pins: the layout,

@@ -39,7 +39,7 @@ class DerivedStoreSpec extends SparkSpec {
 
   private def serve(dir: String): DataFrame =
     DerivedStore.served(spark, dir, "nation_tier", Seq("nation"),
-      build, numFiles = 2, sortKey = "n_nationkey")
+      build, DerivedStore.Refresh.Rebuild, numFiles = 2, sortKey = "n_nationkey")
 
   test("commit is v=n + _SUCCESS with the fingerprint inside the version dir") {
     withIsolated { dir =>
@@ -102,7 +102,7 @@ class DerivedStoreSpec extends SparkSpec {
       def serveRegion(): DataFrame =
         DerivedStore.served(spark, dir, "region_tier", Seq("region"),
           (s, d) => Tables.load(s, d, "region").select("r_regionkey"),
-          numFiles = 1, sortKey = "r_regionkey")
+          DerivedStore.Refresh.Rebuild, numFiles = 1, sortKey = "r_regionkey")
       assert(serveRegion().count() == 3)
 
       // the racing writer: lands two more rows AFTER the fingerprint
@@ -151,11 +151,11 @@ class DerivedStoreSpec extends SparkSpec {
       // classification is observable: a sentinel that classified as
       // append-only would take this merge and report "merge"
       def serveRegion(): DataFrame =
-        DerivedStore.servedIncremental(spark, dir, "churn_tier", Seq("region"),
+        DerivedStore.served(spark, dir, "churn_tier", Seq("region"),
           (s, d) => Tables.load(s, d, "region").select("r_regionkey"),
-          (s, d, prev, deltas) => prev.unionByName(
+          DerivedStore.Refresh.Merge((s, d, prev, deltas) => prev.unionByName(
             s.read.option("basePath", s"$d/region.parquet")
-              .parquet(deltas("region"): _*).select("r_regionkey")),
+              .parquet(deltas("region"): _*).select("r_regionkey"))),
           numFiles = 1, sortKey = "r_regionkey")
       serveRegion().count(): Unit
       val store = DerivedStore.storePath(dir, "churn_tier")
@@ -232,8 +232,9 @@ class DerivedStoreSpec extends SparkSpec {
   test("overlap probe: disjoint-range delta answered by the _keysummary sidecar, never the tier's data") {
     import org.apache.spark.sql.functions.col
     withIsolated { dir =>
-      DerivedStore.servedIncremental(spark, dir, "nation_sum", Seq("nation"),
-        build, (_, _, prev, _) => prev, numFiles = 2, sortKey = "n_nationkey",
+      DerivedStore.served(spark, dir, "nation_sum", Seq("nation"),
+        build, DerivedStore.Refresh.Merge((_, _, prev, _) => prev),
+        numFiles = 2, sortKey = "n_nationkey",
         summaryKey = Some("n_nationkey")).count(): Unit
       val store = DerivedStore.storePath(dir, "nation_sum")
       val fs = fsOf(store)

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.core.Tables
 
-/** The append-only incremental-refresh path (`DerivedStore
-  * .servedIncremental` + `GraphStore.purchaseEdgesMerge`): file-grain
+/** The append-only incremental-refresh path (`DerivedStore.Refresh
+  * .Merge` + `GraphStore.purchaseEdgesMerge`): file-grain
   * drift classification routes daily part-file arrivals to the merge
   * callback — and the merged version must be row-identical to what a
   * full rebuild over the grown sources produces. Non-append drift
@@ -178,12 +178,12 @@ class IncrementalTierSpec extends SparkSpec {
       val nation = Tables.load(spark, sfDir, "nation").select("n_nationkey")
       writeTable(nation.filter(col("n_nationkey") < 10), dir, "nation")
       var seen: Option[Map[String, Seq[String]]] = None
-      def serve(): Long = DerivedStore.servedIncremental(spark, dir, "rec",
+      def serve(): Long = DerivedStore.served(spark, dir, "rec",
         Seq("nation"), (s, d) => Tables.load(s, d, "nation").select("n_nationkey"),
-        (s, _, prev, deltas) => {
+        DerivedStore.Refresh.Merge((s, _, prev, deltas) => {
           seen = Some(deltas)
           prev.unionByName(s.read.parquet(deltas("nation"): _*).select("n_nationkey"))
-        }, numFiles = 1, sortKey = "n_nationkey").count()
+        }), numFiles = 1, sortKey = "n_nationkey").count()
 
       assert(serve() == 10 && seen.isEmpty, "full build must not call the merge")
       val stage = tmpDir("incr-rec-delta")

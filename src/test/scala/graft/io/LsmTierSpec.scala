@@ -9,7 +9,7 @@ import graft.SparkSpec
 import graft.core.Tables
 
 /** LSM publication for pure-append frame tiers
-  * ([[DerivedStore.servedIncrementalLsm]]): an append night byte-copies
+  * ([[DerivedStore.Refresh.Lsm]]): an append night byte-copies
   * the served version and writes only the delta as sorted runs — O(Δ)
   * IO where the plain merge paid a full-tier rewrite — while rows stay
   * exactly rebuild-equal, the sidecars stay truthful at delta cost,

@@ -34,7 +34,7 @@ class TierStatsSpec extends SparkSpec {
         Seq("documents.parquet"),
         (s, d) => Tables.load(s, d, "documents")
           .select(col("doc_id"), payload.as("payload")),
-        numFiles = 4, sortKey = "doc_id")
+        DerivedStore.Refresh.Rebuild, numFiles = 4, sortKey = "doc_id")
 
       // the sidecar recorded exact rows, and the serve registered them
       val store = DerivedStore.storePath(dir, "statsdemo")

@@ -20,12 +20,9 @@ class RegistrySpec extends SparkSpec {
   }
 
   test("all registry queries execute on sf0.001") {
-    graft.core.Tables.registerAll(spark, sfDir)
-    Registry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val df = fn(spark, sfDir)
-      val n = df.count()
-      withClue(s"$name: ") { assert(n >= 0) }
-    }
+    val failed = RegistrySweep.failures
+    assert(RegistrySweep.outcomes.size == Registry.queries.size)
+    assert(failed.isEmpty, s"queries that failed: ${failed.mkString("; ")}")
   }
 
   test("queries are deterministic across runs (sample)") {
