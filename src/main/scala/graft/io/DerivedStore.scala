@@ -389,50 +389,14 @@ object DerivedStore {
     }
   }
 
-  /** A source data file: its path relative to the table root (the
-    * file's own name for a single-file table) and its qualified path. */
-  private[io] final case class SourceFile(rel: String, path: String, len: Long,
-                                          mtime: Long)
-
-  /** The one listing of a source table's DATA files: recursive, so a
-    * new day dir in a partitioned layout is just more files. Hidden
-    * files (`_`/`.` prefixed segments — commit records, staging) are
-    * excluded: they carry no rows, and rewriting a `_SUCCESS` must not
-    * look like data drift. None when the table is absent. */
-  private[io] def sourceFiles(s: SparkSession, dir: String,
-                              table: String): Option[Seq[SourceFile]] = {
-    val p = new Path(dir, s"$table.parquet")
-    val fs = hadoopFs(s, p)
-    if (!fs.exists(p)) None
-    else {
-      val root = fs.makeQualified(p)
-      val st = fs.getFileStatus(root)
-      if (!st.isDirectory)
-        Some(Seq(SourceFile(root.getName, root.toString, st.getLen,
-          st.getModificationTime)))
-      else {
-        val prefix = root.toUri.getPath
-        val it = fs.listFiles(root, true)
-        val buf = Seq.newBuilder[SourceFile]
-        while (it.hasNext) {
-          val f = it.next()
-          val rel = f.getPath.toUri.getPath.stripPrefix(prefix).stripPrefix("/")
-          if (!rel.split('/').exists(seg => seg.startsWith("_") || seg.startsWith(".")))
-            buf += SourceFile(rel, f.getPath.toString, f.getLen, f.getModificationTime)
-        }
-        Some(buf.result())
-      }
-    }
-  }
-
   /** The file-grain fingerprint: sorted `table/relpath:size:mtime`
-    * lines over [[sourceFiles]]. An absent table records a sentinel
+    * lines over [[Tables.sourceFiles]]. An absent table records a sentinel
     * line so its later materialization reads as a rewrite, never an
     * append. */
   private def fileEntries(s: SparkSession, dir: String,
                           sources: Seq[String]): Seq[String] =
     sources.flatMap { t =>
-      sourceFiles(s, dir, t).fold(Seq(s"$t absent:0:0"))(_.map(f =>
+      Tables.sourceFiles(s, dir, t).fold(Seq(s"$t absent:0:0"))(_.map(f =>
         s"$t/${f.rel}:${f.len}:${f.mtime}"))
     }.sorted
 
@@ -1285,7 +1249,7 @@ object DerivedStore {
   private def releaseStaleSourceCaches(s: SparkSession, dir: String,
                                        sources: Seq[String]): Unit = {
     val roots = sources.flatMap { t =>
-      sourceFiles(s, dir, t).map { files =>
+      Tables.sourceFiles(s, dir, t).map { files =>
         val p = new Path(dir, s"$t.parquet")
         hadoopFs(s, p).makeQualified(p).toString -> files.map(_.path).toSet
       }

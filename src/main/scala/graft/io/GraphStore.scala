@@ -196,7 +196,7 @@ object GraphStore {
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       val deltaSet = liPaths
         .map(p => fs.makeQualified(new org.apache.hadoop.fs.Path(p)).toString).toSet
-      val histPaths = DerivedStore.sourceFiles(s, dir, "lineitem")
+      val histPaths = Tables.sourceFiles(s, dir, "lineitem")
         .getOrElse(Seq.empty).map(_.path).filterNot(deltaSet)
       histPaths.nonEmpty &&
         !Tables.loadFiles(s, dir, "lineitem", histPaths)

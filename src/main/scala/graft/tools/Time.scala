@@ -17,9 +17,13 @@ import graft.core.Sessions
   * Usage: `run_class.sh graft.tools.Time <sfDir> [-analyze] [name...]`
   * (no names: the whole registry). Per query:
   * {{{
-  * <name>  best=<s>  runs=<s>,<s>,<s>  jobs=<n> stages=<n> tasks=<n> shufMB=<MB>
+  * <name>  best=<s>  build=<s>  runs=<s>,<s>,<s>  jobs=<n> stages=<n> tasks=<n> shufMB=<MB>
   *     job <id>  ran <executed>/<submitted> stages  <stageId>:<stage name>(<tasks>t) | …
   * }}}
+  * `build` is the construction layer: the median over the three timed
+  * runs of a clock around `fn(spark, dir)` alone (table resolution,
+  * eager analysis, tier freshness probes), taken inside the timed
+  * region — no listener, no extra run.
   * `jobs`/`stages`/`tasks` count the jobs submitted and the stages and
   * tasks that ran, construction included; `shufMB` is the run's
   * shuffle volume (ScaleProbe's rule). One indented line per job names
@@ -40,8 +44,14 @@ object Time {
     if (analyze) graft.io.TableStats.analyzeAll(spark, sfDir): Unit
     val sel = graft.SparkEntry.queries
       .filter(kv => names.isEmpty || names.contains(kv._1)).toSeq.sortBy(_._1)
-    def run(fn: (SparkSession, String) => DataFrame, dir: String): Unit =
-      Sessions.run(fn(spark, dir))
+    /** Build and run `fn` on `dir`; the build's seconds. */
+    def run(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
+      val t0 = System.nanoTime()
+      val df = fn(spark, dir)
+      val built = (System.nanoTime() - t0) / 1e9
+      Sessions.run(df)
+      built
+    }
     // Fail fast and LOUD: a query that can't analyze is named here with
     // its error, instead of dying anonymously mid-timing-loop.
     val warm = sel.filter { case (name, fn) =>
@@ -55,17 +65,17 @@ object Time {
       ok
     }
     warm.foreach { case (name, fn) =>
-      val ts = Seq.fill(3) {
+      val (ts, builds) = Seq.fill(3) {
         val t0 = System.nanoTime()
-        run(fn, sfDir)
+        val built = run(fn, sfDir)
         val t = (System.nanoTime() - t0) / 1e9
         Sessions.release(spark)
-        t
-      }
+        (t, built)
+      }.unzip
       val (jobs, bytes) = profile(spark, fn(spark, sfDir))
       Sessions.release(spark)
       val ran = jobs.ran.asScala.map(s => s.stageId -> s).toMap
-      println(f"$name%-28s best=${ts.min}%7.3f  runs=${ts.map(t => f"$t%.3f").mkString(",")}" +
+      println(f"$name%-28s best=${ts.min}%7.3f  build=${builds.sorted.apply(1)}%6.3f  runs=${ts.map(t => f"$t%.3f").mkString(",")}" +
         f"  jobs=${jobs.started.size} stages=${jobs.ran.size} tasks=${jobs.ran.asScala.map(_.numTasks).sum}" +
         f" shufMB=${bytes / 1e6}%.2f")
       jobs.started.forEach { j =>

@@ -229,6 +229,24 @@ class DerivedStoreSpec extends SparkSpec {
     }
   }
 
+  test("a file appended under a `_p=1/` partition dir is drift: the next serve is not a no-op") {
+    withIsolated { dir =>
+      val part = s"$dir/parted.parquet/_p=1"
+      val rows = spark.read.parquet(s"$sfDir/nation.parquet")
+      rows.write.parquet(part)
+      def serveParted(): DataFrame =
+        DerivedStore.served(spark, dir, "parted_tier", Seq("parted"),
+          (s, d) => Tables.load(s, d, "parted").select("n_nationkey", "n_name"),
+          DerivedStore.Refresh.Rebuild, numFiles = 2, sortKey = "n_nationkey")
+      assert(serveParted().count() == 25)
+      rows.write.mode("append").parquet(part)
+      assert(Tables.load(spark, dir, "parted").count() == 50, "Spark reads the appended file")
+      assert(serveParted().count() == 50)
+      assert(DerivedStore.lastServe.map(_._2) != Some("noop"),
+        s"the append under _p=1/ must not serve stale: ${DerivedStore.lastServe}")
+    }
+  }
+
   test("overlap probe: disjoint-range delta answered by the _keysummary sidecar, never the tier's data") {
     import org.apache.spark.sql.functions.col
     withIsolated { dir =>
