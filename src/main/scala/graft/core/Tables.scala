@@ -35,7 +35,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *  - Bounded: an [[LruMap]] of [[MemoCap]] entries.
   *
   * A missing table fails exactly like a plain read and is never
-  * memoized.
+  * memoized. The same memo resolves a parquet dir by path ([[loadAt]]):
+  * a tier version the engine itself committed is read once per file
+  * listing too, not re-inferred per serve.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -121,8 +123,11 @@ object Tables {
     * and rewriting a `_SUCCESS` must not look like drift. None when the
     * table is absent. */
   private[graft] def sourceFiles(spark: SparkSession, dir: String,
-                                 table: String): Option[Seq[SourceFile]] = {
-    val p = new Path(dir, s"$table.parquet")
+                                 table: String): Option[Seq[SourceFile]] =
+    filesAt(spark, new Path(dir, s"$table.parquet"))
+
+  /** [[sourceFiles]] of the parquet file or dir at `p`. */
+  private def filesAt(spark: SparkSession, p: Path): Option[Seq[SourceFile]] = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
@@ -132,15 +137,21 @@ object Tables {
         Some(Seq(SourceFile(root.getName, root.toString, st.getLen,
           st.getModificationTime)))
       else {
-        val prefix = root.toUri.getPath
-        val it = fs.listFiles(root, true)
+        // plain listStatus, not listFiles: a located status copies the
+        // file's owner and permissions, which the local file system
+        // reads by forking a process per file (~3 ms each — a 32-bucket
+        // tier version took ~170 ms to list)
         val buf = Seq.newBuilder[SourceFile]
-        while (it.hasNext) {
-          val f = it.next()
-          val rel = f.getPath.toUri.getPath.stripPrefix(prefix).stripPrefix("/")
-          if (!rel.split('/').exists(hidden))
-            buf += SourceFile(rel, f.getPath.toString, f.getLen, f.getModificationTime)
-        }
+        def walk(d: Path, rel: String): Unit =
+          fs.listStatus(d).foreach { f =>
+            val name = f.getPath.getName
+            if (!hidden(name)) {
+              val r = if (rel.isEmpty) name else s"$rel/$name"
+              if (f.isDirectory) walk(f.getPath, r)
+              else buf += SourceFile(r, f.getPath.toString, f.getLen, f.getModificationTime)
+            }
+          }
+        walk(root, "")
         Some(buf.result().sortBy(_.rel))
       }
     }
@@ -155,8 +166,9 @@ object Tables {
     (segment.startsWith("_") && !segment.contains("=")) ||
       segment.startsWith(".") || segment.endsWith("._COPYING_")
 
-  /** One table per session and directory is a handful of entries; the
-    * cap only bounds a long-lived session that reads many directories. */
+  /** One table per session and directory, plus the served version of
+    * each tier, is a few dozen entries; the cap only bounds a
+    * long-lived session that reads many directories. */
   private val MemoCap = 64
 
   /** Besides the files, what a read's relation and its scan's split
@@ -185,17 +197,28 @@ object Tables {
 
   private val memo = new LruMap[(SparkSession, String), Resolved](MemoCap)
 
-  private def resolved(spark: SparkSession, dir: String, name: String): Resolved = {
-    val p = new Path(s"$dir/$name.parquet")
+  /** The parquet file or dir at `path` (a committed tier version),
+    * resolved through the memo like a table, without [[load]]'s
+    * per-table normalization. */
+  private[graft] def loadAt(spark: SparkSession, path: String): DataFrame =
+    resolvedAt(spark, new Path(path))(spark.read.parquet(path)).frame()
+
+  private def resolved(spark: SparkSession, dir: String, name: String): Resolved =
+    resolvedAt(spark, new Path(dir, s"$name.parquet"))(
+      spark.read.parquet(s"$dir/$name.parquet"))
+
+  /** The memo entry for the parquet file or dir at `p`; on a miss,
+    * `read` (a plain read of `p`) resolves it. */
+  private def resolvedAt(spark: SparkSession, p: Path)(read: => DataFrame): Resolved = {
     val key = spark -> p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(p).toString
     // listed BEFORE the read: a file landing in between leaves the
     // stored listing behind the relation, so the next load re-reads
-    val files = sourceFiles(spark, dir, name)
+    val files = filesAt(spark, p)
     val conf = readConf(spark)
     memo.get(key).filter(e => e.files == files && e.conf == conf).getOrElse {
-      // an absent table throws here, as a plain read does
-      spark.read.parquet(s"$dir/$name.parquet").queryExecution.analyzed match {
+      // an absent path throws here, as a plain read does
+      read.queryExecution.analyzed match {
         case r: LogicalRelation =>
           val e = new Resolved(spark, files, conf, r)
           memo.put(key, e)

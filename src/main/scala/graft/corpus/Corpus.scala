@@ -1075,13 +1075,17 @@ object Corpus {
       .select(col("doc_id"), col("source"), col("text"))
       .withColumn("bucket",
         expr("cast(conv(substr(md5(cast(doc_id as string)), 1, 6), 16, 10) as bigint) % 100"))
-    val v2 = v1.filter(col("bucket") >= 5)
-      .select(col("doc_id"), col("source"),
-        when(col("bucket") < 12, concat(col("text"), lit(" rev2")))
+    // v2's two arms (kept-or-rewritten, bucket >= 5; added, bucket < 3)
+    // are disjoint, so each v1 row yields at most one v2 row: one
+    // filter + one projection over v1, not a union of two v1 reads
+    val added = col("bucket") < 3
+    val v2 = v1.filter(col("bucket") >= 5 || added)
+      .select(
+        when(added, col("doc_id") + 1000000000L).otherwise(col("doc_id")).as("doc_id"),
+        col("source"),
+        when(added, concat(lit("new "), col("text")))
+          .when(col("bucket") < 12, concat(col("text"), lit(" rev2")))
           .otherwise(col("text")).as("text"))
-      .unionByName(v1.filter(col("bucket") < 3)
-        .select((col("doc_id") + 1000000000L).as("doc_id"), col("source"),
-          concat(lit("new "), col("text")).as("text")))
     val joined = v1.select(col("doc_id"), col("source").as("src1"),
         md5(col("text")).as("h1"), length(col("text")).cast("long").as("len1"))
       .join(v2.select(col("doc_id"), col("source").as("src2"),

@@ -426,9 +426,11 @@ object Dedup {
     * the driver only reads one convergence scalar per round: labels
     * are monotonically non-increasing, so Σlabel strictly decreases
     * until the fixpoint — a single aggregate, not a join-and-compare
-    * against the previous round. Edges are persisted pre-partitioned
-    * on `src` so every round's propagation join reuses that exchange
-    * instead of re-shuffling the (larger) edge side.
+    * against the previous round. Edges are symmetrized in one pass
+    * over `pairs` (each pair generates both directions, so the pair
+    * lineage is read once, not once per direction) and persisted
+    * pre-partitioned on `src` so every round's propagation join reuses
+    * that exchange instead of re-shuffling the (larger) edge side.
     */
   def components(pairs: DataFrame, durable: Boolean = false): DataFrame = {
     // Lineage truncation seam: `localCheckpoint` keeps round state in
@@ -458,8 +460,9 @@ object Dedup {
         (p.checkpoint(false), () => { p.unpersist(): Unit })
       } else (df.localCheckpoint(false), () => ())
     val sym = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .select(inline(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))))
       .repartition(col("src"))
       .persist()
     // seed with round one's result directly: from identity labels the

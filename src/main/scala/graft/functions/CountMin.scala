@@ -51,7 +51,9 @@ object CountMin {
 
   /** q29 — heavy users by count-min estimate: every distinct user
     * joined against the broadcast grid, estimate = min over rows,
-    * kept when >= [[Threshold]]. Exact count included for the oracle
+    * kept when >= [[Threshold]]. Each key's `Depth` probes come from
+    * one generate over the distinct keys, the same explode shape the
+    * grid is built with. Exact count included for the oracle
     * to prove the over-estimate invariant holds on both engines.
     */
   val q29CountminHeavy: (SparkSession, String) => DataFrame = (s, dir) => {
@@ -59,9 +61,9 @@ object CountMin {
       .select(expr("cast(user_id as string)").as("k"))
     val grid = sketch(ev, "k")
     val keys = ev.distinct()
-    val probes = (0 until Depth).map { i =>
-      keys.select(col("k"), lit(i).as("row"), expr(bucket(i, "k")).as("bucket"))
-    }.reduce(_ unionByName _)
+    val probes = keys.select(col("k"), inline(array((0 until Depth).map { i =>
+      struct(lit(i).as("row"), expr(bucket(i, "k")).as("bucket"))
+    }: _*)))
     probes.join(broadcast(grid), Seq("row", "bucket"))
       .groupBy("k")
       .agg(min("cnt").as("est"))

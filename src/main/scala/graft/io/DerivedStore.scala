@@ -556,7 +556,7 @@ object DerivedStore {
       // tier out under one schema
       val patched = (refresh, append) match {
         case (Refresh.Lsm(dm), Some(a)) =>
-          val prev = s.read.parquet(a.prev.toString)
+          val prev = Tables.loadAt(s, a.prev.toString)
           dm(s, dir, prev, a.delta).filter(d => sameTierSchema(prev.schema, d.schema))
             .map(stageLsm(s, store, a.prev, _, a.delta, fp, numFiles, sortKey,
               summaryKey))
@@ -571,7 +571,7 @@ object DerivedStore {
             if bucketLayoutOf(s, a.prev).contains(b) &&
               dataFilesOf(s, a.prev).forall(st =>
                 bucketOfFileName(st.getPath.getName).isDefined) =>
-          val prev = s.read.parquet(a.prev.toString)
+          val prev = Tables.loadAt(s, a.prev.toString)
           um(s, dir, prev, a.delta).filter(u => sameTierSchema(prev.schema, u.schema))
             .map(stageBucketedPatch(s, store, a.prev, _, b, sortKey, summaryKey))
         case _ => None
@@ -579,7 +579,7 @@ object DerivedStore {
       patched.map(_ -> "merge").getOrElse {
         val (rows, mode) = (refresh, append) match {
           case (Refresh.Merge(m), Some(a)) =>
-            (m(s, dir, s.read.parquet(a.prev.toString), a.delta), "merge")
+            (m(s, dir, Tables.loadAt(s, a.prev.toString), a.delta), "merge")
           case _ => (build(s, dir), "full")
         }
         val staging = refresh match {
@@ -613,7 +613,10 @@ object DerivedStore {
         sig = graft.plans.TierStatsCatalog.sigOf(
           s.sparkContext.hadoopConfiguration, sigPath))
     }
-    s.read.parquet(versionDir)
+    // a committed version is read once per file listing (the Tables
+    // memo), not schema-inferred per serve; an in-place rewrite or a
+    // rebuild at the same v=N changes the listing and re-reads
+    Tables.loadAt(s, versionDir)
   }
 
   /** The classic full-layout staging: one range-sorted write of the

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -16,12 +16,18 @@ import graft.core.Tables
   * opening new versions — full lineage in one table, no daily copies.
   *
   * Execution shape: one full-outer shuffle join on the business key
-  * between the *current* slice and the snapshot; closed history rows
-  * pass through untouched (union, no shuffle). At 100 TB the current
-  * slice is a small fraction of history, and both sides hash-partition
-  * on the key — no window, no global sort, no driver state. The write
-  * side composes with [[IdempotentWriter.fullRefresh]] (same-day
-  * re-runs converge) or partition-by-`valid_to` refresh.
+  * between the *current* slice and the snapshot, read ONCE by one
+  * generate: each joined row emits its unchanged / closed / opened
+  * arms as entries of one array (a changed key emits two), and the
+  * arms that don't apply are null entries dropped right after. A
+  * union of three filtered copies of the join ran one join per arm
+  * (the optimizer made them an inner, a left and a right join).
+  * Closed history rows pass through untouched (union, no shuffle). At
+  * 100 TB the current slice is a small fraction of history, and both
+  * sides hash-partition on the key — no window, no global sort, no
+  * driver state. The write side composes with
+  * [[IdempotentWriter.fullRefresh]] (same-day re-runs converge) or
+  * partition-by-`valid_to` refresh.
   */
 object Scd2 {
 
@@ -46,30 +52,32 @@ object Scd2 {
 
     val changed = tracked.map(c => !(col(s"__snap_$c") <=> col(c))).reduce(_ || _)
     val inDim = col("is_current").isNotNull
+    val inSnap = col("__in_snap").isNotNull
+    val asOfDate = lit(asOf).cast("date")
 
-    def dimRow(valid_to: org.apache.spark.sql.Column,
-               current: org.apache.spark.sql.Column) = {
-      val cols = col(key) +: tracked.map(col) :+
-        col("valid_from") :+ valid_to.as("valid_to") :+ current.as("is_current")
-      cols
-    }
+    def dimRow(valid_to: Column, current: Column): Column =
+      struct(col(key) +: tracked.map(col) :+ col("valid_from") :+
+        valid_to.as("valid_to") :+ current.as("is_current"): _*)
 
-    // pass-through: present in both, tracked values identical
-    val unchanged = j.filter(inDim && col("__in_snap").isNotNull && !changed)
-      .select(dimRow(col("valid_to"), lit(true)): _*)
-    // close: changed or deleted
-    val closed = j.filter(inDim &&
-        (col("__in_snap").isNull || changed))
-      .select(dimRow(lit(asOf).cast("date"), lit(false)): _*)
-    // open: changed or brand-new key takes the snapshot values
-    val opened = j.filter(col("__in_snap").isNotNull && (!inDim || changed))
-      .select(col(key) +: tracked.map(c => col(s"__snap_$c").as(c)) :+
-        lit(asOf).cast("date").as("valid_from") :+
-        lit(null).cast("date").as("valid_to") :+
-        lit(true).as("is_current"): _*)
+    // one pass over the join: each row emits its (at most two) fates as
+    // entries of one array; the null entries of the arms that don't
+    // apply are dropped after the generate
+    val arms = array(
+      // pass-through: present in both, tracked values identical
+      when(inDim && inSnap && !changed, dimRow(col("valid_to"), lit(true))),
+      // close: changed or deleted
+      when(inDim && (!inSnap || changed), dimRow(asOfDate, lit(false))),
+      // open: changed or brand-new key takes the snapshot values
+      when(inSnap && (!inDim || changed),
+        struct(col(key) +: tracked.map(c => col(s"__snap_$c").as(c)) :+
+          asOfDate.as("valid_from") :+
+          lit(null).cast("date").as("valid_to") :+
+          lit(true).as("is_current"): _*)))
+    val merged = j.select(explode(arms).as("arm"))
+      .filter(col("arm").isNotNull)
+      .select("arm.*")
 
-    history.select(unchanged.columns.map(col): _*)
-      .unionByName(unchanged).unionByName(closed).unionByName(opened)
+    history.select(merged.columns.map(col): _*).unionByName(merged)
   }
 
   // =========================================================================

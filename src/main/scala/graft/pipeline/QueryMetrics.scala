@@ -25,7 +25,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 final class QueryMetrics(maxRecords: Int = 10000) extends QueryExecutionListener {
 
-  /** One completed action's plan-level accounting. */
+  /** One completed action's plan-level accounting. `planMs` is the
+    * action's optimization + physical planning, from its own
+    * `QueryPlanningTracker` (it stays off the K6 frame of [[toDF]]). */
   case class Record(
       funcName: String,
       durationNs: Long,
@@ -33,7 +35,8 @@ final class QueryMetrics(maxRecords: Int = 10000) extends QueryExecutionListener
       shuffleBytes: Long,
       shuffleRecords: Long,
       spillBytes: Long,
-      failed: Boolean)
+      failed: Boolean,
+      planMs: Long)
 
   private val records = new ConcurrentLinkedQueue[Record]()
 
@@ -60,7 +63,9 @@ final class QueryMetrics(maxRecords: Int = 10000) extends QueryExecutionListener
         shuffleBytes = metricSum(qe, Set("shuffleBytesWritten")),
         shuffleRecords = metricSum(qe, Set("shuffleRecordsWritten")),
         spillBytes = metricSum(qe, Set("spillSize")),
-        failed = failed)): Unit
+        failed = failed,
+        planMs = Seq("optimization", "planning").flatMap(qe.tracker.phases.get)
+          .map(_.durationMs).sum)): Unit
     }
   }
 

@@ -703,7 +703,11 @@ object Keywords {
         !expr(s"w in ($stop)") && !expr(s"nxt in ($stop)"))
       .groupBy(col("w").as("src"), col("nxt").as("dst"))
       .agg(count(lit(1)).as("cnt"))
-    val und = bi.union(bi.select(col("dst"), col("src"), col("cnt")))
+    // symmetrized in one pass over bi: each bigram generates both
+    // directions
+    val und = bi.select(inline(array(
+        struct(col("src"), col("dst"), col("cnt")),
+        struct(col("dst").as("src"), col("src").as("dst"), col("cnt")))))
       .groupBy("src", "dst").agg(sum("cnt").as("cnt"))
     val edges = und
       .withColumn("wdeg", sum("cnt").over(Window.partitionBy("src")))

@@ -225,23 +225,27 @@ object ScaleProbe {
   def shuffleBytesOf(df: org.apache.spark.sql.DataFrame): Long =
     shuffleBytes(df.sparkSession)(Sessions.run(df))
 
-  /** Run `action` under a fresh listener; return the query's shuffle
-    * bytes. The bus is drained before the listener attaches (no
-    * earlier execution can land in it) and after the action (every
-    * record it produced has arrived). A query with internal persists
-    * emits SEVERAL records (one per materializing action), so take the
-    * MAX record, not the sum: cached-plan SQLMetrics are CUMULATIVE and
-    * are re-read by every record whose plan scans the cache, so the
-    * final action's record already contains the cache build's
-    * shuffles; summing would count them once per record.
+  /** The shuffle bytes of `action` ([[records]]). A query with internal
+    * persists emits SEVERAL records (one per materializing action), so
+    * take the MAX record, not the sum: cached-plan SQLMetrics are
+    * CUMULATIVE and are re-read by every record whose plan scans the
+    * cache, so the final action's record already contains the cache
+    * build's shuffles; summing would count them once per record.
     */
-  def shuffleBytes(spark: SparkSession)(action: => Unit): Long = {
+  def shuffleBytes(spark: SparkSession)(action: => Unit): Long =
+    records(spark)(action).map(_.shuffleBytes).maxOption.getOrElse(0L)
+
+  /** Run `action` under a fresh listener; return every [[QueryMetrics]]
+    * record it produced, in order. The bus is drained before the
+    * listener attaches (no earlier execution can land in it) and after
+    * the action (every record it produced has arrived). */
+  def records(spark: SparkSession)(action: => Unit): Seq[QueryMetrics#Record] = {
     Sessions.drain(spark)
     val l = QueryMetrics.attach(spark)
     try {
       action
       Sessions.drain(spark)
-      l.snapshot.map(_.shuffleBytes).maxOption.getOrElse(0L)
+      l.snapshot
     } finally QueryMetrics.detach(spark, l)
   }
 }

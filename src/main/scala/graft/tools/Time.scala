@@ -8,6 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Sessions
+import graft.pipeline.QueryMetrics
 
 /** Local perf iteration: time a subset of the registry the way Bench
   * does (warmup at sf0.001, best-of-3 at the target SF through the
@@ -17,13 +18,17 @@ import graft.core.Sessions
   * Usage: `run_class.sh graft.tools.Time <sfDir> [-analyze] [name...]`
   * (no names: the whole registry). Per query:
   * {{{
-  * <name>  best=<s>  build=<s>  runs=<s>,<s>,<s>  jobs=<n> stages=<n> tasks=<n> shufMB=<MB>
+  * <name>  best=<s>  build=<s>  plan=<ms>  runs=<s>,<s>,<s>  jobs=<n> stages=<n> tasks=<n> shufMB=<MB>
   *     job <id>  ran <executed>/<submitted> stages  <stageId>:<stage name>(<tasks>t) | …
   * }}}
   * `build` is the construction layer: the median over the three timed
   * runs of a clock around `fn(spark, dir)` alone (table resolution,
   * eager analysis, tier freshness probes), taken inside the timed
   * region — no listener, no extra run.
+  * `plan` is optimization + physical planning of the profile run's
+  * final action (the noop write), in ms, read from that write's own
+  * `QueryPlanningTracker` — the same phases perfbench's `plans.plan_s`
+  * sums.
   * `jobs`/`stages`/`tasks` count the jobs submitted and the stages and
   * tasks that ran, construction included; `shufMB` is the run's
   * shuffle volume (ScaleProbe's rule). One indented line per job names
@@ -72,10 +77,13 @@ object Time {
         Sessions.release(spark)
         (t, built)
       }.unzip
-      val (jobs, bytes) = profile(spark, fn(spark, sfDir))
+      val (jobs, recs) = profile(spark, fn(spark, sfDir))
       Sessions.release(spark)
       val ran = jobs.ran.asScala.map(s => s.stageId -> s).toMap
-      println(f"$name%-28s best=${ts.min}%7.3f  build=${builds.sorted.apply(1)}%6.3f  runs=${ts.map(t => f"$t%.3f").mkString(",")}" +
+      val bytes = recs.map(_.shuffleBytes).maxOption.getOrElse(0L)
+      val planMs = recs.lastOption.map(_.planMs).getOrElse(0L)
+      println(f"$name%-28s best=${ts.min}%7.3f  build=${builds.sorted.apply(1)}%6.3f  plan=$planMs%4d" +
+        f"  runs=${ts.map(t => f"$t%.3f").mkString(",")}" +
         f"  jobs=${jobs.started.size} stages=${jobs.ran.size} tasks=${jobs.ran.asScala.map(_.numTasks).sum}" +
         f" shufMB=${bytes / 1e6}%.2f")
       jobs.started.forEach { j =>
@@ -99,12 +107,17 @@ object Time {
   }
 
   /** Build and run one query with the job log attached; return the log
-    * and the run's shuffle bytes, every event delivered. */
-  private def profile(spark: SparkSession, build: => DataFrame): (JobLog, Long) = {
+    * and the run's [[QueryMetrics]] records (shuffle bytes by
+    * ScaleProbe's MAX rule, plan time), every event delivered. The
+    * records come from the session the frame belongs to. */
+  private def profile(spark: SparkSession,
+                      build: => DataFrame): (JobLog, Seq[QueryMetrics#Record]) = {
     Sessions.drain(spark)
     val jobs = new JobLog
     spark.sparkContext.addSparkListener(jobs)
-    try (jobs, ScaleProbe.shuffleBytesOf(build))
-    finally spark.sparkContext.removeSparkListener(jobs)
+    try {
+      val df = build
+      (jobs, ScaleProbe.records(df.sparkSession)(Sessions.run(df)))
+    } finally spark.sparkContext.removeSparkListener(jobs)
   }
 }

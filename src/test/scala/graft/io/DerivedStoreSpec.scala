@@ -286,4 +286,52 @@ class DerivedStoreSpec extends SparkSpec {
         "straddling-but-disjoint delta must be answered bloom-only")
     }
   }
+
+  test("a second serve of an unchanged tier launches no Spark job") {
+    withIsolated { dir =>
+      assert(serve(dir).count() == 25 && builds == 1)
+      graft.core.Sessions.drain(spark)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        val again = serve(dir)
+        graft.core.Sessions.drain(spark)
+        assert(jobs.get == 0, "an unchanged served version must resolve without a schema-inference job")
+        assert(builds == 1 && again.columns.toSeq == Seq("n_nationkey", "n_name"))
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
+  test("a served version rewritten in place serves its new rows at the next serve") {
+    withIsolated { dir =>
+      assert(serve(dir).count() == 25)
+      val v1 = s"${DerivedStore.storePath(dir, "nation_tier")}/v=1"
+      val td = TargetedDelete.deleteIds(spark, v1, "n_nationkey", Seq(3L, 4L))
+      assert(td.rowsDeleted == 2, s"in-place takedown: $td")
+      val after = serve(dir)
+      assert(builds == 1, "an in-place rewrite is not source drift")
+      assert(after.count() == 23)
+      assert(after.filter("n_nationkey in (3, 4)").isEmpty)
+    }
+  }
+
+  test("a store wiped and rebuilt at the same v=N serves the new schema and rows") {
+    withIsolated { dir =>
+      assert(serve(dir).count() == 25)
+      val store = DerivedStore.storePath(dir, "nation_tier")
+      fsOf(store).delete(new Path(store), true): Unit
+      val rebuilt = DerivedStore.served(spark, dir, "nation_tier", Seq("nation"),
+        (s, d) => Tables.load(s, d, "nation").filter("n_nationkey < 10")
+          .select("n_nationkey", "n_regionkey"),
+        DerivedStore.Refresh.Rebuild, numFiles = 2, sortKey = "n_nationkey")
+      assert(AtomicPublish.currentVersion(spark, store).contains(1L),
+        "the rebuild commits at the same version path")
+      assert(rebuilt.columns.toSeq == Seq("n_nationkey", "n_regionkey"))
+      assert(rebuilt.count() == 10)
+    }
+  }
 }

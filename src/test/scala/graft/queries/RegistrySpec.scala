@@ -25,6 +25,24 @@ class RegistrySpec extends SparkSpec {
     assert(failed.isEmpty, s"queries that failed: ${failed.mkString("; ")}")
   }
 
+  /** Fan-outs kept on purpose: query -> why its plan reads one input
+    * once per union arm. */
+  private val fanOutAllowed = Map.empty[String, String]
+
+  test("no registry plan unions arms that re-read one input") {
+    val planned = RegistrySweep.outcomes.filter(_.fanOuts.isDefined)
+    assert(planned.size > Registry.queries.size / 2,
+      s"only ${planned.size} noop-write plans were captured")
+    val found = planned.collect {
+      case o if o.fanOuts.exists(_.nonEmpty) => o.name -> o.fanOuts.get
+    }.toMap
+    val bad = (found -- fanOutAllowed.keySet).toSeq.sortBy(_._1)
+      .map { case (n, f) => s"$n: ${f.mkString("; ")}" }
+    assert(bad.isEmpty, s"one pass per fan-out (generate the arms): ${bad.mkString(" | ")}")
+    val stale = fanOutAllowed.keySet -- found.keySet
+    assert(stale.isEmpty, s"allow-listed queries that no longer fan out: $stale")
+  }
+
   test("queries are deterministic across runs (sample)") {
     for (name <- Seq("q4_doc_assembly", "q6_listagg_distinct",
                      "d2_minhash_signature", "s1_cosine_topk")) {
