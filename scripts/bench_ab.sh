@@ -9,8 +9,9 @@
 # same host conditions — the manual r8 procedure (scratch clone, old
 # classfiles, same-session measurement) made repeatable. Each side keeps
 # its own DerivedStore root so tier layouts can differ across refs
-# without cross-contamination (both pay their tier build inside pass 1;
-# min-of-passes absorbs it, identically for both sides).
+# without cross-contamination (Time builds each SF's tiers in an untimed
+# warm-up run; a ref whose Time predates that warm-up pays the build in
+# pass 1's first timed run, which min-of-passes absorbs).
 #
 # Verdict column: B/A ratio of per-query minima. Host drift shows as
 # both sides moving together across passes; a real regression shows as

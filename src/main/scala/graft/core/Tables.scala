@@ -126,8 +126,9 @@ object Tables {
                                  table: String): Option[Seq[SourceFile]] =
     filesAt(spark, new Path(dir, s"$table.parquet"))
 
-  /** [[sourceFiles]] of the parquet file or dir at `p`. */
-  private def filesAt(spark: SparkSession, p: Path): Option[Seq[SourceFile]] = {
+  /** [[sourceFiles]] of the parquet file or dir at `p`: the one
+    * data-file walk every listing of a table's files goes through. */
+  private[graft] def filesAt(spark: SparkSession, p: Path): Option[Seq[SourceFile]] = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {

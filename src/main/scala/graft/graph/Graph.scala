@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,12 +23,13 @@ import graft.io.GraphStore
   * the one thing a cross-engine hash gate cannot tolerate.
   *
   * Scale notes: the edge list is built once (distinct order-grain
-  * pairs), persisted, and every round is one equi-join edge⋈rank on
-  * src + one groupBy(dst) — both keyed so they co-partition; rounds
-  * are FIXED (3), so unlike d8's convergence loop there is no
-  * per-round driver action at all, and the whole computation is one
-  * lazy plan. Rank state is O(|nodes|), never materialized to the
-  * driver.
+  * pairs), persisted on hash(src), and every round is one groupBy(dst)
+  * exchange: the previous round's contributions join onto the edge
+  * rows on src = dst, co-partitioned with the cache, with no node
+  * table to reattach to and nothing broadcast; rounds are FIXED (3),
+  * so unlike d8's convergence loop there is no per-round driver
+  * action at all, and the whole computation is one lazy plan. Rank
+  * state is O(|nodes|), never materialized to the driver.
   */
 object Graph {
 
@@ -57,47 +58,59 @@ object Graph {
     // built once per source snapshot, shared by g1/g3/g5/g6/g8/g9/g10
     // instead of each query re-running lineitem⋈orders+distinct); one
     // hash(src) exchange folds outdeg in, then the cached layout
-    // serves every round's edge⋈rank join — ranks are never broadcast
-    // (node grain is customer-scale, 10⁸⁺ rows at 100 TB) and edges
-    // never move after the build.
+    // serves every round: edges never move after the build.
     val edges = GraphStore.purchaseEdges(s, dir)
       .select(col("cust").as("src"), col("supp").as("dst"),
         col("cust_deg").as("outdeg"))
       .repartition(col("src"))
       .registerCache()
-    // both endpoints from one pass over the cached edges
-    val nodes = edges.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-      .registerCache()
-    // round-1 contribution collapsed algebraically (r15, g5's rule):
-    // r0 ranks are the CONSTANT 10⁶ on every node and outdeg rides
-    // the edge row, so contrib₁ = Σ_{src→dst} (10⁶ div outdeg(src))
-    // needs no join — the edges⋈ranks₀ equi-join the unrolled form
-    // paid attached a value every edge already carries. The nodes ⟕
-    // reattach join STAYS every round (unlike k9): the graph is
-    // bipartite, customers never appear as dst, and their in_micro
-    // really is the coalesce(0) arm. Oracle SQL keeps the r0 join
-    // form, re-proving the algebra cross-engine on every run.
-    var contrib = edges
-      .select(col("dst"),
-        (lit(1000000L) / col("outdeg")).cast("long").as("c"))
-      .groupBy("dst").agg(sum("c").as("in_micro"))
-    var ranks: DataFrame = null
-    for (r <- 1 to Rounds) {
-      ranks = nodes
-        .join(contrib, col("node") === col("dst"), "left_outer")
-        .select(col("node"),
-          (lit(Base) + (lit(Damping) * coalesce(col("in_micro"), lit(0L))
-            / lit(1000000L)).cast("long")).as("rank_micro"))
-      if (r < Rounds)
-        contrib = edges
-          .join(ranks, col("src") === col("node"))
-          .select(col("dst"),
-            (col("rank_micro") / col("outdeg")).cast("long").as("c"))
-          .groupBy("dst").agg(sum("c").as("in_micro"))
+    pagerank(edges)
+      .select(col("node"), col("rank_micro"),
+        (col("node") >= SuppOffset).as("is_supplier"))
+  }
+
+  /** The g1 rounds over a DISTINCT `(src, dst, outdeg)` edge frame
+    * (`outdeg` = edges out of `src`): (node, rank_micro) for every
+    * endpoint. Any directed graph — nothing assumes g1's bipartite
+    * purchase shape. `edges` is read once per round plus once for the
+    * node set, so callers pass a cached frame.
+    *
+    * Every round is ONE exchange: the contribution sum's groupBy(dst).
+    * Rank state never exists at node grain between rounds — round r
+    * reads contrib₍ᵣ₋₁₎ straight onto the edge rows (`edges ⟕ contrib`
+    * on src = dst, which rides `edges`' hash(src) layout and contrib's
+    * hash(dst) exchange), and the coalesce(0) for a node without
+    * in-edges sits on the edge row: every src is a node, and a node
+    * no edge enters has no contribution row, so this IS the oracle's
+    * `nodes ⟕ contrib` reattach, minus the node table. Both node-grain
+    * joins are PINNED to shuffle_hash (g3/g5/g9's scale-honesty rule):
+    * contributions are node grain, 10⁸⁺ rows at 100 TB, so the small-SF
+    * broadcast plan AQE would otherwise pick can never exist at scale. */
+  private[graft] def pagerank(edges: DataFrame): DataFrame = {
+    def rank(inMicro: Column): Column =
+      lit(Base) + (lit(Damping) * coalesce(inMicro, lit(0L)) / lit(1000000L)).cast("long")
+    def contribution(perEdge: Column, from: DataFrame): DataFrame =
+      from.select(col("dst"), (perEdge / col("outdeg")).cast("long").as("c"))
+        .groupBy("dst").agg(sum("c").as("in_micro"))
+    // round 1 collapsed algebraically (r15, g5's rule): r0 ranks are
+    // the CONSTANT 10⁶ on every node and outdeg rides the edge row, so
+    // contrib₁ = Σ_{src→dst} (10⁶ div outdeg(src)) needs no join. The
+    // oracle SQL keeps the r0 join form, re-proving the algebra
+    // cross-engine on every run.
+    var contrib = contribution(lit(1000000L), edges)
+    for (_ <- 2 to Rounds) {
+      val prev = contrib.select(col("dst").as("node"), col("in_micro"))
+      contrib = contribution(rank(col("in_micro")),
+        edges.join(prev.hint("shuffle_hash"), col("src") === col("node"), "left_outer"))
     }
-    ranks.select(col("node"), col("rank_micro"),
-      (col("node") >= SuppOffset).as("is_supplier"))
+    // the node set without a node table: src is distinct per partition
+    // of the hash(src) cache (no exchange), and every dst has a row in
+    // the last contributions — the full-outer join on src = dst emits
+    // each node once, a src no edge enters with the coalesce(0) rank
+    edges.select("src").distinct()
+      .join(contrib.hint("shuffle_hash"), col("src") === col("dst"), "full_outer")
+      .select(coalesce(col("dst"), col("src")).as("node"),
+        rank(col("in_micro")).as("rank_micro"))
   }
 
   /** The same three rounds as chained CTEs. `//` is DuckDB's integer

@@ -3,6 +3,8 @@ package graft.io
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Tables
+
 /** Small-file compaction — the operational pass every long-lived
   * parquet table needs (the reference's daily delete-then-append jobs
   * produce one file per task per day, `AWS_GLUE_ETL.py:124-132`; at
@@ -22,20 +24,11 @@ object Compaction {
   final case class Report(filesBefore: Int, filesAfter: Int,
                           bytes: Long, rows: Long)
 
-  private def dataFiles(spark: SparkSession, table: String): Seq[(String, Long)] = {
-    val base = new Path(table)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(base, true)
-    val buf = Seq.newBuilder[(String, Long)]
-    while (it.hasNext) {
-      val s = it.next()
-      val n = s.getPath.getName
-      // data files only: committer markers and CRCs don't count
-      if (s.isFile && !n.startsWith("_") && !n.startsWith("."))
-        buf += ((s.getPath.toString, s.getLen))
-    }
-    buf.result()
-  }
+  /** The table's data files (Spark's hidden-path rule on every path
+    * segment: committer markers, CRCs, `_temporary/` staging and
+    * in-flight `._COPYING_` copies are not data). */
+  private def dataFiles(spark: SparkSession, table: String): Seq[Tables.SourceFile] =
+    Tables.filesAt(spark, new Path(table)).getOrElse(Nil)
 
   /** Compact `table` (a parquet directory) into ~`targetBytes` files.
     * No-op (returns the current state) when the table is already at or
@@ -44,7 +37,7 @@ object Compaction {
   def compact(spark: SparkSession, table: String,
               targetBytes: Long = 128L * 1024 * 1024): Report = {
     val files = dataFiles(spark, table)
-    val totalBytes = files.map(_._2).sum
+    val totalBytes = files.map(_.len).sum
     val targetFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     if (files.size <= targetFiles) {
       val rows = spark.read.parquet(table).count()

@@ -39,13 +39,9 @@ object TableStats {
       s.sparkContext.hadoopConfiguration, qualified)
     val df = s.read.parquet(path.toString)
     val rows = df.count() // metadata-only for parquet
-    val it = fs.listFiles(path, true)
-    var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) bytes += f.getLen
-    }
+    // the data files the read above scans: Spark's hidden-path rule on
+    // every segment, so staging and in-flight copies weigh nothing
+    val bytes = graft.core.Tables.filesAt(s, path).getOrElse(Nil).map(_.len).sum
     graft.plans.TierStatsCatalog.register(
       qualified, rows, bytes, columnProfile(df, rows),
       sigPath = qualified, sig = sig)

@@ -99,16 +99,8 @@ object TargetedDelete {
     // layouts included — the scan discovery path supports them, so the
     // accounting must too) — counting via a distinct(input_file_name())
     // scan read every row of the table just to count its files
-    val tableRoot = new Path(table)
-    val rootPrefix = tableRoot.toUri.getPath
-    var filesTotal = 0L
-    val lsIt = fs.listFiles(tableRoot, true)
-    while (lsIt.hasNext) {
-      val f = lsIt.next()
-      val rel = f.getPath.toUri.getPath.stripPrefix(rootPrefix).stripPrefix("/")
-      if (!rel.split('/').exists(seg => seg.startsWith("_") || seg.startsWith(".")))
-        filesTotal += 1
-    }
+    val filesTotal =
+      graft.core.Tables.filesAt(spark, new Path(table)).fold(0L)(_.size.toLong)
 
     // discovery: the zone map answers "which files CAN hold a target
     // id" from the driver-side manifest alone; only those candidates

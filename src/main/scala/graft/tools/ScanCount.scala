@@ -2,8 +2,8 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.Sessions
@@ -32,7 +32,24 @@ object ScanCount {
     * plan's file-scan counts, keyed by the scanned directory/file name
     * (e.g. "lineitem.parquet", "purchase"). */
   def counts(spark: SparkSession, dir: String,
-             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Map[String, Int] = {
+             fn: (SparkSession, String) => DataFrame): Map[String, Int] =
+    QueryMetrics.allNodes(executedPlan(spark, dir, fn))
+      .collect { case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.map { p =>
+          // DerivedStore/AtomicPublish tiers read versioned subdirs
+          // (…/purchase/v=3): report the tier name, not the version
+          val n = p.getName
+          if (n.matches("v=?\\d+")) p.getParent.getName else n
+        }.toSeq
+      }
+      .flatten.toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+
+  /** Run one registry query to the noop sink and return the executed
+    * plan of that write (the final adaptive plan: walk it with
+    * [[QueryMetrics.allNodes]]). The query's caches are released before
+    * returning; the plan object stays walkable. */
+  def executedPlan(spark: SparkSession, dir: String,
+                   fn: (SparkSession, String) => DataFrame): SparkPlan = {
     // Constructing the frame first lets any store-materialization side
     // effects (GraphStore builds fire their own write actions) happen
     // OFF the capture — otherwise the first listener event is the
@@ -65,16 +82,7 @@ object ScanCount {
       Sessions.drain(spark)
       val qe = captured.get()
       require(qe != null, "listener never fired")
-      QueryMetrics.allNodes(qe.executedPlan)
-        .collect { case f: FileSourceScanExec =>
-          f.relation.location.rootPaths.map { p =>
-            // DerivedStore/AtomicPublish tiers read versioned subdirs
-            // (…/purchase/v=3): report the tier name, not the version
-            val n = p.getName
-            if (n.matches("v=?\\d+")) p.getParent.getName else n
-          }.toSeq
-        }
-        .flatten.toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+      qe.executedPlan
     } finally {
       sess.listenerManager.unregister(listener)
       Sessions.release(spark)

@@ -10,10 +10,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Sessions
 import graft.pipeline.QueryMetrics
 
-/** Local perf iteration: time a subset of the registry the way Bench
-  * does (warmup at sf0.001, best-of-3 at the target SF through the
-  * noop sink, blocking release between runs), then profile each query
-  * in one more, UNTIMED run — listeners stay off every timed run.
+/** Local perf iteration: time a subset of the registry through Bench's
+  * run and release path (a fail-fast pass at sf0.001, then per query
+  * one untimed warm-up run at the target SF and best-of-3 there through
+  * the noop sink, blocking release between runs), then profile each
+  * query in one more, UNTIMED run — listeners stay off every timed run.
+  * The target-SF warm-up builds that SF's tiers and resolves its
+  * tables, so no timed run — and no `runs=` entry — includes a tier
+  * build.
   *
   * Usage: `run_class.sh graft.tools.Time <sfDir> [-analyze] [name...]`
   * (no names: the whole registry). Per query:
@@ -22,9 +26,9 @@ import graft.pipeline.QueryMetrics
   *     job <id>  ran <executed>/<submitted> stages  <stageId>:<stage name>(<tasks>t) | …
   * }}}
   * `build` is the construction layer: the median over the three timed
-  * runs of a clock around `fn(spark, dir)` alone (table resolution,
-  * eager analysis, tier freshness probes), taken inside the timed
-  * region — no listener, no extra run.
+  * runs of a clock around `fn(spark, dir)` alone (memoized table
+  * resolution, eager analysis, tier freshness probes), taken inside
+  * the timed region — no listener, no extra run.
   * `plan` is optimization + physical planning of the profile run's
   * final action (the noop write), in ms, read from that write's own
   * `QueryPlanningTracker` — the same phases perfbench's `plans.plan_s`
@@ -70,6 +74,8 @@ object Time {
       ok
     }
     warm.foreach { case (name, fn) =>
+      run(fn, sfDir): Unit
+      Sessions.release(spark)
       val (ts, builds) = Seq.fill(3) {
         val t0 = System.nanoTime()
         val built = run(fn, sfDir)

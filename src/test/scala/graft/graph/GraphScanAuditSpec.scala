@@ -1,6 +1,10 @@
 package graft.graph
 
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
+
 import graft.SparkSpec
+import graft.pipeline.QueryMetrics
 import graft.tools.ScanCount
 
 /** Scan-repetition bounds for the whole g-family (round-7 verdict #7).
@@ -43,6 +47,19 @@ class GraphScanAuditSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  /** g1's rounds ride the cached hash(src) edge set: its two round
+    * joins (edges ⟕ contributions) and the final node-set join are all
+    * node grain — 10⁸⁺ rows at 100 TB — so none may be a broadcast,
+    * however small the test data makes them. */
+  test("g1's executed plan broadcasts nothing and shuffle-hash joins every round") {
+    val plan = QueryMetrics.allNodes(
+      ScanCount.executedPlan(spark, sfDir, Graph.g1Pagerank)).toSeq
+    assert(!plan.exists(_.isInstanceOf[BroadcastExchangeExec]), plan.head.treeString)
+    val joins = plan.collect { case j: BaseJoinExec => j }
+    assert(joins.size == 3 && joins.forall(_.isInstanceOf[ShuffledHashJoinExec]),
+      joins.map(_.nodeName))
   }
 
   test("the g-family bound set matches the registry's g-queries") {

@@ -6,6 +6,47 @@ import graft.SparkSpec
 
 class GraphSpec extends SparkSpec {
 
+  /** The recursion g1's oracle SQL spells out, in plain Scala: every
+    * round reattaches the incoming contributions to the whole node
+    * table (`nodes ⟕ contrib`, 0 for a node no edge enters), starting
+    * from 10⁶ everywhere. */
+  private def referenceRanks(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val outdeg = edges.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    val nodes = edges.flatMap { case (s, d) => Seq(s, d) }.distinct
+    var ranks = nodes.map(_ -> 1000000L).toMap
+    for (_ <- 1 to 3) {
+      val contrib = edges.groupMapReduce(_._2) { case (s, _) => ranks(s) / outdeg(s) }(_ + _)
+      ranks = nodes.map(n => n -> (150000L + 850000L * contrib.getOrElse(n, 0L) / 1000000L)).toMap
+    }
+    ranks
+  }
+
+  test("g1's rounds equal the node-reattach recursion on graphs that are not bipartite") {
+    val graphs = Seq(
+      // 2 is both a src and a dst; 4 only sends
+      "src-and-dst node" -> Seq(1L -> 2L, 2L -> 3L, 4L -> 2L),
+      "3-cycle" -> Seq(1L -> 2L, 2L -> 3L, 3L -> 1L),
+      // 10 is out-only, 13 in-only, 11 and 12 both
+      "out-only and in-only nodes" -> Seq(10L -> 11L, 10L -> 12L, 11L -> 12L,
+        12L -> 11L, 12L -> 13L),
+      // outdeg 3 and 7: 10⁶ div 3 and 10⁶ div 7 leave remainders, so
+      // each sum depends on flooring per edge, before the sum
+      "outdeg > 1 with floor remainders" ->
+        ((21L to 23L).map(20L -> _) ++ (30L to 36L).map(21L -> _) ++
+          Seq(22L -> 20L, 30L -> 21L, 36L -> 20L)))
+    for ((name, es) <- graphs) {
+      val outdeg = es.groupMapReduce(_._1)(_ => 1L)(_ + _)
+      val edges = spark.createDataFrame(es.map { case (s, d) => (s, d, outdeg(s)) })
+        .toDF("src", "dst", "outdeg")
+      val got = Graph.pagerank(edges).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      withClue(s"$name: ") {
+        assert(got.size == got.map(_._1).distinct.size, "a node appears twice")
+        assert(got.toMap == referenceRanks(es))
+      }
+    }
+  }
+
   test("g2 edge list is k-NN-bounded and triangle supports are consistent") {
     val out = Graph.g2Triangles(spark, sfDir).cache()
     // total support = 3 × triangle count, so it must divide by 3
