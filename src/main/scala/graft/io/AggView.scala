@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -145,10 +143,7 @@ object AggView {
     val staging = new Path(viewDir + ".staging")
     fs.delete(staging, true)
     merged.write.mode("overwrite").parquet(new Path(staging, DataDir).toString)
-    val out = fs.create(new Path(staging, LedgerFile), true)
-    try out.write(newLedger.toSeq.sorted.mkString("\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    Sidecar.write(fs, new Path(staging, LedgerFile), newLedger.toSeq.sorted.mkString("\n"))
     val target = new Path(viewDir)
     val old = new Path(viewDir + ".old")
     fs.delete(old, true)
@@ -169,13 +164,7 @@ object AggView {
     * ledger). Read-only: resolves to the `.old` copy mid-swap. */
   def ledger(spark: SparkSession, viewDir: String): Set[String] = {
     val fs = new Path(viewDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(resolveDir(fs, viewDir), LedgerFile)
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        .split("\n").map(_.trim).filter(_.nonEmpty).toSet
-      finally in.close()
-    }
+    Sidecar.read(fs, new Path(resolveDir(fs, viewDir), LedgerFile)).fold(Set.empty[String])(
+      _.split("\n").map(_.trim).filter(_.nonEmpty).toSet)
   }
 }

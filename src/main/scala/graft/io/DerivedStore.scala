@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -43,8 +41,9 @@ import graft.core.Tables
   *    full rebuild never re-runs. Any other drift (shrink, in-place
   *    rewrite, unknown or legacy fingerprint) takes the full build.
   *    A merged version publishes through byte-for-byte the same
-  *    protocol as a full one, so readers cannot tell (and need not
-  *    care) how a version was produced.
+  *    protocol as a full one, so readers need not care how a version
+  *    was produced; an operator reads it from the version's own
+  *    [[RefreshRecord]] (`_refresh`).
   *  - PUBLICATION: [[AtomicPublish]]'s versioned OCC protocol, not a
   *    private re-implementation. Each build stages under a dot-prefixed
   *    tx dir ([[AtomicPublish.stageVersionWith]]) — invisible to
@@ -146,29 +145,16 @@ object DerivedStore {
     final case class Bucketed(upserts: DeltaMerge, numBuckets: Int) extends Refresh
   }
 
-  /** Last build THIS THREAD ran: (store name, "full" | "merge") —
-    * introspection for specs and the run-log note channel. Thread-local
-    * (r11 review): serves are synchronous on the calling thread, and a
-    * JVM-global slot would let any concurrent thread's serve (a query
-    * against a stale tier while a DAG job rebuilds another) overwrite
-    * the mode a tierJob is about to log — confidently wrong run-log
-    * rows, the exact failure the channel exists to prevent. */
-  private val lastBuildTl =
-    ThreadLocal.withInitial[Option[(String, String)]](() => None)
-  private[graft] def lastBuild: Option[(String, String)] = lastBuildTl.get()
-  private[graft] def lastBuild_=(v: Option[(String, String)]): Unit =
-    lastBuildTl.set(v)
-
-  /** Last serve THIS THREAD resolved: (store name, "noop" | "merge" |
-    * "full") — unlike [[lastBuild]], a fingerprint-fresh hit records
-    * too ("noop"), so a nightly operator's run-log row can say WHICH
-    * path served the tier (r10 verdict #4). Thread-local, same
-    * rationale as [[lastBuild]]. */
-  private val lastServeTl =
-    ThreadLocal.withInitial[Option[(String, String)]](() => None)
-  private[graft] def lastServe: Option[(String, String)] = lastServeTl.get()
-  private[graft] def lastServe_=(v: Option[(String, String)]): Unit =
-    lastServeTl.set(v)
+  /** What the publish of a committed version did: `mode` is "full" or
+    * "merge"; `layout` is how its bytes were written — "range" (one
+    * range-sorted write), "lsm-append", "lsm-rewrite", "bucketed",
+    * "bucketed-patch", "dir" (a directory tier's own writer) or
+    * "dir-copy" (a byte-copy of the served version plus the delta).
+    * Committed inside the version as `_refresh` (`mode=merge
+    * layout=lsm-append`), beside `_fingerprint`, so the commit rename
+    * publishes it with the data: an attempt that crashed or was
+    * discarded leaves no record. */
+  final case class RefreshRecord(mode: String, layout: String)
 
   /** Test hook: invoked after the source fingerprint is taken and
     * before the build/merge reads the tables — specs land a concurrent
@@ -193,7 +179,7 @@ object DerivedStore {
     * equals a real listing). */
   private val ChurnSentinel = "!churn"
 
-  private def root: String =
+  private[graft] def root: String =
     sys.props.get("graft.graphstore.dir")
       .orElse(sys.env.get("GRAFT_GRAPHSTORE_DIR"))
       .getOrElse("spark-warehouse/graphstore")
@@ -204,6 +190,19 @@ object DerivedStore {
   private val lock = new Object
 
   private val FingerprintFile = "_fingerprint"
+  private val RefreshFile = "_refresh"
+
+  /** The [[RefreshRecord]] a version dir committed; None for a version
+    * published before the record existed, or one not published by the
+    * serve loop. */
+  private[graft] def refreshOf(s: SparkSession, versionDir: String): Option[RefreshRecord] = {
+    val p = new Path(versionDir, RefreshFile)
+    Sidecar.read(hadoopFs(s, p), p).flatMap { txt =>
+      val kv = txt.trim.split(" ").iterator.map(_.split("=", 2))
+        .collect { case Array(k, v) => k -> v }.toMap
+      for (m <- kv.get("mode"); l <- kv.get("layout")) yield RefreshRecord(m, l)
+    }
+  }
 
   private def hadoopFs(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -489,18 +488,17 @@ object DerivedStore {
     * store is absent or stale. `stage(fp, append)` stages the next
     * version from sources fingerprinted as `fp` — `append` is the
     * served version and its delta when the drift is
-    * [[SourceDrift.AppendOnly]] — and returns the staging dir and its
-    * mode ("merge" | "full"). Builds are in-JVM-serialized;
-    * cross-process racers serialize on the OCC commit. Returns the
-    * served version's dir. */
+    * [[SourceDrift.AppendOnly]] — and returns the staging dir and the
+    * [[RefreshRecord]] committed with it. Builds are
+    * in-JVM-serialized; cross-process racers serialize on the OCC
+    * commit. Returns the served version's dir. */
   private def serve(s: SparkSession, dir: String, name: String,
                     sources: Seq[String])
-                   (stage: (String, Option[Append]) => (Path, String)): String = {
+                   (stage: (String, Option[Append]) => (Path, RefreshRecord)): String = {
     val store = storePath(dir, name)
     def fresh(fp: String): Option[Long] = AtomicPublish.currentVersion(s, store)
       .filter(v => versionFingerprint(s, store, v).contains(fp))
     val fp0 = fileEntries(s, dir, sources).mkString("\n")
-    var served = "noop"
     val version = fresh(fp0).getOrElse {
       lock.synchronized {
         fresh(fp0).getOrElse { // recheck under the lock
@@ -514,20 +512,11 @@ object DerivedStore {
                 case _ => None
               }
             } yield Append(new Path(s"$store/v=$v"), delta)
-            val (staging, mode) = stage(fp, append)
-            // a stage may serve ANOTHER tier inside its body (the lsh
-            // components merge probes the band-index tier) — the inner
-            // serve re-enters the (reentrant) lock and may publish
-            // first; the mode is recorded AFTER the stage so it reports
-            // THIS store's, and only once its staging completed
-            lastBuild = Some(name -> mode)
-            served = mode
-            staging
+            stage(fp, append)
           }
         }
       }
     }
-    lastServe = Some(name -> served) // after any inner re-entrant serve
     s"$store/v=$version"
   }
 
@@ -547,7 +536,6 @@ object DerivedStore {
              summaryKey: Option[String] = None): DataFrame = {
     val store = storePath(dir, name)
     val versionDir = serve(s, dir, name, sources) { (fp, append) =>
-      lastLsmMode = None
       // the byte-copying paths: history moves as bytes, only the delta
       // (LSM) or the touched buckets (bucketed) are written. Schema
       // evolution cannot ride the byte-copy: mixed-schema files would
@@ -573,26 +561,24 @@ object DerivedStore {
                 bucketOfFileName(st.getPath.getName).isDefined) =>
           val prev = Tables.loadAt(s, a.prev.toString)
           um(s, dir, prev, a.delta).filter(u => sameTierSchema(prev.schema, u.schema))
-            .map(stageBucketedPatch(s, store, a.prev, _, b, sortKey, summaryKey))
+            .map(u => stageBucketedPatch(s, store, a.prev, u, b, sortKey, summaryKey) ->
+              "bucketed-patch")
         case _ => None
       }
-      patched.map(_ -> "merge").getOrElse {
+      patched.map { case (p, layout) => p -> RefreshRecord("merge", layout) }.getOrElse {
         val (rows, mode) = (refresh, append) match {
           case (Refresh.Merge(m), Some(a)) =>
             (m(s, dir, Tables.loadAt(s, a.prev.toString), a.delta), "merge")
           case _ => (build(s, dir), "full")
         }
-        val staging = refresh match {
+        refresh match {
           case Refresh.Bucketed(_, b) =>
-            stageBucketedFull(s, store, rows, b, fp, numFiles, sortKey, summaryKey)
+            stageBucketedFull(s, store, rows, b, fp, numFiles, sortKey, summaryKey) ->
+              RefreshRecord(mode, "bucketed")
           case _ =>
-            stageFullLayout(s, store, rows, fp, numFiles, sortKey, summaryKey)
+            stageFullLayout(s, store, rows, fp, numFiles, sortKey, summaryKey) ->
+              RefreshRecord(mode, "range")
         }
-        // an inner re-entrant serve (the build may refresh an upstream
-        // LSM tier) must not leak ITS layout mode as this full-layout
-        // publish's
-        lastLsmMode = None
-        staging -> mode
       }
     }
     // publish-time stats → optimizer (r12 verdict #4): register the
@@ -923,13 +909,6 @@ object DerivedStore {
     } finally upserts.unpersist(): Unit
   }
 
-  /** Which layout the last LSM publish on THIS THREAD took ("append" |
-    * "rewrite") — spec introspection; thread-local like [[lastBuild]]. */
-  private val lastLsmTl =
-    ThreadLocal.withInitial[Option[String]](() => None)
-  private[graft] def lastLsmMode: Option[String] = lastLsmTl.get()
-  private[graft] def lastLsmMode_=(v: Option[String]): Unit = lastLsmTl.set(v)
-
   /** Test hook: force the LSM major-rewrite file budget. */
   @volatile private[graft] var lsmBudgetOverride: Option[Long] = None
 
@@ -973,24 +952,21 @@ object DerivedStore {
     * breaches [[lsmFileBudget]], then one major rewrite (base ∪ delta
     * through the full layout). `deltaFiles` (the AppendOnly source
     * paths) size the delta writer — tier bytes track source bytes
-    * within a constant factor, the [[scaledNumFiles]] argument. */
+    * within a constant factor, the [[scaledNumFiles]] argument.
+    * Returns the staging dir and its layout ("lsm-append" |
+    * "lsm-rewrite"). */
   private def stageLsm(s: SparkSession, store: String, prevDir: Path,
                        deltaRows: DataFrame,
                        deltaFiles: Map[String, Seq[String]], fp: String,
                        numFiles: Int, sortKey: String,
-                       summaryKey: Option[String]): Path = {
+                       summaryKey: Option[String]): (Path, String) = {
     val prevData = dataFilesOf(s, prevDir)
     val prevBytes = prevData.map(_.getLen).sum
-    // the mode is recorded only after its staging completes — an
-    // aborted attempt must not leave a mode for a later reader to
-    // pair with an earlier success (the r11 fold-mode discipline)
-    if (prevData.size > lsmFileBudget(prevBytes, numFiles)) {
-      val staging = stageFullLayout(s, store,
+    if (prevData.size > lsmFileBudget(prevBytes, numFiles))
+      stageFullLayout(s, store,
         s.read.parquet(prevDir.toString).unionByName(deltaRows), fp, numFiles,
-        sortKey, summaryKey)
-      lastLsmMode = Some("rewrite")
-      staging
-    } else {
+        sortKey, summaryKey) -> "lsm-rewrite"
+    else {
       val deltaBytes = deltaFiles.valuesIterator.flatten.map { f =>
         val p = new Path(f)
         hadoopFs(s, p).getFileStatus(p).getLen
@@ -1009,8 +985,7 @@ object DerivedStore {
           .map(_.getPath.toString)
         mergeSidecars(s, prevDir, p, newFiles, sortKey, summaryKey)
       }
-      lastLsmMode = Some("append")
-      staging
+      staging -> "lsm-append"
     }
   }
 
@@ -1267,7 +1242,8 @@ object DerivedStore {
   }
 
   /** Stage-then-verify publication: `stage(fp)` builds a version from
-    * sources fingerprinted as `fp`, then the sources are re-listed —
+    * sources fingerprinted as `fp` and returns its [[RefreshRecord]],
+    * then the sources are re-listed —
     * a write landing between the fingerprint and the build's read
     * (the TOCTOU freshness race) shows up as a mismatch, the staged
     * bytes are discarded, and the attempt repeats against the fresh
@@ -1278,22 +1254,22 @@ object DerivedStore {
     * classifies as Rewritten so no merge re-digests ambiguous files. */
   private def publishRechecked(s: SparkSession, dir: String,
                                sources: Seq[String], store: String,
-                               fp0: String)(stage: String => Path): Long = {
+                               fp0: String)(stage: String => (Path, RefreshRecord)): Long = {
     var fp = fp0
     var attempt = 0
     var committed = -1L
     while (committed < 0) {
       attempt += 1
       onFingerprinted()
-      val staging = stage(fp)
+      val (staging, record) = stage(fp)
       val fpAfter = fileEntries(s, dir, sources).mkString("\n")
-      if (fpAfter == fp) committed = commitStaged(s, store, staging, fp)
+      if (fpAfter == fp) committed = commitStaged(s, store, staging, fp, record)
       else if (attempt >= MaxStageAttempts)
         // the sentinel line is followed by the (statically known)
         // source TABLE names so provenance survives the churn; the
         // combined text still never equals a real listing
         committed = commitStaged(s, store, staging,
-          (ChurnSentinel +: sources.distinct.sorted).mkString("\n"))
+          (ChurnSentinel +: sources.distinct.sorted).mkString("\n"), record)
       else {
         hadoopFs(s, staging).delete(staging, true): Unit
         // the retry's fresh read must not pin the listing the torn
@@ -1346,17 +1322,18 @@ object DerivedStore {
                None
              }
       } yield p
-      merged.map(_ -> "merge").getOrElse(
-        AtomicPublish.stageVersionWith(store)(p => write(s, dir, p)) -> "full")
+      merged.map(_ -> RefreshRecord("merge", "dir-copy")).getOrElse(
+        AtomicPublish.stageVersionWith(store)(p => write(s, dir, p)) ->
+          RefreshRecord("full", "dir"))
     }
   }
 
   /** Byte-copy a committed version's artifacts into a staging dir —
-    * the commit records (`_SUCCESS`, `_fingerprint`) stay behind;
-    * [[commitStaged]] writes the new version's own. */
+    * the commit records (`_SUCCESS`, `_fingerprint`, `_refresh`) stay
+    * behind; [[commitStaged]] writes the new version's own. */
   private def copyVersion(s: SparkSession, from: String, to: String): Unit =
     copyTree(s, new Path(from), new Path(to),
-      keep = n => n != FingerprintFile && n != "_SUCCESS")
+      keep = n => n != FingerprintFile && n != RefreshFile && n != "_SUCCESS")
 
   /** Test hook / tuning knob: the file count above which [[copyTree]]
     * fans the per-file byte moves out to executors. The driver loop is
@@ -1423,18 +1400,19 @@ object DerivedStore {
     }
   }
 
-  /** The shared publication tail: drop the fingerprint (and a
-    * `_SUCCESS` commit record if the writer didn't leave one at the
-    * root — parquet writes do, directory builders may not) INSIDE the
-    * staged dir, then the OCC commit rename and the keep-2 GC sweep. */
+  /** The shared publication tail: drop the fingerprint, the
+    * [[RefreshRecord]] (and a `_SUCCESS` commit record if the writer
+    * didn't leave one at the root — parquet writes do, directory
+    * builders may not) INSIDE the staged dir, then the OCC commit
+    * rename and the keep-2 GC sweep. */
   private def commitStaged(s: SparkSession, store: String, staging: Path,
-                           fp: String): Long = {
-    // the fingerprint rides inside the staged version so the
+                           fp: String, record: RefreshRecord): Long = {
+    // fingerprint and record ride inside the staged version so the
     // commit rename publishes data + provenance atomically
     val fs = hadoopFs(s, staging)
-    val out = fs.create(new Path(staging, FingerprintFile), true)
-    try out.write(fp.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    Sidecar.write(fs, new Path(staging, FingerprintFile), fp)
+    Sidecar.write(fs, new Path(staging, RefreshFile),
+      s"mode=${record.mode} layout=${record.layout}")
     val succ = new Path(staging, "_SUCCESS")
     if (!fs.exists(succ)) fs.create(succ, true).close()
     val n = AtomicPublish.commitStagedOcc(s, store, staging)

@@ -6,7 +6,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The one read/write pair behind every tiny text sidecar/marker file
   * (`_folded`, `_checkpoint`, `_sources`, `_stream_synced`,
-  * `_fingerprint`, `_nrows`): UTF-8, overwrite-create, close in
+  * `_fingerprint`, `_refresh`, `_nrows`, `_stats`, `_buckets`, an ANN
+  * index's `_metric`, an [[AggView]]'s `_partitions` ledger, the
+  * [[TargetedDelete]] journal): UTF-8, overwrite-create, close in
   * finally. Hoisted (r12 review) so a future hardening — e.g. atomic
   * write-then-rename — lands once, not per copy. */
 object Sidecar {

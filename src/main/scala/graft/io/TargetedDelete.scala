@@ -30,14 +30,10 @@ import org.apache.spark.sql.functions._
   */
 object TargetedDelete {
 
-  case class Report(rowsDeleted: Long, filesRewritten: Long, filesTotal: Long)
-
-  /** How the last [[deleteIds]] on THIS THREAD discovered its affected
-    * files — "manifest" (zone-map pruned) or "scan" (pushdown scan).
-    * Spec introspection, same channel discipline as lastFoldMode. */
-  private val lastDiscoveryTl =
-    ThreadLocal.withInitial[Option[String]](() => None)
-  private[graft] def lastDiscovery: Option[String] = lastDiscoveryTl.get()
+  /** `discovery`: how the affected files were found — "manifest"
+    * (zone-map pruned) or "scan" (pushdown scan). */
+  case class Report(rowsDeleted: Long, filesRewritten: Long, filesTotal: Long,
+                    discovery: String)
 
   private def journalPath(table: String) = new Path(table + ".delete-journal")
   private def manifestStaging(table: String) = new Path(table + ".filemap-staging")
@@ -65,14 +61,12 @@ object TargetedDelete {
                                table: String): Unit = {
     fs.delete(manifestStaging(table), true): Unit
     val j = journalPath(table)
-    if (!fs.exists(j)) return
-    val in = fs.open(j)
-    val lines = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty)
-    finally in.close()
-    if (lines.lastOption.contains("END")) replay(fs, lines)
-    fs.delete(new Path(table + ".delete-staging"), true)
-    fs.delete(j, false): Unit
+    Sidecar.read(fs, j).foreach { journal =>
+      val lines = journal.split("\n").filter(_.nonEmpty)
+      if (lines.lastOption.contains("END")) replay(fs, lines)
+      fs.delete(new Path(table + ".delete-staging"), true)
+      fs.delete(j, false): Unit
+    }
   }
 
   private def replay(fs: org.apache.hadoop.fs.FileSystem,
@@ -94,7 +88,6 @@ object TargetedDelete {
                 ids: Seq[Long]): Report = {
     val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverIfCrashed(fs, table)
-    lastDiscoveryTl.set(None)
     // file population from ONE recursive listing (nested/partitioned
     // layouts included — the scan discovery path supports them, so the
     // accounting must too) — counting via a distinct(input_file_name())
@@ -109,9 +102,9 @@ object TargetedDelete {
     // stats still prune at the footer level).
     val manifest = ZoneMap.manifestOf(spark, table)
     val idManifest = manifest.filter(_.key == idCol)
+    val discovery = if (idManifest.isDefined) "manifest" else "scan"
     val affectedFiles: Array[String] = idManifest match {
       case Some(m) =>
-        lastDiscoveryTl.set(Some("manifest"))
         val cands = m.candidateFilesForKeys(ids)
         if (cands.isEmpty) Array.empty
         else spark.read.option("basePath", table)
@@ -120,14 +113,13 @@ object TargetedDelete {
           .select(input_file_name().as("f")).distinct()
           .collect().map(_.getString(0))
       case None =>
-        lastDiscoveryTl.set(Some("scan"))
         spark.read.parquet(table)
           .filter(col(idCol).isin(ids: _*))
           .select(input_file_name().as("f")).distinct()
           .collect().map(_.getString(0))
     }
 
-    if (affectedFiles.isEmpty) return Report(0L, 0L, filesTotal)
+    if (affectedFiles.isEmpty) return Report(0L, 0L, filesTotal, discovery)
 
     val affected = spark.read.parquet(affectedFiles: _*)
     val rowsDeleted = affected.filter(col(idCol).isin(ids: _*)).count()
@@ -182,12 +174,9 @@ object TargetedDelete {
       fs.delete(new Path(table, ZoneMap.ManifestDir), true): Unit)
 
     val j = journalPath(table)
-    val out = fs.create(j, true)
-    try out.write((
+    Sidecar.write(fs, j, (
       moves.map { case (s, d) => s"mv\t$s\t$d" } ++
-      affectedFiles.map(f => s"old\t$f") :+ "END")
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+      affectedFiles.map(f => s"old\t$f") :+ "END").mkString("\n"))
     moves.foreach { case (s, d) =>
       require(fs.rename(s, d), s"rename $s -> $d failed")
     }
@@ -219,6 +208,6 @@ object TargetedDelete {
     // and the signed TierStatsCatalog entry self-evicts at the next
     // plan because its recorded len:mtime signature no longer matches
     fs.delete(new Path(table, DerivedStore.RowStatsFile), false): Unit
-    Report(rowsDeleted, affectedFiles.length.toLong, filesTotal)
+    Report(rowsDeleted, affectedFiles.length.toLong, filesTotal, discovery)
   }
 }

@@ -35,21 +35,22 @@ object TierRefresh {
     * served (r10 verdict #4): `mode=noop|merge|full v=<n>` lands in
     * the row's note slot via [[Pipeline.jobNote]] — a nightly operator
     * reads "merge, v=12" from the log instead of grepping build logs.
-    * `DerivedStore.lastServe` is the source of truth; it is cleared
-    * first so a body that never reaches its serve can't report a
-    * stale inner tier's mode. */
+    * A body that left the tier's committed version where it was is a
+    * `noop`; otherwise the mode is the one the new version committed
+    * in its `_refresh` record (`unrecorded` if it has none). */
   private def tierJob(jobName: String, tier: String, sfDir: String,
                       deps: Seq[String] = Nil)
                      (serve: SparkSession => Long): Job =
     Job(jobName, s"graphstore.$tier", deps = deps)((s, _) => {
-      DerivedStore.lastServe = None
+      val store = DerivedStore.storePath(sfDir, tier)
+      val before = AtomicPublish.currentVersion(s, store)
       val rows = serve(s)
-      val mode = DerivedStore.lastServe
-        .collect { case (`tier`, m) => m }.getOrElse("noop")
-      val v = AtomicPublish
-        .currentVersion(s, DerivedStore.storePath(sfDir, tier))
-        .map(v => s" v=$v").getOrElse("")
-      Pipeline.jobNote = Some(s"mode=$mode$v")
+      val after = AtomicPublish.currentVersion(s, store)
+      val mode =
+        if (after == before) "noop"
+        else after.flatMap(v => DerivedStore.refreshOf(s, s"$store/v=$v"))
+          .fold("unrecorded")(_.mode)
+      Pipeline.jobNote = Some(s"mode=$mode${after.fold("")(v => s" v=$v")}")
       rows
     })
 
@@ -103,13 +104,11 @@ object TierRefresh {
 
   /** Shared run-log body for the stream-compaction jobs: `folded=N
     * mode=M` on a folding night, `noop` on an already-folded one. */
-  private def foldJobBody(fold: SparkSession => Option[(Int, Long)])
+  private def foldJobBody(fold: SparkSession => Option[graft.streaming.StreamTierIngest.Folded])
                          (s: SparkSession): Long =
     fold(s) match {
-      case Some((parts, rows)) =>
-        val mode = graft.streaming.StreamTierIngest.lastFoldMode
-          .map(m => s" mode=$m").getOrElse("")
-        Pipeline.jobNote = Some(s"folded=$parts$mode"); rows
+      case Some(f) =>
+        Pipeline.jobNote = Some(s"folded=${f.parts} mode=${f.mode}"); f.rows
       case None =>
         Pipeline.jobNote = Some("noop"); 0L
     }
@@ -150,8 +149,8 @@ object TierRefresh {
                     deps: Seq[String] = Nil): Job =
     Job(name, s"stream.$name", deps = deps)((s, _) =>
       graft.streaming.StreamTierIngest.syncCorpus(s, survivorsDir, corpusDir) match {
-        case Some((rows, upto)) =>
-          Pipeline.jobNote = Some(s"synced=$rows upto=$upto"); rows
+        case Some(sy) =>
+          Pipeline.jobNote = Some(s"synced=${sy.rows} upto=${sy.upto}"); sy.rows
         case None =>
           Pipeline.jobNote = Some("noop"); 0L
       })

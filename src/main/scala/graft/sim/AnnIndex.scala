@@ -1,7 +1,5 @@
 package graft.sim
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -99,23 +97,16 @@ object AnnIndex {
     assign(corpus, centroids, metric).write.mode("overwrite").partitionBy("cell")
       .parquet(s"$indexDir/postings")
     val p = new Path(indexDir, "_metric")
-    val fs = p.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(metric.name.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    graft.io.Sidecar.write(
+      p.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration), p, metric.name)
   }
 
   /** The stored index's own geometry (absent marker = cosine, the
     * pre-marker layout). */
   def metricOf(s: SparkSession, indexDir: String): AnnMetric = {
     val p = new Path(indexDir, "_metric")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) AnnMetric.Cosine
-    else {
-      val in = fs.open(p)
-      try AnnMetric.of(new String(in.readAllBytes(), StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
+    graft.io.Sidecar.read(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
+      .fold[AnnMetric](AnnMetric.Cosine)(m => AnnMetric.of(m.trim))
   }
 
   /** s5's assignment generalized over the metric: each vector to its

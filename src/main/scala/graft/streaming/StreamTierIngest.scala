@@ -380,14 +380,11 @@ object StreamTierIngest {
     * probe-side file opens stay bounded without paying a history
     * shuffle every night.
     *
-    * Returns (folded partition count, rows read from the folded
-    * partitions — on the legacy-upgrade rewrite this is the
-    * PRE-distinct count, so it can exceed what the distinct() lands),
-    * or None when nothing is foldable (re-running a folded night is a
-    * no-op; crash-cleanup of already-folded partitions also reports
-    * None). */
+    * Returns the [[Folded]] outcome, or None when nothing is foldable
+    * (re-running a folded night is a no-op; crash-cleanup of
+    * already-folded partitions also reports None). */
   def fold(s: SparkSession, indexDir: String,
-           checkpoint: String): Option[(Int, Long)] =
+           checkpoint: String): Option[Folded] =
     foldCompacted(s, indexDir, checkpoint, indexShape)
 
   private def indexShape: FoldShape = {
@@ -433,7 +430,7 @@ object StreamTierIngest {
     * at a dropped doc_id still answers is_dup correctly for its
     * surviving family (matches count distinct docs). */
   def foldSurvivors(s: SparkSession, survivorsDir: String, checkpoint: String,
-                    nearDupAtFold: Boolean = false): Option[(Int, Long)] =
+                    nearDupAtFold: Boolean = false): Option[Folded] =
     foldCompacted(s, survivorsDir, checkpoint, survivorsShape(nearDupAtFold))
 
   private def survivorsShape(nearDup: Boolean): FoldShape = FoldShape(
@@ -485,15 +482,20 @@ object StreamTierIngest {
     } finally bands.unpersist(): Unit
   }
 
+  /** What a committed fold did: `parts` folded partitions, `rows` read
+    * from them (on the legacy-upgrade rewrite the PRE-distinct count,
+    * so it can exceed what the distinct() lands), and how the version
+    * was built — "full" (first fold), "append" (minor compaction) or
+    * "rewrite" (major). */
+  final case class Folded(parts: Int, rows: Long, mode: String)
+
   private def foldCompacted(s: SparkSession, dir: String, checkpoint: String,
-                            shape: FoldShape): Option[(Int, Long)] = {
+                            shape: FoldShape): Option[Folded] = {
     // the same checkpoint-pairing invariant start() enforces: folding
     // with a foreign/ahead checkpoint would fold a batch the TRUE
     // checkpoint still considers pending — its replay then matches
     // itself in the compacted base and empties its survivors partition
     bindCheckpoint(s, dir, checkpoint, shape.surface)
-    // cleared first so an aborted attempt can't be read as a result
-    lastFoldMode = None
     val committed = lastCommittedBatch(s, checkpoint)
     val foldable = livePartitions(s, dir).filter(_._1 <= committed)
     if (foldable.isEmpty) return None
@@ -562,10 +564,6 @@ object StreamTierIngest {
     if (!fs.exists(new Path(staging, "_SUCCESS")))
       fs.create(new Path(staging, "_SUCCESS"), true).close()
     graft.io.AtomicPublish.commitStagedOcc(s, store, staging): Unit
-    // only a COMMITTED fold reports its mode (r11 advice: a staged
-    // write that threw must not leave the aborted attempt's mode
-    // behind for a later reader to pair with an earlier success)
-    lastFoldMode = Some(mode)
     // the count resolves BEFORE the folded partitions are deleted
     // (r12 review): on the cached-count path a lost/evicted block
     // would recompute its lineage from exactly those dirs — counting
@@ -574,30 +572,8 @@ object StreamTierIngest {
     cleanup()
     graft.io.Vacuum.sweep(s, store, keepVersions = 2): Unit
     foldable.foreach { case (_, p) => fs.delete(p, true): Unit }
-    Some((foldable.size, rows))
+    Some(Folded(foldable.size, rows, mode))
   }
-
-  /** How the last fold on THIS THREAD built its version ("full" |
-    * "append" | "rewrite") — introspection for specs and the run-log
-    * note. Thread-local like the rest of the note channel: a global
-    * slot would let a concurrent fold clobber the mode a DAG job is
-    * about to log. */
-  private val lastFoldModeTl =
-    ThreadLocal.withInitial[Option[String]](() => None)
-  private[graft] def lastFoldMode: Option[String] = lastFoldModeTl.get()
-  private[graft] def lastFoldMode_=(v: Option[String]): Unit =
-    lastFoldModeTl.set(v)
-
-  /** How the last [[syncCorpus]] on THIS THREAD sourced its delta:
-    * "syncdelta" (a rewrite night's exact copy), "manifest:k/n" (k of
-    * the base's n files were candidates), or "full" (no sidecar —
-    * footer-pruned scan). Spec/run-log introspection, thread-local for
-    * the same reason as [[lastFoldMode]]. */
-  private val lastSyncScanTl =
-    ThreadLocal.withInitial[Option[String]](() => None)
-  private[graft] def lastSyncScan: Option[String] = lastSyncScanTl.get()
-  private[graft] def lastSyncScan_=(v: Option[String]): Unit =
-    lastSyncScanTl.set(v)
 
   private val FoldedMarker = "_folded"
 
@@ -609,22 +585,14 @@ object StreamTierIngest {
     graft.io.Sidecar.read(fs, p).flatMap(_.trim.toLongOption)
   }
 
-  /** One recursive walk: (non-hidden data files, their bytes). Hidden
-    * DIRECTORIES are skipped whole — a version's [[SyncDeltaDir]] copy
-    * must not inflate the rewrite-budget math or the writers' task
-    * sizing with files no reader scans. */
-  private def dirStats(s: SparkSession, dir: Path): (Long, Long) = {
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var n = 0L; var bytes = 0L
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      val name = st.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        if (st.isDirectory) walk(st.getPath)
-        else { n += 1; bytes += st.getLen }
-      }
-    }
-    walk(dir)
-    (n, bytes)
+  /** (data files, their bytes) under `dir`, through the one data-file
+    * walk ([[graft.core.Tables.filesAt]]): hidden DIRECTORIES are
+    * skipped whole — a version's [[SyncDeltaDir]] copy must not
+    * inflate the rewrite-budget math or the writers' task sizing with
+    * files no reader scans — and so is an in-flight `*._COPYING_`. */
+  private[streaming] def dirStats(s: SparkSession, dir: Path): (Long, Long) = {
+    val files = graft.core.Tables.filesAt(s, dir).getOrElse(Nil)
+    (files.size.toLong, files.map(_.len).sum)
   }
 
   /** Hidden delta copy a rewrite-mode fold leaves beside the base so
@@ -710,6 +678,12 @@ object StreamTierIngest {
 
   private val SyncMarker = "_stream_synced"
 
+  /** What a [[syncCorpus]] published: `rows` synced, the `upto` batch
+    * id, and how the delta was read — "syncdelta" (a rewrite night's
+    * exact copy), "manifest:k/n" (k of the base's n files were
+    * candidates), or "full" (no sidecar — footer-pruned scan). */
+  final case class Synced(rows: Long, upto: Long, scan: String)
+
   /** Publish the folded survivors into a warehouse corpus table,
     * append-only: rows with `ingest_batch` in (last synced, folded
     * watermark] land as NEW part files in `corpusDir`, so the standing
@@ -729,13 +703,12 @@ object StreamTierIngest {
     * place — a crash replays the same deterministic range from the
     * same immutable version.
     *
-    * Returns (rows synced, upto batch id); None when nothing new. */
+    * Returns the [[Synced]] outcome; None when nothing new. */
   def syncCorpus(s: SparkSession, survivorsDir: String,
-                 corpusDir: String): Option[(Long, Long)] = {
+                 corpusDir: String): Option[Synced] = {
     val store = compactedStore(survivorsDir)
     val cp = new Path(corpusDir)
     val fs = cp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    lastSyncScan = None // cleared first: an early-exit sync reports nothing
     // Crash recovery (r12 advice): an attempt that died between the
     // watermark write and the manifest swap left the corpus permanently
     // manifest-less — the retry is a watermark no-op, and entry used to
@@ -782,21 +755,19 @@ object StreamTierIngest {
           case Array(a, b) if a.toLongOption.nonEmpty && b.toLongOption.nonEmpty =>
             (a.toLong, b.toLong)
         }
-      val baseScan = sdRange match {
+      val (baseScan, scan) = sdRange match {
         case Some((from, sdUpto)) if syncedUpto >= from && upto <= sdUpto =>
-          lastSyncScan = Some("syncdelta")
-          s.read.parquet(sd.toString)
+          (s.read.parquet(sd.toString), "syncdelta")
         case _ =>
           graft.io.ZoneMap.manifestFor(s, versionDir, "ingest_batch") match {
             case Some(m) =>
               val cand = m.candidateFilesForRange(syncedUpto + 1, upto)
-              lastSyncScan = Some(s"manifest:${cand.size}/${m.entries.size}")
-              if (cand.isEmpty) s.read.parquet(versionDir).filter(lit(false))
-              else s.read.option("basePath", versionDir)
-                .parquet(cand.map(f => s"$versionDir/$f"): _*)
+              (if (cand.isEmpty) s.read.parquet(versionDir).filter(lit(false))
+               else s.read.option("basePath", versionDir)
+                 .parquet(cand.map(f => s"$versionDir/$f"): _*),
+                s"manifest:${cand.size}/${m.entries.size}")
             case None =>
-              lastSyncScan = Some("full")
-              s.read.parquet(versionDir)
+              (s.read.parquet(versionDir), "full")
           }
       }
       val obs = new Observation()
@@ -815,15 +786,7 @@ object StreamTierIngest {
       // (the table must stay append-only for the tier merge economy, so
       // no later compaction can fix it without forcing full rebuilds).
       // One delta-sized rewrite collapses it to bytes/256MB files.
-      val (stagedFiles, stagedBytes) = {
-        val it = fs.listFiles(staging, false)
-        var n = 0L; var b = 0L
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getPath.getName.startsWith("part-")) { n += 1; b += f.getLen }
-        }
-        (n, b)
-      }
+      val (stagedFiles, stagedBytes) = dirStats(s, staging)
       val targetFiles = math.max(1L,
         stagedBytes / graft.io.DerivedStore.SourceBytesPerFile)
       if (stagedFiles > targetFiles) {
@@ -846,12 +809,11 @@ object StreamTierIngest {
           n.stripPrefix("stream-sync-").takeWhile(_ != '-')
             .toLongOption.exists(_ > syncedUpto)
       }.toSeq
-      val moves = fs.listStatus(staging)
-        .filter(_.getPath.getName.startsWith("part-"))
-        .zipWithIndex.map { case (st, i) =>
-          st.getPath -> new Path(cp,
+      val moves = graft.core.Tables.filesAt(s, staging).getOrElse(Nil)
+        .zipWithIndex.map { case (f, i) =>
+          new Path(f.path) -> new Path(cp,
             f"stream-sync-${syncedUpto + 1}%d-$upto%d-part$i%04d.parquet")
-        }.toSeq
+        }
       // zone-map maintenance (r12 review): this append mutates the
       // corpus table in place, so a `_filemap` someone published on it
       // must not survive STALE — a manifest missing the new files
@@ -894,7 +856,7 @@ object StreamTierIngest {
         require(fs.rename(ms, new Path(cp, graft.io.ZoneMap.ManifestDir)),
           s"syncCorpus: manifest swap $ms failed")
       }
-      (obs.get("rows").asInstanceOf[Long], upto)
+      Synced(obs.get("rows").asInstanceOf[Long], upto, scan)
     }
   }
 

@@ -18,9 +18,9 @@ class ShingleStoreSpec extends SparkSpec {
       assert(served.columns.toSeq ==
         Seq("doc_id", "source", "lang", "tokens", "shingles", "hm", "hs"))
       assert(served.exceptAll(inline).isEmpty && inline.exceptAll(served).isEmpty)
-      graft.io.DerivedStore.lastBuild = None
+      val snap = new graft.io.TierSnapshot(spark)
       ShingleStore.served(spark, sfDir).count(): Unit
-      assert(graft.io.DerivedStore.lastBuild.isEmpty, "fresh serve must not rebuild")
+      assert(snap.published.isEmpty, "fresh serve must not rebuild")
     } finally prevRoot match {
       case Some(v) => sys.props("graft.graphstore.dir") = v
       case None => sys.props.remove("graft.graphstore.dir"): Unit

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Tables
+import graft.io.DerivedStore.RefreshRecord
 
 /** Bucketed partial rewrite for label tiers
   * ([[DerivedStore.Refresh.Bucketed]], r12 verdict #1): label
@@ -56,9 +57,9 @@ class BucketedTierSpec extends SparkSpec {
       val docs = Tables.load(spark, sfDir, "documents").cache()
       writeTable(docs.filter(col("doc_id") % 2 === 0), dir, "documents")
 
-      DerivedStore.lastBuild = None
+      var snap = new TierSnapshot(spark)
       val c1 = clusters(dir)
-      assert(DerivedStore.lastBuild.contains("lsh_components" -> "full"))
+      assert(snap.recordOf(dir, "lsh_components").contains(RefreshRecord("full", "bucketed")))
       assert(c1 == inlineClusters(dir))
       val v1 = versionDir(dir)
       val v1Bytes = fileBytes(v1)
@@ -77,10 +78,10 @@ class BucketedTierSpec extends SparkSpec {
       delta.coalesce(1).write.parquet(s"$stage/d")
       appendParts(s"$stage/d", s"$dir/documents.parquet")
 
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val c2 = clusters(dir)
-      assert(DerivedStore.lastBuild.contains("lsh_components" -> "merge"),
-        s"a small append must take the bucketed merge: ${DerivedStore.lastBuild}")
+      assert(snap.recordOf(dir, "lsh_components").contains(RefreshRecord("merge", "bucketed-patch")),
+        s"a small append must take the bucketed merge: ${snap.published}")
       spark.catalog.clearCache()
       assert(c2 == inlineClusters(dir),
         "bucketed merge must equal the full rebuild over the grown corpus")
@@ -117,10 +118,10 @@ class BucketedTierSpec extends SparkSpec {
       val stage2 = tmpDir("bucketed-reingest")
       reingest.coalesce(1).write.parquet(s"$stage2/d")
       appendParts(s"$stage2/d", s"$dir/documents.parquet")
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val c3 = clusters(dir)
-      assert(DerivedStore.lastBuild.contains("lsh_components" -> "full"),
-        s"a re-ingested merged-in key must rebuild: ${DerivedStore.lastBuild}")
+      assert(snap.recordOf(dir, "lsh_components").contains(RefreshRecord("full", "bucketed")),
+        s"a re-ingested merged-in key must rebuild: ${snap.published}")
       spark.catalog.clearCache()
       assert(c3 == inlineClusters(dir))
       docs.unpersist(): Unit
@@ -164,10 +165,10 @@ class BucketedTierSpec extends SparkSpec {
       val stage = tmpDir("buckettd-delta")
       delta.coalesce(1).write.parquet(s"$stage/d")
       appendParts(s"$stage/d", s"$dir/documents.parquet")
-      DerivedStore.lastBuild = None
+      val snap = new TierSnapshot(spark)
       val c2 = clusters(dir)
-      assert(DerivedStore.lastBuild.contains("lsh_components" -> "full"),
-        s"post-takedown night must route to full: ${DerivedStore.lastBuild}")
+      assert(snap.recordOf(dir, "lsh_components").contains(RefreshRecord("full", "bucketed")),
+        s"post-takedown night must route to full: ${snap.published}")
       spark.catalog.clearCache()
       assert(c2 == inlineClusters(dir),
         "post-takedown serve must equal the inline rebuild")
@@ -211,11 +212,11 @@ class BucketedTierSpec extends SparkSpec {
       val stage = tmpDir("bucketrogue-delta")
       delta.coalesce(1).write.parquet(s"$stage/d")
       appendParts(s"$stage/d", s"$dir/documents.parquet")
-      DerivedStore.lastBuild = None
+      val snap = new TierSnapshot(spark)
       val c2 = clusters(dir)
-      assert(DerivedStore.lastBuild.contains("lsh_components" -> "full"),
+      assert(snap.recordOf(dir, "lsh_components").contains(RefreshRecord("full", "bucketed")),
         s"a file that does not declare its bucket must force the full " +
-          s"rebuild: ${DerivedStore.lastBuild}")
+          s"rebuild: ${snap.published}")
       spark.catalog.clearCache()
       assert(c2 == inlineClusters(dir))
       docs.unpersist(): Unit

@@ -45,6 +45,6 @@ class DataFileListingSpec extends SparkSpec {
   test("TargetedDelete's file total counts only the data files") {
     val (_, dir, n, _) = tableWithStrays("delete-strays")
     val r = TargetedDelete.deleteIds(spark, dir, "id", Seq(1000L))
-    assert(r == TargetedDelete.Report(0L, 0L, n.toLong))
+    assert(r == TargetedDelete.Report(0L, 0L, n.toLong, "scan"))
   }
 }

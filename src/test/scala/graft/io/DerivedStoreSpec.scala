@@ -181,6 +181,12 @@ class DerivedStoreSpec extends SparkSpec {
         serveRegion().count(): Unit // every attempt races a landing
         assert(landed == 4, s"prime + one landing per stage attempt, got $landed")
         val v = AtomicPublish.currentVersion(spark, store).get
+        // the sentinel replaces only the fingerprint: the version still
+        // records what its (last) attempt did — an append-only drift
+        // taking the merge
+        assert(DerivedStore.refreshOf(spark, s"$store/v=$v")
+          .contains(DerivedStore.RefreshRecord("merge", "range")),
+          "a churn-committed version records its mode")
         // provenance survives the churned publish (r10 verdict #3):
         // the sentinel carries the statically-known source tables, so
         // sourcesOfVersion — and a Lineage walk over the served tier —
@@ -197,14 +203,14 @@ class DerivedStoreSpec extends SparkSpec {
         // must REBUILD (sentinel != any real listing) and must take
         // the FULL path (sentinel classifies as Rewritten)
         DerivedStore.onFingerprinted = () => ()
-        DerivedStore.lastBuild = None
+        var snap = new TierSnapshot(spark)
         assert(serveRegion().count() == 6) // 2 + prime + 3 churn rows
         assert(AtomicPublish.currentVersion(spark, store).contains(v + 1),
           "post-churn serve must republish")
-        assert(DerivedStore.lastBuild.exists(_._2 == "full"),
+        assert(snap.modeOf(dir, "churn_tier").contains("full"),
           "a sentinel fingerprint must never classify as append-only")
-        DerivedStore.lastBuild = None
-        assert(serveRegion().count() == 6 && DerivedStore.lastBuild.isEmpty,
+        snap = new TierSnapshot(spark)
+        assert(serveRegion().count() == 6 && snap.published.isEmpty,
           "the rebuilt version is fresh")
       } finally DerivedStore.onFingerprinted = () => ()
     }
@@ -241,9 +247,10 @@ class DerivedStoreSpec extends SparkSpec {
       assert(serveParted().count() == 25)
       rows.write.mode("append").parquet(part)
       assert(Tables.load(spark, dir, "parted").count() == 50, "Spark reads the appended file")
+      val snap = new TierSnapshot(spark)
       assert(serveParted().count() == 50)
-      assert(DerivedStore.lastServe.map(_._2) != Some("noop"),
-        s"the append under _p=1/ must not serve stale: ${DerivedStore.lastServe}")
+      assert(snap.modeOf(dir, "parted_tier").contains("full"),
+        s"the append under _p=1/ must not serve stale: ${snap.published}")
     }
   }
 

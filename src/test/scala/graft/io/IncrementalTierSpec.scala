@@ -47,8 +47,6 @@ class IncrementalTierSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
 
-  private def lastMode: Option[String] = DerivedStore.lastBuild.map(_._2)
-
   test("append-only drift takes the merge path and equals a full rebuild; rewrite drift rebuilds") {
     val dir = tmpDir("incr-src")
     val prevRoot = sys.props.get("graft.graphstore.dir")
@@ -65,9 +63,9 @@ class IncrementalTierSpec extends SparkSpec {
 
       writeTable(firstO, dir, "orders")
       writeTable(firstLi, dir, "lineitem")
-      DerivedStore.lastBuild = None
+      var snap = new TierSnapshot(spark)
       assert(edges(dir) == inlineEdges(dir))
-      assert(lastMode.contains("full"), "first serve is a full build")
+      assert(snap.modeOf(dir, "purchase").contains("full"), "first serve is a full build")
       val store = DerivedStore.storePath(dir, "purchase")
       assert(AtomicPublish.currentVersion(spark, store).contains(1L))
 
@@ -77,14 +75,14 @@ class IncrementalTierSpec extends SparkSpec {
       laterLi.coalesce(1).write.parquet(s"$stage/li")
       appendParts(s"$stage/o", s"$dir/orders.parquet")
       appendParts(s"$stage/li", s"$dir/lineitem.parquet")
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val merged = edges(dir)
-      assert(lastMode.contains("merge"), "append-only drift must take the merge path")
+      assert(snap.modeOf(dir, "purchase").contains("merge"), "append-only drift must take the merge path")
       assert(AtomicPublish.currentVersion(spark, store).contains(2L))
       assert(merged == inlineEdges(dir),
         "merged tier must be row-identical to a full rebuild over the grown sources")
-      DerivedStore.lastBuild = None
-      assert(edges(dir) == merged && lastMode.isEmpty, "fresh serve must not rebuild")
+      snap = new TierSnapshot(spark)
+      assert(edges(dir) == merged && snap.published.isEmpty, "fresh serve must not rebuild")
 
       // day 3: orders-only growth (their lineitems not landed yet) —
       // merge path, zero new edges
@@ -92,9 +90,9 @@ class IncrementalTierSpec extends SparkSpec {
         .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
       extraO.coalesce(1).write.parquet(s"$stage/o3")
       appendParts(s"$stage/o3", s"$dir/orders.parquet")
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       assert(edges(dir) == merged, "orders without lineitems add no edges")
-      assert(lastMode.contains("merge"))
+      assert(snap.modeOf(dir, "purchase").contains("merge"))
 
       // rewrite drift: touch an existing data file -> full rebuild
       val aPart = Files.list(Paths.get(s"$dir/orders.parquet")).toArray
@@ -104,9 +102,9 @@ class IncrementalTierSpec extends SparkSpec {
       Files.setLastModifiedTime(aPart,
         java.nio.file.attribute.FileTime.fromMillis(
           Files.getLastModifiedTime(aPart).toMillis + 5000)): Unit
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       assert(edges(dir) == merged)
-      assert(lastMode.contains("full"), "non-append drift must take the full build")
+      assert(snap.modeOf(dir, "purchase").contains("full"), "non-append drift must take the full build")
       orders.unpersist(); li.unpersist(): Unit
     } finally prevRoot match {
       case Some(v) => sys.props("graft.graphstore.dir") = v
@@ -134,11 +132,11 @@ class IncrementalTierSpec extends SparkSpec {
         graft.dedup.ClusterStore.lshComponentsInline(spark, d).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
 
-      DerivedStore.lastBuild = None
+      var snap = new TierSnapshot(spark)
       val b1 = bands(dir)
-      assert(lastMode.contains("full") && b1.nonEmpty)
+      assert(snap.modeOf(dir, "band_index").contains("full") && b1.nonEmpty)
       val c1 = clusters(dir)
-      assert(lastMode.contains("full"))
+      assert(snap.modeOf(dir, "lsh_components").contains("full"))
       assert(c1 == inlineClusters(dir))
 
       // day 2: odd docs land as a new part file
@@ -152,15 +150,15 @@ class IncrementalTierSpec extends SparkSpec {
 
       // serve the band tier first so the components merge probes an
       // already-fresh index (and its own mode is observable)
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val b2 = bands(dir)
-      assert(lastMode.contains("merge"), "band index must refresh incrementally")
+      assert(snap.modeOf(dir, "band_index").contains("merge"), "band index must refresh incrementally")
       assert(b1.subsetOf(b2) && b2.size > b1.size,
         "delta docs' bands appended beside the old ones")
 
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val c2 = clusters(dir)
-      assert(lastMode.contains("merge"), "components must refresh via the contracted merge")
+      assert(snap.modeOf(dir, "lsh_components").contains("merge"), "components must refresh via the contracted merge")
       assert(c2 == inlineClusters(dir),
         "incremental components must equal the full rebuild over the grown corpus")
       docs.unpersist(): Unit
@@ -212,16 +210,16 @@ class IncrementalTierSpec extends SparkSpec {
       writeTable(docs.filter(col("doc_id") % 2 === 0), dir, "documents")
       def multiset(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
         df.collect().map(_.toString).groupBy(identity).view.mapValues(_.size).toMap
-      DerivedStore.lastBuild = None
+      var snap = new TierSnapshot(spark)
       val t1 = graft.text.TokenStore.served(spark, dir).count()
-      assert(lastMode.contains("full") && t1 > 0)
+      assert(snap.modeOf(dir, "tokens").contains("full") && t1 > 0)
 
       val stage = tmpDir("incr-tok-delta")
       docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.parquet(s"$stage/d")
       appendParts(s"$stage/d", s"$dir/documents.parquet")
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val served = graft.text.TokenStore.served(spark, dir)
-      assert(lastMode.contains("merge"), "append-only drift must delta-tokenize")
+      assert(snap.modeOf(dir, "tokens").contains("merge"), "append-only drift must delta-tokenize")
       assert(multiset(served) ==
         multiset(graft.text.TokenStore.tokens(spark, dir)),
         "merged token tier must equal a full re-tokenize of the grown corpus")
@@ -239,16 +237,16 @@ class IncrementalTierSpec extends SparkSpec {
     try {
       val docs = Tables.load(spark, sfDir, "documents").cache()
       writeTable(docs.filter(col("doc_id") % 2 === 0), dir, "documents")
-      DerivedStore.lastBuild = None
+      var snap = new TierSnapshot(spark)
       val n1 = graft.dedup.ShingleStore.served(spark, dir).count()
-      assert(lastMode.contains("full") && n1 > 0)
+      assert(snap.modeOf(dir, "shingles").contains("full") && n1 > 0)
 
       val stage = tmpDir("incr-sh-delta")
       docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.parquet(s"$stage/d")
       appendParts(s"$stage/d", s"$dir/documents.parquet")
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val served = graft.dedup.ShingleStore.served(spark, dir)
-      assert(lastMode.contains("merge"), "append-only drift must delta-shingle")
+      assert(snap.modeOf(dir, "shingles").contains("merge"), "append-only drift must delta-shingle")
       val inline = graft.dedup.ShingleStore.artifacts(spark, dir)
       assert(served.exceptAll(inline).isEmpty && inline.exceptAll(served).isEmpty,
         "merged shingle tier must equal a full re-shingle of the grown corpus")
@@ -266,9 +264,9 @@ class IncrementalTierSpec extends SparkSpec {
     try {
       val docs = Tables.load(spark, sfDir, "documents").cache()
       writeTable(docs.filter(col("doc_id") % 2 === 0), dir, "documents")
-      DerivedStore.lastBuild = None
+      val snap = new TierSnapshot(spark)
       val b1 = graft.dedup.BandIndexStore.corpusIndex(spark, dir).count()
-      assert(lastMode.contains("full"))
+      assert(snap.modeOf(dir, "band_index").contains("full"))
 
       // the delta re-ingests docs ALREADY in the corpus (plus new
       // ones) as a new part file — file-grain drift says AppendOnly,
@@ -280,7 +278,6 @@ class IncrementalTierSpec extends SparkSpec {
       docs.filter(col("doc_id") % 4 === 0 || col("doc_id") % 2 =!= 0)
         .coalesce(1).write.parquet(s"$stage/d")
       appendParts(s"$stage/d", s"$dir/documents.parquet")
-      DerivedStore.lastBuild = None
       def multiset(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
         df.collect().map(_.toString).groupBy(identity).view.mapValues(_.size).toMap
       val served = graft.dedup.BandIndexStore.corpusIndex(spark, dir)
@@ -307,9 +304,9 @@ class IncrementalTierSpec extends SparkSpec {
       // orders' lineitems land WITHOUT their orders
       writeTable(orders.filter(col("o_orderkey") % 2 === 0), dir, "orders")
       writeTable(li, dir, "lineitem")
-      DerivedStore.lastBuild = None
+      var snap = new TierSnapshot(spark)
       edges(dir): Unit
-      assert(lastMode.contains("full"))
+      assert(snap.modeOf(dir, "purchase").contains("full"))
 
       // day 2: the missing orders arrive as an orders-only delta — an
       // unguarded merge would return prev (lineitem deltas = none) and
@@ -318,9 +315,9 @@ class IncrementalTierSpec extends SparkSpec {
       orders.filter(col("o_orderkey") % 2 =!= 0).coalesce(1)
         .write.parquet(s"$stage/o")
       appendParts(s"$stage/o", s"$dir/orders.parquet")
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val after = edges(dir)
-      assert(lastMode.contains("merge"),
+      assert(snap.modeOf(dir, "purchase").contains("merge"),
         "the drift still routes through the merge callback")
       assert(after == inlineEdges(dir),
         "FK-violating orders delta must produce the rebuild's edges, not prev's")
@@ -349,9 +346,9 @@ class IncrementalTierSpec extends SparkSpec {
         .withColumn("l_suppkey", lit(supp).cast(spT))
       writeTable(orders, dir, "orders")
       writeTable(li.unionByName(synthLi(1)).unionByName(synthLi(2)), dir, "lineitem")
-      DerivedStore.lastBuild = None
+      var snap = new TierSnapshot(spark)
       val before = edges(dir)
-      assert(lastMode.contains("full"))
+      assert(snap.modeOf(dir, "purchase").contains("full"))
       assert(!before.exists(_._1 == 999999L), "orphan lineitems build no edges")
 
       // day 2: the order arrives TOGETHER WITH one more of its own
@@ -369,9 +366,9 @@ class IncrementalTierSpec extends SparkSpec {
       synthLi(3).coalesce(1).write.parquet(s"$stage/li")
       appendParts(s"$stage/o", s"$dir/orders.parquet")
       appendParts(s"$stage/li", s"$dir/lineitem.parquet")
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val after = edges(dir)
-      assert(lastMode.contains("merge"),
+      assert(snap.modeOf(dir, "purchase").contains("merge"),
         "the drift still routes through the merge callback")
       assert(after == inlineEdges(dir),
         "covered-but-history-referenced delta order must produce the rebuild's edges")
@@ -395,12 +392,12 @@ class IncrementalTierSpec extends SparkSpec {
       // day 1 carries every centroid-eligible id (vec_id % 125 == 0 ⊂
       // doc_id % 5 == 0), so day 2's delta is append-eligible
       writeTable(docs.filter(col("doc_id") % 5 === 0), dir, "documents")
-      DerivedStore.lastBuild = None
+      var snap = new TierSnapshot(spark)
       val p1 = graft.multimodal.Multimodal.m7Index(spark, dir)
-      assert(p1.endsWith("v=1") && lastMode.contains("full"))
+      assert(p1.endsWith("v=1") && snap.modeOf(dir, "media_ann").contains("full"))
       val n1 = spark.read.parquet(s"$p1/postings").count()
-      DerivedStore.lastBuild = None
-      assert(graft.multimodal.Multimodal.m7Index(spark, dir) == p1 && lastMode.isEmpty,
+      snap = new TierSnapshot(spark)
+      assert(graft.multimodal.Multimodal.m7Index(spark, dir) == p1 && snap.published.isEmpty,
         "fresh serve must not rebuild the index")
 
       // day 2: non-eligible docs land -> the copied-version + append
@@ -408,9 +405,9 @@ class IncrementalTierSpec extends SparkSpec {
       val stage = tmpDir("incr-ann-delta")
       docs.filter(col("doc_id") % 5 =!= 0).coalesce(1).write.parquet(s"$stage/d")
       appendParts(s"$stage/d", s"$dir/documents.parquet")
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val p2 = graft.multimodal.Multimodal.m7Index(spark, dir)
-      assert(p2.endsWith("v=2") && lastMode.contains("merge"),
+      assert(p2.endsWith("v=2") && snap.modeOf(dir, "media_ann").contains("merge"),
         "eligible append-only drift must take the dir merge")
       val rebuilt = tmpDir("incr-ann-rebuild") + "/idx"
       graft.sim.AnnIndex.buildFrom(
@@ -430,9 +427,9 @@ class IncrementalTierSpec extends SparkSpec {
         .withColumn("doc_id", lit(125000L))
       extra.coalesce(1).write.parquet(s"$stage/d3")
       appendParts(s"$stage/d3", s"$dir/documents.parquet")
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val p3 = graft.multimodal.Multimodal.m7Index(spark, dir)
-      assert(p3.endsWith("v=3") && lastMode.contains("full"),
+      assert(p3.endsWith("v=3") && snap.modeOf(dir, "media_ann").contains("full"),
         "a centroid-eligible delta id must route to the full rebuild")
       docs.unpersist(): Unit
     } finally prevRoot match {
@@ -448,17 +445,17 @@ class IncrementalTierSpec extends SparkSpec {
     try {
       val emb = Tables.load(spark, sfDir, "embeddings").cache()
       writeTable(emb.filter(col("vec_id") % 2 === 0), dir, "embeddings")
-      DerivedStore.lastBuild = None
+      var snap = new TierSnapshot(spark)
       val p1 = graft.sim.Similarity.s12Index(spark, dir)
-      assert(p1.endsWith("v=1") && lastMode.contains("full"))
+      assert(p1.endsWith("v=1") && snap.modeOf(dir, "pq_index").contains("full"))
       val stage = tmpDir("incr-pq-delta")
       emb.filter(col("vec_id") % 2 =!= 0).coalesce(1).write.parquet(s"$stage/e")
       appendParts(s"$stage/e", s"$dir/embeddings.parquet")
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val p2 = graft.sim.Similarity.s12Index(spark, dir)
       // a frozen-codebook append would diverge from the per-snapshot
       // retrain the oracle does — the tier must re-train, not merge
-      assert(p2.endsWith("v=2") && lastMode.contains("full"),
+      assert(p2.endsWith("v=2") && snap.modeOf(dir, "pq_index").contains("full"),
         "pq_index must retrain codebooks on any drift")
       emb.unpersist(): Unit
     } finally prevRoot match {
@@ -482,9 +479,9 @@ class IncrementalTierSpec extends SparkSpec {
         graft.dedup.ClusterStore.embComponentsInline(spark, d).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
 
-      DerivedStore.lastBuild = None
+      var snap = new TierSnapshot(spark)
       assert(clusters(dir) == inlineClusters(dir))
-      assert(lastMode.contains("full"))
+      assert(snap.modeOf(dir, "emb_components").contains("full"))
 
       val stage = tmpDir("incr-emb-delta")
       emb.filter(col("vec_id") % 2 =!= 0).coalesce(1).write.parquet(s"$stage/e")
@@ -492,9 +489,9 @@ class IncrementalTierSpec extends SparkSpec {
       // no manual cache drop: the stale-serve prevention is the
       // store's own dropPinnedPlans on drift
 
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val c2 = clusters(dir)
-      assert(lastMode.contains("merge"), "semantic components must refresh via the contracted merge")
+      assert(snap.modeOf(dir, "emb_components").contains("merge"), "semantic components must refresh via the contracted merge")
       assert(c2 == inlineClusters(dir),
         "incremental semantic components must equal the full rebuild")
       emb.unpersist(): Unit

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Tables
+import graft.io.DerivedStore.RefreshRecord
 
 /** LSM publication for pure-append frame tiers
   * ([[DerivedStore.Refresh.Lsm]]): an append night byte-copies
@@ -59,19 +60,18 @@ class LsmTierSpec extends SparkSpec {
       writeTable(docs.filter(col("doc_id") % 5 === 0), dir, "documents")
 
       // night 1: full build
-      DerivedStore.lastBuild = None
+      var snap = new TierSnapshot(spark)
       graft.text.TokenStore.served(spark, dir).count()
-      assert(DerivedStore.lastBuild.contains("tokens" -> "full"))
+      assert(snap.modeOf(dir, "tokens").contains("full"))
       val v1 = versionDir(dir, "tokens")
       val v1Files = dataFileNames(v1)
 
       // night 2: an append-only delta takes the LSM append
       appendDocs(docs.filter(col("doc_id") % 5 === 1), dir)
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val served2 = graft.text.TokenStore.served(spark, dir)
-      assert(DerivedStore.lastBuild.contains("tokens" -> "merge"))
-      assert(DerivedStore.lastLsmMode.contains("append"),
-        s"append-only drift under budget takes the minor append: ${DerivedStore.lastLsmMode}")
+      assert(snap.recordOf(dir, "tokens").contains(RefreshRecord("merge", "lsm-append")),
+        s"append-only drift under budget takes the minor append: ${snap.published}")
       val v2 = versionDir(dir, "tokens")
       val v2Files = dataFileNames(v2)
       assert(v1Files.subsetOf(v2Files) && v2Files.size > v1Files.size,
@@ -140,10 +140,10 @@ class LsmTierSpec extends SparkSpec {
       // merged bloom/summary still answer overlap truthfully; a silent
       // false-negative here would duplicate the doc's rows forever
       appendDocs(docs.filter(col("doc_id") === newDocId), dir)
-      DerivedStore.lastBuild = None
+      snap = new TierSnapshot(spark)
       val served3 = graft.text.TokenStore.served(spark, dir)
-      assert(DerivedStore.lastBuild.contains("tokens" -> "full"),
-        s"a re-ingested night-2 key must route to the full rebuild: ${DerivedStore.lastBuild}")
+      assert(snap.modeOf(dir, "tokens").contains("full"),
+        s"a re-ingested night-2 key must route to the full rebuild: ${snap.published}")
       spark.catalog.clearCache()
       assert(rowSet(served3) == rowSet(graft.text.TokenStore.tokens(spark, dir)),
         "the rebuild over the dirty table is the ground truth")
@@ -153,11 +153,10 @@ class LsmTierSpec extends SparkSpec {
       appendDocs(docs.filter(col("doc_id") % 5 === 2), dir)
       DerivedStore.lsmBudgetOverride = Some(0L)
       try {
-        DerivedStore.lastBuild = None
+        snap = new TierSnapshot(spark)
         val served4 = graft.text.TokenStore.served(spark, dir)
-        assert(DerivedStore.lastBuild.contains("tokens" -> "merge") &&
-          DerivedStore.lastLsmMode.contains("rewrite"),
-          s"budget breach takes the major rewrite: ${DerivedStore.lastLsmMode}")
+        assert(snap.recordOf(dir, "tokens").contains(RefreshRecord("merge", "lsm-rewrite")),
+          s"budget breach takes the major rewrite: ${snap.published}")
         spark.catalog.clearCache()
         assert(rowSet(served4) == rowSet(graft.text.TokenStore.tokens(spark, dir)),
           "major rewrite == rebuild")
@@ -219,11 +218,10 @@ class LsmTierSpec extends SparkSpec {
       graft.dedup.BandIndexStore.corpusIndex(spark, dir).count() // builds shingles too
 
       appendDocs(docs.filter(col("doc_id") % 5 =!= 0), dir)
-      DerivedStore.lastBuild = None
+      val snap = new TierSnapshot(spark)
       val bands = graft.dedup.BandIndexStore.corpusIndex(spark, dir)
-      assert(DerivedStore.lastBuild.contains("band_index" -> "merge") &&
-        DerivedStore.lastLsmMode.contains("append"),
-        s"${DerivedStore.lastBuild} ${DerivedStore.lastLsmMode}")
+      assert(snap.recordOf(dir, "band_index").contains(RefreshRecord("merge", "lsm-append")),
+        s"${snap.published}")
       spark.catalog.clearCache()
       graft.core.Caching.releaseAll()
       // band tier == the from-scratch pipeline over the grown corpus

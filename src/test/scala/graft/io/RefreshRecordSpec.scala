@@ -1,0 +1,175 @@
+package graft.io
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, udf}
+
+import graft.SparkSpec
+import graft.core.Tables
+import graft.io.DerivedStore.{Refresh, RefreshRecord}
+
+/** Armed by the crash-then-retry test: a stage whose rows are
+  * evaluated while this is set fails inside its write. */
+object RefreshRecordCrash {
+  @volatile var armed = false
+}
+
+/** The `_refresh` record every serve-loop publish commits inside its
+  * version: one test per publish path (full, `Refresh.Merge`, LSM
+  * append and rewrite, bucketed full and patch, `servedDir` full and
+  * merge), and a stage that fails before its commit leaves no record.
+  * The churn-sentinel commit's record is pinned in `DerivedStoreSpec`. */
+class RefreshRecordSpec extends SparkSpec {
+
+  private val cols = Seq("n_nationkey", "n_name")
+
+  private def nation(from: Int, until: Int): DataFrame =
+    Tables.load(spark, sfDir, "nation").select(cols.map(col): _*)
+      .filter(col("n_nationkey") >= from && col("n_nationkey") < until)
+
+  /** A directory-layout nation table holding keys 0..9, under its own
+    * store root. */
+  private def withSource[A](body: String => A): A = {
+    val dir = tmpDir("refresh-rec-src")
+    nation(0, 10).coalesce(1).write.parquet(s"$dir/nation.parquet")
+    val prev = sys.props.get("graft.graphstore.dir")
+    sys.props("graft.graphstore.dir") = tmpDir("refresh-rec-root")
+    try body(dir)
+    finally prev match {
+      case Some(v) => sys.props("graft.graphstore.dir") = v
+      case None => sys.props.remove("graft.graphstore.dir"): Unit
+    }
+  }
+
+  /** Land nation keys [from, until) as a new part file: append-only
+    * drift. */
+  private def append(dir: String, from: Int, until: Int): Unit = {
+    val stage = tmpDir("refresh-rec-delta")
+    nation(from, until).coalesce(1).write.parquet(s"$stage/d")
+    new java.io.File(s"$stage/d").listFiles().filter(_.getName.startsWith("part-"))
+      .foreach(f => Files.move(f.toPath, Paths.get(dir, "nation.parquet", f.getName)))
+  }
+
+  private val build: (SparkSession, String) => DataFrame =
+    (s, d) => Tables.load(s, d, "nation").select(cols.map(col): _*)
+
+  private def deltaRows(s: SparkSession, d: String,
+                        deltas: Map[String, Seq[String]]): DataFrame =
+    Tables.loadFiles(s, d, "nation", deltas("nation")).select(cols.map(col): _*)
+
+  private def serve(dir: String, name: String, refresh: Refresh): Long =
+    DerivedStore.served(spark, dir, name, Seq("nation"), build, refresh,
+      numFiles = 1, sortKey = "n_nationkey").count()
+
+  /** (committed version, its record) of the store. */
+  private def current(dir: String, name: String): (Long, Option[RefreshRecord]) = {
+    val store = DerivedStore.storePath(dir, name)
+    val v = AtomicPublish.currentVersion(spark, store).get
+    v -> DerivedStore.refreshOf(spark, s"$store/v=$v")
+  }
+
+  test("full build: mode=full layout=range, committed inside the version; a fresh serve keeps it") {
+    withSource { dir =>
+      assert(serve(dir, "rec_full", Refresh.Rebuild) == 10)
+      val store = DerivedStore.storePath(dir, "rec_full")
+      assert(Files.readString(Paths.get(s"$store/v=1/_refresh")) == "mode=full layout=range")
+      assert(current(dir, "rec_full") == (1L -> Some(RefreshRecord("full", "range"))))
+      assert(serve(dir, "rec_full", Refresh.Rebuild) == 10)
+      assert(current(dir, "rec_full")._1 == 1L, "a fingerprint-fresh serve publishes nothing")
+      append(dir, 10, 25)
+      assert(serve(dir, "rec_full", Refresh.Rebuild) == 25)
+      assert(current(dir, "rec_full") == (2L -> Some(RefreshRecord("full", "range"))),
+        "Rebuild never merges, even on append-only drift")
+    }
+  }
+
+  test("Refresh.Merge on append-only drift: mode=merge layout=range") {
+    withSource { dir =>
+      val merge = Refresh.Merge((s, d, prev, deltas) => prev.unionByName(deltaRows(s, d, deltas)))
+      assert(serve(dir, "rec_merge", merge) == 10)
+      assert(current(dir, "rec_merge") == (1L -> Some(RefreshRecord("full", "range"))))
+      append(dir, 10, 25)
+      assert(serve(dir, "rec_merge", merge) == 25)
+      assert(current(dir, "rec_merge") == (2L -> Some(RefreshRecord("merge", "range"))))
+    }
+  }
+
+  test("Refresh.Lsm: the minor append records lsm-append, a budget breach lsm-rewrite") {
+    withSource { dir =>
+      val lsm = Refresh.Lsm((s, d, _, deltas) => Some(deltaRows(s, d, deltas)))
+      assert(serve(dir, "rec_lsm", lsm) == 10)
+      assert(current(dir, "rec_lsm") == (1L -> Some(RefreshRecord("full", "range"))))
+      append(dir, 10, 15)
+      assert(serve(dir, "rec_lsm", lsm) == 15)
+      assert(current(dir, "rec_lsm") == (2L -> Some(RefreshRecord("merge", "lsm-append"))))
+      append(dir, 15, 25)
+      DerivedStore.lsmBudgetOverride = Some(0L)
+      try assert(serve(dir, "rec_lsm", lsm) == 25)
+      finally DerivedStore.lsmBudgetOverride = None
+      assert(current(dir, "rec_lsm") == (3L -> Some(RefreshRecord("merge", "lsm-rewrite"))))
+    }
+  }
+
+  test("Refresh.Bucketed: the full build records bucketed, the patch bucketed-patch") {
+    withSource { dir =>
+      val bucketed = Refresh.Bucketed((s, d, _, deltas) => Some(deltaRows(s, d, deltas)), 4)
+      assert(serve(dir, "rec_bucketed", bucketed) == 10)
+      assert(current(dir, "rec_bucketed") == (1L -> Some(RefreshRecord("full", "bucketed"))))
+      append(dir, 10, 25)
+      assert(serve(dir, "rec_bucketed", bucketed) == 25)
+      assert(current(dir, "rec_bucketed") ==
+        (2L -> Some(RefreshRecord("merge", "bucketed-patch"))))
+    }
+  }
+
+  test("servedDir: the full write records dir, the merge dir-copy; the copy never carries the old record") {
+    withSource { dir =>
+      var copiedRecord: Option[Boolean] = None
+      val merge: DerivedStore.DirMerge = (s, d, staging, deltas) => {
+        copiedRecord = Some(new java.io.File(staging, "_refresh").exists())
+        deltaRows(s, d, deltas).write.mode("append").parquet(s"$staging/rows")
+        true
+      }
+      def serveDir(): String =
+        DerivedStore.servedDir(spark, dir, "rec_dir", Seq("nation"), Some(merge))(
+          (s, d, p) => build(s, d).write.parquet(s"$p/rows"))
+      val p1 = serveDir()
+      assert(p1.endsWith("v=1") && spark.read.parquet(s"$p1/rows").count() == 10)
+      assert(DerivedStore.refreshOf(spark, p1).contains(RefreshRecord("full", "dir")))
+      append(dir, 10, 25)
+      val p2 = serveDir()
+      assert(p2.endsWith("v=2") && spark.read.parquet(s"$p2/rows").count() == 25)
+      assert(DerivedStore.refreshOf(spark, p2).contains(RefreshRecord("merge", "dir-copy")))
+      assert(copiedRecord.contains(false),
+        s"the byte-copy must leave the served version's record behind: $copiedRecord")
+    }
+  }
+
+  test("a stage that throws commits nothing; the retry's version records its own mode") {
+    withSource { dir =>
+      val boom = udf((n: String) => {
+        if (RefreshRecordCrash.armed) throw new IllegalStateException("injected stage failure")
+        n != null
+      }).asNondeterministic()
+      val merge = Refresh.Merge((s, d, prev, deltas) =>
+        prev.unionByName(deltaRows(s, d, deltas)).filter(boom(col("n_name"))))
+      assert(serve(dir, "rec_crash", merge) == 10)
+      append(dir, 10, 25)
+      RefreshRecordCrash.armed = true
+      try intercept[Exception](serve(dir, "rec_crash", merge))
+      finally RefreshRecordCrash.armed = false
+      val store = DerivedStore.storePath(dir, "rec_crash")
+      val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(current(dir, "rec_crash") == (1L -> Some(RefreshRecord("full", "range"))),
+        "the failed attempt must not publish")
+      val staged = fs.listStatus(new Path(store)).map(_.getPath)
+        .filter(_.getName.startsWith(".tx-"))
+      assert(!staged.exists(p => fs.exists(new Path(p, "_refresh"))),
+        s"an uncommitted attempt leaves no record: ${staged.toSeq}")
+      assert(serve(dir, "rec_crash", merge) == 25)
+      assert(current(dir, "rec_crash") == (2L -> Some(RefreshRecord("merge", "range"))))
+    }
+  }
+}

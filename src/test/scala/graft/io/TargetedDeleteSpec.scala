@@ -99,6 +99,6 @@ class TargetedDeleteSpec extends SparkSpec {
     SortedLayout.writeRangeSorted(
       graft.core.Tables.load(s, sfDir, "documents"), dir, 4, col("doc_id"))
     val r = TargetedDelete.deleteIds(s, dir, "doc_id", Seq(999999L))
-    assert(r == TargetedDelete.Report(0L, 0L, 4L))
+    assert(r == TargetedDelete.Report(0L, 0L, 4L, "scan"))
   }
 }

@@ -113,8 +113,7 @@ class ZoneMapSpec extends SparkSpec {
     val ids = docs.orderBy("doc_id").limit(3)
       .collect().map(_.getAs[Long]("doc_id")).toSeq
     val r = TargetedDelete.deleteIds(spark, table, "doc_id", ids)
-    assert(TargetedDelete.lastDiscovery.contains("manifest"),
-      s"discovery must read the zone map: ${TargetedDelete.lastDiscovery}")
+    assert(r.discovery == "manifest", s"discovery must read the zone map: $r")
     assert(r.rowsDeleted == 3 && r.filesTotal == 8 && r.filesRewritten < r.filesTotal,
       s"sorted layout confines the delete: $r")
     spark.catalog.clearCache()
@@ -137,7 +136,7 @@ class ZoneMapSpec extends SparkSpec {
     val ids2 = after.orderBy("doc_id").limit(2)
       .collect().map(_.getAs[Long]("doc_id")).toSeq
     val r2 = TargetedDelete.deleteIds(spark, table, "doc_id", ids2)
-    assert(TargetedDelete.lastDiscovery.contains("manifest") && r2.rowsDeleted == 2, s"$r2")
+    assert(r2.discovery == "manifest" && r2.rowsDeleted == 2, s"$r2")
     spark.catalog.clearCache()
     assert(spark.read.parquet(table).count() == total - 5)
 
@@ -151,6 +150,6 @@ class ZoneMapSpec extends SparkSpec {
     val bare = s"$dir/bare.parquet"
     SortedLayout.writeRangeSorted(docs, bare, numFiles = 8, col("doc_id"))
     val rb = TargetedDelete.deleteIds(spark, bare, "doc_id", ids)
-    assert(TargetedDelete.lastDiscovery.contains("scan") && rb.rowsDeleted == 3)
+    assert(rb.discovery == "scan" && rb.rowsDeleted == 3)
   }
 }

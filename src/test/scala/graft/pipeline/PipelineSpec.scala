@@ -1,6 +1,9 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
 import java.time.LocalDate
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.io.RunLog
@@ -85,5 +88,18 @@ class PipelineSpec extends SparkSpec {
     assert(res.map(_.status) == Seq(Succeeded, Failed))
     assert(spark.sharedState.cacheManager.isEmpty,
       "Pipeline.run must release registered caches per attempt, success or failure")
+  }
+
+  test("no main-code file other than Pipeline.scala declares a ThreadLocal") {
+    // a publish reports what it did through a value it returns or a
+    // record it commits; the DAG runner's note slot is the one
+    // thread-scoped carrier
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val threadLocal = """\bThreadLocal\b""".r
+    val declared = Files.walk(root).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+      .flatMap(p => threadLocal.findAllIn(Files.readString(p)).map(_ => p.getFileName.toString))
+    assert(declared == Seq("Pipeline.scala"), declared.mkString(", "))
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Tables
-import graft.io.DerivedStore
+import graft.io.TierSnapshot
 
 /** The nightly tier-refresh DAG: all-green first night, idempotent
   * re-run (nothing re-publishes), and a drift night that refreshes
@@ -79,10 +79,10 @@ class TierRefreshSpec extends SparkSpec {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
 
       // night 2, no source movement: every serve is a fingerprint hit
-      DerivedStore.lastBuild = None
+      val night2 = new TierSnapshot(spark)
       val n2 = TierRefresh.refresh(spark, dir, night1.plusDays(1), runLog)
       assert(n2.forall(_.status == Pipeline.Succeeded))
-      assert(DerivedStore.lastBuild.isEmpty,
+      assert(night2.published.isEmpty,
         "an unchanged night must re-publish nothing")
 
       // night 3: a new documents part file lands — the doc-derived
@@ -92,10 +92,10 @@ class TierRefreshSpec extends SparkSpec {
       appendParts(s"$stage/d", s"$dir/documents.parquet")
       val builds = collection.mutable.Map[String, String]()
       val n3 = TierRefresh.jobs(dir).map { j =>
-        DerivedStore.lastBuild = None
+        val snap = new TierSnapshot(spark)
         val r = Pipeline.run(spark, Seq(j.copy(deps = Nil)(j.body)),
           night1.plusDays(2), runLog).head
-        DerivedStore.lastBuild.foreach { case (n, m) => builds(n) = m }
+        builds ++= snap.modesByName
         r
       }
       assert(n3.forall(_.status == Pipeline.Succeeded))
@@ -176,37 +176,30 @@ class TierRefreshSpec extends SparkSpec {
     assert(log.filter(col("job_nm") === "stream_band_fold").count() == 2)
   }
 
-  test("note/serve bookkeeping is thread-isolated: a concurrent DAG or serve cannot clobber another run's row") {
+  test("note bookkeeping is thread-isolated: a concurrent DAG cannot clobber another run's row") {
     import java.util.concurrent.CountDownLatch
     // deterministic interleaving: A writes its note, B then clears and
     // writes its own on another thread, A reads after B finished — a
-    // JVM-global slot would hand A thread B's state (the r11 review's
+    // JVM-global slot would hand A thread B's note (the r11 review's
     // two-DAGs-one-JVM shape); the thread-local contract keeps each
     // run's row sourced from its own thread.
     val aWrote = new CountDownLatch(1)
     val bDone = new CountDownLatch(1)
     @volatile var aNote: Option[String] = None
-    @volatile var aServe: Option[(String, String)] = None
     val a = new Thread(() => {
       Pipeline.jobNote = Some("mode=merge v=7")
-      DerivedStore.lastServe = Some("tokens" -> "merge")
       aWrote.countDown()
       bDone.await()
       aNote = Pipeline.jobNote
-      aServe = DerivedStore.lastServe
     })
     val b = new Thread(() => {
       aWrote.await()
       Pipeline.jobNote = None
       Pipeline.jobNote = Some("mode=full v=1")
-      DerivedStore.lastServe = None
-      DerivedStore.lastServe = Some("shingles" -> "full")
       bDone.countDown()
     })
     a.start(); b.start(); a.join(10000); b.join(10000)
     assert(aNote.contains("mode=merge v=7"),
       s"thread B's clear/overwrite leaked into thread A's note: $aNote")
-    assert(aServe.contains("tokens" -> "merge"),
-      s"thread B's serve leaked into thread A's bookkeeping: $aServe")
   }
 }

@@ -73,8 +73,8 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
     drain(inB, schema, idxB, outB, ckptB)
 
     val f1 = StreamTierIngest.foldSurvivors(spark, outA, ckptA)
-    assert(f1.exists(_._1 == 1), s"batch 0 must fold, got $f1")
-    assert(StreamTierIngest.lastFoldMode.contains("full"))
+    assert(f1.exists(_.parts == 1), s"batch 0 must fold, got $f1")
+    assert(f1.exists(_.mode == "full"))
     assert(docIds(StreamTierIngest.survivors(spark, outA)) ==
       docIds(spark.read.parquet(outB)),
       "folded corpus must equal the never-folded control")
@@ -104,8 +104,8 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
     // minor compaction: the re-committed batch appends a delta-sized
     // sorted run beside the byte-copied base
     val f2 = StreamTierIngest.foldSurvivors(spark, outA, ckptA)
-    assert(f2.exists(_._1 == 1) && StreamTierIngest.lastFoldMode.contains("append"),
-      s"second fold is the minor append: $f2 ${StreamTierIngest.lastFoldMode}")
+    assert(f2.exists(f => f.parts == 1 && f.mode == "append"),
+      s"second fold is the minor append: $f2")
     assert(docIds(StreamTierIngest.survivors(spark, outA)) ==
       docIds(spark.read.parquet(outB)))
 
@@ -119,9 +119,8 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
     StreamTierIngest.rewriteBudgetOverride = Some(0L)
     try {
       val fr = StreamTierIngest.foldSurvivors(spark, outA, ckptA)
-      assert(fr.exists(_._1 == 1) &&
-        StreamTierIngest.lastFoldMode.contains("rewrite"),
-        s"budget breach takes the major rewrite: $fr ${StreamTierIngest.lastFoldMode}")
+      assert(fr.exists(f => f.parts == 1 && f.mode == "rewrite"),
+        s"budget breach takes the major rewrite: $fr")
     } finally StreamTierIngest.rewriteBudgetOverride = None
     assert(docIds(StreamTierIngest.survivors(spark, outA)) ==
       docIds(spark.read.parquet(outB)))
@@ -172,7 +171,7 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
     val preCount = preFold.count()
 
     val f = StreamTierIngest.foldSurvivors(spark, out, ckpt, nearDupAtFold = true)
-    assert(f.exists(_._2 == preCount),
+    assert(f.exists(_.rows == preCount),
       s"the log count is rows READ from the folded partitions: $f vs $preCount")
     val folded = StreamTierIngest.survivors(spark, out)
     val burstKept = folded.filter(col("doc_id") >= 3000000L)
@@ -202,7 +201,7 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
     assert(StreamTierIngest.foldSurvivors(spark, out, ckpt).nonEmpty)
 
     val s1 = StreamTierIngest.syncCorpus(spark, out, corpusDir)
-    assert(s1.exists { case (rows, upto) => rows == kept0 && upto == 0L },
+    assert(s1.exists(sy => sy.rows == kept0 && sy.upto == 0L),
       s"batch 0's survivors sync: $s1 vs $kept0")
     assert(spark.read.parquet(corpusDir).count() == kept0)
     val files0 = new java.io.File(corpusDir).listFiles()
@@ -219,7 +218,7 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
     spark.catalog.clearCache()
     assert(new java.io.File(s"$corpusDir/_stream_synced").delete())
     val retry = StreamTierIngest.syncCorpus(spark, out, corpusDir)
-    assert(retry.exists(_._1 == kept0))
+    assert(retry.exists(_.rows == kept0))
     assert(spark.read.parquet(corpusDir).count() == kept0,
       "the crash-retry must not duplicate rows")
 
@@ -236,7 +235,7 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
     val kept1 = spark.read.parquet(out).count() // live partition only (batch 1)
     assert(StreamTierIngest.foldSurvivors(spark, out, ckpt).nonEmpty)
     val s2 = StreamTierIngest.syncCorpus(spark, out, corpusDir)
-    assert(s2.exists { case (rows, upto) => rows == kept1 && upto == 1L },
+    assert(s2.exists(sy => sy.rows == kept1 && sy.upto == 1L),
       s"batch 1 syncs its own delta: $s2 vs $kept1")
     spark.catalog.clearCache()
     assert(spark.read.parquet(corpusDir).count() == kept0 + kept1)
@@ -251,8 +250,7 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
       .filter(col("ingest_batch") === 1L).select("doc_id").head().getLong(0)
     val td = graft.io.TargetedDelete.deleteIds(spark, corpusDir, "doc_id",
       Seq(takedownId))
-    assert(graft.io.TargetedDelete.lastDiscovery.contains("manifest") &&
-      td.rowsDeleted == 1,
+    assert(td.discovery == "manifest" && td.rowsDeleted == 1,
       s"the takedown must FIND a streamed doc through the manifest: $td")
   }
 
@@ -279,21 +277,20 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
     assert(StreamTierIngest.foldSurvivors(spark, out, ckpt).nonEmpty)
     val kept0 = StreamTierIngest.survivors(spark, out).count()
     val s1 = StreamTierIngest.syncCorpus(spark, out, corpusDir)
-    assert(s1.exists(_._1 == kept0))
-    assert(StreamTierIngest.lastSyncScan.exists(_.startsWith("manifest")),
-      s"the first fold writes the batch manifest: ${StreamTierIngest.lastSyncScan}")
+    assert(s1.exists(_.rows == kept0))
+    assert(s1.exists(_.scan.startsWith("manifest")),
+      s"the first fold writes the batch manifest: $s1")
 
     // append night: the base's byte-copied files cap at batch 0, so the
     // manifest confines the sync to the night's sorted runs
     docs.filter(col("doc_id") % 3 === 2).limit(20)
       .coalesce(1).write.mode("append").parquet(in)
     drain(in, schema, idx, out, ckpt)
-    assert(StreamTierIngest.foldSurvivors(spark, out, ckpt).nonEmpty &&
-      StreamTierIngest.lastFoldMode.contains("append"))
+    assert(StreamTierIngest.foldSurvivors(spark, out, ckpt).exists(_.mode == "append"))
     val kept1 = StreamTierIngest.survivors(spark, out).count() - kept0
     val s2 = StreamTierIngest.syncCorpus(spark, out, corpusDir)
-    assert(s2.exists(_._1 == kept1), s"$s2 vs $kept1")
-    val prune = StreamTierIngest.lastSyncScan
+    assert(s2.exists(_.rows == kept1), s"$s2 vs $kept1")
+    val prune = s2.map(_.scan)
     val kn = prune.collect {
       case p if p.startsWith("manifest:") =>
         val Array(k, n) = p.stripPrefix("manifest:").split("/").map(_.toInt)
@@ -328,14 +325,13 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
     drain(in, schema, idx, out, ckpt)
     StreamTierIngest.rewriteBudgetOverride = Some(0L)
     try {
-      assert(StreamTierIngest.foldSurvivors(spark, out, ckpt).nonEmpty &&
-        StreamTierIngest.lastFoldMode.contains("rewrite"))
+      assert(StreamTierIngest.foldSurvivors(spark, out, ckpt).exists(_.mode == "rewrite"))
     } finally StreamTierIngest.rewriteBudgetOverride = None
     val keptAll = StreamTierIngest.survivors(spark, out).count()
     val s3 = StreamTierIngest.syncCorpus(spark, out, corpusDir)
-    assert(s3.exists(_._1 == keptAll - kept0 - kept1), s"$s3")
-    assert(StreamTierIngest.lastSyncScan.contains("syncdelta"),
-      s"a rewrite night's sync reads the exact delta copy: ${StreamTierIngest.lastSyncScan}")
+    assert(s3.exists(_.rows == keptAll - kept0 - kept1), s"$s3")
+    assert(s3.exists(_.scan == "syncdelta"),
+      s"a rewrite night's sync reads the exact delta copy: $s3")
     spark.catalog.clearCache()
     assert(spark.read.parquet(corpusDir).count() == keptAll,
       "however the delta was sourced, the corpus equals the survivors")

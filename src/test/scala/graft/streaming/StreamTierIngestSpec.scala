@@ -141,8 +141,8 @@ class StreamTierIngestSpec extends SparkSpec {
 
     val rowsPreFold = StreamTierIngest.index(spark, idxA).count()
     val folded = StreamTierIngest.fold(spark, idxA, ckptA)
-    assert(folded.exists(_._1 == 2), s"bootstrap + batch 0 must fold, got $folded")
-    assert(StreamTierIngest.lastFoldMode.contains("full"),
+    assert(folded.exists(_.parts == 2), s"bootstrap + batch 0 must fold, got $folded")
+    assert(folded.exists(_.mode == "full"),
       "the first fold writes the base from scratch")
     assert(StreamTierIngest.index(spark, idxA).count() == rowsPreFold,
       "fold moves rows, never loses them")
@@ -208,9 +208,9 @@ class StreamTierIngestSpec extends SparkSpec {
     // moves as a byte-copy, never through a shuffle); counts still
     // match the never-folded control and the watermark advances
     val fold2 = StreamTierIngest.fold(spark, idxA, ckptA)
-    assert(fold2.exists(_._1 == 1), s"batch 1 must fold, got $fold2")
-    assert(StreamTierIngest.lastFoldMode.contains("append"),
-      s"second fold is the minor-compaction append, got ${StreamTierIngest.lastFoldMode}")
+    assert(fold2.exists(_.parts == 1), s"batch 1 must fold, got $fold2")
+    assert(fold2.exists(_.mode == "append"),
+      s"second fold is the minor-compaction append, got $fold2")
     assert(StreamTierIngest.index(spark, idxA).count() ==
       StreamTierIngest.index(spark, idxB).count(),
       "append-folded index equals the never-folded control")
@@ -237,9 +237,8 @@ class StreamTierIngestSpec extends SparkSpec {
     StreamTierIngest.rewriteBudgetOverride = Some(0L) // force the trigger
     try {
       val fr = StreamTierIngest.fold(spark, idxA, ckptA)
-      assert(fr.exists(_._1 == 1) &&
-        StreamTierIngest.lastFoldMode.contains("rewrite"),
-        s"budget breach must take the major rewrite: $fr ${StreamTierIngest.lastFoldMode}")
+      assert(fr.exists(f => f.parts == 1 && f.mode == "rewrite"),
+        s"budget breach must take the major rewrite: $fr")
     } finally StreamTierIngest.rewriteBudgetOverride = None
     assert(StreamTierIngest.index(spark, idxA).count() == preRewrite &&
       StreamTierIngest.index(spark, idxA).count() ==
@@ -260,9 +259,8 @@ class StreamTierIngestSpec extends SparkSpec {
     drain(inA, schema, idxA, outA, ckptA)
     drain(inB, schema, idxB, outB, ckptB)
     val fl = StreamTierIngest.fold(spark, idxA, ckptA)
-    assert(fl.exists(_._1 == 1) &&
-      StreamTierIngest.lastFoldMode.contains("rewrite"),
-      s"a legacy base routes to the rewrite: $fl ${StreamTierIngest.lastFoldMode}")
+    assert(fl.exists(f => f.parts == 1 && f.mode == "rewrite"),
+      s"a legacy base routes to the rewrite: $fl")
     assert(StreamTierIngest.index(spark, idxA).count() ==
       StreamTierIngest.index(spark, idxB).count(),
       "legacy upgrade neither loses nor duplicates rows")
@@ -314,5 +312,26 @@ class StreamTierIngestSpec extends SparkSpec {
     drainIntra()
     assert(spark.read.parquet(out).count() == total &&
       spark.read.parquet(out).filter(col("doc_id") >= 3000000L).count() == 1)
+  }
+
+  test("dirStats counts only the data files a reader scans") {
+    val dir = tmpDir("dirstats")
+    val rows = docs.select("doc_id").limit(40)
+    def parts(d: String) = new java.io.File(d).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    rows.coalesce(1).write.parquet(s"$dir/t")
+    // a `_p=1/` partition dir is data, as Spark reads it
+    rows.limit(7).repartition(2).write.parquet(s"$dir/t/_p=1")
+    val data = parts(s"$dir/t")
+    val dataFiles = data ++ parts(s"$dir/t/_p=1")
+    assert(dataFiles.length == 3)
+    // strays no reader scans: an in-flight copy, a hidden side dir
+    // (a version's _syncdelta), the writers' commit records and .crc
+    java.nio.file.Files.copy(data.head.toPath,
+      java.nio.file.Paths.get(s"${data.head.getPath}._COPYING_"))
+    rows.coalesce(1).write.parquet(s"$dir/t/_syncdelta")
+    val (n, bytes) = StreamTierIngest.dirStats(spark, new org.apache.hadoop.fs.Path(s"$dir/t"))
+    assert(n == dataFiles.length && bytes == dataFiles.map(_.length).sum,
+      s"$n files / $bytes bytes vs ${dataFiles.length} / ${dataFiles.map(_.length).sum}")
   }
 }

@@ -16,9 +16,9 @@ class TokenStoreSpec extends SparkSpec {
         Seq("doc_id", "source", "lang", "pos", "term"))
       assert(served.exceptAll(inline).isEmpty && inline.exceptAll(served).isEmpty)
       // second serve resolves the committed version, no rebuild
-      graft.io.DerivedStore.lastBuild = None
+      val snap = new graft.io.TierSnapshot(spark)
       TokenStore.served(spark, sfDir).count(): Unit
-      assert(graft.io.DerivedStore.lastBuild.isEmpty)
+      assert(snap.published.isEmpty)
     } finally prevRoot match {
       case Some(v) => sys.props("graft.graphstore.dir") = v
       case None => sys.props.remove("graft.graphstore.dir"): Unit
