@@ -64,6 +64,21 @@ import graft.core.Tables
   *  - LAYOUT: range-sorted on the tier's serve key
   *    ([[SortedLayout.writeRangeSorted]]) so per-file min/max stats
   *    prune keyed lookups; `numFiles` is the parallelism knob.
+  *
+  * A committed frame-tier version holds its data files plus these
+  * `_`-prefixed entries, all written into the staging dir before the
+  * commit rename:
+  *  - `_SUCCESS`, `_fingerprint`, `_refresh`: the commit record, the
+  *    source fingerprint and the [[RefreshRecord]];
+  *  - `_stats`: exact rows, bytes and column profile
+  *    ([[RowStatsFile]]) — the one record of the version's key facts;
+  *  - `_filemap`: the per-file key ranges ([[ZoneMap]]);
+  *  - `_keybloom`: a bloom over the `summaryKey`, present while its
+  *    distinct count fits [[BloomMaxKeys]]; its capacity rides on the
+  *    key's `_stats` line;
+  *  - `_buckets`: the bucket layout ([[Refresh.Bucketed]] tiers only).
+  * A directory tier's version holds the first three plus what its
+  * writer lays out.
   */
 object DerivedStore {
 
@@ -120,13 +135,14 @@ object DerivedStore {
       * byte-ideal count) routes one fold through a MAJOR rewrite that
       * restores the tight layout — the stream-index fold's minor/major
       * split, applied to frame tiers. Sidecars stay truthful at delta
-      * cost: `_filemap` = prev entries + the new runs' stats;
-      * `_keysummary` merges min/max/count; `_keybloom` merges the
-      * delta's keys into the served bloom while the recorded capacity
-      * holds, rebuilding at 2× headroom when exhausted (amortized to
-      * doublings). A delta whose schema differs from the tier's takes
-      * the full build. `LsmTierSpec` pins merge == rebuild, the guard
-      * path, and the budget trigger. */
+      * cost: `_filemap` = prev entries + the new runs' stats; `_stats`
+      * adds rows, widens min/max and adds the summary key's NDV (its
+      * keys are disjoint by contract); `_keybloom` folds the delta's
+      * keys into the served bloom while the capacity recorded on the
+      * key's `_stats` line holds, rebuilding at 2× headroom when
+      * exhausted (amortized to doublings). A delta whose schema
+      * differs from the tier's takes the full build. `LsmTierSpec`
+      * pins merge == rebuild, the guard path, and the budget trigger. */
     final case class Lsm(delta: DeltaMerge) extends Refresh
 
     /** For tiers whose merge REWRITES rows (label/cluster tiers — the
@@ -217,56 +233,46 @@ object DerivedStore {
     * Cost discipline (r10 verdict #2): the exact check is one pass
     * over the tier's pruned key column — IO-only, but HISTORY-sized,
     * and for the token tier that is a nightly history read to answer a
-    * delta-sized question. So the probe first consults the served
-    * version's `_keysummary` sidecar (key min/max, written beside the
-    * fingerprint at publish when the tier declares a `summaryKey`):
-    * when the delta's key range is disjoint from the tier's — the
-    * warehouse's monotonic-id reality — the answer is NO at
-    * O(Δ + one 1-row sidecar read). When ranges STRADDLE (interleaved
-    * key spaces), a second layer answers: versions with ≤
-    * [[BloomMaxKeys]] distinct keys also carry a `_keybloom` (1% fpp),
-    * and a delta none of whose keys might-contain is definitely
-    * disjoint — still O(Δ). Only a bloom maybe (or a big/legacy/
-    * keyless version) pays the exact semi-join; both layers can only
-    * FALL THROUGH, never flip the answer. The sidecars are located
-    * from `prev`'s OWN input files, so a concurrent publish of a newer
-    * version can never pair v+1's summary with v's rows. */
+    * delta-sized question. So the probe first asks the served
+    * version's `_stats` record (memoized, no Spark job) and
+    * `_keybloom`, in ONE pass over the delta's key column: does any
+    * delta key fall inside the tier's recorded [min, max] (integral
+    * keys) AND might-contain in the bloom (1% fpp)? A disjoint range —
+    * the warehouse's monotonic-id reality — and a straddling but
+    * key-disjoint delta both answer NO at O(Δ). Only a yes (or a
+    * version with neither fact: no `_stats`, a non-integral key
+    * without a bloom) pays the exact semi-join; the layers can only
+    * FALL THROUGH, never flip the answer. The bloom is trusted only
+    * when the key's `_stats` line records its capacity. Both facts
+    * describe the version's own key column, so they are used only
+    * when the delta's key is of the same type family as the tier's: a
+    * long-built bloom probed with strings answers every key
+    * might-not-contain, silently flipping overlap to disjoint (r11
+    * advice). The sidecars are located from `prev`'s OWN input files,
+    * so a concurrent publish of a newer version can never pair v+1's
+    * facts with v's rows. */
   private[graft] def deltaKeysOverlap(prev: DataFrame, delta: DataFrame,
                                       key: String): Boolean = {
     val s = prev.sparkSession
-    val vdir = versionDirOf(prev)
-    // both sidecar layers describe the PUBLISH-TIME (kname, ktype)
-    // column; a probe over any other key — or the same name at a
-    // DIFFERENT type after schema evolution — must not trust them: a
-    // long-built bloom probed with strings answers every key
-    // might-not-contain, silently flipping overlap to disjoint (r11
-    // advice). A legacy summary without either field also falls
-    // through (to the exact probe, the safe direction).
-    val deltaType = normKeyType(delta.schema(key).dataType)
-    val summary = vdir.flatMap { v =>
-      val sp = new Path(v, KeySummaryDir)
-      if (!hadoopFs(s, sp).exists(sp)) None
-      else Some(s.read.parquet(sp.toString))
-        .filter(sf => sf.columns.contains("kname") && sf.columns.contains("ktype") &&
-          !sf.filter(col("kname") === key && col("ktype") === deltaType).isEmpty)
-    }
-    val rangeDisjoint = summary.exists { sf =>
-      import org.apache.spark.sql.functions.{min => fmin, max => fmax}
-      val dAgg = delta.agg(fmin(col(key)).as("dmin"), fmax(col(key)).as("dmax"))
-      // typed comparison stays in Spark: two 1-row frames, one job
-      sf.crossJoin(dAgg)
-        .filter(col("dmin") <= col("kmax") && col("dmax") >= col("kmin"))
-        .isEmpty
-    }
-    if (rangeDisjoint) return false
-    val bloomDisjoint = summary.nonEmpty && vdir.exists { v =>
-      bloomAt(s, v).exists { bf =>
-        mightContainCol(bf, delta, key)
-          .exists(pred => delta.filter(pred).isEmpty)
-      }
-    }
-    if (bloomDisjoint) return false
-    !prev.select(key)
+    val family = normKeyType(delta.schema(key).dataType)
+    val facts = versionDirOf(prev)
+      .filter(_ => normKeyType(prev.schema(key).dataType) == family)
+      .flatMap(v => rowStatsOfVersion(s, v.toString).map(v -> _))
+    val inRange = for {
+      (_, st) <- facts if family == "long"
+      cs <- st.cols.get(key)
+      lo <- cs.min.flatMap(_.toLongOption)
+      hi <- cs.max.flatMap(_.toLongOption)
+    } yield col(key).cast("long").between(lo, hi)
+    val inBloom = for {
+      (v, st) <- facts
+      (`key`, _) <- st.bloom
+      bf <- bloomAt(s, v)
+      pred <- mightContainCol(bf, delta, key)
+    } yield pred
+    val maybe = (inRange ++ inBloom).reduceOption(_ && _)
+      .forall(pred => !delta.filter(pred).isEmpty)
+    maybe && !prev.select(key)
       .join(org.apache.spark.sql.functions.broadcast(delta.select(key).distinct()),
         Seq(key), "left_semi")
       .isEmpty
@@ -288,7 +294,6 @@ object DerivedStore {
         else Some(rows(s, dir, prev, delta))
     }
 
-  private val KeySummaryDir = "_keysummary"
   private val KeyBloomFile = "_keybloom"
 
   /** Bloom ceiling: 10M distinct keys @ 1% fpp ≈ 12 MB — a bounded
@@ -317,44 +322,6 @@ object DerivedStore {
       case LongType | IntegerType | ShortType | ByteType => "long"
       case StringType => "string"
       case other => other.catalogString
-    }
-  }
-
-  /** Publish-time sidecars over the staged bytes: `_keysummary`
-    * (1-row min/max + approx distinct count) and, when the count fits
-    * [[BloomMaxKeys]] and the key type is bloomable, `_keybloom`.
-    * Two pruned-column passes over data the publish just wrote. */
-  private def writeKeySummary(s: SparkSession, stagingDir: String,
-                              key: String): Unit = {
-    import org.apache.spark.sql.functions.{approx_count_distinct, lit, min => fmin, max => fmax}
-    val staged = s.read.parquet(stagingDir)
-    val sp = new Path(stagingDir, KeySummaryDir)
-    val agg = staged.agg(fmin(col(key)).as("kmin"), fmax(col(key)).as("kmax"),
-        approx_count_distinct(col(key)).as("kcnt"))
-      // the summarized column's NAME and TYPE ride along: a probe over
-      // any other column, or this column at a different type, must
-      // fall through to the exact check, not trust another column's
-      // range or a differently-typed bloom (r11 review + advice)
-      .withColumn("kname", lit(key))
-      .withColumn("ktype", lit(normKeyType(staged.schema(key).dataType)))
-      .persist()
-    val cnt = agg.head().getAs[Long]("kcnt")
-    // the bloom is built at a RECORDED capacity with 2× headroom, so
-    // LSM appends can fold delta keys into it bit-compatibly instead
-    // of rebuilding every night ([[mergeKeySummary]])
-    val bloom =
-      if (cnt > BloomMaxKeys) None
-      else bloomKeyed(staged, key)
-        .map(kf => bloomCapacity(cnt) ->
-          kf.stat.bloomFilter(key, bloomCapacity(cnt), 0.01))
-    agg.withColumn("bloomn",
-        bloom.map(b => lit(b._1)).getOrElse(lit(null)).cast("long"))
-      .coalesce(1).write.parquet(sp.toString)
-    agg.unpersist(): Unit
-    bloom.foreach { case (_, bf) =>
-      val bp = new Path(stagingDir, KeyBloomFile)
-      val out = hadoopFs(s, bp).create(bp, true)
-      try bf.writeTo(out) finally out.close()
     }
   }
 
@@ -524,10 +491,10 @@ object DerivedStore {
     * tables: `build` computes the tier from scratch, `refresh` says how
     * an append-only drift is folded in instead. `summaryKey`: the
     * tier's row key — when set, every published version carries a
-    * `_keysummary` sidecar (the key's min/max, plus a bloom under the
-    * key budget) that [[deltaKeysOverlap]] consults to answer
-    * disjoint-range appends at O(Δ) instead of a history-sized
-    * key-column scan. */
+    * `_keybloom` under the key budget, its capacity recorded on the
+    * key's `_stats` line, which [[deltaKeysOverlap]] consults with the
+    * key's min/max to answer key-disjoint appends at O(Δ) instead of a
+    * history-sized key-column scan. */
   def served(s: SparkSession, dir: String, name: String,
              sources: Seq[String],
              build: (SparkSession, String) => DataFrame,
@@ -619,18 +586,13 @@ object DerivedStore {
       // tier; test-scale sources keep the configured floor)
       SortedLayout.writeRangeSorted(rows, p,
         scaledNumFiles(numFiles, fp), col(sortKey))
-      // key sidecars for the O(Δ) overlap probe, paid inside
-      // the publish they describe: min/max always (one
-      // pruned-column pass), plus a bloom while the version's
-      // distinct keys fit the bounded-size budget
-      summaryKey.foreach(k => writeKeySummary(s, p, k))
       // file-grain zone map on the layout key: the range-sorted
       // files' disjoint [min,max] land in one `_filemap`
       // manifest, so keyed lookups (TokenStore term fetches,
       // TargetedDelete discovery) prune files without opening
       // parquet footers (r11 verdict #4)
       ZoneMap.write(s, p, sortKey)
-      writeRowStats(s, p)
+      writeRowStats(s, p, summaryKey)
     }
 
   /** Exact stats of a version, recorded at publish so the OPTIMIZER
@@ -645,19 +607,24 @@ object DerivedStore {
     * that wrongly BROADCASTS a wide tier) and join-cardinality
     * estimation keys on distinctCount (r13 verdict #2). One
     * column-pruned agg pass over data the publish just wrote, the same
-    * discipline as `_keysummary`/`_filemap`. [[statsOfVersion]] reads
-    * it back; [[served]] registers it in
-    * [[graft.plans.TierStatsCatalog]].
+    * discipline as `_filemap`. [[rowStatsOfVersion]] reads it back;
+    * [[served]] registers it in [[graft.plans.TierStatsCatalog]], and
+    * [[deltaKeysOverlap]] reads the summary key's facts from it.
     *
     * Sidecar format: line 1 `rows,bytes`; one line per profiled column
     * `name\tavg\tmax\tndv\tnulls\tmin\tmax` with `-` for an unmeasured
     * field (min/max are numeric-only external strings, so the tab
     * framing is safe; v1 sidecars carried `name\tavg` only — the
-    * parser accepts both). */
+    * parser accepts both). The summary key's line carries an 8th field
+    * when the version has a `_keybloom`: the bloom's capacity (fields
+    * are read by index, so a reader that predates it ignores it). */
   private[io] val RowStatsFile = "_stats"
 
+  /** `bloom`: the summary key whose `_stats` line records the
+    * `_keybloom` capacity, and that capacity. */
   private[graft] final case class TierRowStats(rows: Long, bytes: Long,
-                                               cols: Map[String, graft.plans.ColStat])
+                                               cols: Map[String, graft.plans.ColStat],
+                                               bloom: Option[(String, Long)] = None)
 
   /** Measured per-column profile, one agg pass; empty for
     * fixed-width-only schemas with no atomic columns. Shared with the
@@ -674,15 +641,23 @@ object DerivedStore {
       (s"${st.rows},${st.bytes}" +:
         st.cols.toSeq.sortBy(_._1).map { case (c, cs) =>
           s"$c\t${f(cs.avgLen)}\t${f(cs.maxLen)}\t${f(cs.ndv)}\t${f(cs.nulls)}" +
-            s"\t${g(cs.min)}\t${g(cs.max)}"
+            s"\t${g(cs.min)}\t${g(cs.max)}" +
+            st.bloom.collect { case (`c`, cap) => s"\t$cap" }.getOrElse("")
         }).mkString("\n"))
   }
 
-  private def writeRowStats(s: SparkSession, dir: String): Unit = {
+  /** The version's `_stats` (and `_keybloom`, [[keyBloom]]) from one
+    * read of the staged bytes. `grown`: the served version and the
+    * rows this publish added to it, whose keys may fold into its
+    * bloom. */
+  private def writeRowStats(s: SparkSession, dir: String, summaryKey: Option[String],
+                            grown: Option[(Path, DataFrame)] = None): Unit = {
     val df = s.read.parquet(dir)
     val rows = df.count() // parquet metadata-only
     val bytes = dataFilesOf(s, new Path(dir)).map(_.getLen).sum
-    writeRowStatsRecord(s, dir, TierRowStats(rows, bytes, columnProfile(df, rows)))
+    val cols = columnProfile(df, rows)
+    writeRowStatsRecord(s, dir, TierRowStats(rows, bytes, cols,
+      summaryKey.flatMap(keyBloom(s, dir, df, _, cols, grown))))
   }
 
   /** The stats a version's publish recorded; None for legacy versions.
@@ -712,22 +687,23 @@ object DerivedStore {
         lines.head.split(",") match {
           case Array(r, b) =>
             for (rr <- r.toLongOption; bb <- b.toLongOption) yield {
-              val cols = lines.tail.flatMap { ln =>
-                val parts = ln.split("\t", -1)
+              val colLines = lines.tail.map(_.split("\t", -1))
+                .filter(parts => parts.length >= 2 && parts(0).nonEmpty)
+              val cols = colLines.flatMap { parts =>
                 def opt(i: Int) =
                   if (i < parts.length) parts(i).toLongOption else None
                 def str(i: Int) =
                   if (i < parts.length && parts(i) != "-" && parts(i).nonEmpty)
                     Some(parts(i))
                   else None
-                if (parts.length >= 2 && parts(0).nonEmpty) {
-                  val cs = graft.plans.ColStat(opt(1), opt(2), opt(3), opt(4),
-                    str(5), str(6))
-                  if (cs == graft.plans.ColStat.empty) None
-                  else Some(parts(0) -> cs)
-                } else None
+                val cs = graft.plans.ColStat(opt(1), opt(2), opt(3), opt(4),
+                  str(5), str(6))
+                if (cs == graft.plans.ColStat.empty) None
+                else Some(parts(0) -> cs)
               }.toMap
-              TierRowStats(rr, bb, cols)
+              val bloom = colLines.iterator.flatMap(parts =>
+                parts.lift(7).flatMap(_.toLongOption).map(parts(0) -> _)).nextOption()
+              TierRowStats(rr, bb, cols, bloom)
             }
           case _ => None
         }
@@ -736,10 +712,6 @@ object DerivedStore {
       loaded
     }
   }
-
-  private[graft] def statsOfVersion(s: SparkSession,
-                                    versionDir: String): Option[(Long, Long)] =
-    rowStatsOfVersion(s, versionDir).map(st => (st.rows, st.bytes))
 
   // -------------------------------------------------------------------
   // Bucketed layout ([[Refresh.Bucketed]])
@@ -751,6 +723,11 @@ object DerivedStore {
     * in-place mutator ([[TargetedDelete]]) can drop it: its rewrites
     * land non-bucket file names, making the sidecar a lie. */
   private[io] val BucketsFile = "_buckets"
+
+  /** The sidecars describing a version's rows, which a byte-copied
+    * version whose rows did not change carries verbatim. */
+  private val RowSidecars =
+    Set(ZoneMap.ManifestDir, KeyBloomFile, RowStatsFile, BucketsFile)
 
   /** The stable bucket of a key: Murmur3 (Spark's `hash`) mod B. */
   private def bucketExpr(sortKey: String, b: Int) =
@@ -834,9 +811,8 @@ object DerivedStore {
         math.max(numBuckets, scaledNumFiles(numFiles, fp)), sortKey)
       Sidecar.write(hadoopFs(s, new Path(p)), new Path(p, BucketsFile),
         s"$numBuckets,murmur3")
-      summaryKey.foreach(k => writeKeySummary(s, p, k))
       ZoneMap.write(s, p, sortKey)
-      writeRowStats(s, p)
+      writeRowStats(s, p, summaryKey)
     }
 
   /** The bucketed partial rewrite: byte-copy every bucket the upserts
@@ -845,15 +821,15 @@ object DerivedStore {
     * a ≤ numBuckets driver-side collect; the rewrite reads only the
     * touched buckets' FILES (by name, no footer opens elsewhere). The
     * `_filemap` is maintained at delta cost (kept files keep their
-    * entries); `_keysummary`/`_stats` recompute — upserts REWRITE rows,
-    * so no sidecar merge contract holds, and both are single
-    * column-pruned passes over a narrow label tier. */
+    * entries); `_stats` recomputes — upserts REWRITE rows, so no
+    * sidecar merge contract holds, and it is one column-pruned pass
+    * over a narrow label tier. */
   private def stageBucketedPatch(s: SparkSession, store: String, prevDir: Path,
                                  upserts0: DataFrame, numBuckets: Int,
                                  sortKey: String,
                                  summaryKey: Option[String]): Path = {
-    // the upsert frame is consumed by four actions (touched-bucket
-    // collect, the rewrite, the summary merge, the manifest stats) —
+    // the upsert frame is consumed by three actions (touched-bucket
+    // collect, the rewrite, the bloom fold) —
     // cache it for the staging scope so the label contraction's joins
     // run once per night, not once per sidecar
     val upserts = upserts0.persist()
@@ -865,11 +841,8 @@ object DerivedStore {
         !n.startsWith("_") && !n.startsWith(".") && !isTouched(n))
       if (touched.isEmpty) {
         // nothing changed (fingerprint drift without label impact): the
-        // base's sidecars describe the new version verbatim — an empty
-        // delta through the summary merge would null the min/max
-        copyTree(s, prevDir, new Path(p), keep = n =>
-          n == ZoneMap.ManifestDir || n == KeySummaryDir ||
-            n == KeyBloomFile || n == RowStatsFile || n == BucketsFile)
+        // base's sidecars describe the new version verbatim
+        copyTree(s, prevDir, new Path(p), keep = RowSidecars)
       } else {
         // ONE listing per side feeds the rewrite input, its sizing,
         // and the manifest bookkeeping
@@ -897,14 +870,11 @@ object DerivedStore {
             .filter(q => isTouched(q.getName)).map(_.toString),
           keptNames = Some(stagedData.map(_.getPath.getName)
             .filterNot(isTouched).toSet))
-        // _keysummary/_keybloom at delta cost via the LSM merge: safe
-        // for upserts even though they REWRITE rows — keys are never
-        // removed, so min/max only extend; the kcnt overcount (updated
-        // keys counted again) and the bloom superset both err
-        // conservative (an earlier bloom rebuild, a false maybe → the
-        // exact probe), never a wrong disjointness answer
-        summaryKey.foreach(k => mergeKeySummary(s, prevDir, p, k, upserts))
-        writeRowStats(s, p)
+        // _keybloom at delta cost: safe for upserts even though they
+        // REWRITE rows — keys are never removed, so folding the upsert
+        // keys into the served bloom keeps a superset (a false maybe →
+        // the exact probe), never a wrong disjointness answer
+        writeRowStats(s, p, summaryKey, Some(prevDir -> upserts))
       }
     } finally upserts.unpersist(): Unit
   }
@@ -997,12 +967,10 @@ object DerivedStore {
                             summaryKey: Option[String]): Unit = {
     if (newFiles.isEmpty) {
       // empty delta: the base's sidecars describe the new version too
-      copyTree(s, prevDir, new Path(stagingDir),
-        keep = n => n == ZoneMap.ManifestDir || n == KeySummaryDir ||
-          n == KeyBloomFile || n == RowStatsFile)
+      copyTree(s, prevDir, new Path(stagingDir), keep = RowSidecars)
       return
     }
-    val newDf = s.read.parquet(newFiles: _*) // shared by all three sidecars
+    val newDf = s.read.parquet(newFiles: _*) // shared by every sidecar
     // _stats at delta cost: rows ADD unconditionally under the
     // append-only contract (a metadata-only count over the new runs);
     // bytes re-listed; column profiles merge field-wise (below). A
@@ -1078,87 +1046,50 @@ object DerivedStore {
             val vmax = widen(p.max, d.max, _ max _)
             c -> graft.plans.ColStat(avg, mx, nd, nl, vmin, vmax)
           }
-        writeRowStatsRecord(s, stagingDir, TierRowStats(tot, bytes, mergedCols))
-      case None => writeRowStats(s, stagingDir)
+        writeRowStatsRecord(s, stagingDir, TierRowStats(tot, bytes, mergedCols,
+          summaryKey.flatMap(keyBloom(s, stagingDir, s.read.parquet(stagingDir), _,
+            mergedCols, Some(prevDir -> newDf)))))
+      case None => writeRowStats(s, stagingDir, summaryKey)
     }
     // _filemap: prev entries + the new runs' stats (ranges may overlap
     // the base's — pruning degrades gracefully, never wrongly, until
     // the major rewrite restores disjointness)
     ZoneMap.mergeManifest(s, prevDir.toString, stagingDir, sortKey, newFiles)
-    summaryKey.foreach(k => mergeKeySummary(s, prevDir, stagingDir, k, newDf))
   }
 
-  /** Merge the 1-row `_keysummary` (min/max combine; counts ADD — the
-    * deltaMerge contract guarantees disjoint keys) and fold the delta's
-    * keys into the served `_keybloom` while its recorded capacity
-    * holds; an exhausted or legacy bloom rebuilds at 2× headroom (one
-    * pruned-column pass, amortized to corpus doublings). Any
-    * kname/ktype mismatch falls back to the full recompute. */
-  private def mergeKeySummary(s: SparkSession, prevDir: Path,
-                              stagingDir: String, key: String,
-                              newDf: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{approx_count_distinct, greatest, least, lit, min => fmin, max => fmax}
-    val prevSummary = new Path(prevDir, KeySummaryDir)
-    val mergeable = hadoopFs(s, prevSummary).exists(prevSummary) && {
-      val sf = s.read.parquet(prevSummary.toString)
-      sf.columns.contains("kname") && sf.columns.contains("ktype") &&
-        !sf.filter(col("kname") === key &&
-          col("ktype") === normKeyType(newDf.schema(key).dataType)).isEmpty
-    }
-    if (!mergeable) { writeKeySummary(s, stagingDir, key); return }
-    val prevSf = s.read.parquet(prevSummary.toString)
-    val prevRow = prevSf.head()
-    val dAgg = newDf.agg(fmin(col(key)).as("dmin"), fmax(col(key)).as("dmax"),
-      approx_count_distinct(col(key)).as("dcnt")).persist()
-    val cnt = prevRow.getAs[Long]("kcnt") + dAgg.head().getAs[Long]("dcnt")
-    val prevCap =
-      if (prevSf.columns.contains("bloomn"))
-        Option(prevRow.getAs[java.lang.Long]("bloomn")).map(_.toLong)
-      else None
-    val (bloom, cap) = (bloomAt(s, prevDir), prevCap) match {
-      case (Some(pb), Some(c)) if cnt <= c =>
-        // O(Δ): a delta bloom built at the RECORDED capacity is
-        // bit-compatible with the served one
-        bloomKeyed(newDf, key).flatMap { kf =>
-          scala.util.Try {
-            val db = kf.stat.bloomFilter(key, c, 0.01)
-            db.mergeInPlace(pb); db
-          }.toOption
-        } match {
-          case Some(db) => (Some(db), Some(c))
-          case None => rebuildBloom(s, stagingDir, key, cnt)
-        }
-      case _ => rebuildBloom(s, stagingDir, key, cnt)
-    }
-    prevSf.crossJoin(dAgg)
-      .select(least(col("kmin"), col("dmin")).as("kmin"),
-        greatest(col("kmax"), col("dmax")).as("kmax"),
-        (col("kcnt") + col("dcnt")).as("kcnt"),
-        col("kname"), col("ktype"))
-      .withColumn("bloomn",
-        cap.map(lit(_)).getOrElse(lit(null)).cast("long"))
-      .coalesce(1).write.parquet(s"$stagingDir/$KeySummaryDir")
-    dAgg.unpersist(): Unit
-    bloom.foreach { bf =>
-      val bp = new Path(stagingDir, KeyBloomFile)
-      val out = hadoopFs(s, bp).create(bp, true)
-      try bf.writeTo(out) finally out.close()
-    }
-  }
-
-  /** Fresh-capacity bloom over the whole staged tier — the exhausted/
-    * legacy fallback; None when the tier outgrew [[BloomMaxKeys]]. */
-  private def rebuildBloom(s: SparkSession, stagingDir: String, key: String,
-                           cnt: Long): (Option[org.apache.spark.util.sketch.BloomFilter], Option[Long]) =
-    if (cnt > BloomMaxKeys) (None, None)
-    else {
-      val cap = bloomCapacity(cnt)
-      bloomKeyed(s.read.parquet(stagingDir), key) match {
-        // capacity is recorded ONLY beside a bloom that exists — a
-        // bloomn without a _keybloom would lie to any reader trusting
-        // the pair (writeKeySummary keeps the same symmetry)
-        case Some(kf) => (Some(kf.stat.bloomFilter(key, cap, 0.01)), Some(cap))
-        case None => (None, None)
+  /** Write the version's `_keybloom` over summary key `key` and return
+    * the (key, capacity) its `_stats` line records. The NDV comes from
+    * the version's profile `cols`. With `grown` (the served version
+    * and the rows this publish added), the added keys fold into the
+    * served bloom at O(Δ) — a bloom built at the same capacity is
+    * bit-compatible — while the NDV fits the capacity the served
+    * version's `_stats` line records. Otherwise (no or exhausted
+    * capacity, a first publish) one pass over `staged` builds it fresh
+    * at 2× headroom, amortized to corpus doublings. None past
+    * [[BloomMaxKeys]] or for a key type the bloom doesn't cover. */
+  private def keyBloom(s: SparkSession, dir: String, staged: => DataFrame,
+                       key: String, cols: Map[String, graft.plans.ColStat],
+                       grown: Option[(Path, DataFrame)]): Option[(String, Long)] =
+    cols.get(key).flatMap(_.ndv).filter(_ <= BloomMaxKeys).flatMap { ndv =>
+      val folded = for {
+        (prevDir, added) <- grown
+        cap <- rowStatsOfVersion(s, prevDir.toString).flatMap(_.bloom)
+          .collect { case (`key`, c) if ndv <= c => c }
+        pb <- bloomAt(s, prevDir)
+        kf <- bloomKeyed(added, key)
+        bf <- scala.util.Try {
+          val b = kf.stat.bloomFilter(key, cap, 0.01)
+          b.mergeInPlace(pb); b
+        }.toOption
+      } yield bf -> cap
+      folded.orElse(bloomKeyed(staged, key).map { kf =>
+        val cap = bloomCapacity(ndv)
+        kf.stat.bloomFilter(key, cap, 0.01) -> cap
+      }).map { case (bf, cap) =>
+        val bp = new Path(dir, KeyBloomFile)
+        val out = hadoopFs(s, bp).create(bp, true)
+        try bf.writeTo(out) finally out.close()
+        key -> cap
       }
     }
 

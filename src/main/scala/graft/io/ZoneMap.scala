@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * Parquet's own row-group stats already prune — but only after the
   * scan has LISTED and OPENED every footer, which at a 200k-file tier
   * is 200k round trips per lookup on an object store. The manifest
-  * answers the same min/max question in one read: the generalization
-  * of `DerivedStore`'s version-level `_keysummary` down to file grain
+  * answers the same min/max question in one read: the version-level
+  * key range of `DerivedStore`'s `_stats` record, down to file grain
   * (r11 verdict #4). `SortedLayout.writeRangeSorted` makes the ranges
   * disjoint, so a point key matches ≤2 files (one, or two when it
   * lands on a file boundary).
@@ -147,8 +147,7 @@ object ZoneMap {
     * next = prev entries — restricted to `keptNames` when given (the
     * files that moved as bytes) — plus ONE stats pass over `newFiles`.
     * A prev manifest keyed on a DIFFERENT column cannot be merged
-    * (mixed-key entries would mis-prune), so it recomputes in full —
-    * the kname discipline the key summary keeps. */
+    * (mixed-key entries would mis-prune), so it recomputes in full. */
   def mergeManifest(s: SparkSession, prevTableDir: String, destDir: String,
                     key: String, newFiles: Seq[String],
                     keptNames: Option[Set[String]] = None): Unit =

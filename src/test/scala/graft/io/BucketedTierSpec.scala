@@ -107,13 +107,13 @@ class BucketedTierSpec extends SparkSpec {
       val m = ZoneMap.manifestOf(spark, v2)
       assert(m.exists(_.entries.map(_._1).toSet == v2Bytes.keySet),
         s"manifest must cover copied + rewritten files")
-      assert(DerivedStore.statsOfVersion(spark, v2).exists(_._1 == c2.size),
-        s"_stats must be exact: ${DerivedStore.statsOfVersion(spark, v2)}")
+      assert(DerivedStore.rowStatsOfVersion(spark, v2).map(_.rows).exists(_ == c2.size),
+        s"_stats must be exact: ${DerivedStore.rowStatsOfVersion(spark, v2).map(_.rows)}")
 
-      // the merged _keysummary/_keybloom still gate re-ingestion: a
-      // doc_id that entered THROUGH the bucketed merge (so its key
-      // lives only in the merged sidecars) must route a re-append to
-      // the full rebuild, not a mislabeling merge
+      // the recomputed _stats and the merged _keybloom still gate
+      // re-ingestion: a doc_id that entered THROUGH the bucketed merge
+      // (so its key lives only in the merged sidecars) must route a
+      // re-append to the full rebuild, not a mislabeling merge
       val reingest = src.withColumn("doc_id", lit(-7L))
       val stage2 = tmpDir("bucketed-reingest")
       reingest.coalesce(1).write.parquet(s"$stage2/d")

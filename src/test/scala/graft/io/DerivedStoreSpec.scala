@@ -263,8 +263,9 @@ class DerivedStoreSpec extends SparkSpec {
         summaryKey = Some("n_nationkey")).count(): Unit
       val store = DerivedStore.storePath(dir, "nation_sum")
       val fs = fsOf(store)
-      assert(fs.exists(new Path(s"$store/v=1/_keysummary")),
-        "declared summaryKey must publish the sidecar beside the fingerprint")
+      assert(DerivedStore.rowStatsOfVersion(spark, s"$store/v=1").flatMap(_.bloom)
+          .exists(_._1 == "n_nationkey"),
+        "declared summaryKey must record its bloom capacity on the key's _stats line")
       val prev = spark.read.parquet(s"$store/v=1")
 
       assert(fs.exists(new Path(s"$store/v=1/_keybloom")),

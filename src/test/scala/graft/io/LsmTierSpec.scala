@@ -87,21 +87,22 @@ class LsmTierSpec extends SparkSpec {
       val m = ZoneMap.manifestOf(spark, v2)
       assert(m.exists(_.entries.map(_._1).toSet == v2Files),
         s"manifest must cover the appended runs: ${m.map(_.entries.map(_._1).toSet)} vs $v2Files")
-      // the key summary's range covers the merged key space exactly
-      val summary = spark.read.parquet(s"$v2/_keysummary").head()
+      // the key's _stats line records the bloom the probe trusts (its
+      // range is pinned exact below, with the rest of the profile)
       val trueRange = served2.agg(min("doc_id"), max("doc_id")).head()
-      assert(summary.getAs[Long]("kmin") == trueRange.getLong(0) &&
-        summary.getAs[Long]("kmax") == trueRange.getLong(1),
-        s"merged summary range must be exact: $summary vs $trueRange")
+      assert(DerivedStore.rowStatsOfVersion(spark, v2).flatMap(_.bloom)
+          .exists(_._1 == "doc_id"),
+        s"the merged _stats must record the bloom capacity on the key's line: " +
+          s"${DerivedStore.rowStatsOfVersion(spark, v2)}")
       assert(new java.io.File(s"$v2/_keybloom").isFile,
         "the bloom merges (or rebuilds) across the append, never silently drops")
       // the row-stats sidecar added at delta cost is EXACT (it feeds
       // the optimizer through TierStatsCatalog, so a lie mis-sizes
       // joins)
-      assert(DerivedStore.statsOfVersion(spark, v2)
-          .exists(_._1 == served2.count()),
+      assert(DerivedStore.rowStatsOfVersion(spark, v2).map(_.rows)
+          .exists(_ == served2.count()),
         s"merged _stats rows must equal the served rows: " +
-          s"${DerivedStore.statsOfVersion(spark, v2)}")
+          s"${DerivedStore.rowStatsOfVersion(spark, v2).map(_.rows)}")
       // the merged column profile stays HONEST (r14 review): the
       // summary key (doc_id — disjoint across deltas by contract) sums
       // its NDVs, so it tracks the true count; the SORT key (term —
@@ -165,6 +166,79 @@ class LsmTierSpec extends SparkSpec {
           "the rewrite re-lays the base instead of copying it")
       } finally DerivedStore.lsmBudgetOverride = None
       docs.unpersist(): Unit
+    } finally prevRoot match {
+      case Some(v) => sys.props("graft.graphstore.dir") = v
+      case None => sys.props.remove("graft.graphstore.dir"): Unit
+    }
+  }
+
+  test("overlap probe on a version without the bloom field (takedown-dropped _stats, a _stats line that predates the field): exact answers, and the next LSM append records the bloom again") {
+    val dir = tmpDir("lsm-fallback-src")
+    val prevRoot = sys.props.get("graft.graphstore.dir")
+    sys.props("graft.graphstore.dir") = tmpDir("lsm-fallback-store")
+    try {
+      val nation = Tables.load(spark, sfDir, "nation").select("n_nationkey", "n_name")
+      def keys(from: Int, until: Int) =
+        nation.filter(col("n_nationkey") >= from && col("n_nationkey") < until)
+      def append(from: Int, until: Int): Unit = {
+        val stage = tmpDir("lsm-fallback-delta")
+        keys(from, until).coalesce(1).write.parquet(s"$stage/d")
+        appendParts(s"$stage/d", s"$dir/nation.parquet")
+      }
+      writeTable(keys(0, 10), dir, "nation")
+      val lsm = DerivedStore.Refresh.Lsm(DerivedStore.perKeyDelta("nation", "n_nationkey")(
+        (_, _, _, delta) => delta.select("n_nationkey", "n_name")))
+      def serve(): DataFrame =
+        DerivedStore.served(spark, dir, "fallback", Seq("nation"),
+          (s, d) => Tables.load(s, d, "nation").select("n_nationkey", "n_name"), lsm,
+          numFiles = 1, sortKey = "n_nationkey", summaryKey = Some("n_nationkey"))
+      def bloomField(v: String) =
+        DerivedStore.rowStatsOfVersion(spark, v).flatMap(_.bloom)
+      def probe(v: String, ks: Seq[Long]): Boolean =
+        DerivedStore.deltaKeysOverlap(Tables.loadAt(spark, v),
+          spark.createDataFrame(ks.map(Tuple1(_))).toDF("n_nationkey"), "n_nationkey")
+
+      assert(serve().count() == 10)
+      val v1 = versionDir(dir, "fallback")
+      assert(bloomField(v1).contains("n_nationkey" -> 1024L), s"${bloomField(v1)}")
+
+      // the earlier format: the key's line without its 8th field
+      val stats = new org.apache.hadoop.fs.Path(v1, DerivedStore.RowStatsFile)
+      val fs = stats.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Sidecar.write(fs, stats, Sidecar.read(fs, stats).get.split("\n")
+        .map(_.split("\t", -1).take(7).mkString("\t")).mkString("\n"))
+      assert(bloomField(v1).isEmpty && DerivedStore.rowStatsOfVersion(spark, v1).nonEmpty)
+      assert(probe(v1, Seq(3L)), "a re-ingested key must be flagged")
+      assert(!probe(v1, Seq(1000L, 1001L)), "a disjoint delta must be cleared")
+
+      append(10, 15)
+      var snap = new TierSnapshot(spark)
+      assert(serve().count() == 15)
+      assert(snap.recordOf(dir, "fallback").contains(RefreshRecord("merge", "lsm-append")),
+        s"${snap.published}")
+      val v2 = versionDir(dir, "fallback")
+      assert(bloomField(v2).exists(_._1 == "n_nationkey"),
+        s"the append must publish _stats with the bloom field again: ${bloomField(v2)}")
+      assert(probe(v2, Seq(12L)), "a key the append added must be flagged")
+
+      // a takedown drops _stats: no facts at all, the exact probe answers
+      assert(TargetedDelete.deleteIds(spark, v2, "n_nationkey", Seq(3L)).rowsDeleted == 1)
+      assert(DerivedStore.rowStatsOfVersion(spark, v2).isEmpty)
+      spark.catalog.clearCache()
+      assert(probe(v2, Seq(12L)), "a re-ingested key must be flagged")
+      assert(!probe(v2, Seq(1000L, 1001L)), "a disjoint delta must be cleared")
+      assert(!probe(v2, Seq(3L)), "a taken-down key is no longer in the tier")
+
+      append(15, 20)
+      snap = new TierSnapshot(spark)
+      assert(serve().count() == 19)
+      assert(snap.recordOf(dir, "fallback").contains(RefreshRecord("merge", "lsm-append")),
+        s"${snap.published}")
+      val v3 = versionDir(dir, "fallback")
+      assert(bloomField(v3).exists(_._1 == "n_nationkey"),
+        s"the append after a takedown must publish the bloom field again: ${bloomField(v3)}")
+      assert(DerivedStore.rowStatsOfVersion(spark, v3).map(_.rows).contains(19L))
+      assert(probe(v3, Seq(17L)) && !probe(v3, Seq(1000L)))
     } finally prevRoot match {
       case Some(v) => sys.props("graft.graphstore.dir") = v
       case None => sys.props.remove("graft.graphstore.dir"): Unit

@@ -20,6 +20,8 @@ object RefreshRecordCrash {
   * version: one test per publish path (full, `Refresh.Merge`, LSM
   * append and rewrite, bucketed full and patch, `servedDir` full and
   * merge), and a stage that fails before its commit leaves no record.
+  * Each path also pins the exact set of `_`-prefixed entries its
+  * version commits.
   * The churn-sentinel commit's record is pinned in `DerivedStoreSpec`. */
 class RefreshRecordSpec extends SparkSpec {
 
@@ -61,7 +63,21 @@ class RefreshRecordSpec extends SparkSpec {
 
   private def serve(dir: String, name: String, refresh: Refresh): Long =
     DerivedStore.served(spark, dir, name, Seq("nation"), build, refresh,
-      numFiles = 1, sortKey = "n_nationkey").count()
+      numFiles = 1, sortKey = "n_nationkey", summaryKey = Some("n_nationkey")).count()
+
+  /** Every `_`-prefixed entry a frame-tier version with a summary key
+    * under the bloom budget commits (`_buckets` too when bucketed). */
+  private val frameSidecars =
+    Set("_SUCCESS", "_fingerprint", "_refresh", "_stats", "_filemap", "_keybloom")
+
+  /** The `_`-prefixed entries of a version dir. */
+  private def sidecarsAt(versionDir: String): Set[String] =
+    new java.io.File(versionDir).list().filter(_.startsWith("_")).toSet
+
+  private def sidecars(dir: String, name: String): Set[String] = {
+    val store = DerivedStore.storePath(dir, name)
+    sidecarsAt(s"$store/v=${AtomicPublish.currentVersion(spark, store).get}")
+  }
 
   /** (committed version, its record) of the store. */
   private def current(dir: String, name: String): (Long, Option[RefreshRecord]) = {
@@ -76,12 +92,14 @@ class RefreshRecordSpec extends SparkSpec {
       val store = DerivedStore.storePath(dir, "rec_full")
       assert(Files.readString(Paths.get(s"$store/v=1/_refresh")) == "mode=full layout=range")
       assert(current(dir, "rec_full") == (1L -> Some(RefreshRecord("full", "range"))))
+      assert(sidecars(dir, "rec_full") == frameSidecars)
       assert(serve(dir, "rec_full", Refresh.Rebuild) == 10)
       assert(current(dir, "rec_full")._1 == 1L, "a fingerprint-fresh serve publishes nothing")
       append(dir, 10, 25)
       assert(serve(dir, "rec_full", Refresh.Rebuild) == 25)
       assert(current(dir, "rec_full") == (2L -> Some(RefreshRecord("full", "range"))),
         "Rebuild never merges, even on append-only drift")
+      assert(sidecars(dir, "rec_full") == frameSidecars)
     }
   }
 
@@ -93,6 +111,7 @@ class RefreshRecordSpec extends SparkSpec {
       append(dir, 10, 25)
       assert(serve(dir, "rec_merge", merge) == 25)
       assert(current(dir, "rec_merge") == (2L -> Some(RefreshRecord("merge", "range"))))
+      assert(sidecars(dir, "rec_merge") == frameSidecars)
     }
   }
 
@@ -104,11 +123,13 @@ class RefreshRecordSpec extends SparkSpec {
       append(dir, 10, 15)
       assert(serve(dir, "rec_lsm", lsm) == 15)
       assert(current(dir, "rec_lsm") == (2L -> Some(RefreshRecord("merge", "lsm-append"))))
+      assert(sidecars(dir, "rec_lsm") == frameSidecars)
       append(dir, 15, 25)
       DerivedStore.lsmBudgetOverride = Some(0L)
       try assert(serve(dir, "rec_lsm", lsm) == 25)
       finally DerivedStore.lsmBudgetOverride = None
       assert(current(dir, "rec_lsm") == (3L -> Some(RefreshRecord("merge", "lsm-rewrite"))))
+      assert(sidecars(dir, "rec_lsm") == frameSidecars)
     }
   }
 
@@ -117,10 +138,12 @@ class RefreshRecordSpec extends SparkSpec {
       val bucketed = Refresh.Bucketed((s, d, _, deltas) => Some(deltaRows(s, d, deltas)), 4)
       assert(serve(dir, "rec_bucketed", bucketed) == 10)
       assert(current(dir, "rec_bucketed") == (1L -> Some(RefreshRecord("full", "bucketed"))))
+      assert(sidecars(dir, "rec_bucketed") == frameSidecars + "_buckets")
       append(dir, 10, 25)
       assert(serve(dir, "rec_bucketed", bucketed) == 25)
       assert(current(dir, "rec_bucketed") ==
         (2L -> Some(RefreshRecord("merge", "bucketed-patch"))))
+      assert(sidecars(dir, "rec_bucketed") == frameSidecars + "_buckets")
     }
   }
 
@@ -138,10 +161,12 @@ class RefreshRecordSpec extends SparkSpec {
       val p1 = serveDir()
       assert(p1.endsWith("v=1") && spark.read.parquet(s"$p1/rows").count() == 10)
       assert(DerivedStore.refreshOf(spark, p1).contains(RefreshRecord("full", "dir")))
+      assert(sidecarsAt(p1) == Set("_SUCCESS", "_fingerprint", "_refresh"))
       append(dir, 10, 25)
       val p2 = serveDir()
       assert(p2.endsWith("v=2") && spark.read.parquet(s"$p2/rows").count() == 25)
       assert(DerivedStore.refreshOf(spark, p2).contains(RefreshRecord("merge", "dir-copy")))
+      assert(sidecarsAt(p2) == Set("_SUCCESS", "_fingerprint", "_refresh"))
       assert(copiedRecord.contains(false),
         s"the byte-copy must leave the served version's record behind: $copiedRecord")
     }

@@ -39,8 +39,8 @@ class TierStatsSpec extends SparkSpec {
       // the sidecar recorded exact rows, and the serve registered them
       val store = DerivedStore.storePath(dir, "statsdemo")
       val v = s"$store/v=${graft.io.AtomicPublish.currentVersion(spark, store).get}"
-      val sidecar = DerivedStore.statsOfVersion(spark, v)
-      assert(sidecar.exists(_._1 == 500), s"_stats must be exact: $sidecar")
+      val sidecar = DerivedStore.rowStatsOfVersion(spark, v).map(_.rows)
+      assert(sidecar.exists(_ == 500), s"_stats must be exact: $sidecar")
 
       // a dim too big to broadcast on its own, so only the TIER side's
       // estimate decides the join strategy

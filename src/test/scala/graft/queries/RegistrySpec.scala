@@ -31,8 +31,9 @@ class RegistrySpec extends SparkSpec {
 
   test("no registry plan unions arms that re-read one input") {
     val planned = RegistrySweep.outcomes.filter(_.fanOuts.isDefined)
-    assert(planned.size > Registry.queries.size / 2,
-      s"only ${planned.size} noop-write plans were captured")
+    assert(planned.size == Registry.queries.size,
+      s"no noop-write plan was captured for " +
+        (Registry.queries.keySet -- planned.map(_.name)).toSeq.sorted.mkString(", "))
     val found = planned.collect {
       case o if o.fanOuts.exists(_.nonEmpty) => o.name -> o.fanOuts.get
     }.toMap
@@ -41,6 +42,48 @@ class RegistrySpec extends SparkSpec {
     assert(bad.isEmpty, s"one pass per fan-out (generate the arms): ${bad.mkString(" | ")}")
     val stale = fanOutAllowed.keySet -- found.keySet
     assert(stale.isEmpty, s"allow-listed queries that no longer fan out: $stale")
+  }
+
+  test("no tier build unions arms that re-read one input") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every execution a tier build runs — its writes, the publish's
+    // sidecar passes, the components loop's rounds — not only the
+    // registry write that reads the served tier afterwards
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val prevRoot = sys.props.get("graft.graphstore.dir")
+    sys.props("graft.graphstore.dir") = tmpDir("tier-fanout-root")
+    graft.core.Sessions.drain(spark)
+    spark.listenerManager.register(listener)
+    try {
+      graft.text.TokenStore.served(spark, sfDir).count()
+      graft.dedup.ShingleStore.served(spark, sfDir).count()
+      graft.dedup.BandIndexStore.corpusIndex(spark, sfDir).count()
+      graft.dedup.ClusterStore.lshComponents(spark, sfDir).count()
+      graft.dedup.ClusterStore.embComponents(spark, sfDir).count()
+      graft.io.GraphStore.purchaseEdges(spark, sfDir).count()
+      graft.io.GraphStore.cosupplyUnd(spark, sfDir).count()
+      graft.multimodal.Multimodal.m7Index(spark, sfDir)
+      graft.sim.Similarity.s12Index(spark, sfDir)
+      graft.core.Sessions.drain(spark)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      graft.core.Caching.releaseAll()
+      prevRoot match {
+        case Some(v) => sys.props("graft.graphstore.dir") = v
+        case None => sys.props.remove("graft.graphstore.dir"): Unit
+      }
+    }
+    val plans = seen.asScala.toSeq
+    assert(plans.size > 9, s"only ${plans.size} executions were captured")
+    val found = plans.flatMap(qe => RegistrySweep.fanOuts(qe.analyzed)).distinct
+    assert(found.isEmpty, s"one pass per fan-out (generate the arms): ${found.mkString(" | ")}")
   }
 
   test("queries are deterministic across runs (sample)") {

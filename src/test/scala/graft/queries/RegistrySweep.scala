@@ -23,18 +23,19 @@ import graft.core.{Caching, Sessions, Tables}
   * the session cache manager still holds blocks; a leaky query's blocks
   * are cleared so the next query is judged on its own.
   *
-  * A `QueryExecutionListener` keeps each noop write's `QueryExecution`
-  * (the one the write itself ran, so nothing is analyzed or optimized
-  * twice), and the sweep records the fan-outs ([[fanOuts]]) of its
-  * analyzed plan.
+  * A `QueryExecutionListener` on each frame's own session keeps its
+  * noop write's `QueryExecution` (the one the write itself ran, so
+  * nothing is analyzed or optimized twice), and the sweep records the
+  * fan-outs ([[fanOuts]]) of its analyzed plan. The frame's session,
+  * not the sweep's: a query may build its plan on a child session (q85
+  * scopes its recursion limit to `s.newSession()`), whose executions a
+  * parent-session listener never sees.
   */
 object RegistrySweep {
 
   /** Per query, in name order: the error it threw, if any, whether it
     * left cached blocks behind after release, and the fan-outs of its
-    * noop write's analyzed plan (None: no write plan was seen — a
-    * query built on a child session reports to that session's
-    * listeners). */
+    * noop write's analyzed plan (None: no write plan was seen). */
   final case class Outcome(name: String, error: Option[Throwable], leaked: Boolean,
                            fanOuts: Option[Seq[String]])
 
@@ -50,19 +51,24 @@ object RegistrySweep {
         if (qe.logical.isInstanceOf[V2WriteCommand]) write.set(qe)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    Sessions.drain(spark)
-    spark.listenerManager.register(listener)
-    try Registry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    Registry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       write.set(null)
-      val run = Try(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-      Sessions.drain(spark)
+      val run = Try(fn(spark, sfDir)).flatMap { df =>
+        val sess = df.sparkSession
+        Sessions.drain(sess)
+        sess.listenerManager.register(listener)
+        try Try(df.write.format("noop").mode("overwrite").save())
+        finally {
+          Sessions.drain(sess)
+          sess.listenerManager.unregister(listener)
+        }
+      }
       val fans = Option(write.get).map(qe => fanOuts(qe.analyzed))
       Caching.releaseAll()
       val leaked = !spark.sharedState.cacheManager.isEmpty
       if (leaked) spark.catalog.clearCache()
       Outcome(name, run.failed.toOption, leaked, fans)
     }
-    finally spark.listenerManager.unregister(listener)
   }
 
   /** Every `Union` in `plan`, subqueries included, that has two
