@@ -1,10 +1,18 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /** Session factory for the graft engine, and the one way the harnesses
   * (Bench, Verify, Time, ScaleProbe, ScanCount, the specs) run a query,
-  * release its caches and wait for its listener events.
+  * release its caches, wait for its listener events and capture what
+  * it executed ([[capture]], the one listener in the engine).
   *
   * Defaults are chosen for a 1000-executor cluster mindset tested on
   * `local[32]`: AQE on (runtime coalesce + skew-join handling),
@@ -67,9 +75,52 @@ object Sessions {
 
   /** Block until every event already posted to the context's listener
     * bus has been delivered: job/stage/task events and the SQL
-    * execution ends that feed `QueryExecutionListener`s, including
-    * those of child sessions (the bus is per context). An action posts
-    * its execution end before it returns, so after `run(df); drain(s)`
-    * every listener has seen `df`'s execution — no polling, no sleep. */
+    * execution ends, including those of child sessions (the bus is per
+    * context). An action posts its execution end before it returns, so
+    * after `run(df); drain(s)` every listener has seen `df`'s execution
+    * — no polling, no sleep. */
   def drain(spark: SparkSession): Unit = GraftPlanBridge.drainListeners(spark)
+
+  /** One named SQL execution (`save`, `count`, `collect`, …) that ended
+    * during a [[capture]]: its plans, duration and failure, if any. */
+  final case class Execution(name: String, qe: QueryExecution, durationNs: Long,
+                             failure: Option[Throwable])
+
+  /** What one [[capture]] saw, each in delivery order: the named
+    * executions of every session on the context, the jobs submitted and
+    * the stages that ran (a job's skipped stages never complete). */
+  final case class Capture(executions: Seq[Execution],
+                           jobs: Seq[SparkListenerJobStart],
+                           stages: Seq[StageInfo])
+
+  /** Run `action` with one listener on the context's bus and return its
+    * result with what the listener saw. The bus is drained before the
+    * listener is added, so no earlier event lands in the capture, and
+    * again after `action`, so every event it caused has arrived. The bus
+    * is per context, so a frame built on a child session is captured
+    * like any other. */
+  def capture[A](spark: SparkSession)(action: => A): (A, Capture) = {
+    val executions = new ConcurrentLinkedQueue[Execution]()
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val stages = new ConcurrentLinkedQueue[StageInfo]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add(j): Unit
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        stages.add(s.stageInfo): Unit
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case end: SparkListenerSQLExecutionEnd =>
+          GraftPlanBridge.executionEnd(end).foreach { case (name, qe, ns, failure) =>
+            executions.add(Execution(name, qe, ns, failure))
+          }
+        case _ =>
+      }
+    }
+    drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val result = action
+      drain(spark)
+      (result, Capture(executions.asScala.toSeq, jobs.asScala.toSeq, stages.asScala.toSeq))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * swap is TWO renames (target→.old, staging→target), so there is a
   * brief window where the live path is absent and a concurrent reader
   * errors with "path does not exist" (never partial data). When
-  * readers must never miss, use [[publishVersioned]], whose pointer
+  * readers must never miss, use [[publishVersionedOcc]], whose pointer
   * flip (_SUCCESS-committed `v=n` prefix) has no such window.
   *
   * The reference's K1 delete-then-append has a visible window where
@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * closes it. On HDFS-like filesystems the rename is O(1) metadata;
   * on object stores it degrades to copy — there the same contract
   * comes from publishing a new versioned prefix and flipping a
-  * pointer, which [[publishVersioned]] models.
+  * pointer, which [[publishVersionedOcc]] models.
   */
 object AtomicPublish {
 
@@ -61,22 +61,6 @@ object AtomicPublish {
       throw new IllegalStateException(s"publish rename failed for $table")
     fs.delete(old, true)
     written
-  }
-
-  /** Object-store flavour: each publish writes `table/v=<n+1>/` and the
-    * reader resolves the highest committed version — no rename of data
-    * files at all, and old versions double as snapshots until a
-    * retention sweep ([[Backup.retentionSweep]] semantics) drops them.
-    */
-  def publishVersioned(df: DataFrame, table: String): Long = {
-    val spark = df.sparkSession
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = currentVersion(spark, table).getOrElse(0L) + 1
-    val dir = new Path(s"$table/v=$next")
-    df.write.mode("overwrite").parquet(dir.toString)
-    // the _SUCCESS marker written by the committer IS the commit record
-    require(fs.exists(new Path(dir, "_SUCCESS")), s"no commit marker in $dir")
-    next
   }
 
   def currentVersion(spark: SparkSession, table: String): Option[Long] = {
@@ -144,7 +128,7 @@ object AtomicPublish {
     * T4/T5 tier builds date-suffixed indexes (`hr_emp_center_20230301`
     * etc., `Elastic_indexing.py:193-214`, the index families in
     * `index_counts.ipynb`) and flips serving to the new set at once —
-    * the per-table pointer ([[publishVersioned]]) can't give that
+    * the per-table pointer ([[publishVersionedOcc]]) can't give that
     * cross-table guarantee: a reader could see table A at v2 joined
     * against table B at v1. Here every table writes under
     * `base/<name>/v=<n>/` and ONE manifest file `base/_manifest/v=<n>`
@@ -238,6 +222,9 @@ object AtomicPublish {
     * commit rename repeats. Both racers' versions end up committed
     * (no lost update, serialized by version number), which is exactly
     * Delta/Iceberg's optimistic protocol reduced to this layout.
+    * Readers resolve the highest committed `v=<n>` ([[readCurrent]]);
+    * older versions stay readable as snapshots until [[Vacuum.sweep]]
+    * drops them.
     */
   def publishVersionedOcc(df: DataFrame, table: String,
                           maxAttempts: Int = 5): Long =

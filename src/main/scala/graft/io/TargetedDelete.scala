@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * Visibility: the swap is delete-old-then-keep-new within the live
   * directory — a concurrent reader can see a partial view during the
   * swap window. For serving tables, compose with
-  * [[AtomicPublish.publishVersioned]] instead (write the post-delete
+  * [[AtomicPublish.publishVersionedOcc]] instead (write the post-delete
   * table as version n+1); this in-place flavor is for the
   * pipeline-internal stores where the writer owns the directory.
   */

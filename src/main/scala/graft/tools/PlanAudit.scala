@@ -1,11 +1,15 @@
 package graft.tools
 
-import graft.core.Sessions
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
-/** Audit every registry query's physical plan for scale red flags:
-  * cartesian products and nested-loop joins that aren't the declared
-  * brute-force baselines, and missing pushed filters on filtered
-  * scans. Prints a one-line verdict per query.
+import graft.core.Sessions
+import graft.pipeline.QueryMetrics
+
+/** Audit every registry query's physical plan for scale red flags
+  * ([[verdict]]): cartesian products, nested-loop joins that aren't the
+  * declared brute-force baselines, and partition-less windows beyond a
+  * query's bounded allowance. Prints a one-line verdict per query.
   */
 object PlanAudit {
   // brute-force-by-design: non-equi join is the point; q37's cross is
@@ -140,6 +144,28 @@ object PlanAudit {
     "q97_hdr_quantiles" -> 1,
   )
 
+  /** The red flags of one query's physical plan (empty: ok). Works on
+    * an unexecuted plan (the main's initial adaptive plan) and on an
+    * executed one (its final plan). Joins are found in subquery plans
+    * and cached frames' plans too. */
+  def verdict(name: String, plan: SparkPlan): Seq[String] = {
+    def withSubqueries(p: SparkPlan): Iterator[SparkPlan] =
+      QueryMetrics.allNodes(p).flatMap(n => Iterator(n) ++ n.subqueries.iterator.flatMap(withSubqueries))
+    val nodes = withSubqueries(plan).toSeq
+    val plWindows = PlanCheck.partitionlessWindows(plan)
+    val allowed = boundedPartitionlessWindows.getOrElse(name, 0)
+    Seq(
+      if (nodes.exists(_.isInstanceOf[CartesianProductExec])) Some("CARTESIAN") else None,
+      if (!expectedNestedLoop(name) && nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
+        Some("NESTED-LOOP")
+      else None,
+      if (plWindows.size > allowed)
+        Some(s"SINGLE-PARTITION-WINDOW x${plWindows.size} (allowed $allowed): " +
+          plWindows.mkString("; "))
+      else None,
+    ).flatten
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local(cores = 8, appName = "graft-plan-audit")
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
@@ -151,20 +177,7 @@ object PlanAudit {
       graft.io.TableStats.analyzeAll(spark, sfDir): Unit
     var flags = 0
     for ((name, fn) <- graft.queries.Registry.queries.toSeq.sortBy(_._1)) {
-      val df = fn(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      val cartesian = plan.contains("CartesianProduct")
-      val bnlj = plan.contains("BroadcastNestedLoopJoin")
-      val plWindows = PlanCheck.partitionlessWindows(df)
-      val allowed = boundedPartitionlessWindows.getOrElse(name, 0)
-      val smells = Seq(
-        if (cartesian) Some("CARTESIAN") else None,
-        if (bnlj && !expectedNestedLoop(name)) Some("NESTED-LOOP") else None,
-        if (plWindows.size > allowed)
-          Some(s"SINGLE-PARTITION-WINDOW x${plWindows.size} (allowed $allowed): " +
-            plWindows.mkString("; "))
-        else None,
-      ).flatten
+      val smells = verdict(name, fn(spark, sfDir).queryExecution.executedPlan)
       if (smells.nonEmpty) { flags += 1; println(s"FLAG $name: ${smells.mkString(",")}") }
       else println(s"ok   $name")
     }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.window.{WindowExecBase, WindowGroupLimitExec}
 
+import graft.pipeline.QueryMetrics
+
 /** Structural plan predicates shared by the [[PlanAudit]] sweep and
   * the PlanSpec pins — the round-4 verdict's "partition-less window"
   * detector. A window with an empty PARTITION BY requires AllTuples
@@ -21,11 +23,6 @@ object PlanCheck {
     case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
     case q: QueryStageExec        => unwrap(q.plan)
     case other                    => other
-  }
-
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
-    val u = unwrap(p)
-    u +: u.children.flatMap(nodes)
   }
 
   /** Partition-less windows that are NOT an auto-recognized bounded
@@ -48,11 +45,16 @@ object PlanCheck {
     * q74's lag over the |years|-row aggregate).
     */
   def partitionlessWindows(df: DataFrame): Seq[String] =
-    nodes(df.queryExecution.executedPlan).collect {
+    partitionlessWindows(df.queryExecution.executedPlan)
+
+  /** [[partitionlessWindows]] of a physical plan, cached frames' plans
+    * included ([[QueryMetrics.allNodes]]). */
+  def partitionlessWindows(plan: SparkPlan): Seq[String] =
+    QueryMetrics.allNodes(plan).collect {
       case w: WindowExecBase
           if w.partitionSpec.isEmpty && !boundedInput(w.child) =>
         s"Window[${w.windowExpression.map(_.sql).mkString(",").take(100)}]"
-    }
+    }.toSeq
 
   private def boundedInput(p: SparkPlan): Boolean = unwrap(p) match {
     case _: WindowGroupLimitExec        => true

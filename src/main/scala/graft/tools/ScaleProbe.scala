@@ -1,14 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.{Sessions, Tables}
 import graft.pipeline.QueryMetrics
 
 /** The 100×-question answered by measurement: run the quadratic-risk
-  * queries at two scale factors, record shuffle volume via
-  * [[QueryMetrics]], and report the growth exponent relative to input
-  * rows. A blocked/pruned plan shows ~linear shuffle growth; a
+  * queries at two scale factors, record shuffle volume from the
+  * [[QueryMetrics]] records of one [[Sessions.capture]] per run, and
+  * report the growth exponent relative to input rows. A
+  * blocked/pruned plan shows ~linear shuffle growth; a
   * candidate generator that secretly scales with block² shows up here
   * long before it shows up as a 100 TB incident.
   *
@@ -216,36 +215,19 @@ object ScaleProbe {
     println(line)
   }
 
-  /** Probe a query by the session its DataFrame actually belongs to.
-    * `QueryMetrics` registers on the session-scoped
-    * `ExecutionListenerManager`, and a registry query is free to build
-    * on a CHILD session (q85 scopes its recursion-limit conf on
-    * `s.newSession()`) — a listener on the parent session never sees
-    * that execution and the probe reads a phantom 0. */
+  /** The shuffle bytes of running `df` ([[shuffleBytes]] over one
+    * [[Sessions.capture]] of its noop write). */
   def shuffleBytesOf(df: org.apache.spark.sql.DataFrame): Long =
-    shuffleBytes(df.sparkSession)(Sessions.run(df))
+    shuffleBytes(Sessions.capture(df.sparkSession)(Sessions.run(df))._2
+      .executions.map(QueryMetrics.of))
 
-  /** The shuffle bytes of `action` ([[records]]). A query with internal
+  /** The shuffle bytes of one run's records. A query with internal
     * persists emits SEVERAL records (one per materializing action), so
     * take the MAX record, not the sum: cached-plan SQLMetrics are
     * CUMULATIVE and are re-read by every record whose plan scans the
     * cache, so the final action's record already contains the cache
     * build's shuffles; summing would count them once per record.
     */
-  def shuffleBytes(spark: SparkSession)(action: => Unit): Long =
-    records(spark)(action).map(_.shuffleBytes).maxOption.getOrElse(0L)
-
-  /** Run `action` under a fresh listener; return every [[QueryMetrics]]
-    * record it produced, in order. The bus is drained before the
-    * listener attaches (no earlier execution can land in it) and after
-    * the action (every record it produced has arrived). */
-  def records(spark: SparkSession)(action: => Unit): Seq[QueryMetrics#Record] = {
-    Sessions.drain(spark)
-    val l = QueryMetrics.attach(spark)
-    try {
-      action
-      Sessions.drain(spark)
-      l.snapshot
-    } finally QueryMetrics.detach(spark, l)
-  }
+  def shuffleBytes(records: Seq[QueryMetrics.Record]): Long =
+    records.map(_.shuffleBytes).maxOption.getOrElse(0L)
 }

@@ -1,10 +1,7 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicReference
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 
 import graft.core.Sessions
 import graft.pipeline.QueryMetrics
@@ -52,41 +49,22 @@ object ScanCount {
                    fn: (SparkSession, String) => DataFrame): SparkPlan = {
     // Constructing the frame first lets any store-materialization side
     // effects (GraphStore builds fire their own write actions) happen
-    // OFF the capture — otherwise the first listener event is the
-    // build's plan, not the query's.
+    // OFF the capture — otherwise the first execution is the build's
+    // plan, not the query's.
     fn(spark, dir): Unit
-    val captured = new AtomicReference[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      // keep the LAST delivered event: an execution nested in the noop
-      // write ends before it, so the final event IS the audited query
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        captured.set(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    // register on the FRAME's session, not the caller's: a query may
-    // build its plan on a child session (q85 scopes its recursion
-    // limit to s.newSession()), and a parent-session listener never
-    // sees a child session's executions — ScaleProbe.shuffleBytesOf's
-    // discipline
     val frame = fn(spark, dir)
-    val sess = frame.sparkSession
-    // deliver every execution the constructions fired BEFORE listening
-    // (a build-internal execution still queued from the warm
-    // construction once masqueraded as the query's plan: the round-9
-    // audit of a stale-tier query captured the build's sampling pass
-    // and under-counted the real scans)
-    Sessions.drain(spark)
-    sess.listenerManager.register(listener)
+    // the capture drains the bus before it listens: a build-internal
+    // execution still queued from the warm construction once
+    // masqueraded as the query's plan (the round-9 audit of a
+    // stale-tier query captured the build's sampling pass and
+    // under-counted the real scans)
     try {
-      Sessions.run(frame)
-      Sessions.drain(spark)
-      val qe = captured.get()
-      require(qe != null, "listener never fired")
-      qe.executedPlan
-    } finally {
-      sess.listenerManager.unregister(listener)
-      Sessions.release(spark)
-    }
+      // keep the LAST execution: one nested in the noop write ends
+      // before it, so the final one IS the audited query
+      val last = Sessions.capture(spark)(Sessions.run(frame))._2.executions.lastOption
+      require(last.isDefined, "no execution was captured")
+      last.get.qe.executedPlan
+    } finally Sessions.release(spark)
   }
 
   /** Print per-query scan counts: `ScanCount <sfDir> [names...]`

@@ -1,10 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Sessions
@@ -14,7 +9,8 @@ import graft.pipeline.QueryMetrics
   * run and release path (a fail-fast pass at sf0.001, then per query
   * one untimed warm-up run at the target SF and best-of-3 there through
   * the noop sink, blocking release between runs), then profile each
-  * query in one more, UNTIMED run — listeners stay off every timed run.
+  * query in one more, UNTIMED run under one [[Sessions.capture]] — the
+  * capture's listener stays off every timed run.
   * The target-SF warm-up builds that SF's tiers and resolves its
   * tables, so no timed run — and no `runs=` entry — includes a tier
   * build.
@@ -34,8 +30,9 @@ import graft.pipeline.QueryMetrics
   * `QueryPlanningTracker` — the same phases perfbench's `plans.plan_s`
   * sums.
   * `jobs`/`stages`/`tasks` count the jobs submitted and the stages and
-  * tasks that ran, construction included; `shufMB` is the run's
-  * shuffle volume (ScaleProbe's rule). One indented line per job names
+  * tasks that ran, construction included; `shufMB` is the shuffle
+  * volume of the same capture's executions (ScaleProbe's MAX rule).
+  * One indented line per job names
   * the stages it actually ran — a job's submitted list includes
   * ancestors Spark skips as already computed — so a many-job query
   * shows WHICH materialization (cache fill, broadcast build, AQE
@@ -83,16 +80,17 @@ object Time {
         Sessions.release(spark)
         (t, built)
       }.unzip
-      val (jobs, recs) = profile(spark, fn(spark, sfDir))
+      // construction inside the capture: its jobs count too
+      val prof = Sessions.capture(spark)(Sessions.run(fn(spark, sfDir)))._2
+      val recs = prof.executions.map(QueryMetrics.of)
       Sessions.release(spark)
-      val ran = jobs.ran.asScala.map(s => s.stageId -> s).toMap
-      val bytes = recs.map(_.shuffleBytes).maxOption.getOrElse(0L)
+      val ran = prof.stages.map(s => s.stageId -> s).toMap
       val planMs = recs.lastOption.map(_.planMs).getOrElse(0L)
       println(f"$name%-28s best=${ts.min}%7.3f  build=${builds.sorted.apply(1)}%6.3f  plan=$planMs%4d" +
         f"  runs=${ts.map(t => f"$t%.3f").mkString(",")}" +
-        f"  jobs=${jobs.started.size} stages=${jobs.ran.size} tasks=${jobs.ran.asScala.map(_.numTasks).sum}" +
-        f" shufMB=${bytes / 1e6}%.2f")
-      jobs.started.forEach { j =>
+        f"  jobs=${prof.jobs.size} stages=${prof.stages.size} tasks=${prof.stages.map(_.numTasks).sum}" +
+        f" shufMB=${ScaleProbe.shuffleBytes(recs) / 1e6}%.2f")
+      prof.jobs.foreach { j =>
         val executed = j.stageIds.flatMap(ran.get)
         val stageLabels = executed.map(s =>
           s"${s.stageId}:${s.name.takeWhile(_ != '\n').take(70)}(${s.numTasks}t)")
@@ -101,29 +99,5 @@ object Time {
       }
     }
     spark.stop()
-  }
-
-  /** Jobs submitted and stages completed while attached. */
-  private final class JobLog extends SparkListener {
-    val started = new ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val ran = new ConcurrentLinkedQueue[StageInfo]()
-    override def onJobStart(j: SparkListenerJobStart): Unit = started.add(j): Unit
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      ran.add(s.stageInfo): Unit
-  }
-
-  /** Build and run one query with the job log attached; return the log
-    * and the run's [[QueryMetrics]] records (shuffle bytes by
-    * ScaleProbe's MAX rule, plan time), every event delivered. The
-    * records come from the session the frame belongs to. */
-  private def profile(spark: SparkSession,
-                      build: => DataFrame): (JobLog, Seq[QueryMetrics#Record]) = {
-    Sessions.drain(spark)
-    val jobs = new JobLog
-    spark.sparkContext.addSparkListener(jobs)
-    try {
-      val df = build
-      (jobs, ScaleProbe.records(df.sparkSession)(Sessions.run(df)))
-    } finally spark.sparkContext.removeSparkListener(jobs)
   }
 }

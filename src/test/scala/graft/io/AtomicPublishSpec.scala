@@ -56,8 +56,8 @@ class AtomicPublishSpec extends SparkSpec {
     val table = tmpDir("atomic-ver") + "/nation"
     val nation = Tables.load(spark, sfDir, "nation")
     assert(AtomicPublish.currentVersion(spark, table).isEmpty)
-    val v1 = AtomicPublish.publishVersioned(nation, table)
-    val v2 = AtomicPublish.publishVersioned(nation.limit(3), table)
+    val v1 = AtomicPublish.publishVersionedOcc(nation, table)
+    val v2 = AtomicPublish.publishVersionedOcc(nation.limit(3), table)
     assert(v1 == 1 && v2 == 2)
     assert(AtomicPublish.readCurrent(spark, table).count() == 3)
     // old version still present as a snapshot
@@ -68,13 +68,13 @@ class AtomicPublishSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val table = tmpDir("atomic-diff") + "/nation"
     val nation = Tables.load(spark, sfDir, "nation")
-    AtomicPublish.publishVersioned(nation.filter(col("n_nationkey") < 20), table)
+    AtomicPublish.publishVersionedOcc(nation.filter(col("n_nationkey") < 20), table)
     // v2: drop key 0 (delete), keep 1..19 but rewrite key 5's name
     // (update), add keys 20.. (inserts)
     val v2 = nation.filter(col("n_nationkey") >= 1)
       .withColumn("n_name",
         when(col("n_nationkey") === 5, lit("rewritten")).otherwise(col("n_name")))
-    AtomicPublish.publishVersioned(v2, table)
+    AtomicPublish.publishVersionedOcc(v2, table)
 
     val diff = AtomicPublish.diffVersions(spark, table, Seq("n_nationkey"), 1L, 2L)
       .collect().map(r => r.getInt(0).toLong -> r.getString(1)).toMap

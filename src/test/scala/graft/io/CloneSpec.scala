@@ -15,7 +15,7 @@ class CloneSpec extends SparkSpec {
     val src = s"$root/nation"
     val dst = s"$root/nation_clone"
     val nation = Tables.load(spark, sfDir, "nation")
-    AtomicPublish.publishVersioned(nation, src)
+    AtomicPublish.publishVersionedOcc(nation, src)
 
     val pinned = Clone.shallowClone(spark, src, dst)
     assert(pinned == 1L)
@@ -27,7 +27,7 @@ class CloneSpec extends SparkSpec {
     assert(Clone.readClone(spark, dst).count() == nation.count())
 
     // snapshot isolation: a later publish to the source is invisible
-    AtomicPublish.publishVersioned(nation.limit(3), src)
+    AtomicPublish.publishVersionedOcc(nation.limit(3), src)
     assert(AtomicPublish.currentVersion(spark, src).contains(2L))
     assert(Clone.readClone(spark, dst).count() == nation.count())
 
@@ -42,12 +42,12 @@ class CloneSpec extends SparkSpec {
     val src = s"$root/region"
     val dst = s"$root/region_clone"
     val region = Tables.load(spark, sfDir, "region")
-    AtomicPublish.publishVersioned(region, src)
+    AtomicPublish.publishVersionedOcc(region, src)
     Clone.shallowClone(spark, src, dst)
 
     // age the pinned version out of retention
-    AtomicPublish.publishVersioned(region, src)
-    AtomicPublish.publishVersioned(region, src)
+    AtomicPublish.publishVersionedOcc(region, src)
+    AtomicPublish.publishVersionedOcc(region, src)
 
     Clone.materialize(spark, dst)
     assert(!Clone.isShallow(spark, dst))

@@ -298,19 +298,9 @@ class DerivedStoreSpec extends SparkSpec {
   test("a second serve of an unchanged tier launches no Spark job") {
     withIsolated { dir =>
       assert(serve(dir).count() == 25 && builds == 1)
-      graft.core.Sessions.drain(spark)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet(): Unit
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val again = serve(dir)
-        graft.core.Sessions.drain(spark)
-        assert(jobs.get == 0, "an unchanged served version must resolve without a schema-inference job")
-        assert(builds == 1 && again.columns.toSeq == Seq("n_nationkey", "n_name"))
-      } finally spark.sparkContext.removeSparkListener(l)
+      val (again, captured) = graft.core.Sessions.capture(spark)(serve(dir))
+      assert(captured.jobs.size == 0, "an unchanged served version must resolve without a schema-inference job")
+      assert(builds == 1 && again.columns.toSeq == Seq("n_nationkey", "n_name"))
     }
   }
 

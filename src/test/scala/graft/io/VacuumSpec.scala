@@ -13,7 +13,7 @@ class VacuumSpec extends SparkSpec {
   test("expired versions age out, keep window stays readable, torn publishes swept after grace") {
     val table = tmpDir("vacuum") + "/nation"
     val nation = Tables.load(spark, sfDir, "nation")
-    val versions = (1 to 5).map(_ => AtomicPublish.publishVersioned(nation, table))
+    val versions = (1 to 5).map(_ => AtomicPublish.publishVersionedOcc(nation, table))
     assert(versions == Seq(1L, 2L, 3L, 4L, 5L))
     // a torn publish: version dir without _SUCCESS
     val fs = fsOf(table)
@@ -40,7 +40,7 @@ class VacuumSpec extends SparkSpec {
 
   test("grace period shields an in-flight (uncommitted) publish") {
     val table = tmpDir("vacuum-grace") + "/nation"
-    AtomicPublish.publishVersioned(Tables.load(spark, sfDir, "nation"), table)
+    AtomicPublish.publishVersionedOcc(Tables.load(spark, sfDir, "nation"), table)
     val fs = fsOf(table)
     fs.mkdirs(new Path(s"$table/v=2")) // writer still running, no _SUCCESS yet
     val rep = Vacuum.sweep(spark, table, keepVersions = 1,
@@ -59,7 +59,7 @@ class VacuumSpec extends SparkSpec {
   test("vacuum never touches the current version") {
     val table = tmpDir("vacuum-current") + "/nation"
     val nation = Tables.load(spark, sfDir, "nation")
-    AtomicPublish.publishVersioned(nation, table)
+    AtomicPublish.publishVersionedOcc(nation, table)
     intercept[IllegalArgumentException] {
       Vacuum.sweep(spark, table, keepVersions = 0)
     }

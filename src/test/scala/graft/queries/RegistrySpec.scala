@@ -44,24 +44,24 @@ class RegistrySpec extends SparkSpec {
     assert(stale.isEmpty, s"allow-listed queries that no longer fan out: $stale")
   }
 
+  test("every registry query's executed plan passes the plan audit") {
+    val audited = RegistrySweep.outcomes.filter(_.planFlags.isDefined)
+    assert(audited.size == Registry.queries.size,
+      s"no noop-write plan was captured for " +
+        (Registry.queries.keySet -- audited.map(_.name)).toSeq.sorted.mkString(", "))
+    val flagged = audited.collect {
+      case o if o.planFlags.exists(_.nonEmpty) => s"${o.name}: ${o.planFlags.get.mkString(", ")}"
+    }
+    assert(flagged.isEmpty, s"plan-audit flags on the final plans: ${flagged.mkString(" | ")}")
+  }
+
   test("no tier build unions arms that re-read one input") {
-    import java.util.concurrent.ConcurrentLinkedQueue
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
     // every execution a tier build runs — its writes, the publish's
     // sidecar passes, the components loop's rounds — not only the
     // registry write that reads the served tier afterwards
-    val seen = new ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe): Unit
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     val prevRoot = sys.props.get("graft.graphstore.dir")
     sys.props("graft.graphstore.dir") = tmpDir("tier-fanout-root")
-    graft.core.Sessions.drain(spark)
-    spark.listenerManager.register(listener)
-    try {
+    val captured = try graft.core.Sessions.capture(spark) {
       graft.text.TokenStore.served(spark, sfDir).count()
       graft.dedup.ShingleStore.served(spark, sfDir).count()
       graft.dedup.BandIndexStore.corpusIndex(spark, sfDir).count()
@@ -71,16 +71,14 @@ class RegistrySpec extends SparkSpec {
       graft.io.GraphStore.cosupplyUnd(spark, sfDir).count()
       graft.multimodal.Multimodal.m7Index(spark, sfDir)
       graft.sim.Similarity.s12Index(spark, sfDir)
-      graft.core.Sessions.drain(spark)
-    } finally {
-      spark.listenerManager.unregister(listener)
+    }._2 finally {
       graft.core.Caching.releaseAll()
       prevRoot match {
         case Some(v) => sys.props("graft.graphstore.dir") = v
         case None => sys.props.remove("graft.graphstore.dir"): Unit
       }
     }
-    val plans = seen.asScala.toSeq
+    val plans = captured.executions.filter(_.failure.isEmpty).map(_.qe)
     assert(plans.size > 9, s"only ${plans.size} executions were captured")
     val found = plans.flatMap(qe => RegistrySweep.fanOuts(qe.analyzed)).distinct
     assert(found.isEmpty, s"one pass per fan-out (generate the arms): ${found.mkString(" | ")}")

@@ -1,13 +1,9 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicReference
-
 import scala.annotation.tailrec
 import scala.util.Try
 
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Union, V2WriteCommand}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.TestSession
 import graft.core.{Caching, Sessions, Tables}
@@ -23,21 +19,20 @@ import graft.core.{Caching, Sessions, Tables}
   * the session cache manager still holds blocks; a leaky query's blocks
   * are cleared so the next query is judged on its own.
   *
-  * A `QueryExecutionListener` on each frame's own session keeps its
-  * noop write's `QueryExecution` (the one the write itself ran, so
-  * nothing is analyzed or optimized twice), and the sweep records the
-  * fan-outs ([[fanOuts]]) of its analyzed plan. The frame's session,
-  * not the sweep's: a query may build its plan on a child session (q85
-  * scopes its recursion limit to `s.newSession()`), whose executions a
-  * parent-session listener never sees.
+  * A [[Sessions.capture]] of each noop write keeps the write's
+  * `QueryExecution` (the one the write itself ran, so nothing is
+  * analyzed, optimized or executed twice), and the sweep records the
+  * fan-outs ([[fanOuts]]) of its analyzed plan and the
+  * [[graft.tools.PlanAudit.verdict]] of its final executed plan.
   */
 object RegistrySweep {
 
   /** Per query, in name order: the error it threw, if any, whether it
     * left cached blocks behind after release, and the fan-outs of its
-    * noop write's analyzed plan (None: no write plan was seen). */
+    * noop write's analyzed plan and the plan-audit red flags of its
+    * executed plan (None: no write plan was seen). */
   final case class Outcome(name: String, error: Option[Throwable], leaked: Boolean,
-                           fanOuts: Option[Seq[String]])
+                           fanOuts: Option[Seq[String]], planFlags: Option[Seq[String]])
 
   lazy val outcomes: Seq[Outcome] = {
     val spark = TestSession.spark
@@ -45,29 +40,18 @@ object RegistrySweep {
     Tables.registerAll(spark, sfDir) // temp views for the `spark.sql` queries
     spark.catalog.clearCache() // start clean regardless of suite order
     Caching.releaseAll()
-    val write = new AtomicReference[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.logical.isInstanceOf[V2WriteCommand]) write.set(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     Registry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      write.set(null)
-      val run = Try(fn(spark, sfDir)).flatMap { df =>
-        val sess = df.sparkSession
-        Sessions.drain(sess)
-        sess.listenerManager.register(listener)
-        try Try(df.write.format("noop").mode("overwrite").save())
-        finally {
-          Sessions.drain(sess)
-          sess.listenerManager.unregister(listener)
-        }
-      }
-      val fans = Option(write.get).map(qe => fanOuts(qe.analyzed))
+      val captured = Try(fn(spark, sfDir)).map(df => Sessions.capture(spark)(Try(Sessions.run(df))))
+      val run = captured.flatMap(_._1)
+      val write = captured.toOption.flatMap(_._2.executions.filter { e =>
+        e.failure.isEmpty && e.qe.logical.isInstanceOf[V2WriteCommand]
+      }.lastOption).map(_.qe)
+      val fans = write.map(qe => fanOuts(qe.analyzed))
+      val flags = write.map(qe => graft.tools.PlanAudit.verdict(name, qe.executedPlan))
       Caching.releaseAll()
       val leaked = !spark.sharedState.cacheManager.isEmpty
       if (leaked) spark.catalog.clearCache()
-      Outcome(name, run.failed.toOption, leaked, fans)
+      Outcome(name, run.failed.toOption, leaked, fans, flags)
     }
   }
 
@@ -102,5 +86,5 @@ object RegistrySweep {
 
   /** `name: error` for every query that threw, for an assertion message. */
   def failures: Seq[String] =
-    outcomes.collect { case Outcome(n, Some(e), _, _) => s"$n: $e" }
+    outcomes.collect { case Outcome(n, Some(e), _, _, _) => s"$n: $e" }
 }

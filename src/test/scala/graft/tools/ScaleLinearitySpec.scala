@@ -194,8 +194,6 @@ class ScaleLinearitySpec extends SparkSpec {
         // and not the other's, or the exponent reads the BUILD's
         // shuffle asymmetry instead of the query's (ScanCount's rule)
         fn(spark, dir): Unit
-        // probe on the DataFrame's OWN session — q85 builds on
-        // s.newSession() and a parent-session listener reads 0
         val b = ScaleProbe.shuffleBytesOf(fn(spark, dir))
         graft.core.Sessions.release(spark)
         b
