@@ -163,7 +163,7 @@ object Tables {
     * `PartitioningAwareFileIndex.isDataPath`): `.`-prefixed names,
     * `_`-prefixed names without a `=` (a `_p=1/` partition dir IS
     * data), and in-flight `*._COPYING_` copies. */
-  private def hidden(segment: String): Boolean =
+  private[graft] def hidden(segment: String): Boolean =
     (segment.startsWith("_") && !segment.contains("=")) ||
       segment.startsWith(".") || segment.endsWith("._COPYING_")
 

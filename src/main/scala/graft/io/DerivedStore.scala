@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.core.Tables
@@ -132,9 +132,9 @@ object DerivedStore {
       * O(Δ) IO instead of the O(|tier|) full-layout rewrite [[Merge]]
       * pays. Appended runs overlap the base's key ranges, so per-file
       * pruning degrades gradually until the file budget (4× the
-      * byte-ideal count) routes one fold through a MAJOR rewrite that
-      * restores the tight layout — the stream-index fold's minor/major
-      * split, applied to frame tiers. Sidecars stay truthful at delta
+      * byte-ideal count) routes one publish through a MAJOR rewrite that
+      * restores the tight layout — the minor/major split the stream
+      * gate's folds share ([[stageLsmStep]]). Sidecars stay truthful at delta
       * cost: `_filemap` = prev entries + the new runs' stats; `_stats`
       * adds rows, widens min/max and adds the summary key's NDV (its
       * keys are disjoint by contract); `_keybloom` folds the delta's
@@ -422,21 +422,17 @@ object DerivedStore {
     }
   }
 
-  /** Write a PROVENANCE-ONLY fingerprint into a (staged) version dir —
-    * the churn-sentinel form: the text can never equal a real listing,
-    * so the version can never be mistaken for source-fresh, [[classify]]
+  /** A PROVENANCE-ONLY fingerprint: the [[ChurnSentinel]] line, then
+    * the source-table names. The text can never equal a real listing,
+    * so a version committed under it is never source-fresh, [[classify]]
     * reads it as Rewritten (never merge-eligible), and
     * [[sourcesOfVersion]] — and therefore `tools/Lineage` — still
-    * resolves the version to its source tables. For version stores
-    * maintained OUTSIDE the serve loop's fingerprint lifecycle (the
-    * stream-ingest gate's compacted folds, whose sources are stream
-    * batches no file listing describes). */
-  def writeProvenanceOnly(s: SparkSession, versionDir: String,
-                          sources: Seq[String]): Unit = {
-    val p = new Path(versionDir, FingerprintFile)
-    Sidecar.write(hadoopFs(s, p), p,
-      (ChurnSentinel +: sources.distinct.sorted).mkString("\n"))
-  }
+    * resolves the version to its source tables. Committed by a publish
+    * whose sources never quiesced, and by version stores maintained
+    * outside the serve loop (the stream-ingest gate's compacted folds,
+    * whose sources are stream batches no file listing describes). */
+  private[graft] def provenanceOnly(sources: Seq[String]): String =
+    (ChurnSentinel +: sources.distinct.sorted).mkString("\n")
 
   /** Fingerprint a committed version was built from, if recorded. */
   private def versionFingerprint(s: SparkSession, store: String,
@@ -524,15 +520,14 @@ object DerivedStore {
         // keys with conflicting labels
         case (Refresh.Bucketed(um, b), Some(a))
             if bucketLayoutOf(s, a.prev).contains(b) &&
-              dataFilesOf(s, a.prev).forall(st =>
-                bucketOfFileName(st.getPath.getName).isDefined) =>
+              dataFiles(s, a.prev).forall(f => bucketOfFileName(f.rel).isDefined) =>
           val prev = Tables.loadAt(s, a.prev.toString)
           um(s, dir, prev, a.delta).filter(u => sameTierSchema(prev.schema, u.schema))
             .map(u => stageBucketedPatch(s, store, a.prev, u, b, sortKey, summaryKey) ->
-              "bucketed-patch")
+              RefreshRecord("merge", "bucketed-patch"))
         case _ => None
       }
-      patched.map { case (p, layout) => p -> RefreshRecord("merge", layout) }.getOrElse {
+      patched.getOrElse {
         val (rows, mode) = (refresh, append) match {
           case (Refresh.Merge(m), Some(a)) =>
             (m(s, dir, Tables.loadAt(s, a.prev.toString), a.delta), "merge")
@@ -654,7 +649,7 @@ object DerivedStore {
                             grown: Option[(Path, DataFrame)] = None): Unit = {
     val df = s.read.parquet(dir)
     val rows = df.count() // parquet metadata-only
-    val bytes = dataFilesOf(s, new Path(dir)).map(_.getLen).sum
+    val bytes = dirStats(s, new Path(dir))._2
     val cols = columnProfile(df, rows)
     writeRowStatsRecord(s, dir, TierRowStats(rows, bytes, cols,
       summaryKey.flatMap(keyBloom(s, dir, df, _, cols, grown))))
@@ -837,8 +832,7 @@ object DerivedStore {
       val touched = upserts.select(bucketExpr(sortKey, numBuckets).as("b"))
         .distinct().collect().map(_.getInt(0)).toSet
       def isTouched(n: String) = bucketOfFileName(n).exists(touched.contains)
-      copyTree(s, prevDir, new Path(p), keep = n =>
-        !n.startsWith("_") && !n.startsWith(".") && !isTouched(n))
+      copyTree(s, prevDir, new Path(p), keep = n => !Tables.hidden(n) && !isTouched(n))
       if (touched.isEmpty) {
         // nothing changed (fingerprint drift without label impact): the
         // base's sidecars describe the new version verbatim
@@ -846,30 +840,25 @@ object DerivedStore {
       } else {
         // ONE listing per side feeds the rewrite input, its sizing,
         // and the manifest bookkeeping
-        val prevData = dataFilesOf(s, prevDir)
-        val prevTouched = prevData.filter(st => isTouched(st.getPath.getName))
+        val prevTouched = dataFiles(s, prevDir).filter(f => isTouched(f.rel))
         val rows =
           if (prevTouched.isEmpty) upserts
-          else s.read.parquet(prevTouched.map(_.getPath.toString): _*)
+          else s.read.parquet(prevTouched.map(_.path): _*)
             .join(upserts.select(sortKey), Seq(sortKey), "left_anti")
             .unionByName(upserts)
         // the rewrite is sized by the TOUCHED buckets' bytes (a patch of
         // 4 buckets in a 2TB tier is ~4 × tier/32, not the whole tier,
         // and a two-doc night is one task writing ~one file per bucket)
-        val touchedBytes = prevTouched.map(_.getLen).sum
         writeBucketFiles(s, rows, new Path(p), numBuckets,
-          math.max(touched.size.toLong,
-            touchedBytes / SourceBytesPerFile).toInt, sortKey)
+          filesFor(prevTouched.map(_.len).sum, touched.size), sortKey)
         Sidecar.write(hadoopFs(s, new Path(p)), new Path(p, BucketsFile),
           s"$numBuckets,murmur3")
         // _filemap at delta cost: kept (byte-copied) files keep their
         // entries, the rewritten buckets' files get a fresh stats pass
-        val stagedData = dataFilesOf(s, new Path(p))
+        val stagedData = dataFiles(s, new Path(p))
         ZoneMap.mergeManifest(s, prevDir.toString, p, sortKey,
-          newFiles = stagedData.map(_.getPath)
-            .filter(q => isTouched(q.getName)).map(_.toString),
-          keptNames = Some(stagedData.map(_.getPath.getName)
-            .filterNot(isTouched).toSet))
+          newFiles = stagedData.filter(f => isTouched(f.rel)).map(_.path),
+          keptNames = Some(stagedData.map(_.rel).filterNot(isTouched).toSet))
         // _keybloom at delta cost: safe for upserts even though they
         // REWRITE rows — keys are never removed, so folding the upsert
         // keys into the served bloom keeps a superset (a false maybe →
@@ -879,23 +868,32 @@ object DerivedStore {
     } finally upserts.unpersist(): Unit
   }
 
-  /** Test hook: force the LSM major-rewrite file budget. */
+  /** Test hook: force the LSM major-rewrite file budget ([[fileBudget]]). */
   @volatile private[graft] var lsmBudgetOverride: Option[Long] = None
 
-  /** Major-rewrite trigger for LSM tiers: appended runs may grow the
-    * version to 4× its byte-ideal file count before a publish pays the
-    * history shuffle to restore the tight layout. */
-  private def lsmFileBudget(bytes: Long, numFiles: Int): Long =
-    lsmBudgetOverride.getOrElse(
-      4L * math.max(numFiles.toLong, bytes / SourceBytesPerFile))
+  /** Major-compaction trigger of every LSM-grown store ([[stageLsmStep]]):
+    * appended runs may grow a version to 4× its byte-ideal file count,
+    * never below 4× `floor`, before a publish pays the history shuffle to
+    * restore the tight layout. */
+  private[graft] def fileBudget(bytes: Long, floor: Long): Long =
+    lsmBudgetOverride.getOrElse(4L * math.max(floor, bytes / SourceBytesPerFile))
 
-  /** Non-hidden data files directly under a (flat) version dir. */
-  private def dataFilesOf(s: SparkSession, dir: Path) = {
-    val fs = hadoopFs(s, dir)
-    fs.listStatus(dir).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+  /** The one bytes → file-count rule: a file per [[SourceBytesPerFile]],
+    * at least `floor`, at most [[MaxTierFiles]]. */
+  private[graft] def filesFor(bytes: Long, floor: Int): Int =
+    math.max(floor, math.min(bytes / SourceBytesPerFile, MaxTierFiles).toInt)
+
+  /** The data files a reader scans under `dir` ([[Tables.filesAt]]): a
+    * hidden dir (a survivors version's `_syncdelta`) or an in-flight
+    * `*._COPYING_` never counts toward a budget, `_stats` or a writer's
+    * sizing. */
+  private[graft] def dataFiles(s: SparkSession, dir: Path): Seq[Tables.SourceFile] =
+    Tables.filesAt(s, dir).getOrElse(Nil)
+
+  /** ([[dataFiles]] count, their bytes). */
+  private[graft] def dirStats(s: SparkSession, dir: Path): (Long, Long) = {
+    val files = dataFiles(s, dir)
+    (files.size.toLong, files.map(_.len).sum)
   }
 
   /** Same tier row shape (names + types, order- and nullability-
@@ -917,46 +915,71 @@ object DerivedStore {
       b.fields.map(f => f.name -> denull(f.dataType)).toSet
   }
 
-  /** LSM staging: minor (byte-copy base + delta-sized sorted runs +
-    * delta-cost sidecar maintenance) until the base's file count
-    * breaches [[lsmFileBudget]], then one major rewrite (base ∪ delta
-    * through the full layout). `deltaFiles` (the AppendOnly source
-    * paths) size the delta writer — tier bytes track source bytes
-    * within a constant factor, the [[scaledNumFiles]] argument.
-    * Returns the staging dir and its layout ("lsm-append" |
-    * "lsm-rewrite"). */
+  /** What one LSM compaction step ([[stageLsmStep]]) staged: the staging
+    * dir and, for a minor append, the data files the delta write added
+    * beside the byte-copied base (None: a major rewrite). */
+  private[graft] final case class LsmStep(staging: Path, appended: Option[Seq[String]]) {
+    def record: RefreshRecord =
+      RefreshRecord("merge", if (appended.isDefined) "lsm-append" else "lsm-rewrite")
+  }
+
+  /** The LSM compaction step of every append-grown store — the
+    * [[Refresh.Lsm]] tiers and the stream gate's two compacted stores
+    * (`StreamTierIngest.fold`/`foldSurvivors`). MINOR while the served
+    * base `prev`'s data-file count stays within
+    * [[fileBudget]]`(its bytes, budgetFloor)`: the base's data files are
+    * byte-copied ([[copyTree]]) — history never moves through a shuffle —
+    * and `writeDelta(stagingDir, numFiles)` writes the delta beside them
+    * as sorted runs, `numFiles` = [[filesFor]]`(deltaBytes, deltaFloor)`.
+    * MAJOR once the count breaches it, or on `forceRewrite` (a base whose
+    * content the caller can't vouch for): `rewrite(baseBytes)` stages
+    * base ∪ delta from scratch. The caller adds its sidecars to the
+    * returned staging dir and commits it ([[commitStaged]]). */
+  private[graft] def stageLsmStep(s: SparkSession, store: String, prev: Path,
+                                  budgetFloor: Long, deltaBytes: Long, deltaFloor: Int,
+                                  forceRewrite: Boolean = false)
+                                 (writeDelta: (String, Int) => Unit)
+                                 (rewrite: Long => Path): LsmStep = {
+    val base = dataFiles(s, prev)
+    val baseBytes = base.map(_.len).sum
+    if (forceRewrite || base.size > fileBudget(baseBytes, budgetFloor))
+      LsmStep(rewrite(baseBytes), None)
+    else {
+      val staging = AtomicPublish.stageVersionWith(store) { p =>
+        copyTree(s, prev, new Path(p), keep = !Tables.hidden(_))
+        writeDelta(p, filesFor(deltaBytes, deltaFloor))
+      }
+      val baseRels = base.map(_.rel).toSet
+      LsmStep(staging,
+        Some(dataFiles(s, staging).filterNot(f => baseRels(f.rel)).map(_.path)))
+    }
+  }
+
+  /** [[Refresh.Lsm]] staging through [[stageLsmStep]] (floor: the tier's
+    * `numFiles`): the minor append's delta runs are sized by `deltaFiles`
+    * (the AppendOnly source paths — tier bytes track source bytes within
+    * a constant factor, the [[scaledNumFiles]] argument) and its sidecars
+    * maintained at delta cost; the major rewrite is base ∪ delta through
+    * the full layout. Returns the staging dir and its record. */
   private def stageLsm(s: SparkSession, store: String, prevDir: Path,
                        deltaRows: DataFrame,
                        deltaFiles: Map[String, Seq[String]], fp: String,
                        numFiles: Int, sortKey: String,
-                       summaryKey: Option[String]): (Path, String) = {
-    val prevData = dataFilesOf(s, prevDir)
-    val prevBytes = prevData.map(_.getLen).sum
-    if (prevData.size > lsmFileBudget(prevBytes, numFiles))
+                       summaryKey: Option[String]): (Path, RefreshRecord) = {
+    val deltaBytes = deltaFiles.valuesIterator.flatten.map { f =>
+      val p = new Path(f)
+      hadoopFs(s, p).getFileStatus(p).getLen
+    }.sum
+    val step = stageLsmStep(s, store, prevDir, numFiles, deltaBytes, deltaFloor = 1) {
+      (p, n) => SortedLayout.writeRangeSorted(deltaRows, p, n, SaveMode.Append, col(sortKey))
+    } { _ =>
       stageFullLayout(s, store,
         s.read.parquet(prevDir.toString).unionByName(deltaRows), fp, numFiles,
-        sortKey, summaryKey) -> "lsm-rewrite"
-    else {
-      val deltaBytes = deltaFiles.valuesIterator.flatten.map { f =>
-        val p = new Path(f)
-        hadoopFs(s, p).getFileStatus(p).getLen
-      }.sum
-      val staging = AtomicPublish.stageVersionWith(store) { p =>
-        copyTree(s, prevDir, new Path(p),
-          keep = n => !n.startsWith("_") && !n.startsWith("."))
-        deltaRows.repartitionByRange(
-            math.max(1, math.min(deltaBytes / SourceBytesPerFile,
-              MaxTierFiles).toInt), col(sortKey))
-          .sortWithinPartitions(col(sortKey))
-          .write.mode("append").parquet(p)
-        val prevNames = prevData.map(_.getPath.getName).toSet
-        val newFiles = dataFilesOf(s, new Path(p))
-          .filterNot(st => prevNames(st.getPath.getName))
-          .map(_.getPath.toString)
-        mergeSidecars(s, prevDir, p, newFiles, sortKey, summaryKey)
-      }
-      staging -> "lsm-append"
+        sortKey, summaryKey)
     }
+    step.appended.foreach(newFiles =>
+      mergeSidecars(s, prevDir, step.staging.toString, newFiles, sortKey, summaryKey))
+    step.staging -> step.record
   }
 
   /** Delta-cost sidecar maintenance for an LSM append: copied base
@@ -980,7 +1003,7 @@ object DerivedStore {
       case Some(prev) =>
         val deltaN = newDf.count()
         val deltaCols = columnProfile(newDf, deltaN)
-        val bytes = dataFilesOf(s, new Path(stagingDir)).map(_.getLen).sum
+        val bytes = dirStats(s, new Path(stagingDir))._2
         val tot = prev.rows + deltaN
         // merge grain (r14 review): a row-free delta (appended files,
         // zero rows) adds NO values, so prev's profile stays exact; a
@@ -1111,10 +1134,11 @@ object DerivedStore {
     }
   }
 
-  /** ~256 MB of source bytes per tier output file — the shuffle-
-    * partition-sized unit that keeps single-file write tasks bounded
-    * and keyed reads parallel at any corpus size. Shared with the
-    * stream-index fold's writer sizing. */
+  /** ~256 MB of bytes per output file — the shuffle-partition-sized
+    * unit that keeps single-file write tasks bounded and keyed reads
+    * parallel at any corpus size. Read only by [[filesFor]] (every
+    * tier, fold and sync writer's file count) and [[fileBudget]] (every
+    * LSM store's major-compaction trigger). */
   private[graft] val SourceBytesPerFile = 256L * 1024 * 1024
 
   /** Sanity ceiling on any bytes-scaled file count. */
@@ -1130,7 +1154,7 @@ object DerivedStore {
       if (parts.length >= 3) parts(parts.length - 2).toLongOption.getOrElse(0L)
       else 0L
     }.sum
-    math.max(base, math.min(bytes / SourceBytesPerFile, MaxTierFiles).toInt)
+    filesFor(bytes, base)
   }
 
   /** A stale store about to rebuild/merge must not read plans pinned
@@ -1199,8 +1223,7 @@ object DerivedStore {
         // the sentinel line is followed by the (statically known)
         // source TABLE names so provenance survives the churn; the
         // combined text still never equals a real listing
-        committed = commitStaged(s, store, staging,
-          (ChurnSentinel +: sources.distinct.sorted).mkString("\n"), record)
+        committed = commitStaged(s, store, staging, provenanceOnly(sources), record)
       else {
         hadoopFs(s, staging).delete(staging, true): Unit
         // the retry's fresh read must not pin the listing the torn
@@ -1275,8 +1298,9 @@ object DerivedStore {
 
   /** Driver-side recursive copy of a version dir's entries whose names
     * pass `keep` — the one byte-copy loop behind every "new version
-    * starts as a copy of the served one" path (frame/dir tiers here,
-    * the stream-index fold's minor compaction). */
+    * starts as a copy of the served one" path (the dir tiers' copy, the
+    * bucketed patch, and [[stageLsmStep]]'s minor append for LSM tiers
+    * and stream folds). */
   private[graft] def copyTree(s: SparkSession, from: Path, to: Path,
                               keep: String => Boolean): Unit = {
     val fs = hadoopFs(s, from)
@@ -1331,13 +1355,14 @@ object DerivedStore {
     }
   }
 
-  /** The shared publication tail: drop the fingerprint, the
-    * [[RefreshRecord]] (and a `_SUCCESS` commit record if the writer
+  /** The shared publication tail of every serve-loop publish and every
+    * stream fold: drop the fingerprint (a fold's is [[provenanceOnly]]),
+    * the [[RefreshRecord]] (and a `_SUCCESS` commit record if the writer
     * didn't leave one at the root — parquet writes do, directory
     * builders may not) INSIDE the staged dir, then the OCC commit
     * rename and the keep-2 GC sweep. */
-  private def commitStaged(s: SparkSession, store: String, staging: Path,
-                           fp: String, record: RefreshRecord): Long = {
+  private[graft] def commitStaged(s: SparkSession, store: String, staging: Path,
+                                  fp: String, record: RefreshRecord): Long = {
     // fingerprint and record ride inside the staged version so the
     // commit rename publishes data + provenance atomically
     val fs = hadoopFs(s, staging)

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Layout-aware writer: range-partition + sort-within-partition before
@@ -22,13 +22,20 @@ import org.apache.spark.sql.functions._
 object SortedLayout {
 
   /** Write `df` as `numFiles` parquet files with globally disjoint,
-    * internally sorted ranges of `keys`.
+    * internally sorted ranges of `keys`, replacing `path`.
     */
   def writeRangeSorted(df: DataFrame, path: String, numFiles: Int,
                        keys: Column*): Unit =
+    writeRangeSorted(df, path, numFiles, SaveMode.Overwrite, keys: _*)
+
+  /** [[writeRangeSorted]] under save mode `mode` — `Append` lands the
+    * files as sorted runs beside what `path` already holds (an LSM
+    * store's minor compaction). */
+  def writeRangeSorted(df: DataFrame, path: String, numFiles: Int, mode: SaveMode,
+                       keys: Column*): Unit =
     df.repartitionByRange(numFiles, keys: _*)
       .sortWithinPartitions(keys: _*)
-      .write.mode("overwrite").parquet(path)
+      .write.mode(mode).parquet(path)
 
   /** Per-file (min, max) of `key` for a directory written by
     * [[writeRangeSorted]] — the audit surface: ranges must not overlap.

@@ -1,13 +1,13 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.dedup.BandIndexStore
-import graft.io.IdempotentWriter
+import graft.io.{DerivedStore, IdempotentWriter}
 
 /** Streaming corpus ingest with standing-index maintenance — d15's
   * incremental-dedup lifecycle as a Structured Streaming job: each
@@ -267,10 +267,10 @@ object StreamTierIngest {
   /** Record the logical source-table names feeding a batch-id-keyed
     * dir (idempotent union): [[bootstrapIndex]] derives them from the
     * corpus frame's input files, [[start]] from the stream source
-    * dir's basename. The fold copies them into each compacted
-    * version's provenance record ([[graft.io.DerivedStore
-    * .writeProvenanceOnly]]) so `tools/Lineage` traverses a
-    * stream-index scan to its raw tables like any DerivedStore tier. */
+    * dir's basename. The fold commits them as each compacted
+    * version's provenance-only fingerprint ([[DerivedStore
+    * .provenanceOnly]]) so `tools/Lineage` traverses a stream-index
+    * scan to its raw tables like any DerivedStore tier. */
   private def recordSources(s: SparkSession, dir: String,
                             names: Seq[String]): Unit = {
     if (names.isEmpty) return
@@ -331,7 +331,7 @@ object StreamTierIngest {
     * stores the gate maintains: the band INDEX (bucket-partitioned,
     * hash-sorted key triples) and the SURVIVORS corpus (doc_id-range-
     * sorted full rows, optional d3 pass on the folded delta). The
-    * fold protocol — watermark, minor/major split, OCC publish,
+    * fold protocol — watermark, minor/major split, publication,
     * partition delete — is identical; only these hooks differ. */
   private final case class FoldShape(
       surface: String,
@@ -341,8 +341,8 @@ object StreamTierIngest {
       prepare: DataFrame => (DataFrame, () => Long, () => Unit),
       /** Read a committed base for the full/rewrite modes. */
       readBase: (SparkSession, Path) => DataFrame,
-      /** Range-sort + write under the store's layout. */
-      write: (DataFrame, String, Int, String) => Unit,
+      /** Range-sort + write `numFiles` files under the store's layout. */
+      write: (DataFrame, String, Int, SaveMode) => Unit,
       /** Flat-layout stores whose versions carry a file-grain
         * `ingest_batch` `_filemap` (and, on rewrite nights, a
         * [[SyncDeltaDir]] copy) so [[syncCorpus]] prunes its delta read
@@ -366,19 +366,22 @@ object StreamTierIngest {
     * DISTINCT corpus docs) or fails on a vanished file and is retried
     * by the stream's own replay, which recomputes identical survivors.
     *
-    * LSM-shaped cost (r11): each version records the max folded batch
-    * id in a [[FoldedMarker]], so (a) a crash between commit and
-    * partition delete is cleaned by DELETING the already-folded
-    * partitions — never a distinct() over history — and (b) the
-    * nightly fold is an APPEND: byte-copy the served base (IO only,
-    * no shuffle, no compute on history — the directory-tier copy
-    * trade) plus a delta-sized sorted write into the bucket layout.
-    * Appended sorted runs accumulate ~one file per bucket per fold;
-    * when the base's file count exceeds [[rewriteFileBudget]], the
-    * fold runs as a MAJOR REWRITE instead (base ∪ delta range-sorted
-    * from scratch) — the classic minor/major compaction split, so
-    * probe-side file opens stay bounded without paying a history
-    * shuffle every night.
+    * LSM-shaped cost: each version records the max folded batch id in
+    * a [[FoldedMarker]], so a crash between commit and partition
+    * delete is cleaned by DELETING the already-folded partitions —
+    * never a distinct() over history. Every later fold is one
+    * [[DerivedStore.stageLsmStep]], the compaction step the LSM tiers
+    * take: a minor APPEND (the served base's data files byte-copied, the
+    * delta written beside them as sorted runs — ~one file per bucket
+    * per fold) until the base's file count exceeds
+    * [[DerivedStore.fileBudget]] with a floor of 2 × [[Buckets]] (128
+    * ideal files, so a 512-file budget until the base passes 32 GB),
+    * then one MAJOR REWRITE (base ∪ delta range-sorted from scratch)
+    * that restores the tight layout — probe-side file opens stay
+    * bounded without a history shuffle every night. A version commits
+    * through [[DerivedStore.commitStaged]] like a tier's: its `_refresh`
+    * record reads `mode=full layout=range` (first fold), `mode=merge
+    * layout=lsm-append` or `mode=merge layout=lsm-rewrite`.
     *
     * Returns the [[Folded]] outcome, or None when nothing is foldable
     * (re-running a folded night is a no-op; crash-cleanup of
@@ -403,10 +406,10 @@ object StreamTierIngest {
       readBase = (s2, pp) => s2.read.parquet(pp.toString)
         .select(keyCols.map(col): _*)
         .withColumn("band_bucket", bucketOf(col("band_hash"))),
-      write = (df, p, numFiles, saveMode) =>
+      write = (df, p, numFiles, mode) =>
         df.repartitionByRange(numFiles, col("band_bucket"), col("band_hash"))
           .sortWithinPartitions("band_bucket", "band_hash")
-          .write.partitionBy("band_bucket").mode(saveMode).parquet(p))
+          .write.partitionBy("band_bucket").mode(mode).parquet(p))
   }
 
   /** [[fold]]'s survivors-side twin: compacts replay-immune
@@ -453,10 +456,8 @@ object StreamTierIngest {
       }
     },
     readBase = (s2, pp) => s2.read.parquet(pp.toString),
-    write = (df, p, numFiles, saveMode) =>
-      df.repartitionByRange(numFiles, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .write.mode(saveMode).parquet(p),
+    write = (df, p, numFiles, mode) =>
+      graft.io.SortedLayout.writeRangeSorted(df, p, numFiles, mode, col("doc_id")),
     batchManifest = true)
 
   /** d3 confined to the folded delta: band the delta's docs, connect
@@ -520,57 +521,39 @@ object StreamTierIngest {
     // aren't already folded in — route to the rewrite, whose distinct
     // restores idempotence once; every version after carries the marker
     val legacyBase = prevVersion.nonEmpty && watermark.isEmpty
-    // one recursive listing per dir: (data files, bytes) feed the mode
-    // decision AND both writers' task sizing
-    val baseStats = prevPath.map(dirStats(s, _))
-    val freshBytes = freshParts.map(fp => dirStats(s, fp._2)._2).sum
-    val mode =
-      if (prevVersion.isEmpty) "full"
-      else if (legacyBase ||
-        baseStats.exists { case (files, bytes) => files > rewriteFileBudget(bytes) })
-        "rewrite"
-      else "append"
-    val staging = graft.io.AtomicPublish.stageVersionWith(store) { p =>
-      mode match {
-        case "append" =>
-          // minor compaction: history moves as bytes, never through a
-          // shuffle; the delta lands as sorted runs in the base layout
-          graft.io.DerivedStore.copyTree(s, prevPath.get, new Path(p),
-            keep = n => !n.startsWith("_") && !n.startsWith("."))
-          shape.write(fresh, p, numFilesFor(freshBytes), "append")
-        case _ =>
-          // full (first fold) or major rewrite: one range-sorted write
-          // of base ∪ delta. distinct() only for a legacy base whose
-          // content the watermark can't vouch for
-          val base = prevPath.map(pp => shape.readBase(s, pp))
-          val all0 = base.fold(fresh)(_.unionByName(fresh))
-          val all = if (legacyBase) all0.distinct() else all0
-          shape.write(all, p,
-            numFilesFor(freshBytes + baseStats.map(_._2).getOrElse(0L)),
-            "overwrite")
-      }
-      val maxFolded = (freshParts.map(_._1) ++ watermark).max
-      graft.io.Sidecar.write(fs, new Path(p, FoldedMarker), maxFolded.toString)
-      if (shape.batchManifest)
-        writeBatchSidecars(s, p, mode, prevPath, legacyBase, fresh,
-          freshBytes, watermark, maxFolded, shape)
-      // provenance record: the sentinel-form fingerprint (never fresh,
-      // never merge-eligible) carrying the gate's recorded source
-      // tables, so tools/Lineage resolves a compacted-version scan to
-      // its raw tables like any DerivedStore tier (r11 verdict #3)
-      val srcs = recordedSources(s, dir)
-      if (srcs.nonEmpty) graft.io.DerivedStore.writeProvenanceOnly(s, p, srcs)
+    val freshBytes = freshParts.map(fp => DerivedStore.dirStats(s, fp._2)._2).sum
+    // full (first fold) or major rewrite: one range-sorted write of
+    // base ∪ delta. distinct() only for a legacy base whose content the
+    // watermark can't vouch for
+    def stageAll(baseBytes: Long): Path = graft.io.AtomicPublish.stageVersionWith(store) { p =>
+      val base = prevPath.map(pp => shape.readBase(s, pp))
+      val all0 = base.fold(fresh)(_.unionByName(fresh))
+      val all = if (legacyBase) all0.distinct() else all0
+      shape.write(all, p, DerivedStore.filesFor(freshBytes + baseBytes, 8), SaveMode.Overwrite)
     }
-    if (!fs.exists(new Path(staging, "_SUCCESS")))
-      fs.create(new Path(staging, "_SUCCESS"), true).close()
-    graft.io.AtomicPublish.commitStagedOcc(s, store, staging): Unit
+    val step = prevPath.map(pp =>
+      DerivedStore.stageLsmStep(s, store, pp, budgetFloor = 2L * Buckets, freshBytes,
+        deltaFloor = 8, forceRewrite = legacyBase)(
+        (p, n) => shape.write(fresh, p, n, SaveMode.Append))(stageAll))
+    val staging = step.fold(stageAll(0L))(_.staging)
+    val mode = step.fold("full")(st => if (st.appended.isDefined) "append" else "rewrite")
+    val maxFolded = (freshParts.map(_._1) ++ watermark).max
+    graft.io.Sidecar.write(fs, new Path(staging, FoldedMarker), maxFolded.toString)
+    if (shape.batchManifest)
+      writeBatchSidecars(s, staging.toString, mode, step.flatMap(_.appended).getOrElse(Nil),
+        prevPath, legacyBase, fresh, freshBytes, watermark, maxFolded, shape)
+    // the provenance-only fingerprint (never fresh, never merge-eligible)
+    // carries the gate's recorded source tables, so tools/Lineage
+    // resolves a compacted-version scan to its raw tables like any tier
+    DerivedStore.commitStaged(s, store, staging,
+      DerivedStore.provenanceOnly(recordedSources(s, dir)),
+      step.fold(DerivedStore.RefreshRecord("full", "range"))(_.record)): Unit
     // the count resolves BEFORE the folded partitions are deleted
     // (r12 review): on the cached-count path a lost/evicted block
     // would recompute its lineage from exactly those dirs — counting
     // after the deletes would fail a fold that already committed
     val rows = rowsRead()
     cleanup()
-    graft.io.Vacuum.sweep(s, store, keepVersions = 2): Unit
     foldable.foreach { case (_, p) => fs.delete(p, true): Unit }
     Some(Folded(foldable.size, rows, mode))
   }
@@ -583,16 +566,6 @@ object StreamTierIngest {
     val p = new Path(versionPath, FoldedMarker)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     graft.io.Sidecar.read(fs, p).flatMap(_.trim.toLongOption)
-  }
-
-  /** (data files, their bytes) under `dir`, through the one data-file
-    * walk ([[graft.core.Tables.filesAt]]): hidden DIRECTORIES are
-    * skipped whole — a version's [[SyncDeltaDir]] copy must not
-    * inflate the rewrite-budget math or the writers' task sizing with
-    * files no reader scans — and so is an in-flight `*._COPYING_`. */
-  private[streaming] def dirStats(s: SparkSession, dir: Path): (Long, Long) = {
-    val files = graft.core.Tables.filesAt(s, dir).getOrElse(Nil)
-    (files.size.toLong, files.map(_.len).sum)
   }
 
   /** Hidden delta copy a rewrite-mode fold leaves beside the base so
@@ -609,68 +582,40 @@ object StreamTierIngest {
     *
     *  - a `_filemap` keyed on `ingest_batch`, maintained at DELTA cost
     *    on append nights (the byte-copied base files keep their entries
-    *    verbatim; the stats pass reads only the night's new files) and
-    *    recomputed by one column-pruned pass after a full/rewrite —
-    *    [[syncCorpus]] prunes its read from this one driver-side
-    *    manifest instead of O(files) footer opens;
+    *    verbatim; the stats pass reads only the `appended` files the
+    *    compaction step returns) and recomputed by one column-pruned
+    *    pass after a full/rewrite — [[syncCorpus]] prunes its read from
+    *    this one driver-side manifest instead of O(files) footer opens;
     *  - on a (non-legacy) rewrite night, a [[SyncDeltaDir]] copy of the
     *    folded delta with its covered batch range, because after the
     *    rewrite the manifest honestly reports every file a candidate.
     *    Legacy rewrites skip the copy: their distinct() may drop fresh
     *    rows, and a side copy would diverge from the base. */
   private def writeBatchSidecars(s: SparkSession, p: String, mode: String,
+                                 appended: Seq[String],
                                  prevPath: Option[Path], legacyBase: Boolean,
                                  fresh: DataFrame, freshBytes: Long,
                                  watermark: Option[Long], maxFolded: Long,
                                  shape: FoldShape): Unit = {
     val vp = new Path(p)
     val pfs = vp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val prior =
-      if (mode == "append")
-        prevPath.flatMap(pp =>
-          graft.io.ZoneMap.manifestFor(s, pp.toString, "ingest_batch"))
-      else None
+    val prior = prevPath.filter(pp => mode == "append" &&
+      graft.io.ZoneMap.manifestFor(s, pp.toString, "ingest_batch").nonEmpty)
     prior match {
-      case Some(m) =>
+      case Some(pp) =>
         // O(Δ): the byte-copied base files keep their entries verbatim;
         // the stats pass runs over the night's new files only
-        val priorNames = m.entries.map(_._1).toSet
-        val deltaFiles = pfs.listStatus(vp).iterator
-          .filter(st => !st.isDirectory)
-          .map(_.getPath)
-          .filter { q =>
-            val n = q.getName
-            !n.startsWith("_") && !n.startsWith(".") && !priorNames.contains(n)
-          }.map(_.toString).toList
-        graft.io.ZoneMap.mergeManifest(s, prevPath.get.toString, p,
-          "ingest_batch", deltaFiles)
+        graft.io.ZoneMap.mergeManifest(s, pp.toString, p, "ingest_batch", appended)
       case None =>
         graft.io.ZoneMap.write(s, p, "ingest_batch")
     }
     if (mode == "rewrite" && !legacyBase) {
       val sd = new Path(vp, SyncDeltaDir)
-      shape.write(fresh, sd.toString, numFilesFor(freshBytes), "overwrite")
+      shape.write(fresh, sd.toString, DerivedStore.filesFor(freshBytes, 8), SaveMode.Overwrite)
       graft.io.Sidecar.write(pfs, new Path(sd, "_range"),
         s"${watermark.getOrElse(-1L)},$maxFolded")
     }
   }
-
-  /** Write-task count at DerivedStore's shared bytes-per-file grain. */
-  private def numFilesFor(bytes: Long): Int =
-    math.max(8, math.min(bytes / graft.io.DerivedStore.SourceBytesPerFile,
-      graft.io.DerivedStore.MaxTierFiles).toInt)
-
-  /** Test hook: force the major-rewrite file budget so specs can
-    * drive the rewrite mode without accumulating 512 appended runs. */
-  @volatile private[graft] var rewriteBudgetOverride: Option[Long] = None
-
-  /** Major-rewrite trigger: the base may accumulate appended runs up
-    * to 4× its byte-ideal file count (floor: 8 runs per bucket) before
-    * a fold pays the history shuffle to restore the tight layout. */
-  private def rewriteFileBudget(bytes: Long): Long =
-    rewriteBudgetOverride.getOrElse(
-      math.max(8L * Buckets,
-        4L * math.max(8, bytes / graft.io.DerivedStore.SourceBytesPerFile)))
 
   // ---------------------------------------------------------------------
   // Corpus publication: folded survivors → the warehouse corpus table
@@ -726,8 +671,7 @@ object StreamTierIngest {
         s.read.parquet(stagedManifest.toString).select("file")
           .collect().map(_.getString(0)).toSet).getOrElse(Set.empty[String])
       val onDisk = fs.listStatus(cp).iterator.map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith(".") &&
-          n.endsWith(".parquet")).toSet
+        .filter(n => !graft.core.Tables.hidden(n) && n.endsWith(".parquet")).toSet
       if (described.nonEmpty && described == onDisk)
         require(fs.rename(stagedManifest, liveManifest),
           s"syncCorpus: manifest recovery rename $stagedManifest failed")
@@ -786,16 +730,13 @@ object StreamTierIngest {
       // (the table must stay append-only for the tier merge economy, so
       // no later compaction can fix it without forcing full rebuilds).
       // One delta-sized rewrite collapses it to bytes/256MB files.
-      val (stagedFiles, stagedBytes) = dirStats(s, staging)
-      val targetFiles = math.max(1L,
-        stagedBytes / graft.io.DerivedStore.SourceBytesPerFile)
+      val (stagedFiles, stagedBytes) = DerivedStore.dirStats(s, staging)
+      val targetFiles = DerivedStore.filesFor(stagedBytes, 1)
       if (stagedFiles > targetFiles) {
         val tight = new Path(cp, ".stream-sync-staging2")
         fs.delete(tight, true): Unit
-        s.read.parquet(staging.toString)
-          .repartitionByRange(targetFiles.toInt, col("doc_id"))
-          .sortWithinPartitions("doc_id")
-          .write.parquet(tight.toString)
+        graft.io.SortedLayout.writeRangeSorted(s.read.parquet(staging.toString),
+          tight.toString, targetFiles, col("doc_id"))
         fs.delete(staging, true): Unit
         require(fs.rename(tight, staging), s"syncCorpus: restage $tight failed")
       }

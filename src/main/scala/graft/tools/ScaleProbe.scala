@@ -14,7 +14,10 @@ import graft.pipeline.QueryMetrics
   * Usage: `run_class.sh graft.tools.ScaleProbe <sfDirSmall> <sfDirBig> [names...]`
   * (defaults to the quadratic-risk family). Prints one JSON line and
   * mirrors it to scale_probe.json in the working directory (override
-  * with -Dgraft.scaleprobe.mirror / GRAFT_SCALEPROBE_MIRROR).
+  * with -Dgraft.scaleprobe.mirror / GRAFT_SCALEPROBE_MIRROR). The run
+  * serves its tiers from a fresh temporary store root, deleted at the
+  * end, so every tier builds from full and the bytes depend on the SF
+  * data alone, not on the LSM appends a long-lived store has taken.
   */
 object ScaleProbe {
 
@@ -152,7 +155,10 @@ object ScaleProbe {
     val names = if (args.length > 2) args.drop(2).toSeq else DefaultSuspects
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
-    val report = names.map { name =>
+    val storeRoot = java.nio.file.Files.createTempDirectory("graft-scaleprobe-store")
+    val prevRoot = sys.props.get("graft.graphstore.dir")
+    sys.props("graft.graphstore.dir") = storeRoot.toString
+    val report = try names.map { name =>
       val fn = graft.SparkEntry.queries(name)
       def run(dir: String): (Long, Long) = {
         // warm-construct so DerivedStore tier builds happen off the
@@ -172,6 +178,13 @@ object ScaleProbe {
       val e = if (bSmall == 0 || shufRatio <= 0) 0.0
               else math.log(shufRatio) / math.log(rowRatio)
       name -> (bSmall, bBig, rowRatio, shufRatio, e)
+    } finally {
+      prevRoot match {
+        case Some(v) => sys.props("graft.graphstore.dir") = v
+        case None => sys.props.remove("graft.graphstore.dir"): Unit
+      }
+      val p = new org.apache.hadoop.fs.Path(storeRoot.toString)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
     }
 
     val mirror = sys.props.get("graft.scaleprobe.mirror")

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.{col, concat, concat_ws, lit, md5, udf}
 
 import graft.SparkSpec
 import graft.core.Tables
@@ -21,7 +21,8 @@ object RefreshRecordCrash {
   * append and rewrite, bucketed full and patch, `servedDir` full and
   * merge), and a stage that fails before its commit leaves no record.
   * Each path also pins the exact set of `_`-prefixed entries its
-  * version commits.
+  * version commits. The stream gate's folds commit through the same
+  * tail, so their versions carry the record too.
   * The churn-sentinel commit's record is pinned in `DerivedStoreSpec`. */
 class RefreshRecordSpec extends SparkSpec {
 
@@ -196,5 +197,57 @@ class RefreshRecordSpec extends SparkSpec {
       assert(serve(dir, "rec_crash", merge) == 25)
       assert(current(dir, "rec_crash") == (2L -> Some(RefreshRecord("merge", "range"))))
     }
+  }
+
+  test("stream folds: the first fold records full/range, then lsm-append, a budget breach lsm-rewrite; provenance survives") {
+    import graft.streaming.StreamTierIngest
+    val base = tmpDir("refresh-rec-fold")
+    val (in, idx, out, ckpt) = (s"$base/in", s"$base/idx", s"$base/out", s"$base/ckpt")
+    val docs = Tables.load(spark, sfDir, "documents")
+    StreamTierIngest.bootstrapIndex(docs, idx)
+    // a batch of 10 genuinely novel documents: it survives the gate whole
+    def batch(offset: Long): Unit = {
+      docs.limit(10).withColumn("doc_id", col("doc_id") + lit(offset))
+        .withColumn("text", concat_ws(" ",
+          Seq("a", "b", "c", "d").map(t => md5(concat(lit(t), col("doc_id")))): _*))
+        .coalesce(1).write.mode("append").parquet(in)
+      val q = StreamTierIngest.start(spark, in, docs.schema, idx, out, ckpt)
+      q.awaitTermination()
+      q.stop()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (spark.streams.active.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    }
+    /** Fold both stores; (record, `_` entries, sources) of each
+      * store's new version. */
+    def foldBoth(): Seq[(Option[RefreshRecord], Set[String], Option[Seq[String]])] = {
+      assert(StreamTierIngest.fold(spark, idx, ckpt).nonEmpty)
+      assert(StreamTierIngest.foldSurvivors(spark, out, ckpt).nonEmpty)
+      Seq(idx, out).map { d =>
+        val store = s"$d/.compacted"
+        val v = s"$store/v=${AtomicPublish.currentVersion(spark, store).get}"
+        (DerivedStore.refreshOf(spark, v), sidecarsAt(v), DerivedStore.sourcesOfVersion(spark, v))
+      }
+    }
+    val foldSidecars = Set("_SUCCESS", "_fingerprint", "_refresh", "_folded")
+    val survivorSidecars = foldSidecars + "_filemap"
+    val indexSources = Some(Seq("documents", "in"))
+    val survivorSources = Some(Seq("in"))
+
+    batch(6000000L)
+    assert(foldBoth() == Seq(
+      (Some(RefreshRecord("full", "range")), foldSidecars, indexSources),
+      (Some(RefreshRecord("full", "range")), survivorSidecars, survivorSources)))
+    batch(7000000L)
+    assert(foldBoth() == Seq(
+      (Some(RefreshRecord("merge", "lsm-append")), foldSidecars, indexSources),
+      (Some(RefreshRecord("merge", "lsm-append")), survivorSidecars, survivorSources)))
+    batch(8000000L)
+    DerivedStore.lsmBudgetOverride = Some(0L)
+    val rewritten = try foldBoth() finally DerivedStore.lsmBudgetOverride = None
+    assert(rewritten == Seq(
+      (Some(RefreshRecord("merge", "lsm-rewrite")), foldSidecars, indexSources),
+      (Some(RefreshRecord("merge", "lsm-rewrite")), survivorSidecars + "_syncdelta",
+        survivorSources)))
   }
 }

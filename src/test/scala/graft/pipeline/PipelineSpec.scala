@@ -102,4 +102,22 @@ class PipelineSpec extends SparkSpec {
       .flatMap(p => threadLocal.findAllIn(Files.readString(p)).map(_ => p.getFileName.toString))
     assert(declared == Seq("Pipeline.scala"), declared.mkString(", "))
   }
+
+  test("only DerivedStore.scala turns bytes into file counts or declares a budget hook") {
+    // one major-compaction budget and one bytes -> file-count rule,
+    // shared by the LSM tiers, the stream folds and the corpus sync:
+    // the two divisions by SourceBytesPerFile in DerivedStore are
+    // fileBudget and filesFor, and lsmBudgetOverride is the one hook
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val perByte = """/\s*(?:[\w.]*\.)?SourceBytesPerFile\b""".r
+    val hook = """\bvar\s+\w*BudgetOverride\b""".r
+    val files = Files.walk(root).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+    def sites(re: scala.util.matching.Regex) = files.flatMap(p =>
+      re.findAllIn(Files.readString(p)).map(_ => p.getFileName.toString)).sorted
+    assert(sites(perByte) == Seq("DerivedStore.scala", "DerivedStore.scala"),
+      sites(perByte).mkString(", "))
+    assert(sites(hook) == Seq("DerivedStore.scala"), sites(hook).mkString(", "))
+  }
 }

@@ -116,12 +116,12 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
     b2.coalesce(1).write.mode("append").parquet(inB)
     drain(inA, schema, idxA, outA, ckptA)
     drain(inB, schema, idxB, outB, ckptB)
-    StreamTierIngest.rewriteBudgetOverride = Some(0L)
+    graft.io.DerivedStore.lsmBudgetOverride = Some(0L)
     try {
       val fr = StreamTierIngest.foldSurvivors(spark, outA, ckptA)
       assert(fr.exists(f => f.parts == 1 && f.mode == "rewrite"),
         s"budget breach takes the major rewrite: $fr")
-    } finally StreamTierIngest.rewriteBudgetOverride = None
+    } finally graft.io.DerivedStore.lsmBudgetOverride = None
     assert(docIds(StreamTierIngest.survivors(spark, outA)) ==
       docIds(spark.read.parquet(outB)))
 
@@ -323,10 +323,10 @@ class StreamSurvivorsFoldSpec extends SparkSpec {
         md5(concat(lit("s3"), col("doc_id")))))
       .coalesce(1).write.mode("append").parquet(in)
     drain(in, schema, idx, out, ckpt)
-    StreamTierIngest.rewriteBudgetOverride = Some(0L)
+    graft.io.DerivedStore.lsmBudgetOverride = Some(0L)
     try {
       assert(StreamTierIngest.foldSurvivors(spark, out, ckpt).exists(_.mode == "rewrite"))
-    } finally StreamTierIngest.rewriteBudgetOverride = None
+    } finally graft.io.DerivedStore.lsmBudgetOverride = None
     val keptAll = StreamTierIngest.survivors(spark, out).count()
     val s3 = StreamTierIngest.syncCorpus(spark, out, corpusDir)
     assert(s3.exists(_.rows == keptAll - kept0 - kept1), s"$s3")

@@ -234,12 +234,12 @@ class StreamTierIngestSpec extends SparkSpec {
     drain(inA, schema, idxA, outA, ckptA)
     drain(inB, schema, idxB, outB, ckptB)
     val preRewrite = StreamTierIngest.index(spark, idxA).count()
-    StreamTierIngest.rewriteBudgetOverride = Some(0L) // force the trigger
+    graft.io.DerivedStore.lsmBudgetOverride = Some(0L) // force the trigger
     try {
       val fr = StreamTierIngest.fold(spark, idxA, ckptA)
       assert(fr.exists(f => f.parts == 1 && f.mode == "rewrite"),
         s"budget breach must take the major rewrite: $fr")
-    } finally StreamTierIngest.rewriteBudgetOverride = None
+    } finally graft.io.DerivedStore.lsmBudgetOverride = None
     assert(StreamTierIngest.index(spark, idxA).count() == preRewrite &&
       StreamTierIngest.index(spark, idxA).count() ==
         StreamTierIngest.index(spark, idxB).count(),
@@ -330,7 +330,7 @@ class StreamTierIngestSpec extends SparkSpec {
     java.nio.file.Files.copy(data.head.toPath,
       java.nio.file.Paths.get(s"${data.head.getPath}._COPYING_"))
     rows.coalesce(1).write.parquet(s"$dir/t/_syncdelta")
-    val (n, bytes) = StreamTierIngest.dirStats(spark, new org.apache.hadoop.fs.Path(s"$dir/t"))
+    val (n, bytes) = graft.io.DerivedStore.dirStats(spark, new org.apache.hadoop.fs.Path(s"$dir/t"))
     assert(n == dataFiles.length && bytes == dataFiles.map(_.length).sum,
       s"$n files / $bytes bytes vs ${dataFiles.length} / ${dataFiles.map(_.length).sum}")
   }
