@@ -42,7 +42,7 @@ object AggView {
               viewDir: String,
               keyCols: Seq[String], aggs: Seq[(String, Column)]): Seq[String] = {
     val fs = new Path(viewDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverIfCrashed(fs, viewDir)
+    AtomicPublish.recoverIfCrashed(fs, viewDir)
     val have = ledger(spark, viewDir)
     val fresh = Incremental.sourcePartitions(spark, srcDir, partCol)
       .filterNot(have)
@@ -62,7 +62,6 @@ object AggView {
         .agg(sum(aggs.head._1).as(aggs.head._1),
           aggs.tail.map { case (n, _) => sum(n).as(n) }: _*)
 
-    // stage data AND ledger, then swap the whole directory
     swapIn(spark, viewDir, merged, have ++ fresh)
     fresh
   }
@@ -85,7 +84,7 @@ object AggView {
                  batch: DataFrame, keyCols: Seq[String],
                  aggs: Seq[(String, Column)]): Boolean = {
     val fs = new Path(viewDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverIfCrashed(fs, viewDir)
+    AtomicPublish.recoverIfCrashed(fs, viewDir)
     val tag = s"batch=$batchId"
     val have = ledger(spark, viewDir)
     if (have.contains(tag)) return false
@@ -103,31 +102,16 @@ object AggView {
     true
   }
 
-  // swapIn is two renames, not one atomic op: a crash after
-  // rename(target, old) but before rename(staging, target) leaves the
-  // view absent at its path — data AND ledger — so an unrecovered
-  // replay would merge into an empty view and silently drop every
-  // prior batch. WRITERS (refresh/mergeBatch — one writer per view,
-  // the usual streaming-sink contract) roll the `.old` copy back in
-  // before starting; the interrupted batch is not in the rolled-back
-  // ledger, so it simply re-applies. READERS must never perform that
-  // rename: a reader that "recovers" while the writer is between its
-  // two renames would make the writer's rename(staging, target) drop
-  // the staging dir INSIDE the restored target — the swap reports
-  // success, the checkpoint commits, and the batch is silently lost.
-  // Readers instead RESOLVE to the `.old` copy read-only (see
-  // [[resolveDir]]): correct in both the crashed and the mid-swap
-  // case, mutating in neither.
-  private def recoverIfCrashed(fs: org.apache.hadoop.fs.FileSystem,
-                               viewDir: String): Unit = {
-    val target = new Path(viewDir)
-    val old = new Path(viewDir + ".old")
-    if (!fs.exists(new Path(target, DataDir)) && fs.exists(new Path(old, DataDir))) {
-      fs.delete(target, true)
-      if (!fs.rename(old, target))
-        throw new IllegalStateException(s"agg-view crash recovery failed for $viewDir")
-    }
-  }
+  // Crash recovery is the WRITER's: refresh/mergeBatch (one writer per
+  // view, the usual streaming-sink contract) roll a `.old` copy back in
+  // on entry ([[AtomicPublish.recoverIfCrashed]]), before reading the
+  // ledger, so a batch interrupted between the swap's two renames
+  // simply re-applies. READERS must never perform that rename: one that
+  // "recovers" while the writer is between its renames would make the
+  // writer's rename(staging, target) drop the staging dir INSIDE the
+  // restored target — the swap reports success, the checkpoint
+  // commits, and the batch is silently lost. Readers RESOLVE to the
+  // `.old` copy read-only instead ([[resolveDir]]).
 
   /** Read-only resolution for readers: the live dir normally, the
     * `.old` copy when the view is mid-swap or crashed mid-swap. */
@@ -137,22 +121,14 @@ object AggView {
     else if (fs.exists(new Path(new Path(viewDir + ".old"), DataDir))) viewDir + ".old"
     else viewDir
 
+  /** Stage data AND ledger, then swap the whole directory in. */
   private def swapIn(spark: SparkSession, viewDir: String,
-                     merged: DataFrame, newLedger: Set[String]): Unit = {
-    val fs = new Path(viewDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(viewDir + ".staging")
-    fs.delete(staging, true)
-    merged.write.mode("overwrite").parquet(new Path(staging, DataDir).toString)
-    Sidecar.write(fs, new Path(staging, LedgerFile), newLedger.toSeq.sorted.mkString("\n"))
-    val target = new Path(viewDir)
-    val old = new Path(viewDir + ".old")
-    fs.delete(old, true)
-    if (fs.exists(target) && !fs.rename(target, old))
-      throw new IllegalStateException(s"agg-view swap failed for $viewDir")
-    if (!fs.rename(staging, target))
-      throw new IllegalStateException(s"agg-view swap failed for $viewDir")
-    fs.delete(old, true): Unit
-  }
+                     merged: DataFrame, newLedger: Set[String]): Unit =
+    AtomicPublish.publishWith(spark, viewDir) { staging =>
+      merged.write.mode("overwrite").parquet(new Path(staging, DataDir).toString)
+      Sidecar.write(staging.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        new Path(staging, LedgerFile), newLedger.toSeq.sorted.mkString("\n"))
+    }
 
   /** The current view contents (read-only — never mutates the dirs). */
   def read(spark: SparkSession, viewDir: String): DataFrame = {

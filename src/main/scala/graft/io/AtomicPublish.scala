@@ -27,31 +27,33 @@ object AtomicPublish {
     * table untouched) if `expectedRows` is given and doesn't match.
     */
   def publish(df: DataFrame, table: String,
-              expectedRows: Option[Long] = None): Long = {
-    val spark = df.sparkSession
+              expectedRows: Option[Long] = None): Long =
+    publishWith(df.sparkSession, table) { staging =>
+      df.write.mode("overwrite").parquet(staging.toString)
+      val written = df.sparkSession.read.parquet(staging.toString).count()
+      expectedRows.foreach { exp =>
+        if (written != exp) throw new IllegalStateException(
+          s"count gate failed for $table: wrote $written, expected $exp")
+      }
+      written
+    }
+
+  /** The whole-directory swap behind [[publish]], for a caller that
+    * writes more than one frame: `stage` fills the staging dir (data,
+    * sidecars, ledgers — everything that must move together), then
+    * `.staging` replaces the live dir by two renames through `.old`. An
+    * exception from `stage` drops the staging dir and leaves the live
+    * table untouched. Returns what `stage` returned. */
+  def publishWith[A](spark: SparkSession, table: String)(stage: Path => A): A = {
     val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new Path(table + ".staging")
     val target = new Path(table)
-    // crash recovery: the swap below is two renames; dying between
-    // them leaves the table absent with the only copy in `.old` — and
-    // an unrecovered NEXT publish would delete that copy first thing.
-    // Roll the old copy back in before doing anything else.
-    val oldPath = new Path(table + ".old")
-    if (!fs.exists(target) && fs.exists(oldPath)) {
-      if (!fs.rename(oldPath, target))
-        throw new IllegalStateException(s"publish crash recovery failed for $table")
-    }
-    fs.delete(staging, true)
-    df.write.mode("overwrite").parquet(staging.toString)
-    val written = spark.read.parquet(staging.toString).count()
-    expectedRows.foreach { exp =>
-      if (written != exp) {
-        fs.delete(staging, true)
-        throw new IllegalStateException(
-          s"count gate failed for $table: wrote $written, expected $exp")
-      }
-    }
     val old = new Path(table + ".old")
+    recoverIfCrashed(fs, table)
+    fs.delete(staging, true)
+    val out =
+      try stage(staging)
+      catch { case e: Throwable => fs.delete(staging, true); throw e }
     fs.delete(old, true)
     if (fs.exists(target) && !fs.rename(target, old))
       throw new IllegalStateException(
@@ -60,7 +62,21 @@ object AtomicPublish {
     if (!fs.rename(staging, target))
       throw new IllegalStateException(s"publish rename failed for $table")
     fs.delete(old, true)
-    written
+    out
+  }
+
+  /** Crash recovery for [[publishWith]]'s swap: dying between its two
+    * renames leaves the table absent with the only copy in `.old` — and
+    * an unrecovered NEXT publish would delete that copy first thing.
+    * Rolls the old copy back in. A writer runs it before reading the
+    * table it is about to replace; readers must not (see
+    * [[AggView]]'s read-only resolution). */
+  private[io] def recoverIfCrashed(fs: org.apache.hadoop.fs.FileSystem,
+                                   table: String): Unit = {
+    val target = new Path(table)
+    val old = new Path(table + ".old")
+    if (!fs.exists(target) && fs.exists(old) && !fs.rename(old, target))
+      throw new IllegalStateException(s"publish crash recovery failed for $table")
   }
 
   def currentVersion(spark: SparkSession, table: String): Option[Long] = {

@@ -930,13 +930,15 @@ object DerivedStore {
     * [[fileBudget]]`(its bytes, budgetFloor)`: the base's data files are
     * byte-copied ([[copyTree]]) — history never moves through a shuffle —
     * and `writeDelta(stagingDir, numFiles)` writes the delta beside them
-    * as sorted runs, `numFiles` = [[filesFor]]`(deltaBytes, deltaFloor)`.
+    * as sorted runs, `numFiles` = [[filesFor]]`(deltaBytes, 1)` — a run
+    * is sized by the delta alone, so a small night adds a file, not a
+    * floor's worth.
     * MAJOR once the count breaches it, or on `forceRewrite` (a base whose
     * content the caller can't vouch for): `rewrite(baseBytes)` stages
     * base ∪ delta from scratch. The caller adds its sidecars to the
     * returned staging dir and commits it ([[commitStaged]]). */
   private[graft] def stageLsmStep(s: SparkSession, store: String, prev: Path,
-                                  budgetFloor: Long, deltaBytes: Long, deltaFloor: Int,
+                                  budgetFloor: Long, deltaBytes: Long,
                                   forceRewrite: Boolean = false)
                                  (writeDelta: (String, Int) => Unit)
                                  (rewrite: Long => Path): LsmStep = {
@@ -947,7 +949,7 @@ object DerivedStore {
     else {
       val staging = AtomicPublish.stageVersionWith(store) { p =>
         copyTree(s, prev, new Path(p), keep = !Tables.hidden(_))
-        writeDelta(p, filesFor(deltaBytes, deltaFloor))
+        writeDelta(p, filesFor(deltaBytes, 1))
       }
       val baseRels = base.map(_.rel).toSet
       LsmStep(staging,
@@ -970,7 +972,7 @@ object DerivedStore {
       val p = new Path(f)
       hadoopFs(s, p).getFileStatus(p).getLen
     }.sum
-    val step = stageLsmStep(s, store, prevDir, numFiles, deltaBytes, deltaFloor = 1) {
+    val step = stageLsmStep(s, store, prevDir, numFiles, deltaBytes) {
       (p, n) => SortedLayout.writeRangeSorted(deltaRows, p, n, SaveMode.Append, col(sortKey))
     } { _ =>
       stageFullLayout(s, store,

@@ -533,7 +533,7 @@ object StreamTierIngest {
     }
     val step = prevPath.map(pp =>
       DerivedStore.stageLsmStep(s, store, pp, budgetFloor = 2L * Buckets, freshBytes,
-        deltaFloor = 8, forceRewrite = legacyBase)(
+        forceRewrite = legacyBase)(
         (p, n) => shape.write(fresh, p, n, SaveMode.Append))(stageAll))
     val staging = step.fold(stageAll(0L))(_.staging)
     val mode = step.fold("full")(st => if (st.appended.isDefined) "append" else "rewrite")
@@ -629,6 +629,15 @@ object StreamTierIngest {
     * candidates), or "full" (no sidecar — footer-pruned scan). */
   final case class Synced(rows: Long, upto: Long, scan: String)
 
+  /** The sync's swap state inside the corpus dir, dot-prefixed so
+    * readers and the tiers' source fingerprints never see it: the
+    * journal, the staged next manifest, and the delta's staging dir
+    * plus its right-sized rewrite. */
+  private def syncSite(cp: Path) = graft.io.InPlaceSwap.Site(
+    journal = new Path(cp, ".stream-sync-journal"),
+    nextManifest = new Path(cp, ".filemap-sync-staging"),
+    staging = Seq(new Path(cp, ".stream-sync-staging"), new Path(cp, ".stream-sync-staging2")))
+
   /** Publish the folded survivors into a warehouse corpus table,
     * append-only: rows with `ingest_batch` in (last synced, folded
     * watermark] land as NEW part files in `corpusDir`, so the standing
@@ -639,14 +648,17 @@ object StreamTierIngest {
     * Reads ONLY the compacted base (an immutable committed version):
     * live partitions can still be replay-overwritten, so they never
     * sync; the bootstrap's `-1` rows never sync either — they were
-    * seeded FROM a corpus. Idempotent without a transaction: part
-    * files are named by the batch range they carry
-    * (`stream-sync-<from>-<upto>-…`), any range files beyond the
-    * recorded watermark are crashed-attempt leftovers deleted before
-    * the move, and the watermark marker (underscore-prefixed, so tier
-    * fingerprints ignore it) advances only after every file is in
-    * place — a crash replays the same deterministic range from the
-    * same immutable version.
+    * seeded FROM a corpus. The files move in through the journaled
+    * [[graft.io.InPlaceSwap]], which also keeps a `_filemap` on the
+    * corpus truthful and finishes a crashed attempt's swap on the next
+    * entry. Idempotent across attempts: part files are named by the
+    * batch range they carry plus a per-attempt stamp
+    * (`stream-sync-<from>-<upto>-<stamp>-partNNNN.parquet`), any range
+    * files beyond the recorded watermark are crashed-attempt leftovers
+    * the same swap removes, and the watermark marker
+    * (underscore-prefixed, so tier fingerprints ignore it) advances
+    * only after the swap — a crash replays the same deterministic range
+    * from the same immutable version.
     *
     * Returns the [[Synced]] outcome; None when nothing new. */
   def syncCorpus(s: SparkSession, survivorsDir: String,
@@ -654,28 +666,8 @@ object StreamTierIngest {
     val store = compactedStore(survivorsDir)
     val cp = new Path(corpusDir)
     val fs = cp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // Crash recovery (r12 advice): an attempt that died between the
-    // watermark write and the manifest swap left the corpus permanently
-    // manifest-less — the retry is a watermark no-op, and entry used to
-    // delete the staged manifest unconditionally, so manifest-pruned
-    // reads degraded to full scans until an unrelated rewrite. The
-    // staged manifest is deterministic for its range: when it exactly
-    // describes the CURRENT on-disk data-file set and no live manifest
-    // exists, completing the crashed rename is safe; any mismatch
-    // (earlier crash points, concurrent mutation) still deletes it and
-    // falls back to the scan path.
-    val stagedManifest = new Path(cp, ".filemap-sync-staging")
-    val liveManifest = new Path(cp, graft.io.ZoneMap.ManifestDir)
-    if (fs.exists(stagedManifest) && !fs.exists(liveManifest)) {
-      val described = scala.util.Try(
-        s.read.parquet(stagedManifest.toString).select("file")
-          .collect().map(_.getString(0)).toSet).getOrElse(Set.empty[String])
-      val onDisk = fs.listStatus(cp).iterator.map(_.getPath.getName)
-        .filter(n => !graft.core.Tables.hidden(n) && n.endsWith(".parquet")).toSet
-      if (described.nonEmpty && described == onDisk)
-        require(fs.rename(stagedManifest, liveManifest),
-          s"syncCorpus: manifest recovery rename $stagedManifest failed")
-    }
+    val site = syncSite(cp)
+    graft.io.InPlaceSwap.recover(s, corpusDir, site)
     for {
       v <- graft.io.AtomicPublish.currentVersion(s, store)
       upto <- foldedWatermark(s, new Path(s"$store/v=$v"))
@@ -719,84 +711,48 @@ object StreamTierIngest {
         .filter(col("ingest_batch") > syncedUpto && col("ingest_batch") <= upto)
         .drop("ingest_batch")
         .observe(obs, count(lit(1)).as("rows"))
-      val staging = new Path(cp, ".stream-sync-staging")
-      fs.delete(staging, true): Unit
-      fs.delete(new Path(cp, ".stream-sync-staging2"), true): Unit
-      fs.delete(new Path(cp, ".filemap-sync-staging"), true): Unit
+      val Seq(staging, tight) = site.staging
       delta.write.parquet(staging.toString)
       // right-size the night's addition: the filter scatters delta rows
       // across every base input partition, so a tiny night would land
       // ~|base files| near-empty part files in the corpus table FOREVER
       // (the table must stay append-only for the tier merge economy, so
       // no later compaction can fix it without forcing full rebuilds).
-      // One delta-sized rewrite collapses it to bytes/256MB files.
+      // One delta-sized rewrite collapses it to bytes/256MB files; the
+      // moves then come from whichever dir holds the final files.
       val (stagedFiles, stagedBytes) = DerivedStore.dirStats(s, staging)
       val targetFiles = DerivedStore.filesFor(stagedBytes, 1)
-      if (stagedFiles > targetFiles) {
-        val tight = new Path(cp, ".stream-sync-staging2")
-        fs.delete(tight, true): Unit
-        graft.io.SortedLayout.writeRangeSorted(s.read.parquet(staging.toString),
-          tight.toString, targetFiles, col("doc_id"))
-        fs.delete(staging, true): Unit
-        require(fs.rename(tight, staging), s"syncCorpus: restage $tight failed")
-      }
+      val finalDir =
+        if (stagedFiles <= targetFiles) staging
+        else {
+          graft.io.SortedLayout.writeRangeSorted(s.read.parquet(staging.toString),
+            tight.toString, targetFiles, col("doc_id"))
+          tight
+        }
       // crashed-attempt leftovers: any sync file whose range starts
       // past the committed watermark was moved in by an attempt that
-      // died before advancing the marker — delete before re-moving,
+      // died before advancing the marker — removed by the same swap,
       // so a retry (possibly over a LATER fold's wider range) never
-      // duplicates its rows
-      val leftovers = fs.listStatus(cp).map(_.getPath.getName).filter { n =>
-        n.startsWith("stream-sync-") &&
-          n.stripPrefix("stream-sync-").takeWhile(_ != '-')
+      // duplicates its rows. The per-attempt stamp keeps a retry's
+      // destinations from colliding with a same-range leftover (every
+      // move runs before any removal).
+      val leftovers = fs.listStatus(cp).map(_.getPath).filter { p =>
+        p.getName.startsWith("stream-sync-") &&
+          p.getName.stripPrefix("stream-sync-").takeWhile(_ != '-')
             .toLongOption.exists(_ > syncedUpto)
       }.toSeq
-      val moves = graft.core.Tables.filesAt(s, staging).getOrElse(Nil)
+      val stamp = System.currentTimeMillis()
+      val moves = graft.core.Tables.filesAt(s, finalDir).getOrElse(Nil)
         .zipWithIndex.map { case (f, i) =>
-          new Path(f.path) -> new Path(cp,
-            f"stream-sync-${syncedUpto + 1}%d-$upto%d-part$i%04d.parquet")
+          new Path(f.path) ->
+            f"stream-sync-${syncedUpto + 1}%d-$upto%d-$stamp%d-part$i%04d.parquet"
         }
-      // zone-map maintenance (r12 review): this append mutates the
-      // corpus table in place, so a `_filemap` someone published on it
-      // must not survive STALE — a manifest missing the new files
-      // silently hides them from every manifest-pruned read (the
-      // TargetedDelete takedown would report rowsDeleted=0 as success).
-      // Same discipline as TargetedDelete: stage the next manifest
-      // (old entries − to-be-deleted leftovers + the staged files'
-      // stats under their destination names), drop the live one before
-      // the first table mutation, rename the staged one in after —
-      // any crash leaves NO manifest (scan fallback), never a lie.
-      val manifestStaged = graft.io.ZoneMap.manifestOf(s, corpusDir).map { m =>
-        val keptEntries = s.read
-          .parquet(s"$corpusDir/${graft.io.ZoneMap.ManifestDir}")
-          .filter(!col("file").isin(leftovers: _*))
-        val renames = s.createDataFrame(
-          moves.map { case (src, d) => src.getName -> d.getName })
-          .toDF("file", "dest")
-        val next =
-          if (moves.isEmpty) keptEntries
-          else keptEntries.unionByName(
-            graft.io.ZoneMap.statsOf(s, staging.toString, m.key)
-              .join(renames, "file")
-              .select(col("dest").as("file"), col("fmin"), col("fmax"),
-                col("kname")))
-        val ms = new Path(cp, ".filemap-sync-staging")
-        fs.delete(ms, true): Unit
-        next.coalesce(1).write.parquet(ms.toString)
-        ms
-      }
-      manifestStaged.foreach(_ =>
-        fs.delete(new Path(cp, graft.io.ZoneMap.ManifestDir), true): Unit)
-      leftovers.foreach(n => fs.delete(new Path(cp, n), false): Unit)
-      moves.foreach { case (src, dest) =>
-        require(fs.rename(src, dest),
-          s"syncCorpus: move $src -> $dest failed")
-      }
-      fs.delete(staging, true): Unit
+      // the corpus table mutates in place, so a `_filemap` published on
+      // it must not survive STALE — one missing the new files would hide
+      // them from every manifest-pruned read (the takedown would report
+      // rowsDeleted=0 as success); the swap keeps it truthful
+      graft.io.InPlaceSwap.swap(s, corpusDir, site, moves, leftovers)
       graft.io.Sidecar.write(fs, new Path(cp, SyncMarker), upto.toString)
-      manifestStaged.foreach { ms =>
-        require(fs.rename(ms, new Path(cp, graft.io.ZoneMap.ManifestDir)),
-          s"syncCorpus: manifest swap $ms failed")
-      }
       Synced(obs.get("rows").asInstanceOf[Long], upto, scan)
     }
   }

@@ -120,4 +120,24 @@ class PipelineSpec extends SparkSpec {
       sites(perByte).mkString(", "))
     assert(sites(hook) == Seq("DerivedStore.scala"), sites(hook).mkString(", "))
   }
+
+  test("one in-place swap and one directory swap: their callers rename nothing, one module writes the journal") {
+    // the takedown and the corpus sync move files only through
+    // InPlaceSwap (journal, replay, manifest restage, recovery);
+    // AggView swaps its directory only through AtomicPublish.publishWith
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val files = Files.walk(root).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+      .map(p => p.getFileName.toString -> Files.readString(p))
+    def sites(re: scala.util.matching.Regex) =
+      files.filter { case (_, src) => re.findFirstIn(src).nonEmpty }.map(_._1).sorted
+    val renaming = sites("""\.rename\(""".r).toSet
+    Seq("TargetedDelete.scala", "StreamTierIngest.scala", "AggView.scala").foreach(f =>
+      assert(!renaming(f), s"$f renames files itself"))
+    assert(sites(""""(?:mv|old)\\t""".r) == Seq("InPlaceSwap.scala"),
+      "only the swap module spells the journal's line format")
+    assert(sites("""def\s+recoverIfCrashed\b""".r) == Seq("AtomicPublish.scala"))
+    assert(sites("""\bdeltaFloor\b""".r).isEmpty)
+  }
 }
