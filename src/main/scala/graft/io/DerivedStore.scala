@@ -930,9 +930,8 @@ object DerivedStore {
     * [[fileBudget]]`(its bytes, budgetFloor)`: the base's data files are
     * byte-copied ([[copyTree]]) — history never moves through a shuffle —
     * and `writeDelta(stagingDir, numFiles)` writes the delta beside them
-    * as sorted runs, `numFiles` = [[filesFor]]`(deltaBytes, 1)` — a run
-    * is sized by the delta alone, so a small night adds a file, not a
-    * floor's worth.
+    * as sorted runs, `numFiles` = [[filesFor]]`(deltaBytes, 1)`: a small
+    * night adds a file, not a floor's worth.
     * MAJOR once the count breaches it, or on `forceRewrite` (a base whose
     * content the caller can't vouch for): `rewrite(baseBytes)` stages
     * base ∪ delta from scratch. The caller adds its sidecars to the

@@ -8,8 +8,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * (`_folded`, `_checkpoint`, `_sources`, `_stream_synced`,
   * `_fingerprint`, `_refresh`, `_nrows`, `_stats`, `_buckets`, an ANN
   * index's `_metric`, an [[AggView]]'s `_partitions` ledger, the
-  * [[InPlaceSwap]] journal of the takedown and the corpus sync):
-  * UTF-8, overwrite-create, close in
+  * [[InPlaceSwap]] journal): UTF-8, overwrite-create, close in
   * finally. Hoisted (r12 review) so a future hardening — e.g. atomic
   * write-then-rename — lands once, not per copy. */
 object Sidecar {

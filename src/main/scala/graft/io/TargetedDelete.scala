@@ -36,21 +36,20 @@ object TargetedDelete {
   case class Report(rowsDeleted: Long, filesRewritten: Long, filesTotal: Long,
                     discovery: String)
 
-  /** The takedown's swap state, beside the table: the journal, the
-    * staged next manifest and the survivors' staging dir. */
-  private def site(table: String) = InPlaceSwap.Site(
-    journal = new Path(table + ".delete-journal"),
-    nextManifest = new Path(table + ".filemap-staging"),
-    staging = Seq(new Path(table + ".delete-staging")))
-
   /** Delete rows whose `idCol` is in `ids` from the parquet table at
     * `table`, first finishing any swap a crashed call left behind.
     * Returns per-file accounting. */
   def deleteIds(spark: SparkSession, table: String, idCol: String,
-                ids: Seq[Long]): Report = {
+                ids: Seq[Long]): Report =
+    InPlaceSwap.run(spark, table, InPlaceSwap.Takedown) { case Seq(staging) =>
+      stage(spark, table, idCol, ids, staging)
+    }
+
+  /** Discovery, and the affected files' survivors written to `staging`:
+    * the swap's plan. */
+  private def stage(spark: SparkSession, table: String, idCol: String,
+                    ids: Seq[Long], staging: Path): InPlaceSwap.Plan[Report] = {
     val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val at = site(table)
-    InPlaceSwap.recover(spark, table, at)
     // file population from ONE recursive listing (nested/partitioned
     // layouts included — the scan discovery path supports them, so the
     // accounting must too) — counting via a distinct(input_file_name())
@@ -82,7 +81,8 @@ object TargetedDelete {
           .collect().map(_.getString(0))
     }
 
-    if (affectedFiles.isEmpty) return Report(0L, 0L, filesTotal, discovery)
+    if (affectedFiles.isEmpty)
+      return InPlaceSwap.Plan(Report(0L, 0L, filesTotal, discovery))
 
     val affected = spark.read.parquet(affectedFiles: _*)
     val rowsDeleted = affected.filter(col(idCol).isin(ids: _*)).count()
@@ -92,7 +92,6 @@ object TargetedDelete {
     // (invisible to readers), then swap them in for the affected files
     // ([[InPlaceSwap]]: journaled, crash-replayable, zone map kept
     // truthful; survivors twice at worst, never survivor loss)
-    val staging = at.staging.head
     kept.write.mode("overwrite").parquet(staging.toString)
     val stamp = System.currentTimeMillis()
     val moves = fs.listStatus(staging).map(_.getPath)
@@ -117,8 +116,7 @@ object TargetedDelete {
     //    recorded len:mtime signature no longer matches.
     Seq(graft.streaming.StreamTierIngest.SyncDeltaDir, DerivedStore.BucketsFile,
       DerivedStore.RowStatsFile).foreach(n => fs.delete(new Path(table, n), true))
-    InPlaceSwap.swap(spark, table, at, moves.toSeq,
-      affectedFiles.map(f => new Path(new java.net.URI(f))).toSeq)
-    Report(rowsDeleted, affectedFiles.length.toLong, filesTotal, discovery)
+    InPlaceSwap.Plan(Report(rowsDeleted, affectedFiles.length.toLong, filesTotal, discovery),
+      moves.toSeq, affectedFiles.map(f => new Path(new java.net.URI(f))).toSeq)
   }
 }

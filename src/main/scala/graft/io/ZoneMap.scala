@@ -23,9 +23,8 @@ import org.apache.spark.sql.functions._
   * manifest is advisory — a missing or foreign-key manifest makes
   * callers fall back to the footer-pruned scan, never a wrong answer.
   * Writers that mutate the table in place must drop or rebuild the
-  * manifest across the mutation ([[InPlaceSwap]] does, for the
-  * takedown and the corpus sync), since a stale manifest — unlike a
-  * stale footer — CAN mis-prune.
+  * manifest across the mutation ([[InPlaceSwap]] does), since a stale
+  * manifest — unlike a stale footer — CAN mis-prune.
   */
 object ZoneMap {
 
@@ -98,11 +97,10 @@ object ZoneMap {
     * the SAME listStatus that replaces the old existence check), so a
     * repeated keyed read of a version costs one metadata RPC instead
     * of a driver-side Spark read job. Self-validating: any rewrite of
-    * the manifest — the [[InPlaceSwap]] restage behind the takedown
-    * and the corpus sync, even a foreign process — lands a new
-    * part-file name/mtime and misses the cache, so no mutation site
-    * needs to know the cache exists (path-identity-only memoization
-    * could not promise that).
+    * the manifest — an [[InPlaceSwap]] restage, even a foreign process
+    * — lands a new part-file name/mtime and misses the cache, so no
+    * mutation site needs to know the cache exists (path-identity-only
+    * memoization could not promise that).
     * Bounded by an LRU (r13 verdict #4: the previous clear-all-at-cap
     * backstop cold-restarted EVERY table's manifest the moment one
     * more than the cap was read) — a memo, never a correctness

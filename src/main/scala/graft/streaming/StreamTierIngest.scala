@@ -629,15 +629,6 @@ object StreamTierIngest {
     * candidates), or "full" (no sidecar — footer-pruned scan). */
   final case class Synced(rows: Long, upto: Long, scan: String)
 
-  /** The sync's swap state inside the corpus dir, dot-prefixed so
-    * readers and the tiers' source fingerprints never see it: the
-    * journal, the staged next manifest, and the delta's staging dir
-    * plus its right-sized rewrite. */
-  private def syncSite(cp: Path) = graft.io.InPlaceSwap.Site(
-    journal = new Path(cp, ".stream-sync-journal"),
-    nextManifest = new Path(cp, ".filemap-sync-staging"),
-    staging = Seq(new Path(cp, ".stream-sync-staging"), new Path(cp, ".stream-sync-staging2")))
-
   /** Publish the folded survivors into a warehouse corpus table,
     * append-only: rows with `ingest_batch` in (last synced, folded
     * watermark] land as NEW part files in `corpusDir`, so the standing
@@ -650,8 +641,8 @@ object StreamTierIngest {
     * sync; the bootstrap's `-1` rows never sync either — they were
     * seeded FROM a corpus. The files move in through the journaled
     * [[graft.io.InPlaceSwap]], which also keeps a `_filemap` on the
-    * corpus truthful and finishes a crashed attempt's swap on the next
-    * entry. Idempotent across attempts: part files are named by the
+    * corpus truthful and, on entry, finishes any swap a crashed attempt
+    * left on the corpus — a sync's or a takedown's. Idempotent across attempts: part files are named by the
     * batch range they carry plus a per-attempt stamp
     * (`stream-sync-<from>-<upto>-<stamp>-partNNNN.parquet`), any range
     * files beyond the recorded watermark are crashed-attempt leftovers
@@ -666,8 +657,20 @@ object StreamTierIngest {
     val store = compactedStore(survivorsDir)
     val cp = new Path(corpusDir)
     val fs = cp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val site = syncSite(cp)
-    graft.io.InPlaceSwap.recover(s, corpusDir, site)
+    val synced = graft.io.InPlaceSwap.run(s, corpusDir, graft.io.InPlaceSwap.CorpusSync) {
+      case Seq(staging, tight) =>
+        stageSync(s, store, cp, staging, tight)
+          .getOrElse(graft.io.InPlaceSwap.Plan(Option.empty[Synced]))
+    }
+    synced.foreach(sy => graft.io.Sidecar.write(fs, new Path(cp, SyncMarker), sy.upto.toString))
+    synced
+  }
+
+  /** The night's delta staged for [[syncCorpus]]'s swap, with the
+    * crashed-attempt leftovers it removes; None when nothing new. */
+  private def stageSync(s: SparkSession, store: String, cp: Path, staging: Path,
+                        tight: Path): Option[graft.io.InPlaceSwap.Plan[Option[Synced]]] = {
+    val fs = cp.getFileSystem(s.sparkContext.hadoopConfiguration)
     for {
       v <- graft.io.AtomicPublish.currentVersion(s, store)
       upto <- foldedWatermark(s, new Path(s"$store/v=$v"))
@@ -711,7 +714,6 @@ object StreamTierIngest {
         .filter(col("ingest_batch") > syncedUpto && col("ingest_batch") <= upto)
         .drop("ingest_batch")
         .observe(obs, count(lit(1)).as("rows"))
-      val Seq(staging, tight) = site.staging
       delta.write.parquet(staging.toString)
       // right-size the night's addition: the filter scatters delta rows
       // across every base input partition, so a tiny night would land
@@ -751,9 +753,8 @@ object StreamTierIngest {
       // it must not survive STALE — one missing the new files would hide
       // them from every manifest-pruned read (the takedown would report
       // rowsDeleted=0 as success); the swap keeps it truthful
-      graft.io.InPlaceSwap.swap(s, corpusDir, site, moves, leftovers)
-      graft.io.Sidecar.write(fs, new Path(cp, SyncMarker), upto.toString)
-      Synced(obs.get("rows").asInstanceOf[Long], upto, scan)
+      graft.io.InPlaceSwap.Plan(Some(Synced(obs.get("rows").asInstanceOf[Long], upto, scan)),
+        moves, leftovers)
     }
   }
 

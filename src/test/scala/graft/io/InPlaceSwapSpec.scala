@@ -14,7 +14,9 @@ import graft.streaming.StreamTierIngest
   * [[FaultFs]] fault at one step of the swap; the retry is the caller
   * run again with the same arguments. Whatever the crash point, the
   * retry must leave exactly the post-swap rows and a `_filemap` that is
-  * either absent or truthful — never one that lies. */
+  * either absent or truthful — never one that lies. Both callers mutate
+  * the same corpus table, so a crashed swap of one is finished by the
+  * next entry of the other. */
 class InPlaceSwapSpec extends SparkSpec {
 
   private def docs = Tables.load(spark, sfDir, "documents")
@@ -67,13 +69,13 @@ class InPlaceSwapSpec extends SparkSpec {
       new java.io.File(table).list().exists(_.startsWith(prefix)) &&
         ((inTable(table, p) && p.getName.endsWith(".parquet")) ||
           staging.contains(p.toUri.getPath)))),
-    "before the manifest line" -> (() => FaultFs.arm("rename")(p =>
+    "before the manifest rename" -> (() => FaultFs.arm("rename")(p =>
       inTable(table, p) && p.getName == ZoneMap.ManifestDir)))
 
   private val points = Seq("before END", "after END, 0 moves", "after END, 1 move",
-    "after END, all moves", "before the manifest line")
+    "after END, all moves", "before the manifest rename")
 
-  test("takedown crash matrix: every crash point retries to the survivors with a truthful or absent _filemap") {
+  test("takedown crash matrix: every crash point retries to the survivors with a truthful _filemap") {
     val targets = Seq(10L, 250L, 450L) // three range files: three moves
     val survivors = docs.filter(!col("doc_id").isin(targets: _*))
     val states = Seq.newBuilder[(String, String)]
@@ -97,15 +99,10 @@ class InPlaceSwapSpec extends SparkSpec {
       states += point -> st
       assert(!fsOf(table).exists(new Path(table + ".delete-journal")))
     }
-    // a complete journal restores the staged manifest; only a torn one
-    // (the table was never touched) leaves the table without one
+    // a complete journal ends with the staged manifest adopted; a torn
+    // one (the table was never touched) keeps the live one
     val got = states.result().toMap
-    assert(got == Map(
-      "before END" -> "absent",
-      "after END, 0 moves" -> "truthful",
-      "after END, 1 move" -> "truthful",
-      "after END, all moves" -> "truthful",
-      "before the manifest line" -> "truthful"), got)
+    assert(got == points.map(_ -> "truthful").toMap, got)
   }
 
   test("takedown journal replay on a manifest-carrying table ends with a truthful _filemap") {
@@ -148,8 +145,10 @@ class InPlaceSwapSpec extends SparkSpec {
     assert(sameDocIds(spark.read.parquet(table), docs.filter(!col("doc_id").isin(targets: _*))))
   }
 
-  test("sync crash matrix: every crash point retries to the post-sync corpus with a truthful or absent _filemap") {
-    val base = tmpDir("swap-sync")
+  /** A folded survivors store holding one streamed batch (batch 0):
+    * its dir and its rows as the corpus sync publishes them. */
+  private def streamedStore(name: String): (String, DataFrame) = {
+    val base = tmpDir(name)
     val (in, out, idx, ckpt) = (s"$base/in", s"$base/out", s"$base/idx", s"$base/ckpt")
     StreamTierIngest.bootstrapIndex(docs.filter(col("doc_id") % 3 === 0), idx)
     docs.filter(col("doc_id") % 3 === 1).limit(40)
@@ -158,17 +157,33 @@ class InPlaceSwapSpec extends SparkSpec {
     q.awaitTermination()
     q.stop()
     assert(StreamTierIngest.foldSurvivors(spark, out, ckpt).nonEmpty)
-    val streamed = StreamTierIngest.survivors(spark, out).drop("ingest_batch")
-    // each corpus starts with its own warehouse rows and a manifest on them
-    val warehouse = docs.filter(col("doc_id") % 3 === 2).limit(30)
+    out -> StreamTierIngest.survivors(spark, out).drop("ingest_batch")
+  }
+
+  /** Warehouse rows of a corpus before any sync. */
+  private def warehouse = docs.filter(col("doc_id") % 3 === 2).limit(30)
+
+  /** A fresh corpus (two range files of [[warehouse]] rows and a manifest
+    * on them) at local path `<tmp>/corpus`; returns its `fault:` path. */
+  private def freshCorpus(name: String): String = {
+    val local = tmpDir(name) + "/corpus"
+    SortedLayout.writeRangeSorted(warehouse, local, numFiles = 2, col("doc_id"))
+    ZoneMap.write(spark, local, "doc_id")
+    FaultFs.at(spark, local)
+  }
+
+  private def onDiskFiles(table: String): Set[String] =
+    new java.io.File(new Path(table).toUri.getPath).listFiles().map(_.getName)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSet
+
+  test("sync crash matrix: every crash point retries to the post-sync corpus with a truthful _filemap") {
+    val (out, streamed) = streamedStore("swap-sync")
     val states = Seq.newBuilder[(String, String)]
     // a tiny delta right-sizes to ONE file, so "1 move" is "all moves"
     val syncPoints = points.filterNot(_ == "after END, 1 move") :+ "before the watermark"
     for (point <- syncPoints) {
-      val local = tmpDir(s"swap-sync-${point.replaceAll("[^a-zA-Z0-9-]", "_")}") + "/corpus"
-      SortedLayout.writeRangeSorted(warehouse, local, numFiles = 2, col("doc_id"))
-      ZoneMap.write(spark, local, "doc_id")
-      val corpus = FaultFs.at(spark, local)
+      val corpus = freshCorpus(s"swap-sync-${point.replaceAll("[^a-zA-Z0-9-]", "_")}")
+      val local = new Path(corpus).toUri.getPath
       val arm: () => Unit =
         if (point == "before the watermark")
           () => FaultFs.arm("create")(_.getName == "_stream_synced")
@@ -183,20 +198,51 @@ class InPlaceSwapSpec extends SparkSpec {
         s"$point: the retry must leave exactly the post-sync corpus")
       val st = manifestState(corpus)
       assert(st != "lying", s"$point: the _filemap lies after the retry")
-      if (point != "before END") {
-        val onDisk = new java.io.File(local).listFiles().map(_.getName)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSet
-        assert(ZoneMap.manifestOf(spark, corpus).exists(_.entries.map(_._1).toSet == onDisk),
-          s"$point: the replayed sync's _filemap must list exactly the on-disk files")
-      }
+      assert(ZoneMap.manifestOf(spark, corpus).exists(_.entries.map(_._1).toSet ==
+        onDiskFiles(corpus)), s"$point: the replayed sync's _filemap must list exactly the on-disk files")
       states += point -> st
     }
     val got = states.result().toMap
-    assert(got == Map(
-      "before END" -> "absent",
-      "after END, 0 moves" -> "truthful",
-      "after END, all moves" -> "truthful",
-      "before the manifest line" -> "truthful",
-      "before the watermark" -> "truthful"), got)
+    assert(got == syncPoints.map(_ -> "truthful").toMap, got)
+  }
+
+  test("a sync crashed after END is finished by the next takedown on the corpus: no _filemap lies, the doc stays gone") {
+    val (out, streamed) = streamedStore("swap-sync-then-takedown")
+    val corpus = freshCorpus("swap-sync-then-takedown-corpus")
+    crash(FaultFs.arm("rename")(p => inTable(new Path(corpus).toUri.getPath, p) &&
+      p.getName.startsWith("stream-sync-")))(StreamTierIngest.syncCorpus(spark, out, corpus))
+    assert(fsOf(corpus).exists(new Path(corpus, ".stream-sync-journal")))
+    // a warehouse doc: the re-sync below cannot bring it back
+    val gone = warehouse.agg(max("doc_id")).head().getLong(0)
+    val td = TargetedDelete.deleteIds(spark, corpus, "doc_id", Seq(gone))
+    assert(td.rowsDeleted == 1L && td.discovery == "manifest",
+      s"the takedown finds the doc through the manifest the replayed sync left: $td")
+    assert(!fsOf(corpus).exists(new Path(corpus, ".stream-sync-journal")))
+    assert(manifestState(corpus) == "truthful")
+    assert(StreamTierIngest.syncCorpus(spark, out, corpus).exists(_.upto == 0L))
+    assert(sameDocIds(spark.read.parquet(corpus),
+      warehouse.filter(col("doc_id") =!= gone).unionByName(streamed)))
+    assert(manifestState(corpus) == "truthful")
+    assert(ZoneMap.manifestOf(spark, corpus).exists(_.entries.map(_._1).toSet ==
+      onDiskFiles(corpus)))
+  }
+
+  test("a takedown crashed after END is finished by the next sync into the corpus: no _filemap lies") {
+    val (out, streamed) = streamedStore("swap-takedown-then-sync")
+    val corpus = freshCorpus("swap-takedown-then-sync-corpus")
+    // the lowest and the highest warehouse doc: one in each range file
+    val Seq(lo, hi) = warehouse.agg(min("doc_id"), max("doc_id")).head().toSeq
+      .map(_.asInstanceOf[Long])
+    crash(FaultFs.arm("rename")(_.getName.startsWith("deleted-rewrite-"))) {
+      TargetedDelete.deleteIds(spark, corpus, "doc_id", Seq(lo, hi))
+    }
+    assert(fsOf(corpus).exists(new Path(corpus + ".delete-journal")))
+    assert(StreamTierIngest.syncCorpus(spark, out, corpus).exists(_.upto == 0L))
+    assert(!fsOf(corpus).exists(new Path(corpus + ".delete-journal")))
+    assert(sameDocIds(spark.read.parquet(corpus),
+      warehouse.filter(!col("doc_id").isin(lo, hi)).unionByName(streamed)))
+    assert(manifestState(corpus) == "truthful")
+    assert(ZoneMap.manifestOf(spark, corpus).exists(_.entries.map(_._1).toSet ==
+      onDiskFiles(corpus)))
   }
 }

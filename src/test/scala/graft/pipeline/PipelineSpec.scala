@@ -137,6 +137,10 @@ class PipelineSpec extends SparkSpec {
       assert(!renaming(f), s"$f renames files itself"))
     assert(sites(""""(?:mv|old)\\t""".r) == Seq("InPlaceSwap.scala"),
       "only the swap module spells the journal's line format")
+    // pending swap state is per table: one module knows every caller's
+    // journal, so every entry recovers all of them
+    assert(sites("""-journal\b""".r) == Seq("InPlaceSwap.scala"),
+      "only the swap module names a swap journal")
     assert(sites("""def\s+recoverIfCrashed\b""".r) == Seq("AtomicPublish.scala"))
     assert(sites("""\bdeltaFloor\b""".r).isEmpty)
   }
