@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 
 import graft.core.Tables
@@ -707,6 +708,18 @@ object DerivedStore {
       loaded
     }
   }
+
+  /** The `_stats` of the one committed version `tier` scans — a frame
+    * [[served]] returned — through [[rowStatsOfVersion]]'s memo: no
+    * job, no listing. None for any other frame (an in-memory or
+    * derived one) and for a version with no `_stats`. */
+  private[graft] def statsOfServed(tier: DataFrame): Option[TierRowStats] =
+    tier.queryExecution.analyzed match {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _)
+          if r.location.rootPaths.length == 1 =>
+        rowStatsOfVersion(tier.sparkSession, r.location.rootPaths.head.toString)
+      case _ => None
+    }
 
   // -------------------------------------------------------------------
   // Bucketed layout ([[Refresh.Bucketed]])

@@ -113,6 +113,24 @@ object GraphStore {
       purchaseEdgesInline, Refresh.Merge(purchaseEdgesMerge), numFiles = 8,
       sortKey = "cust")
 
+  /** True when the purchase version `edges` scans proves, from the
+    * value bounds its `_stats` recorded, that no node id is both a
+    * customer and a supplier — the precondition of g1's closed form
+    * (`Graph.purchaseRanks`). No job: a memoized sidecar read. False
+    * for a frame with no recorded bounds and for
+    * overlapping key ranges (customer keys reach [[SuppOffset]] from
+    * SF ≈ 6,667). */
+  def purchaseBipartite(edges: DataFrame): Boolean =
+    DerivedStore.statsOfServed(edges).exists(st => keysDisjoint(st.cols))
+
+  /** max(cust) < min(supp) by the recorded bounds; false when either
+    * bound is missing. */
+  private[graft] def keysDisjoint(cols: Map[String, graft.plans.ColStat]): Boolean =
+    (for {
+      hi <- cols.get("cust").flatMap(_.max)
+      lo <- cols.get("supp").flatMap(_.min)
+    } yield BigDecimal(hi) < BigDecimal(lo)).getOrElse(false)
+
   /** Append-only refresh of the purchase tier. New edges can only
     * come from NEW lineitem rows: a lineitem's order is present in
     * the same snapshot (the FK invariant q87 audits), so delta

@@ -10,11 +10,11 @@ import org.apache.spark.sql.DataFrame
   * Spark-native equivalents:
   *  - full refresh (delete-all + append)   → `mode("overwrite")`
   *  - partition refresh (delete-where-key) → `partitionBy(key)` +
-  *    `partitionOverwriteMode=dynamic`, which rewrites only the
-  *    partitions present in the incoming frame — the exact semantics of
-  *    the reference's `delete where bkup_dt = :d` preaction, and at
-  *    100 TB the difference between touching one day and rewriting the
-  *    table.
+  *    the write option `partitionOverwriteMode=dynamic`, which
+  *    rewrites only the partitions present in the incoming frame — the
+  *    exact semantics of the reference's `delete where bkup_dt = :d`
+  *    preaction, and at 100 TB the difference between touching one day
+  *    and rewriting the table.
   *
   * Both paths are idempotent: running the same job twice yields the
   * same table (the reference's whole reason for preactions-delete).
@@ -30,11 +30,14 @@ object IdempotentWriter {
   }
 
   /** Dynamic partition refresh keyed on `partCol`: only partitions
-    * present in `df` are replaced; others are left untouched.
+    * present in `df` are replaced; others are left untouched. The mode
+    * is this write's option, never the session's: a session-wide
+    * `partitionOverwriteMode` would turn every later static overwrite
+    * in the session dynamic.
     */
   def partitionRefresh(df: DataFrame, path: String, partCol: String): Long = {
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode("overwrite").partitionBy(partCol).parquet(path)
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(path)
     df.sparkSession.read.parquet(path)
       .filter(org.apache.spark.sql.functions.col(partCol)
         .isin(df.select(partCol).distinct().collect().map(_.get(0)): _*))

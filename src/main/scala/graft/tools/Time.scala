@@ -19,7 +19,7 @@ import graft.pipeline.QueryMetrics
   * (no names: the whole registry). Per query:
   * {{{
   * <name>  best=<s>  build=<s>  plan=<ms>  runs=<s>,<s>,<s>  jobs=<n> stages=<n> tasks=<n> shufMB=<MB>
-  *     job <id>  ran <executed>/<submitted> stages  <stageId>:<stage name>(<tasks>t) | …
+  *     job <id>  ran <executed>/<submitted> stages  wall=<ms> run=<ms> gap=<ms>  <stageId>:<stage name>(<tasks>t) | …
   * }}}
   * `build` is the construction layer: the median over the three timed
   * runs of a clock around `fn(spark, dir)` alone (memoized table
@@ -36,7 +36,15 @@ import graft.pipeline.QueryMetrics
   * the stages it actually ran — a job's submitted list includes
   * ancestors Spark skips as already computed — so a many-job query
   * shows WHICH materialization (cache fill, broadcast build, AQE
-  * stage, final stage) each round-trip is.
+  * stage, final stage) each round-trip is, and splits its time, in ms:
+  *  - `wall`: from the first submission to the last completion of the
+  *    stages it ran — how long the job held the cluster;
+  *  - `run`: the executor run time summed over those stages' tasks —
+  *    the work inside `wall`, over all cores;
+  *  - `gap`: from the last stage completion of the previous job that
+  *    ran one to this job's start — driver time between jobs (planning
+  *    the next AQE stage, a cache or broadcast hand-off); `-` while no
+  *    earlier job has run a stage (`wall`: for a job that ran none).
   */
 object Time {
   def main(args: Array[String]): Unit = {
@@ -90,12 +98,21 @@ object Time {
         f"  runs=${ts.map(t => f"$t%.3f").mkString(",")}" +
         f"  jobs=${prof.jobs.size} stages=${prof.stages.size} tasks=${prof.stages.map(_.numTasks).sum}" +
         f" shufMB=${ScaleProbe.shuffleBytes(recs) / 1e6}%.2f")
+      // the previous job's last stage completion, for `gap`
+      var prevDone: Option[Long] = None
       prof.jobs.foreach { j =>
         val executed = j.stageIds.flatMap(ran.get)
         val stageLabels = executed.map(s =>
           s"${s.stageId}:${s.name.takeWhile(_ != '\n').take(70)}(${s.numTasks}t)")
+        val done = executed.flatMap(_.completionTime).maxOption
+        val wall = for (a <- executed.flatMap(_.submissionTime).minOption; b <- done) yield b - a
+        val run = executed.map(_.taskMetrics.executorRunTime).sum
+        val gap = prevDone.map(j.time - _)
+        def ms(v: Option[Long]) = v.fold("     -")(x => f"$x%6d")
         println(f"    job ${j.jobId}%3d  ran ${executed.size}%2d/${j.stageIds.size}%2d stages  " +
+          f"wall=${ms(wall)} run=${ms(Some(run))} gap=${ms(gap)}  " +
           stageLabels.mkString(" | ").take(180))
+        if (done.isDefined) prevDone = done
       }
     }
     spark.stop()

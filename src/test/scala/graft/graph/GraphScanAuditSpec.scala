@@ -1,9 +1,10 @@
 package graft.graph
 
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
 
 import graft.SparkSpec
+import graft.io.GraphStore
 import graft.pipeline.QueryMetrics
 import graft.tools.ScanCount
 
@@ -49,15 +50,23 @@ class GraphScanAuditSpec extends SparkSpec {
     }
   }
 
-  /** g1's rounds ride the cached hash(src) edge set: its two round
-    * joins (edges ⟕ contributions) and the final node-set join are all
-    * node grain — 10⁸⁺ rows at 100 TB — so none may be a broadcast,
-    * however small the test data makes them. */
+  /** g1 on the served tier is the closed form: one node-grain
+    * aggregate, so its plan has exactly one exchange, no join and no
+    * broadcast. The rounds it falls back to ride the cached hash(src)
+    * edge set: their two round joins (edges ⟕ contributions) and the
+    * final node-set join are all node grain — 10⁸⁺ rows at 100 TB —
+    * so none may be a broadcast, however small the test data makes
+    * them. */
   test("g1's executed plan broadcasts nothing and shuffle-hash joins every round") {
     val plan = QueryMetrics.allNodes(
       ScanCount.executedPlan(spark, sfDir, Graph.g1Pagerank)).toSeq
     assert(!plan.exists(_.isInstanceOf[BroadcastExchangeExec]), plan.head.treeString)
-    val joins = plan.collect { case j: BaseJoinExec => j }
+    assert(!plan.exists(_.isInstanceOf[BaseJoinExec]), plan.head.treeString)
+    assert(plan.count(_.isInstanceOf[ShuffleExchangeLike]) == 1, plan.head.treeString)
+    val rounds = QueryMetrics.allNodes(ScanCount.executedPlan(spark, sfDir,
+      (s, d) => Graph.purchaseRanks(GraphStore.purchaseEdges(s, d), bipartite = false))).toSeq
+    assert(!rounds.exists(_.isInstanceOf[BroadcastExchangeExec]), rounds.head.treeString)
+    val joins = rounds.collect { case j: BaseJoinExec => j }
     assert(joins.size == 3 && joins.forall(_.isInstanceOf[ShuffledHashJoinExec]),
       joins.map(_.nodeName))
   }

@@ -47,6 +47,78 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  /** `es` as a purchase edge frame (`cust`, `supp`, `cust_deg`) and
+    * the column profile a tier publish records for it. */
+  private def purchaseFrame(es: Seq[(Long, Long)]) = {
+    val outdeg = es.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    val df = spark.createDataFrame(es.map { case (c, p) => (c, p, outdeg(c)) })
+      .toDF("cust", "supp", "cust_deg")
+    df -> graft.io.TableStats.columnProfile(df, es.size.toLong)
+  }
+
+  private def ranksOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(got.size == got.map(_._1).distinct.size, "a node appears twice")
+    got.toMap
+  }
+
+  private def joins(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.size
+
+  test("g1's closed form equals the node-reattach recursion on bipartite purchase graphs") {
+    val S = Graph.SuppOffset
+    val graphs = Seq(
+      "one edge" -> Seq(1L -> (S + 1)),
+      // outdeg 3 and 7: 150000 div 7 leaves a remainder, and the
+      // supplier sums floor per edge, before the sum
+      "outdeg 3 and 7 with floor remainders" ->
+        ((1L to 3L).map(c => 20L -> (S + c)) ++ (1L to 7L).map(c => 21L -> (S + c))),
+      // one supplier fed by many customers of mixed outdeg
+      "many-customer supplier" ->
+        ((1L to 40L).map(c => c -> (S + 9)) ++ (1L to 40L by 3).map(c => c -> (S + 10)) ++
+          (1L to 40L by 7).map(c => c -> (S + 11))))
+    for ((name, es) <- graphs) withClue(s"$name: ") {
+      val (df, cols) = purchaseFrame(es)
+      assert(graft.io.GraphStore.keysDisjoint(cols), cols)
+      val ranks = Graph.purchaseRanks(df, bipartite = true)
+      assert(joins(ranks) == 0, "the closed form plans a join")
+      assert(ranksOf(ranks) == referenceRanks(es))
+    }
+  }
+
+  test("g1 runs the rounds on key-limit ids or missing bounds, and matches the recursion") {
+    val S = Graph.SuppOffset
+    // customer S + 5 is also supplier 5's node id: a node that both
+    // sends and receives, where the closed form's premise fails
+    val es = Seq(1L -> (S + 5), 1L -> (S + 6), (S + 5) -> (S + 6), 2L -> (S + 5))
+    val (df, cols) = purchaseFrame(es)
+    val keyLimit = graft.io.GraphStore.keysDisjoint(cols)
+    assert(!keyLimit, cols)
+    // an in-memory frame carries no `_stats`: the guard has no bounds
+    assert(!graft.io.GraphStore.purchaseBipartite(df))
+    val ranks = Graph.purchaseRanks(df, keyLimit)
+    assert(joins(ranks) == 3, "the rounds path plans its three joins")
+    assert(ranksOf(ranks) == referenceRanks(es))
+    assert(ranksOf(Graph.purchaseRanks(df, bipartite = true)) != referenceRanks(es),
+      "the closed form must differ where the guard falls back")
+    graft.core.Sessions.release(spark)
+  }
+
+  test("g1 runs at most 2 jobs at sf0.01") {
+    val dir = s"${new java.io.File(sfDir).getParent}/sf0.01"
+    val edges = graft.io.GraphStore.purchaseEdges(spark, dir)
+    assert(graft.io.GraphStore.purchaseBipartite(edges),
+      "the served purchase tier's bounds must select the closed form")
+    graft.core.Sessions.run(Graph.g1Pagerank(spark, dir)) // warm: tier build, resolution
+    graft.core.Sessions.release(spark)
+    val (_, cap) = graft.core.Sessions.capture(spark)(
+      graft.core.Sessions.run(Graph.g1Pagerank(spark, dir)))
+    graft.core.Sessions.release(spark)
+    assert(cap.jobs.size <= 2, cap.jobs.map(_.stageInfos.map(_.name)))
+  }
+
   test("g2 edge list is k-NN-bounded and triangle supports are consistent") {
     val out = Graph.g2Triangles(spark, sfDir).cache()
     // total support = 3 × triangle count, so it must divide by 3

@@ -34,6 +34,23 @@ class IoSpec extends SparkSpec {
     assert(byDt == Map("20240101" -> 25L, "20240102" -> 3L))
   }
 
+  test("partitionRefresh leaves the session conf alone: a later plain overwrite stays static") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    val out = tmpDir("part-refresh-conf")
+    IdempotentWriter.partitionRefresh(
+      nation.limit(2).withColumn("dt", lit("20240101")), s"$out/r", "dt")
+    assert(spark.conf.getOption(key) == before)
+    // static overwrite replaces the whole table, partitions absent from
+    // the incoming frame included
+    val t = s"$out/t"
+    nation.limit(2).withColumn("dt", lit("20240101"))
+      .write.mode("overwrite").partitionBy("dt").parquet(t)
+    nation.limit(1).withColumn("dt", lit("20240102"))
+      .write.mode("overwrite").partitionBy("dt").parquet(t)
+    assert(spark.read.parquet(t).count() == 1)
+  }
+
   test("singleGzipJson writes exactly one gzip part with all rows") {
     val out = tmpDir("export")
     Export.singleGzipJson(nation, s"$out/j")
